@@ -41,6 +41,32 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
+  /** A key's accept band around its reference minimum: 1.5× plus a
+    * 0.15 s floor (r14 measured ±40-50% scatter on sub-second keys). */
+  private[graft] def band(ref: Double): Double = ref * 1.5 + 0.15
+
+  /** One key's gate verdict from its in-suite `passes` (non-empty) and
+    * its isolated re-run `(s, calib_s, loadavg)`, if any. Inside the
+    * band it is `ok`. Above it, `contended` needs proof: an isolated
+    * read inside the band on a clean host (`hostOk` on that re-run's
+    * own calib and loadavg stamp). Without that proof the key is
+    * `regressed` when the evidence excludes contention — a clean suite
+    * run (`runClean`: calib within ±10% of the reference, loadavg below
+    * cpus/8 at both ends) and tight passes (max/min < 1.4) — and
+    * `unresolved` otherwise. An isolated read above the band is never
+    * `contended`. */
+  private[graft] def verdict(ref: Double, passes: Seq[Double],
+                             isolated: Option[(Double, Double, Double)],
+                             runClean: Boolean,
+                             hostOk: (Double, Double) => Boolean): String = {
+    val b = band(ref)
+    if (passes.min <= b) "ok"
+    else if (isolated.exists { case (s, c, l) => s <= b && hostOk(c, l) })
+      "contended"
+    else if (runClean && passes.max / passes.min < 1.4) "regressed"
+    else "unresolved"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -145,17 +171,45 @@ object Bench {
     // §16): treat a per-key delta as plan drift only when calib is
     // steady, loadavg_start/end are below ~cpus/8, and the key's
     // max/min dispersion is < 2 in both runs being compared.
+    // Regression gate vs a COMMITTED reference (bench_reference.json:
+    // {"calib_s": c, "cpus": n, "queries": {key: clean-run min}}): the
+    // artifact itself says "ok | contended | unresolved | regressed |
+    // new | error" per key (rule in [[verdict]]).
+    val reference: Option[(Double, Map[String, Double])] =
+      try {
+        val p = java.nio.file.Paths.get("bench_reference.json")
+        if (!java.nio.file.Files.exists(p)) None
+        else {
+          val om = new com.fasterxml.jackson.databind.ObjectMapper()
+          val node = om.readTree(p.toFile)
+          val qs = node.get("queries")
+          val it = qs.fieldNames()
+          val m = scala.collection.mutable.Map.empty[String, Double]
+          while (it.hasNext) { val n = it.next(); m(n) = qs.get(n).asDouble }
+          Some((node.get("calib_s").asDouble, m.toMap))
+        }
+      } catch { case e: Throwable =>
+        System.err.println(
+          s"[bench] bench_reference.json unreadable: ${e.getMessage}")
+        None
+      }
+    val loadBound = cpus.toDouble / 8.0
+    // a clean host reading: calib within ±10% of the reference's and
+    // loadavg below cpus/8
+    def hostOk(c: Double, load: Double) = load <= loadBound &&
+      reference.exists { case (refCalib, _) =>
+        refCalib > 0 && math.abs(c - refCalib) / refCalib <= 0.10
+      }
     // Isolated adjudication pass: an in-suite number can read 1.5–3×
     // slow from CONTENTION (q54 measured 2.65 s in-suite vs 0.93 s
-    // isolated with identical code) and a round-over-round regression
-    // verdict is undecidable from the artifact alone. So any key whose
-    // in-suite passes DISPERSE (max/min ≥ 1.4 at min ≥ 1 s — the
-    // contention signature) gets a quiet-box re-run appended to the
-    // JSON as "isolated": long settle, fresh min-of-2. A reader
-    // adjudicates a suspect key from isolated-vs-suite in ONE artifact
-    // instead of a hand re-run. Explicit keys via SPARK_GRAFT_ISOLATE
-    // or `--isolate k1,k2`; auto-picks are capped so the suite's wall
-    // time stays bounded.
+    // isolated with identical code), so suspect keys get a quiet-box
+    // re-run appended to the JSON as "isolated": long settle, fresh
+    // min-of-2. EVERY key whose in-suite min is above its reference
+    // band is re-run — a verdict never rests on the in-suite read
+    // alone. Beside those: keys whose passes DISPERSE (max/min ≥ 1.4
+    // at min ≥ 1 s — the contention signature), then the slowest keys
+    // overall, eight auto-picks in all, plus explicit keys via
+    // SPARK_GRAFT_ISOLATE or `--isolate k1,k2`.
     val isolateAsked = sys.env.get("SPARK_GRAFT_ISOLATE")
       .orElse(argOpts.get("isolate")).map(csv).getOrElse(Set.empty)
     // loadavg_end belongs to the SUITE window — sample it before the
@@ -163,21 +217,25 @@ object Bench {
     // the 1-minute average and let a reader reject a clean suite run
     // (or accept a contended one whose load decayed)
     val loadEnd = loadAvg()
+    val aboveBand = reference.toSeq.flatMap { case (_, refMap) =>
+      results.collect {
+        case (k, v) if v.nonEmpty && !errors.contains(k) &&
+          refMap.get(k).exists(ref => v.min > band(ref)) => k
+      }
+    }
     val dispersed = results.collect {
       case (k, v) if v.length >= 2 && v.min >= 1.0 &&
         v.max / v.min >= 1.4 => k -> v.min
     }.sortBy(-_._2).map(_._1)
     // UNIFORM contention never disperses (q54 read 2.65/2.25 in-suite
     // vs 0.93 isolated — both passes slow): fill the remaining slots
-    // with the SLOWEST keys overall, no ceiling — the r17 band cap
-    // (min < 3.5) excluded exactly the keys MOST inflated by uniform
-    // contention from in-artifact adjudication
+    // with the SLOWEST keys overall, no ceiling
     val uniformSuspects = results.collect {
       case (k, v) if v.nonEmpty && v.min >= 1.0 &&
         !dispersed.contains(k) => k -> v.min
     }.sortBy(-_._2).map(_._1)
     val autoIsolate = (dispersed ++ uniformSuspects).take(8)
-    val toIsolate = (autoIsolate ++ isolateAsked.filter(k =>
+    val toIsolate = (aboveBand ++ autoIsolate ++ isolateAsked.filter(k =>
       SparkEntry.queries.contains(k))).distinct
     // each isolated re-run carries its OWN calib + loadavg stamp: the
     // r17 artifact's isolated q89 read 7.53 s vs 2.29 in-suite because
@@ -209,61 +267,17 @@ object Bench {
         if (vs.isEmpty) None else Some(k -> (vs.min, isoCalib, isoLoad))
       }
 
-    // Regression gate vs a COMMITTED reference (bench_reference.json:
-    // {"calib_s": c, "cpus": n, "queries": {key: clean-run min}}): the
-    // accept/reject rule the round summaries applied by hand, encoded
-    // so the artifact itself says "ok | contended | regressed | new"
-    // per key. A key is only REGRESSED when the evidence excludes
-    // contention: run calib within ±10% of the reference, loadavg
-    // below cpus/8 at both ends, the key's own passes tight
-    // (max/min < 1.4), and no clean isolated re-run inside the accept
-    // band. Sub-second keys carry a 0.15 s absolute floor on top of
-    // the 1.5× band (r14 measured ±40-50% scatter at the noise floor).
-    val reference: Option[(Double, Map[String, Double])] =
-      try {
-        val p = java.nio.file.Paths.get("bench_reference.json")
-        if (!java.nio.file.Files.exists(p)) None
-        else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val node = om.readTree(p.toFile)
-          val qs = node.get("queries")
-          val it = qs.fieldNames()
-          val m = scala.collection.mutable.Map.empty[String, Double]
-          while (it.hasNext) { val n = it.next(); m(n) = qs.get(n).asDouble }
-          Some((node.get("calib_s").asDouble, m.toMap))
-        }
-      } catch { case e: Throwable =>
-        System.err.println(
-          s"[bench] bench_reference.json unreadable: ${e.getMessage}")
-        None
-      }
-    val loadBound = cpus.toDouble / 8.0
     val isoByKey = isolated.toMap
+    val runClean = hostOk(calib, loadStart) && loadEnd <= loadBound
     val verdicts: Seq[(String, String)] = reference match {
       case None => Seq.empty
-      case Some((refCalib, refMap)) =>
-        def calibOk(c: Double) =
-          refCalib > 0 && math.abs(c - refCalib) / refCalib <= 0.10
-        val runContended = !calibOk(calib) ||
-          loadStart > loadBound || loadEnd > loadBound
+      case Some((_, refMap)) =>
         results.map { case (k, v) =>
-          val verdict = refMap.get(k) match {
+          k -> (refMap.get(k) match {
             case None => "new"
             case _ if errors.contains(k) || v.isEmpty => "error"
-            case Some(ref) =>
-              val band = ref * 1.5 + 0.15
-              if (v.min <= band) "ok"
-              else {
-                val isoClean = isoByKey.get(k).exists {
-                  case (s, c, l) => s <= band && calibOk(c) && l <= loadBound
-                }
-                val keyDispersed = v.max / v.min >= 1.4
-                if (isoClean) "contended"
-                else if (runContended || keyDispersed) "contended"
-                else "regressed"
-              }
-          }
-          k -> verdict
+            case Some(ref) => verdict(ref, v, isoByKey.get(k), runClean, hostOk)
+          })
         }
     }
 
@@ -299,6 +313,7 @@ object Bench {
     // when the per-key line is cut.
     val nReg = verdicts.count(_._2 == "regressed")
     val nCon = verdicts.count(_._2 == "contended")
+    val nUnres = verdicts.count(_._2 == "unresolved")
     val top5 = results.collect {
       case (k, v) if !errors.contains(k) && v.nonEmpty => k -> v.min
     }.sortBy(-_._2).take(5).map { case (k, v) => s"${jstr(k)}:$v" }
@@ -309,6 +324,7 @@ object Bench {
         s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
         s""""n_errors":${errors.size},"n_isolated":${isolated.length},""" +
         s""""n_regressed":$nReg,"n_contended":$nCon,""" +
+        s""""n_unresolved":$nUnres,""" +
         s""""has_reference":${reference.isDefined},""" +
         s""""top5":$top5,"sf":"$sfDir"}"""
     println(summary)

@@ -570,13 +570,13 @@ object Main {
       // Fed in chunks through a partition-at-a-time local iterator and
       // drained per chunk, so driver memory is O(chunk + one partition)
       // regardless of --rows — the whole fixture is never materialized
-      // on the driver at once.
+      // on the driver at once. The sinks keep counts, not rows.
       val jsonIt = StreamPipeline
         .toJsonValue(read(spark, req(opts, "in")).limit(rows))
         .as[String].toLocalIterator()
       val stream = MemoryStream[String]
-      val normal = new StreamPipeline.CollectingSink
-      val anomaly = new StreamPipeline.CollectingSink
+      val normal = new StreamPipeline.CountingSink
+      val anomaly = new StreamPipeline.CountingSink
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_replay_ckpt").toString
       val q = StreamPipeline.run(stream.toDF().toDF("value"), weights,

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   *
   * The windows (each produced by a specific step of
   * [[Stores.promoteNext]] / [[Stores.swapPartitions]], exercised
-  * step-by-step in StoreFsckSpec via [[Stores.crashCountdown]]):
+  * step-by-step in StoreFsckSpec via [[Stores.withCrashAt]]):
   *
   *  - **`X_next` beside a live `X`** — a successor landed but the
   *    promote never ran. Roll FORWARD (promote) when the successor is

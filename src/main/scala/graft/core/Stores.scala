@@ -8,23 +8,33 @@ import org.apache.spark.sql.SparkSession
   */
 object Stores {
 
-  /** Test-only crash injection for the fsck specs: when ≥ 0, every
-    * rename/delete step inside [[swapPartitions]]/[[promoteNext]]
+  /** Test-only crash injection for the fsck specs: while armed (≥ 0) on
+    * the calling thread, every rename/delete step inside
+    * [[swapPartitions]]/[[promoteNext]] that runs on that thread
     * decrements it, and the step that reaches −1 THROWS instead of
     * running — "kill the process between step k and step k+1", so a
-    * spec can exercise every crash window mechanically. Production
-    * never sets it. */
-  private[graft] var crashCountdown: Int = -1
+    * spec can exercise every crash window mechanically. Thread-scoped:
+    * a store step on any other thread never sees it. Production never
+    * arms it; specs arm it only through [[withCrashAt]]. */
+  private val crashCountdown: ThreadLocal[Int] =
+    ThreadLocal.withInitial[Int](() => -1)
 
-  private def step(what: String): Unit =
-    if (crashCountdown >= 0) {
-      if (crashCountdown == 0) {
-        crashCountdown = -1
-        throw new IllegalStateException(
-          s"graft test: injected crash before $what")
-      }
-      crashCountdown -= 1
+  /** Run `op` on this thread with the crash injected before store step
+    * `k`; injection is disarmed when `op` returns or throws. */
+  private[graft] def withCrashAt[A](k: Int)(op: => A): A = {
+    crashCountdown.set(k)
+    try op finally crashCountdown.set(-1)
+  }
+
+  private def step(what: String): Unit = {
+    val k = crashCountdown.get
+    if (k == 0) {
+      crashCountdown.set(-1)
+      throw new IllegalStateException(
+        s"graft test: injected crash before $what")
     }
+    if (k > 0) crashCountdown.set(k - 1)
+  }
 
   /** Sibling writer-lease path for a store root: a FILE beside the
     * store (never inside — [[promoteNext]] renames the store dir

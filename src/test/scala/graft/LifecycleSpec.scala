@@ -101,11 +101,13 @@ class LifecycleSpec extends AnyFunSuite {
     var k = 0
     var fired = true
     while (fired) {
-      graft.core.Stores.crashCountdown = k
       fired =
-        try { ModelRegistry.save(rows("Production"), path)
-              graft.core.Stores.crashCountdown = -1; false }
-        catch {
+        try {
+          graft.core.Stores.withCrashAt(k) {
+            ModelRegistry.save(rows("Production"), path)
+          }
+          false
+        } catch {
           case e: IllegalStateException
               if e.getMessage.contains("injected crash") => true
         }

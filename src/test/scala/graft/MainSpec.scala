@@ -1684,12 +1684,12 @@ class MainSpec extends AnyFunSuite {
     val wantRows = Vocab.readLm(spark, s"$base/lm")._1.collect().toSet
     // plant a crashed removal (death between the promote renames) and
     // a stale writer lease
-    graft.core.Stores.crashCountdown = 2
     intercept[IllegalStateException] {
-      Vocab.removeFromLm(Seq((2L, "beta")).toDF("doc_id", "text"),
-        "text", s"$base/lm")
+      graft.core.Stores.withCrashAt(2) {
+        Vocab.removeFromLm(Seq((2L, "beta")).toDF("doc_id", "text"),
+          "text", s"$base/lm")
+      }
     }
-    graft.core.Stores.crashCountdown = -1
     val lease = new org.apache.hadoop.fs.Path(
       graft.core.Stores.leasePath(s"$base/lm"))
     val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)

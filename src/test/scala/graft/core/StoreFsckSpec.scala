@@ -8,7 +8,7 @@ import graft.operators.Vocab
 
 /** Kill-mid-swap coverage for [[StoreFsck]]: every rename/delete step
   * of [[Stores.promoteNext]] and [[Stores.swapPartitions]] is crashed
-  * in turn via the injected-crash hook ([[Stores.crashCountdown]]),
+  * in turn via the injected-crash hook ([[Stores.withCrashAt]]),
   * then `fsck --repair` (plus, where the window is mid-OPERATION
   * rather than mid-swap, one convergent re-run of the interrupted
   * call) must recover a store bit-identical to one that never
@@ -27,8 +27,7 @@ class StoreFsckSpec extends AnyFunSuite {
     * the injection fired (op crashed), false if the op completed before
     * reaching step k (loop-termination signal). */
   private def crashed(k: Int)(op: => Unit): Boolean = {
-    Stores.crashCountdown = k
-    try { op; Stores.crashCountdown = -1; false }
+    try { Stores.withCrashAt(k)(op); false }
     catch {
       case e: IllegalStateException
           if e.getMessage.contains("injected crash") => true
@@ -213,6 +212,30 @@ class StoreFsckSpec extends AnyFunSuite {
       f.action == "removed_lease"), fix)
     Vocab.appendLm(corpus, "text", s"$base/lm")
     assert(!fs.exists(new Path(Stores.leasePath(s"$base/lm"))))
+  }
+
+  test("crash injection is thread-scoped and disarmed however the op " +
+    "ends") {
+    val base = tmpBase("inject_scope")
+    val lm = s"$base/lm"
+    Vocab.writeLm(Seq((1L, "alpha beta")).toDF("doc_id", "text"), "text", lm)
+    def append(id: Long, text: String): Unit =
+      Vocab.appendLm(Seq((id, text)).toDF("doc_id", "text"), "text", lm)
+    // armed on this thread: a store mutation on another thread is untouched
+    var other: Option[Throwable] = None
+    Stores.withCrashAt(0) {
+      val t = new Thread(() =>
+        try append(2L, "gamma") catch { case e: Throwable => other = Some(e) })
+      t.start(); t.join()
+    }
+    assert(other.isEmpty, s"other thread took the injection: $other")
+    // an op ending in some other exception still disarms
+    intercept[ArithmeticException] {
+      Stores.withCrashAt(0) { throw new ArithmeticException("not a crash") }
+    }
+    append(3L, "delta")
+    assert(Vocab.readLm(spark, lm)._2 === 4L)
+    assert(StoreFsck.fsck(spark, base).isEmpty)
   }
 
   test("a stale staging dir holding mid-swap asides REFUSES the blind " +
