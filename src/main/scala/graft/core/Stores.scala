@@ -71,9 +71,18 @@ object Stores {
     val p = new org.apache.hadoop.fs.Path(leasePath(storeRoot))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireAtomicCreate(spark, fs.getUri.getScheme, who)
+    val local = fs.getUri.getScheme == "file"
     val out =
-      try fs.create(p, false)
-      catch {
+      try {
+        // Hadoop's local create(overwrite = false) is exists-then-open,
+        // not a test-and-set: claim the path with an O_EXCL create first
+        if (local) {
+          fs.mkdirs(p.getParent)
+          java.nio.file.Files.createFile(
+            java.nio.file.Paths.get(fs.makeQualified(p).toUri))
+        }
+        fs.create(p, local)
+      } catch {
         case e: java.io.IOException =>
           throw new IllegalStateException(
             s"$who: writer lease $p is already held — one writer at a " +

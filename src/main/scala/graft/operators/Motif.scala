@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   * (~2.6 M rows for a month at 1-second buckets) — and the sliding
   * windows scan it in PARALLEL CHUNKS: `Window.partitionBy(chunk)`
   * with a (w−1)-bucket overlap shipped to each chunk's predecessor
-  * (the Shuffle.deterministicShuffle offset pattern), so a multi-year
-  * series never funnels through one task. The gap spine join keeps
+  * (chunks are fixed-width bucket ranges, so no sampled range shuffle
+  * or offset pass is needed), so a multi-year series never funnels
+  * through one task. The gap spine join keeps
   * windows spanning quiet periods honest (missing buckets count 0,
   * not skipped). */
 object Motif {

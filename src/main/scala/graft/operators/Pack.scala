@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing — the last mile between a settled corpus and a
@@ -21,13 +20,12 @@ import org.apache.spark.sql.functions._
   * integer; token counts come from the codegen'd `token_count`
   * expression.
   *
-  * Scale shape: ONE range-partitioned shuffle on the order key (the
-  * Shuffle.deterministicShuffle plan — no single-partition window
-  * anywhere): per-partition running sums produce local offsets, a
-  * #partitions-sized aggregate broadcasts the partition offsets, and
-  * span expansion is a per-row generator bounded by
-  * n_tokens / seqLen + 1 rows per document. Zero-token documents
-  * cannot occupy a sequence and are excluded by construction.
+  * Scale shape: the offsets are [[graft.core.RangeOffsets]] (one range
+  * shuffle and one narrow probe job at build, then a narrow running
+  * sum that fails loudly on a re-ranged recompute). Span expansion is
+  * a per-row generator bounded by n_tokens / seqLen + 1 rows per
+  * document. Zero-token documents cannot occupy a sequence and are
+  * excluded by construction.
   */
 object Pack {
 
@@ -37,41 +35,14 @@ object Pack {
     * are pure arithmetic over it ([[segments]]). */
   def plan(df: DataFrame, idCol: String, textCol: String,
            salt: String = "pack"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
     val keyed = df.select(col(idCol).cast("long").as("id"),
         graft.functions.TextFunctions.tokenCount(col(textCol))
-          .cast("long").as("n"))
-      .filter(col("n") > 0)
+          .cast("long").as("n_tokens"))
+      .filter(col("n_tokens") > 0)
       .withColumn("k",
         md5(concat(lit(salt), lit(":"), col("id").cast("string"))))
-    // EAGER: both consumers (the local-offset window and the per-
-    // partition totals aggregate feeding the broadcast) otherwise
-    // re-run the tokenize + md5 keying + range shuffle — the plan
-    // carried two rangepartitioning exchanges over two parquet scans.
-    // The frame is narrow (id, n, k, __pid — never text), and
-    // materializing pins spark_partition_id() to one computed copy.
-    val sorted = graft.core.Caching.persistEager(keyed
-      .repartitionByRange(parts, col("k"), col("id"))
-      .sortWithinPartitions(col("k"), col("id"))
-      .withColumn("__pid", spark_partition_id()))
-    val wp = Window.partitionBy(col("__pid"))
-      .orderBy(col("k"), col("id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = sorted.select(col("id"), col("n"), col("k"), col("__pid"),
-      coalesce(sum(col("n")).over(wp), lit(0L)).as("__loff"))
-    // one row per non-empty partition; the exclusive cumsum over pid
-    // order is each partition's global offset (the Shuffle pattern —
-    // range partitioning puts lower keys in lower pids)
-    val offs = sorted.groupBy(col("__pid"))
-      .agg(sum(col("n")).as("__pn"))
-      .select(col("__pid"),
-        coalesce(sum(col("__pn")).over(Window.orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("__poff"))
-    local.join(broadcast(offs), "__pid")
-      .select(col("id"), col("n").as("n_tokens"),
-        (col("__loff") + col("__poff")).as("off"))
+    graft.core.RangeOffsets(keyed, Seq(col("k"), col("id")),
+      Seq("off" -> col("n_tokens"))).drop("k")
   }
 
   /** Explode a packing plan into per-(document, sequence) spans:

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus shuffling — the epoch-order pass a training-data
@@ -12,15 +11,13 @@ import org.apache.spark.sql.functions._
   * reference system has no corpus tier; the operator follows the
   * standard shuffled-shard practice of public LLM data pipelines.
   *
-  * Scale shape: the order key is a per-row projection; the global sort
-  * is ONE range-partitioned shuffle (Spark's distributed sort — no
-  * single-partition window anywhere); positions come from
-  * `monotonically_increasing_id` decomposed into (partition, local
-  * index) plus per-partition offsets computed by a #partitions-sized
-  * aggregate — the only driver-adjacent data is one row per partition.
-  * Total order = (shuffle_key, id), so position assignment does not
-  * depend on where the range sampler happens to place partition
-  * boundaries.
+  * Scale shape: the order key is a per-row projection and positions
+  * are [[graft.core.RangeOffsets]] row counts — ONE range shuffle and
+  * ONE narrow probe job at build, then a narrow running count over the
+  * cached ranges that fails loudly if a recompute re-ranged them (no
+  * window, aggregate or broadcast join). Total order = (shuffle_key,
+  * id), so positions do not depend on where the range sampler places
+  * partition boundaries.
   */
 object Shuffle {
 
@@ -38,39 +35,11 @@ object Shuffle {
                            numPartitions: Int = 0,
                            prefixSort: Seq[org.apache.spark.sql.Column] =
                              Nil): DataFrame = {
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
     val keyed = df.withColumn("shuffle_key",
       md5(concat(lit(seed), lit(":"), col(idCol).cast("string"))))
-    val ord = prefixSort ++ Seq(col("shuffle_key"), col(idCol))
-    // EAGER: the range-shuffled sorted frame feeds BOTH the per-
-    // partition offsets aggregate (a broadcast future, submitted
-    // concurrently) and the stream side of the final join —
-    // un-persisted, the md5 keying + full range shuffle + sort of the
-    // corpus ran TWICE (two rangepartitioning exchanges in the plan;
-    // ReuseExchange does not fire across the broadcast boundary).
-    // Materializing also pins the (__mid-derived) partition/local
-    // indices both consumers must agree on to ONE computed copy.
-    val sorted = graft.core.Caching.persistEager(keyed
-      .repartitionByRange(parts, ord: _*)
-      .sortWithinPartitions(ord: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", shiftright(col("__mid"), 33))
-      .withColumn("__loc", col("__mid").bitwiseAND(lit((1L << 33) - 1))))
-    // one row per NON-EMPTY partition; the running sum over pid order
-    // is the partition's global offset (empty partitions simply never
-    // appear — the cumsum over present pids is still correct)
-    val offsets = sorted.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off",
-        coalesce(sum(col("__cnt")).over(
-          Window.orderBy(col("__pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    sorted.join(broadcast(offsets), "__pid")
-      .withColumn("pos", col("__off") + col("__loc") + 1)
-      .drop("__mid", "__pid", "__loc", "__off")
+    graft.core.RangeOffsets(keyed,
+        prefixSort ++ Seq(col("shuffle_key"), col(idCol)),
+        Seq("pos" -> lit(1L)), numPartitions)
+      .withColumn("pos", col("pos") + 1)
   }
 }

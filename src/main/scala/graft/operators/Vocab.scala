@@ -344,10 +344,10 @@ object Vocab {
     * `smallFrameRows` (the common case at bench scale — the frame is
     * tens of rows) the cumsum is one single-partition window over the
     * tiny cached frame: no repartitionByRange exchange, one
-    * sub-millisecond task. At or above it, the sums run RANGE-
-    * PARTITIONED: per-partition window sums plus a #partitions-sized
-    * offset aggregate (the Shuffle.deterministicShuffle pattern), so
-    * even the compressed frame never funnels through one task. Totals
+    * sub-millisecond task. At or above it, the sums are
+    * [[graft.core.RangeOffsets]] (one range shuffle, one probe job, a
+    * loud failure if a recompute re-ranged the partitions), so even the
+    * compressed frame never funnels through one task. Totals
     * also derive from the cached frame (sum(cnt·n_types) / sum(n_types))
     * — the corpus is scanned exactly once either way. The boundary type
     * count inside the crossing frequency level is closed-form:
@@ -386,37 +386,14 @@ object Vocab {
         sum(col("cnt") * col("n_types")).over(w1).as("cum_tokens"),
         sum(col("n_types")).over(w1).as("cum_types"))
     } else {
-      // range-partitioned cumulative sums: per-partition window sums +
-      // broadcast partition offsets (one row per non-empty partition).
-      // cnt values are DISTINCT (they are the group keys), so range
-      // boundaries can never split a key across partitions.
-      val parts = spark.sessionState.conf.numShufflePartitions
-      val sorted = coc
-        .repartitionByRange(parts, col("cnt").desc)
-        .sortWithinPartitions(col("cnt").desc)
-        .withColumn("__pid", spark_partition_id())
-      val wp = W.partitionBy(col("__pid")).orderBy(col("cnt").desc)
-        .rowsBetween(W.unboundedPreceding, 0)
-      val local = sorted.select(col("cnt"), col("n_types"), col("__pid"),
-        sum(col("cnt") * col("n_types")).over(wp).as("__ltok"),
-        sum(col("n_types")).over(wp).as("__lty"))
-      // range partitioning on cnt DESC puts larger frequencies in lower
-      // partition ids, so each partition's offset is the total of all
-      // lower-id partitions
-      val offs = sorted.groupBy(col("__pid"))
-        .agg(sum(col("cnt") * col("n_types")).as("__ptok"),
-          sum(col("n_types")).as("__pty"))
-        .select(col("__pid"),
-          coalesce(sum(col("__ptok")).over(W.orderBy(col("__pid"))
-            .rowsBetween(W.unboundedPreceding, -1)), lit(0L))
-            .as("__offtok"),
-          coalesce(sum(col("__pty")).over(W.orderBy(col("__pid"))
-            .rowsBetween(W.unboundedPreceding, -1)), lit(0L))
-            .as("__offty"))
-      local.join(F.broadcast(offs), "__pid")
-        .select(col("cnt"), col("n_types"),
-          (col("__ltok") + col("__offtok")).as("cum_tokens"),
-          (col("__lty") + col("__offty")).as("cum_types"))
+      // inclusive sums = RangeOffsets' exclusive sums + own values;
+      // cnt values are DISTINCT (the group keys), so the order is total
+      graft.core.RangeOffsets(coc, Seq(col("cnt").desc),
+          Seq("cum_tokens" -> col("cnt") * col("n_types"),
+            "cum_types" -> col("n_types")))
+        .withColumn("cum_tokens",
+          col("cum_tokens") + col("cnt") * col("n_types"))
+        .withColumn("cum_types", col("cum_types") + col("n_types"))
     }
     val totals = coc.agg(
       sum(col("cnt") * col("n_types")).as("__tt"),

@@ -260,6 +260,38 @@ class StoreFsckSpec extends AnyFunSuite {
     assert(rows === 1L && parts === 1L)
   }
 
+  test("the writer lease admits one holder at a time under simultaneous " +
+    "acquisition") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val base = tmpBase("leasestress")
+    val pool = Executors.newFixedThreadPool(8)
+    try (1 to 25).foreach { round =>
+      val root = s"$base/store$round"
+      val go = new CountDownLatch(1)
+      val (inside, maxInside, held) =
+        (new AtomicInteger, new AtomicInteger, new AtomicInteger)
+      val holders = (1 to 8).map(_ => pool.submit(new Runnable {
+        def run(): Unit = {
+          go.await()
+          try Stores.withLease(spark, root, "stress") {
+            held.incrementAndGet()
+            maxInside.accumulateAndGet(inside.incrementAndGet(), math.max)
+            Thread.sleep(20)
+            inside.decrementAndGet(); ()
+          } catch {
+            case e: IllegalStateException
+                if e.getMessage.contains("writer lease") =>
+          }
+        }
+      }))
+      go.countDown()
+      holders.foreach(_.get(60, TimeUnit.SECONDS))
+      assert(maxInside.get === 1, s"round $round: concurrent lease holders")
+      assert(held.get >= 1)
+    } finally pool.shutdown()
+  }
+
   test("the writer lease serializes CONCURRENT mutators: one of two " +
     "simultaneous removals refuses loudly, the store stays exact") {
     val base = tmpBase("leaserace")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -83,18 +84,50 @@ class PackSpec extends AnyFunSuite {
     }
   }
 
-  test("plan: no single-partition Window (the offset-aggregate pin)") {
-    val plan = Pack.plan(fixture, "doc_id", "text")
-      .queryExecution.optimizedPlan
-    val windows = plan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+  test("plan and deterministicShuffle: no Window, broadcast or shuffle " +
+    "exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Plans extends AdaptiveSparkPlanHelper
+    Seq(Pack.plan(fixture, "doc_id", "text"),
+        Shuffle.deterministicShuffle(fixture, "doc_id", "s1")).foreach { df =>
+      df.collect()
+      // the executed plan, AQE stages included
+      val plan = df.queryExecution.executedPlan
+      val wide = Plans.collect(plan) {
+        case p @ (_: WindowExec | _: BroadcastExchangeExec |
+                  _: ShuffleExchangeExec) => p
+      }
+      assert(wide.isEmpty, s"wide operators in the offsets plan:\n$plan")
     }
-    assert(windows.nonEmpty)
-    val (global, partitioned) = windows.partition(_.partitionSpec.isEmpty)
-    assert(partitioned.nonEmpty)
-    global.foreach { g =>
-      assert(g.orderSpec.exists(_.child.toString.contains("__pid")),
-        s"a global window that is not the __pid offset cumsum:\n$g")
+  }
+
+  test("plan: a noop write of a built plan runs exactly one Spark job") {
+    val p = Pack.plan(fixture, "doc_id", "text")
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ends = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.tag")))
+          .foreach(t => if (t == tag) jobs.incrementAndGet() else ends.put(t))
     }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      try p.write.format("noop").mode("overwrite").save()
+      finally sc.setLocalProperty("graft.test.tag", s"$tag:end")
+      // the listener bus delivers in order: once this thread's end
+      // marker job is seen, so is every job the write submitted
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.tag", null)
+      while (Option(ends.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("marker job never reached the listener")) !=
+          s"$tag:end") ()
+      assert(jobs.get === 1)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -166,8 +166,7 @@ class VocabSpec extends AnyFunSuite {
     assert(rows.last.getLong(2) === rows.last.getLong(3))
   }
 
-  test("coverageCurve LARGE branch plan: the count-of-counts cumsum is " +
-    "partitioned; only the #partitions-sized offset window is global") {
+  test("coverageCurve LARGE branch plan: no Window, the cumsum is RangeOffsets") {
     val docs = Seq((1L, "a a b")).toDF("doc_id", "text")
     // smallFrameRows = 0 forces the scale plan regardless of frame size
     val plan = Vocab.coverageCurve(docs, "text", Seq(5000),
@@ -176,17 +175,10 @@ class VocabSpec extends AnyFunSuite {
     val windows = plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
-    assert(windows.nonEmpty)
-    val (global, partitioned) = windows.partition(_.partitionSpec.isEmpty)
-    assert(partitioned.nonEmpty,
-      s"the per-partition cumsum window is missing:\n$plan")
-    // global windows may only be the offset cumsum over the per-pid
-    // aggregate — one row per shuffle partition, the Shuffle pattern
-    // (the cand/pick self-join duplicates that subtree, so count ≥ 1)
-    global.foreach { g =>
-      assert(g.orderSpec.exists(_.child.toString.contains("__pid")),
-        s"a global window that is not the __pid offset cumsum:\n$g")
-    }
+    assert(windows.isEmpty, s"the scale cumsum must not window:\n$plan")
+    // the range shuffle ran once at build; the plan reads its frozen rows
+    assert(!plan.toString.contains("RepartitionByExpression"),
+      s"the scale cumsum must not re-plan its range exchange:\n$plan")
   }
 
   test("coverageCurve small-frame branch: no range exchange, and both " +
