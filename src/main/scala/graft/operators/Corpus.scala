@@ -1312,7 +1312,7 @@ object Corpus {
     // shingle-sharing candidate pairs with a top-down cumulative — the
     // tuning study run before committing to a dedup threshold. The
     // production document-frequency cap (maxDf) is IN the certified
-    // plan: capBuckets is deterministic, so DuckDB replays the capped
+    // plan: BandedJoin.cap is deterministic, so DuckDB replays the capped
     // candidate set exactly.
     "q109_sim_histogram" -> ((s, d) => {
       import s.implicits._

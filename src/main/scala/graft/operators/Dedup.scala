@@ -51,35 +51,13 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Drop (band, key) buckets with more than `maxBucket` members before
-    * a bucket self-join. One extra aggregation on the same keys the join
-    * shuffles on, so AQE/exchange reuse keeps it to one shuffle of the
-    * slim banded rows. */
-  private def capBuckets(banded: DataFrame, keyCols: Seq[String],
-                         maxBucket: Int): DataFrame = {
-    val small = banded.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") <= maxBucket)
-      .select(keyCols.map(col): _*)
-    banded.join(small, keyCols, "left_semi")
-  }
+  /** The bucket keys of every minhash-family banded frame. */
+  private val BandKeys = Seq("band", "key")
 
-  /** What [[capBuckets]] would drop — the caps' observability face: a
-    * skipped viral bucket is a RECALL trade (docs inside it can only
-    * be caught by other tiers), so it must be countable, not silent.
-    * One map-side-combining aggregate over the banded keys (the same
-    * shape the cap itself pays), collapsed to ONE row:
-    * (n_buckets, n_dropped_buckets, dropped_rows, max_bucket). */
-  private def bucketCapStats(banded: DataFrame, keyCols: Seq[String],
-                             maxBucket: Int): DataFrame =
-    banded.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__bn"))
-      .agg(count(lit(1)).as("n_buckets"),
-        sum(when(col("__bn") > maxBucket, 1L).otherwise(0L))
-          .as("n_dropped_buckets"),
-        coalesce(sum(when(col("__bn") > maxBucket, col("__bn"))), lit(0L))
-          .as("dropped_rows"),
-        coalesce(max(col("__bn")), lit(0L)).as("max_bucket"))
+  /** (id, band, key) rows of a [[minhashSignatures]] frame — the banded
+    * input of the minhash candidate joins and cap reports. */
+  private def minhashBands(sig: DataFrame): DataFrame =
+    sig.select(col("id"), posexplode(col("bh")).as(BandKeys))
 
   /** Cap report for the minhash LSH tier: how many (band, key) buckets
     * exceed `maxBucket` (and would be excluded from the candidate
@@ -91,57 +69,29 @@ object Dedup {
   def minhashCapReport(df: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, k: Int = 32, bands: Int = 8,
                        maxBucket: Int = 1000): DataFrame =
-    bucketCapStats(
-      minhashSignatures(df, idCol, textCol, shingleN, k, bands)
-        .select(col("id"), posexplode(col("bh")).as(Seq("band", "key"))),
-      Seq("band", "key"), maxBucket)
+    BandedJoin.capStats(
+      minhashBands(minhashSignatures(df, idCol, textCol, shingleN, k, bands)),
+      BandKeys, maxBucket)
 
   /** Cap report for the incremental / fuzzy-decontamination shape:
     * one row per capped SIDE ("corpus"/"index" buckets at `maxBucket`,
     * "batch" at `maxBatchBucket`; a batch row appears only when the
     * batch side is capped at all — the ingest default leaves it
-    * uncapped). Columns: side + the [[bucketCapStats]] quartet. */
+    * uncapped). Columns: side + the [[BandedJoin.capStats]] quartet. */
   def incrementalCapReport(incoming: DataFrame, idCol: String,
                            textCol: String, corpusSig: DataFrame,
                            shingleN: Int = 3, k: Int = 32, bands: Int = 8,
                            maxBucket: Int = 1000,
                            maxBatchBucket: Int = 0): DataFrame = {
-    val cSide = bucketCapStats(
-      corpusSig.select(col("id"), posexplode(col("bh")).as(Seq("band", "key"))),
-      Seq("band", "key"), maxBucket)
-      .select(lit("corpus").as("side"), col("*"))
+    val cSide = BandedJoin.capStats(minhashBands(corpusSig), BandKeys,
+      maxBucket).select(lit("corpus").as("side"), col("*"))
     if (maxBatchBucket <= 0) cSide
-    else {
-      val bSide = bucketCapStats(
-        minhashSignatures(incoming, idCol, textCol, shingleN, k, bands)
-          .select(col("id"), posexplode(col("bh")).as(Seq("band", "key"))),
-        Seq("band", "key"), maxBatchBucket)
-        .select(lit("batch").as("side"), col("*"))
-      cSide.unionByName(bSide)
-    }
+    else cSide.unionByName(BandedJoin.capStats(
+      minhashBands(minhashSignatures(incoming, idCol, textCol, shingleN, k,
+        bands)), BandKeys, maxBatchBucket)
+      .select(lit("batch").as("side"), col("*")))
   }
 
-  /** MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
-    *
-    * Pipeline: shingle → signature → band buckets (capped) → self-join
-    * within (band, bucket) → distinct candidate pairs → join shingle
-    * sets back → exact jaccard ≥ threshold. Only candidate pairs (band
-    * collisions) are ever verified — the all-pairs cross join never
-    * materializes.
-    *
-    * The signature DataFrame is consumed three times (band explode and
-    * both candidate joinbacks), so it is persisted MEMORY_AND_DISK —
-    * without that, 100 TB of text would be re-shingled three times. The
-    * persist is registered with graft.core.Caching; harness loops call
-    * `Caching.releaseAll()` after materializing each result so cached
-    * blocks don't accumulate across a long-lived session.
-    *
-    * The per-row kernels (shingling, k-hash signature, band folding) run
-    * as tight JVM loops in mapPartitions (graft.functions.Hashing); the
-    * equivalent Catalyst higher-order-function expressions interpret one
-    * boxed node per shingle×hash and measured ~20× slower. The join
-    * structure stays declarative so Catalyst/AQE still plan the shuffles.
-    */
   /** (id, sh, bh) MinHash signature frame: shingle set + banded
     * signature keys per document, computed as tight JVM loops in one
     * mapPartitions pass. PUBLIC because this frame IS the storable
@@ -207,36 +157,36 @@ object Dedup {
     minhashCandidatesFromSigs(
       minhashSignatures(df, idCol, textCol, shingleN, k, bands), maxBucket)
 
-  /** Persist-and-track unless the caller already persisted the frame
-    * (the sign-once compositions hand the SAME signature frame to
-    * several tiers — re-persisting would just warn and double-track). */
-  private def persistIfCold(df: DataFrame): DataFrame =
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      graft.core.Caching.persistTracked(df)
-    else df
-
   private def minhashCandidatesFromSigs(sigIn: DataFrame,
                                         maxBucket: Int): DataFrame = {
-    val sig = persistIfCold(sigIn)
-    // EAGER: the capped banded frame feeds BOTH self-join sides, whose
-    // map stages are submitted concurrently (broadcast future + stream
-    // side) — un-persisted, each side re-ran the posexplode AND the
-    // bucket census semi-join from the sig cache (the before-plan
-    // carried four copies of that subtree; see Caching.persistEager)
-    val banded = graft.core.Caching.persistEager(capBuckets(
-      sig.select(col("id"), posexplode(col("bh")).as(Seq("band", "key"))),
-      Seq("band", "key"), maxBucket))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
-      .join(sig.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sig.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+    val sig = BandedJoin.shared(sigIn)
+    BandedJoin.joinBack(
+      BandedJoin.selfPairs(minhashBands(sig), BandKeys, maxBucket,
+        ordered = true),
+      sig, Seq("sh"), "id_a" -> "_a", "id_b" -> "_b")
   }
 
+  /** MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
+    *
+    * Pipeline: shingle → signature → band buckets (capped) → self-join
+    * within (band, bucket) → distinct candidate pairs → join shingle
+    * sets back → exact jaccard ≥ threshold. Only candidate pairs (band
+    * collisions) are ever verified — the all-pairs cross join never
+    * materializes.
+    *
+    * The signature DataFrame is consumed three times (band explode and
+    * both candidate joinbacks), so it is persisted MEMORY_AND_DISK —
+    * without that, 100 TB of text would be re-shingled three times. The
+    * persist is registered with graft.core.Caching; harness loops call
+    * `Caching.releaseAll()` after materializing each result so cached
+    * blocks don't accumulate across a long-lived session.
+    *
+    * The per-row kernels (shingling, k-hash signature, band folding) run
+    * as tight JVM loops in mapPartitions (graft.functions.Hashing); the
+    * equivalent Catalyst higher-order-function expressions interpret one
+    * boxed node per shingle×hash and measured ~20× slower. The join
+    * structure stays declarative so Catalyst/AQE still plan the shuffles.
+    */
   def minhashNearDup(df: DataFrame, idCol: String, textCol: String,
                      shingleN: Int = 3, k: Int = 32, bands: Int = 8,
                      threshold: Double = 0.8,
@@ -265,12 +215,8 @@ object Dedup {
   def minhashNearDupCountsFromSigs(sig: DataFrame,
                                    thrNum: Int = 4, thrDen: Int = 5,
                                    maxBucket: Int = 1000): DataFrame =
-    minhashCandidatesFromSigs(sig, maxBucket)
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
-          .as("inter"),
-        size(array_union(col("sh_a"), col("sh_b"))).cast("long").as("uni"))
-      .filter(col("inter") * thrDen >= col("uni") * thrNum)
+    jaccardCounts(minhashCandidatesFromSigs(sig, maxBucket),
+      "id_a", "id_b", "sh_a", "sh_b", thrNum, thrDen)
 
   /** First 15 hex chars of md5 parsed as a 60-bit non-negative long —
     * the cross-engine hash family (the q86 keyMode="md5" recipe): ANSI
@@ -300,11 +246,8 @@ object Dedup {
     require(bands > 0 && k % bands == 0, "bands must divide k")
     require(thrNum > 0 && thrDen > 0, "threshold must be positive")
     val r = k / bands
-    // lazily persisted (NOT eager): the first consumer — the k-min
-    // signature aggregate — runs strictly before the verify joinbacks,
-    // so it materializes the cache for them; an eager count() here
-    // measured as pure extra-pass overhead (see Caching.persistEager)
-    val sh = graft.core.Caching.persistTracked(
+    // banded (through the k-min aggregate) and joined back: shared
+    val sh = BandedJoin.shared(
       df.select(col(idCol).cast("long").as("id"),
         graft.functions.TextFunctions.shingles(col(textCol), shingleN)
           .as("shs")))
@@ -318,28 +261,24 @@ object Dedup {
       md5Long60(concat_ws(",",
         (b * r until (b + 1) * r).map(i => col(s"__m$i").cast("string")): _*))
     }
-    // EAGER: both self-join sides would otherwise re-run the ENTIRE
-    // k-min md5 signature aggregate + bucket census from the shingle
-    // cache (the expensive pass of this operator, twice)
-    val banded = graft.core.Caching.persistEager(capBuckets(
-      mins.select(col("id"),
-        posexplode(array(bandCols: _*)).as(Seq("band", "key"))),
-      Seq("band", "key"), maxBucket))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
-      .join(sh.select(col("id").as("id_a"), col("shs").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("shs").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
-          .as("inter"),
-        size(array_union(col("sh_a"), col("sh_b"))).cast("long").as("uni"))
-      .filter(col("inter") * thrDen >= col("uni") * thrNum)
+    val cand = BandedJoin.selfPairs(
+      mins.select(col("id"), posexplode(array(bandCols: _*)).as(BandKeys)),
+      BandKeys, maxBucket, ordered = true)
+    jaccardCounts(
+      BandedJoin.joinBack(cand, sh, Seq("shs"), "id_a" -> "_a", "id_b" -> "_b"),
+      "id_a", "id_b", "shs_a", "shs_b", thrNum, thrDen)
   }
+
+  /** Exact integer-arithmetic jaccard verify of joined-back shingle
+    * sets: (a, b, inter, uni) rows with inter·thrDen ≥ uni·thrNum. */
+  private def jaccardCounts(pairs: DataFrame, a: String, b: String,
+                            shA: String, shB: String,
+                            thrNum: Int, thrDen: Int): DataFrame =
+    pairs
+      .select(col(a), col(b),
+        size(array_intersect(col(shA), col(shB))).cast("long").as("inter"),
+        size(array_union(col(shA), col(shB))).cast("long").as("uni"))
+      .filter(col("inter") * thrDen >= col("uni") * thrNum)
 
   /** Certification twin of [[simhashNearDup]]: 60-bit SimHash (the
     * md5Long60 family width) built from pure column expressions — one
@@ -371,26 +310,21 @@ object Dedup {
     val shCol = (0 until bits).map(j =>
       when(col(s"__v$j") > 0, lit(1L << j)).otherwise(lit(0L)))
       .reduce(_ + _)
-    val sig = graft.core.Caching.persistTracked(
-      votes.select(col("id"), shCol.as("sh")))
-    // EAGER: one materialization of the capped banded frame serves
-    // both self-join sides (each re-ran the band explode + census
-    // semi-join from the sig cache otherwise)
-    val banded = graft.core.Caching.persistEager(capBuckets(
-      sig.select(col("id"), col("sh"),
+    hammingPairs(votes.select(col("id"), shCol.as("sh"))
+      .select(col("id"), col("sh"),
         posexplode(array((0 until bands).map(b =>
           shiftright(col("sh"), b * bandBits).bitwiseAND(lit(mask))): _*))
-          .as(Seq("band", "key"))),
-      Seq("band", "key"), maxBucket))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        hamming(col("a.sh"), col("b.sh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+          .as(BandKeys)), maxBucket, maxHamming)
   }
+
+  /** The simhash verify over a banded (id, sh, band, key) frame: capped
+    * self-pairs carrying the fingerprint, hamming ≤ maxHamming. */
+  private def hammingPairs(banded: DataFrame, maxBucket: Int,
+                           maxHamming: Int): DataFrame =
+    BandedJoin.selfPairs(banded, BandKeys, maxBucket, ordered = true)
+      .select(col("id_a"), col("id_b"),
+        hamming(col("sh_a"), col("sh_b")).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
 
   /** Threshold-sweep study for dedup tuning: the exact-Jaccard
     * histogram over shingle-sharing candidate pairs, binned into
@@ -418,29 +352,17 @@ object Dedup {
     require(binBp > 0 && binBp <= 10000 && 10000 % binBp == 0,
       s"binBp must divide 10000, got $binBp")
     import org.apache.spark.sql.expressions.Window
-    // EAGER: sizes, the cap census, the semi-join and both self-join
-    // sides race this cache when submitted concurrently — the stage
-    // profile showed the tokenize+shingle pass running six times side
-    // by side (see Caching.persistEager)
-    val sh = graft.core.Caching.persistEager(
+    // shingle-scale (#docs × #shingles rows): read by the sizes
+    // aggregate and the capped block join, so shared; the capped frame
+    // itself is recomputed per join side (see BandedJoin)
+    val sh = BandedJoin.shared(
       df.select(col(idCol).cast("long").as("id"),
           graft.functions.TextFunctions.tokens(col(textCol)).as("__tk"))
         .select(col("id"), explode(
           graft.functions.TextFunctions.shinglesTokens(col("__tk"),
             shingleN)).as("s")))
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    // NOT eager-persisted: the capped frame here is SHINGLE-scale
-    // (#docs x #shingles rows) — measured 1.5->3.0 s when materialized
-    // eagerly (the cache write+read of the wide exploded frame costs
-    // more than the duplicated census semi-join over the already-cached
-    // sh). The banded minhash/simhash sites below persist because their
-    // frames are only #docs x bands rows.
-    val blocked = if (maxDf > 0) capBuckets(sh, Seq("s"), maxDf) else sh
-    val pairs = blocked.as("a")
-      .join(blocked.as("b"),
-        col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
+    val pairs = BandedJoin.sharedKeyCounts(sh, Seq("s"), maxDf, "inter")
       .join(sizes.select(col("id").as("id_a"), col("n").as("na")), "id_a")
       .join(sizes.select(col("id").as("id_b"), col("n").as("nb")), "id_b")
       .select(expr("inter * 10000 DIV (na + nb - inter)").as("jbp"))
@@ -496,27 +418,19 @@ object Dedup {
                                 maxBucket: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val fps = graft.core.Caching.persistTracked(
-      df.select(col(idCol).cast("long"), col(textCol))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          it.flatMap { case (id, text) =>
-            fingerprints(text).distinct.map(f => (id, f))
+    // one row per (doc, distinct fingerprint), carrying the doc's
+    // fingerprint count; fingerprint-scale, so the capped frame is
+    // recomputed per join side (see BandedJoin)
+    BandedJoin.sharedKeyCounts(
+        df.select(col(idCol).cast("long"), col(textCol))
+          .as[(Long, String)]
+          .mapPartitions { it =>
+            it.flatMap { case (id, text) =>
+              val fs = fingerprints(text).distinct
+              fs.map(f => (id, f, fs.length.toLong))
+            }
           }
-        }
-        .toDF("id", "fp"))
-    val sizes = fps.groupBy(col("id")).agg(count(lit(1)).as("nfp"))
-    // NOT eager-persisted: fingerprint-scale frame (#docs x #fps rows)
-    // — measured 0.96->1.51 s when materialized eagerly, same tradeoff
-    // as similarityHistogram's shingle frame above
-    val banded = capBuckets(fps, Seq("fp"), maxBucket)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .join(sizes.select(col("id").as("id_a"), col("nfp").as("nfp_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("nfp").as("nfp_b")), "id_b")
+          .toDF("id", "fp", "nfp"), Seq("fp"), maxBucket, "n_shared")
       // containment: shared fraction of the SMALLER fingerprint set —
       // the MOSS-style copy metric. With the document-frequency filter
       // above, background containment between unrelated docs is near
@@ -529,33 +443,6 @@ object Dedup {
       .filter(col("containment") >= minContainment)
   }
 
-  /** Connected components over an undirected pair list — the step that
-    * turns near-dup PAIRS into dedup CLUSTERS (a≈b and b≈c must merge
-    * into one group even when a≉c directly). Min-label propagation with
-    * POINTER JUMPING: each round a node adopts the minimum root among
-    * itself and its neighbors, then compresses one hop (root := root's
-    * root), so the unresolved diameter roughly halves every round —
-    * O(log diameter) rounds instead of O(diameter). Each round is
-    * materialized with `localCheckpoint` (eager), which both pins the
-    * result AND truncates lineage — with plain persist the logical plan
-    * nests one level per round and analysis time grows with iteration
-    * count, which dominated wall-clock on deep chains. Deterministic:
-    * min() is order-free. Returns (id, cluster_root) for every id
-    * appearing in a pair. Throws if the iteration budget is exhausted
-    * before convergence — non-converged labels are silently-wrong
-    * clusters, never worth returning.
-    *
-    * Fast path: the edge list here is the OUTPUT of near-dup
-    * verification — slim (two longs) and proportional to the duplicate
-    * pair count, not the corpus — so it usually fits one task by
-    * orders of magnitude. When `count ≤ localEdgeLimit` (default 5M
-    * edges ≈ 80 MB) the components are solved by a single-task
-    * union-find over the verified pairs: one shuffle of the edge list
-    * instead of O(log diameter) rounds of join+checkpoint+count jobs,
-    * whose fixed per-round cost dominates wall-clock on small graphs.
-    * Above the limit, the distributed propagation loop is the scale
-    * path. Both paths produce identical labels (root = min id of the
-    * component). */
   /** Single-task union-find over a slim verified-pair edge list — the
     * small-graph fast path of [[connectedComponents]]. The edges are
     * shuffled into ONE task (mapPartitions over repartition(1), so the
@@ -593,6 +480,33 @@ object Dedup {
       .toDF("id", "root")
   }
 
+  /** Connected components over an undirected pair list — the step that
+    * turns near-dup PAIRS into dedup CLUSTERS (a≈b and b≈c must merge
+    * into one group even when a≉c directly). Min-label propagation with
+    * POINTER JUMPING: each round a node adopts the minimum root among
+    * itself and its neighbors, then compresses one hop (root := root's
+    * root), so the unresolved diameter roughly halves every round —
+    * O(log diameter) rounds instead of O(diameter). Each round is
+    * materialized with `localCheckpoint` (eager), which both pins the
+    * result AND truncates lineage — with plain persist the logical plan
+    * nests one level per round and analysis time grows with iteration
+    * count, which dominated wall-clock on deep chains. Deterministic:
+    * min() is order-free. Returns (id, cluster_root) for every id
+    * appearing in a pair. Throws if the iteration budget is exhausted
+    * before convergence — non-converged labels are silently-wrong
+    * clusters, never worth returning.
+    *
+    * Fast path: the edge list here is the OUTPUT of near-dup
+    * verification — slim (two longs) and proportional to the duplicate
+    * pair count, not the corpus — so it usually fits one task by
+    * orders of magnitude. When `count ≤ localEdgeLimit` (default 5M
+    * edges ≈ 80 MB) the components are solved by a single-task
+    * union-find over the verified pairs: one shuffle of the edge list
+    * instead of O(log diameter) rounds of join+checkpoint+count jobs,
+    * whose fixed per-round cost dominates wall-clock on small graphs.
+    * Above the limit, the distributed propagation loop is the scale
+    * path. Both paths produce identical labels (root = min id of the
+    * component). */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           localEdgeLimit: Long = 5000000L): DataFrame = {
@@ -722,35 +636,16 @@ object Dedup {
       "minhash_k" -> k.toLong, "bands" -> bands.toLong)
     requireSigParams(corpusSig, "bh", expect, "Dedup.minhashSignatures")
     requireSigParams(batchSig, "bh", expect, "Dedup.minhashSignatures")
-    val bSig = persistIfCold(batchSig)
-    val cSig = persistIfCold(corpusSig)
-    val bBand0 = bSig
-      .select(col("id").as("batch_id"),
-        posexplode(col("bh")).as(Seq("band", "key")))
-    // in the ingest shape the batch is small and stays uncapped
-    // (default); compositions that stream a LARGE frame through the
-    // batch side (Decontaminate.fuzzyHits) cap it too, or a hot
-    // batch-side bucket joins wholesale against its index collision
-    val bBand = if (maxBatchBucket > 0)
-      capBuckets(bBand0, Seq("band", "key"), maxBatchBucket)
-    else bBand0
-    val cBand = capBuckets(
-      cSig.select(col("id").as("corpus_id"),
-        posexplode(col("bh")).as(Seq("band", "key"))),
-      Seq("band", "key"), maxBucket)
-    val cand = bBand.join(cBand, Seq("band", "key"))
-      .select(col("batch_id"), col("corpus_id"))
-      .distinct()
-    cand
-      .join(bSig.select(col("id").as("batch_id"), col("sh").as("sh_b")),
-        "batch_id")
-      .join(cSig.select(col("id").as("corpus_id"), col("sh").as("sh_c")),
-        "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        size(array_intersect(col("sh_b"), col("sh_c"))).cast("long")
-          .as("inter"),
-        size(array_union(col("sh_b"), col("sh_c"))).cast("long").as("uni"))
-      .filter(col("inter") * thrDen >= col("uni") * thrNum)
+    // each side is banded AND joined back: shared
+    val bSig = BandedJoin.shared(batchSig)
+    val cSig = BandedJoin.shared(corpusSig)
+    val cand = BandedJoin.crossPairs(minhashBands(bSig), minhashBands(cSig),
+      BandKeys, maxBatchBucket, maxBucket)
+    jaccardCounts(
+      BandedJoin.joinBack(
+        BandedJoin.joinBack(cand, bSig, Seq("sh"), "batch_id" -> "_b"),
+        cSig, Seq("sh"), "corpus_id" -> "_c"),
+      "batch_id", "corpus_id", "sh_b", "sh_c", thrNum, thrDen)
   }
 
   /** Blocked edit-distance (fuzzy) near-dup pairs: candidates share a
@@ -793,8 +688,8 @@ object Dedup {
     * corpora where n ≫ maxBucket·2^bandBits, prefer bands = 4 with
     * maxHamming ≤ 3 (the Manku-style layout) — banding is a parameter,
     * the guarantee `maxHamming < bands` is enforced either way.
-    * Buckets are capped (see capBuckets) and the banded signatures
-    * persisted for the two sides of the self-join. The SimHash kernel
+    * Buckets are capped and the capped banded frame materialized once
+    * for the two sides of the self-join (see BandedJoin). The SimHash kernel
     * runs as a JVM loop in mapPartitions (Hashing.simhash64); banding
     * and the bucket join stay declarative. */
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
@@ -808,7 +703,7 @@ object Dedup {
     val mask = (1L << bandBits) - 1L
     val spark = df.sparkSession
     import spark.implicits._
-    val banded0 = graft.core.Caching.persistTracked(
+    hammingPairs(
       df.select(col(idCol).cast("long"), col(textCol))
         .as[(Long, String)]
         .mapPartitions { it =>
@@ -818,48 +713,26 @@ object Dedup {
               (id, sh, b, (sh >>> (b * bandBits)) & mask))
           }
         }
-        .toDF("id", "sh", "band", "key"))
-    val banded = capBuckets(banded0, Seq("band", "key"), maxBucket)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        hamming(col("a.sh"), col("b.sh")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+        .toDF("id", "sh", "band", "key"), maxBucket, maxHamming)
   }
 
-  /** Exact-substring (repeated-passage) removal — the span-level dedup
-    * tier below document-level near-dup (Lee, Ippolito et al.,
-    * "Deduplicating Training Data Makes Language Models Better", ACL
-    * 2022 — public literature; the reference system has no corpus
-    * tier at all): any `n`-token span occurring in ≥ `minDocs`
-    * DISTINCT documents is boilerplate, and every token covered by
-    * such a span is removed from every document carrying it. Catches
-    * shared headers/footers/licenses that document-level jaccard never
-    * trips on.
-    *
-    * Returns (id, clean_text, n_tokens, n_removed) for every input
-    * document, untouched docs included (n_removed = 0); a fully
-    * boilerplate doc keeps an empty clean_text, so the caller's
-    * min-length filter — not this operator — decides its fate.
-    *
-    * Scale shape (the 100 TB posture):
-    *  - one tokenize scan; gram expansion is a per-row generator
-    *    (posexplode in the scan stage), never a join;
-    *  - the doc-frequency aggregate shuffles slim (gram, id) pairs
-    *    with map-side partial aggregation. `fingerprint = true`
-    *    (default) shuffles an 8-byte xxhash64 of each gram instead of
-    *    its text — the hash-grouped counts equal the string-grouped
-    *    counts up to 64-bit collisions (~n²/2⁶⁵; a production corpus
-    *    would widen to 128 bits) — and q80 runs fingerprint = false so
-    *    the oracle certifies the string semantics the hash stands for;
-    *  - the dup-gram set is heavy-hitters-small by construction, so
-    *    AQE turns the join back into a broadcast at runtime;
-    *  - reassembly is ONE shuffle keyed on doc id (collect_set of dup
-    *    starts), and the span-coverage arithmetic is per-row HOFs over
-    *    the token array — no driver participation at any width. */
+  /** LOUD id-type gate (the z-order writer's posture): `cast("long")`
+    * of a non-numeric string id yields NULL, and NULL ids are
+    * null-false in every `id === key` / `id =!= key` tier filter — the
+    * cascade would then emit an EMPTY audit (all tiers zero) while
+    * claiming to explain every document. Reject the column type up
+    * front instead of corrupting silently; non-numeric ids need a
+    * surrogate key (`Preprocess.withIds` / monotonically_increasing_id
+    * + a mapping table) projected first. */
+  private def requireNumericId(df: DataFrame, idCol: String,
+                               op: String): Unit = {
+    val dt = df.schema(idCol).dataType
+    require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
+      s"$op id column '$idCol' must be numeric, got $dt — non-numeric " +
+        "ids cast to NULL and silently empty the audit; project a " +
+        "numeric surrogate key first")
+  }
+
   /** The dedup CASCADE with per-document provenance — tiers run in
     * cost order, each only on the previous tier's survivors, and every
     * input document leaves with an explanation:
@@ -878,23 +751,6 @@ object Dedup {
     * audit actually reports (why did doc X disappear / shrink?). Each
     * tier is the already-certified operator (q25/q30/q80 semantics);
     * the cascade adds only hash-keyed joins between them. */
-  /** LOUD id-type gate (the z-order writer's posture): `cast("long")`
-    * of a non-numeric string id yields NULL, and NULL ids are
-    * null-false in every `id === key` / `id =!= key` tier filter — the
-    * cascade would then emit an EMPTY audit (all tiers zero) while
-    * claiming to explain every document. Reject the column type up
-    * front instead of corrupting silently; non-numeric ids need a
-    * surrogate key (`Preprocess.withIds` / monotonically_increasing_id
-    * + a mapping table) projected first. */
-  private def requireNumericId(df: DataFrame, idCol: String,
-                               op: String): Unit = {
-    val dt = df.schema(idCol).dataType
-    require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"$op id column '$idCol' must be numeric, got $dt — non-numeric " +
-        "ids cast to NULL and silently empty the audit; project a " +
-        "numeric surrogate key first")
-  }
-
   def cascade(df: DataFrame, idCol: String, textCol: String,
               n: Int = 8, minDocs: Int = 2,
               fingerprintGrams: Boolean = true): DataFrame =
@@ -956,6 +812,36 @@ object Dedup {
       cleaned)
   }
 
+  /** Exact-substring (repeated-passage) removal — the span-level dedup
+    * tier below document-level near-dup (Lee, Ippolito et al.,
+    * "Deduplicating Training Data Makes Language Models Better", ACL
+    * 2022 — public literature; the reference system has no corpus
+    * tier at all): any `n`-token span occurring in ≥ `minDocs`
+    * DISTINCT documents is boilerplate, and every token covered by
+    * such a span is removed from every document carrying it. Catches
+    * shared headers/footers/licenses that document-level jaccard never
+    * trips on.
+    *
+    * Returns (id, clean_text, n_tokens, n_removed) for every input
+    * document, untouched docs included (n_removed = 0); a fully
+    * boilerplate doc keeps an empty clean_text, so the caller's
+    * min-length filter — not this operator — decides its fate.
+    *
+    * Scale shape (the 100 TB posture):
+    *  - one tokenize scan; gram expansion is a per-row generator
+    *    (posexplode in the scan stage), never a join;
+    *  - the doc-frequency aggregate shuffles slim (gram, id) pairs
+    *    with map-side partial aggregation. `fingerprint = true`
+    *    (default) shuffles an 8-byte xxhash64 of each gram instead of
+    *    its text — the hash-grouped counts equal the string-grouped
+    *    counts up to 64-bit collisions (~n²/2⁶⁵; a production corpus
+    *    would widen to 128 bits) — and q80 runs fingerprint = false so
+    *    the oracle certifies the string semantics the hash stands for;
+    *  - the dup-gram set is heavy-hitters-small by construction, so
+    *    AQE turns the join back into a broadcast at runtime;
+    *  - reassembly is ONE shuffle keyed on doc id (collect_set of dup
+    *    starts), and the span-coverage arithmetic is per-row HOFs over
+    *    the token array — no driver participation at any width. */
   def exactSubstrRemove(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 8, minDocs: Int = 2,
                         fingerprint: Boolean = true): DataFrame = {

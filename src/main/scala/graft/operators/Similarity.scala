@@ -22,6 +22,9 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
+  /** The bucket keys of every hyperplane-signature banded frame. */
+  private val SigKeys = Seq("band", "sig")
+
   /** Deterministic Gaussian hyperplanes (fixed LCG seed). */
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 7L): Seq[Seq[Double]] = {
     val rnd = new java.util.Random(seed)
@@ -86,17 +89,6 @@ object Similarity {
         }
       }
       .toDF("id", "band", "sig")
-  }
-
-  /** Drop (band, sig) buckets larger than `maxBucket` before a bucket
-    * self-join (same defense as Dedup.capBuckets: a bucket that big is
-    * a duplicate cluster, not a near-neighbor set). */
-  private def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame = {
-    val small = banded.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") <= maxBucket)
-      .select(col("band"), col("sig"))
-    banded.join(small, Seq("band", "sig"), "left_semi")
   }
 
   /** Exact brute-force cosine top-k against the vector of `queryId`.
@@ -228,17 +220,19 @@ object Similarity {
               seed: Long = 7L, dim: Int = -1): DataFrame = {
     val d = if (dim > 0) dim else inferDim(df, vecCol)
     val planes = hyperplanes(bands * bitsPerBand, d, seed)
-    val sigs = graft.core.Caching.persistTracked(
+    lshRerank(df, idCol, vecCol, queryId, k,
       signatures(df, idCol, vecCol, planes, bands, bitsPerBand))
-    val qSide = sigs.filter(col("id") === queryId)
-      .select(col("band").as("qband"), col("sig").as("qsig"))
-    val candIds = sigs.filter(col("id") =!= queryId)
-      .join(broadcast(qSide),
-        col("band") === col("qband") && col("sig") === col("qsig"))
-      .select(col("id")).distinct()
-    // consumed by the candidate joinback AND the query-vector lookup —
-    // persist so the source is scanned (and float→double cast) once
-    val vecs = graft.core.Caching.persistTracked(
+  }
+
+  /** The probe-and-rerank body of [[lshTopK]] and [[lshTopKMd5]]: ids
+    * sharing a band bucket with the query, ranked by exact cosine. The
+    * vector frame feeds the candidate join-back AND the query-vector
+    * lookup, so it is shared (the source is scanned and float→double
+    * cast once). */
+  private def lshRerank(df: DataFrame, idCol: String, vecCol: String,
+                        queryId: Long, k: Int, sigs: DataFrame): DataFrame = {
+    val candIds = BandedJoin.probe(sigs, SigKeys, queryId)
+    val vecs = BandedJoin.shared(
       df.select(col(idCol).cast("long").as("id"),
         asDouble(col(vecCol)).as("vec")))
     val qVec = vecs.filter(col("id") === queryId).select(col("vec").as("qvec"))
@@ -299,28 +293,9 @@ object Similarity {
   def lshTopKMd5(df: DataFrame, idCol: String, vecCol: String,
                  queryId: Long, k: Int,
                  bands: Int = 8, bitsPerBand: Int = 8,
-                 dim: Int = -1, quantScale: Double = 1e6): DataFrame = {
-    val sigs = graft.core.Caching.persistTracked(
-      md5Signatures(df, idCol, vecCol, bands, bitsPerBand, dim,
-        quantScale))
-    val qSide = sigs.filter(col("id") === queryId)
-      .select(col("band").as("qband"), col("sig").as("qsig"))
-    val candIds = sigs.filter(col("id") =!= queryId)
-      .join(broadcast(qSide),
-        col("band") === col("qband") && col("sig") === col("qsig"))
-      .select(col("id")).distinct()
-    val vecs = graft.core.Caching.persistTracked(
-      df.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("vec")))
-    val qVec = vecs.filter(col("id") === queryId)
-      .select(col("vec").as("qvec"))
-    candIds.join(vecs, "id")
-      .crossJoin(broadcast(qVec))
-      .select(col("id"),
-        round(cosineNative(col("vec"), col("qvec")), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("id"))
-      .limit(k)
-  }
+                 dim: Int = -1, quantScale: Double = 1e6): DataFrame =
+    lshRerank(df, idCol, vecCol, queryId, k,
+      md5Signatures(df, idCol, vecCol, bands, bitsPerBand, dim, quantScale))
 
   /** k-NN self-join: approximate top-k neighbors for EVERY vector in
     * one pass — the batch form of lshTopK (which probes one query).
@@ -336,35 +311,19 @@ object Similarity {
               dim: Int = -1, maxBucket: Int = 1000): DataFrame = {
     val d = if (dim > 0) dim else inferDim(df, vecCol)
     val planes = hyperplanes(bands * bitsPerBand, d, seed)
-    // outer EAGER persist: one materialization of the CAPPED banded
-    // frame serves both self-join sides (each re-ran the census
-    // semi-join from the signature cache otherwise)
-    val slim = graft.core.Caching.persistEager(capBuckets(
-      graft.core.Caching.persistTracked(
-        signatures(df, idCol, vecCol, planes, bands, bitsPerBand)),
-      maxBucket))
-    val cand = slim.as("a")
-      .join(slim.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("qid"), col("b.id").as("nid"))
-      .distinct()
-    // per-ROW norm rides the slim vector frame so the per-PAIR verify
-    // is the dot product alone (bit-identical: see cosinePrenorm).
-    // EAGER: the qid and nid joinbacks build two broadcast exchanges
-    // concurrently, each racing this cache (see Caching.persistEager)
-    val vecs = graft.core.Caching.persistEager(
-      df.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("vec"))
-        .withColumn("__nm", sqrt(sumSqNative(col("vec")))))
-    val scored = cand
-      .join(vecs.select(col("id").as("qid"), col("vec").as("qvec"),
-        col("__nm").as("__qnm")), "qid")
-      .join(vecs.select(col("id").as("nid"), col("vec").as("nvec"),
-        col("__nm").as("__nnm")), "nid")
-      .select(col("qid"), col("nid"),
-        round(cosinePrenorm(col("qvec"), col("nvec"),
-          col("__qnm") * col("__nnm")), 4).as("cos_sim"))
+    knnFromSigs(df, idCol, vecCol, k, maxBucket,
+      signatures(df, idCol, vecCol, planes, bands, bitsPerBand))
+  }
+
+  /** The k-NN body of [[knnJoin]] and [[knnJoinMd5]]: capped candidate
+    * pairs in both orders, exact cosine over joined-back vectors, and
+    * the bounded per-query top-k aggregate. */
+  private def knnFromSigs(df: DataFrame, idCol: String, vecCol: String,
+                          k: Int, maxBucket: Int,
+                          sigs: DataFrame): DataFrame = {
+    val cand = BandedJoin.selfPairs(sigs, SigKeys, maxBucket, ordered = false)
+    val scored = cosinePairs(cand, normedVectors(df, idCol, vecCol))
+      .select(col("id_a").as("qid"), col("id_b").as("nid"), col("cos_sim"))
     val topk = org.apache.spark.sql.functions.udaf(
       graft.functions.Aggregators.topK(k),
       org.apache.spark.sql.Encoders.product[graft.functions.Aggregators.Ranked])
@@ -375,6 +334,24 @@ object Similarity {
         col("__r.id").as("nid"), col("__r.v").as("cos_sim"))
   }
 
+  /** (id, vec, __nm) with the per-ROW norm riding the slim vector frame,
+    * so the per-PAIR verify is the dot product alone (bit-identical:
+    * see cosinePrenorm). */
+  private def normedVectors(df: DataFrame, idCol: String,
+                            vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"),
+        asDouble(col(vecCol)).as("vec"))
+      .withColumn("__nm", sqrt(sumSqNative(col("vec"))))
+
+  /** (id_a, id_b, cos_sim) for candidate pairs: both sides' vectors
+    * joined back from `vecs` (a [[normedVectors]] frame). */
+  private def cosinePairs(cand: DataFrame, vecs: DataFrame): DataFrame =
+    BandedJoin.joinBack(cand, vecs, Seq("vec", "__nm"),
+        "id_a" -> "_a", "id_b" -> "_b")
+      .select(col("id_a"), col("id_b"),
+        round(cosinePrenorm(col("vec_a"), col("vec_b"),
+          col("__nm_a") * col("__nm_b")), 4).as("cos_sim"))
+
   /** Certification twin of [[knnJoin]] under the md5-parity plane
     * family ([[lshTopKMd5]]'s signatures): same capped bucket
     * self-join, exact-cosine scoring, and bounded per-query top-k —
@@ -384,47 +361,9 @@ object Similarity {
   def knnJoinMd5(df: DataFrame, idCol: String, vecCol: String, k: Int,
                  bands: Int = 8, bitsPerBand: Int = 6, dim: Int = -1,
                  quantScale: Double = 1e6,
-                 maxBucket: Int = 1000): DataFrame = {
-    // inner EAGER: the census + semi-join race the signature cache when
-    // submitted concurrently (see Caching.persistEager); outer EAGER:
-    // one materialization of the CAPPED frame serves both self-join
-    // sides instead of each re-running the census semi-join
-    val slim = graft.core.Caching.persistEager(capBuckets(
-      graft.core.Caching.persistEager(
-        md5Signatures(df, idCol, vecCol, bands, bitsPerBand, dim,
-          quantScale)),
-      maxBucket))
-    val cand = slim.as("a")
-      .join(slim.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("qid"), col("b.id").as("nid"))
-      .distinct()
-    // per-ROW norm rides the slim vector frame so the per-PAIR verify
-    // is the dot product alone (bit-identical: see cosinePrenorm).
-    // EAGER: the qid and nid joinbacks build two broadcast exchanges
-    // concurrently, each racing this cache (see Caching.persistEager)
-    val vecs = graft.core.Caching.persistEager(
-      df.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("vec"))
-        .withColumn("__nm", sqrt(sumSqNative(col("vec")))))
-    val scored = cand
-      .join(vecs.select(col("id").as("qid"), col("vec").as("qvec"),
-        col("__nm").as("__qnm")), "qid")
-      .join(vecs.select(col("id").as("nid"), col("vec").as("nvec"),
-        col("__nm").as("__nnm")), "nid")
-      .select(col("qid"), col("nid"),
-        round(cosinePrenorm(col("qvec"), col("nvec"),
-          col("__qnm") * col("__nnm")), 4).as("cos_sim"))
-    val topk = org.apache.spark.sql.functions.udaf(
-      graft.functions.Aggregators.topK(k),
-      org.apache.spark.sql.Encoders.product[graft.functions.Aggregators.Ranked])
-    scored.groupBy(col("qid"))
-      .agg(topk(col("cos_sim"), col("nid")).as("__top"))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__i", "__r")))
-      .select(col("qid"), (col("__i") + 1).as("rn"),
-        col("__r.id").as("nid"), col("__r.v").as("cos_sim"))
-  }
+                 maxBucket: Int = 1000): DataFrame =
+    knnFromSigs(df, idCol, vecCol, k, maxBucket,
+      md5Signatures(df, idCol, vecCol, bands, bitsPerBand, dim, quantScale))
 
   /** Embedding near-duplicate pairs: LSH band buckets (capped) + exact
     * cosine ≥ threshold. Same bucket-join-then-verify shape as
@@ -440,32 +379,11 @@ object Similarity {
                        maxBucket: Int = 1000): DataFrame = {
     val d = if (dim > 0) dim else inferDim(df, vecCol)
     val planes = hyperplanes(bands * bitsPerBand, d, seed)
-    // outer EAGER persist: both self-join sides read one materialized
-    // capped frame (see knnJoin)
-    val slim = graft.core.Caching.persistEager(capBuckets(
-      graft.core.Caching.persistTracked(
-        signatures(df, idCol, vecCol, planes, bands, bitsPerBand)),
-      maxBucket))
-    val cand = slim.as("a")
-      .join(slim.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    // per-ROW norm rides the slim vector frame so the per-PAIR verify
-    // is the dot product alone (bit-identical: see cosinePrenorm)
-    val vecs = graft.core.Caching.persistTracked(
-      df.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("vec"))
-        .withColumn("__nm", sqrt(sumSqNative(col("vec")))))
-    cand
-      .join(vecs.select(col("id").as("id_a"), col("vec").as("vec_a"),
-        col("__nm").as("__na")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("vec").as("vec_b"),
-        col("__nm").as("__nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(cosinePrenorm(col("vec_a"), col("vec_b"),
-          col("__na") * col("__nb")), 4).as("cos_sim"))
+    cosinePairs(
+        BandedJoin.selfPairs(
+          signatures(df, idCol, vecCol, planes, bands, bitsPerBand),
+          SigKeys, maxBucket, ordered = true),
+        normedVectors(df, idCol, vecCol))
       .filter(col("cos_sim") >= threshold)
   }
 
@@ -585,31 +503,18 @@ object Similarity {
       Seq("bands" -> bands.toLong, "bits_per_band" -> bitsPerBand.toLong,
         "seed" -> seed, "dim" -> d.toLong),
       "Similarity.embeddingSignatures")
-    val bSig = graft.core.Caching.persistTracked(
-      embeddingSignatures(incoming, idCol, vecCol, bands, bitsPerBand,
-        seed, d))
-    // capBuckets reads the index twice (bucket census + semi-join) —
-    // persist so a computed-on-the-fly index is not re-derived
-    val cBand = capBuckets(
-      graft.core.Caching.persistTracked(corpusSig), maxBucket)
-      .select(col("id").as("corpus_id"), col("band"), col("sig"))
-    val cand = bSig.select(col("id").as("batch_id"), col("band"), col("sig"))
-      .join(cBand, Seq("band", "sig"))
-      .select(col("batch_id"), col("corpus_id"))
-      .distinct()
-    // per-ROW norms on both joinback frames so the per-PAIR verify is
-    // the dot product alone (bit-identical: see cosinePrenorm)
-    val bVecs = incoming.select(col(idCol).cast("long").as("batch_id"),
-      asDouble(col(vecCol)).as("vec_b"))
-      .withColumn("__nb", sqrt(sumSqNative(col("vec_b"))))
-    cand
-      .join(bVecs, "batch_id")
-      .join(corpusVecs.select(col("id").as("corpus_id"),
-        col("vec").as("vec_c"),
-        sqrt(sumSqNative(col("vec"))).as("__nc")), "corpus_id")
+    val cand = BandedJoin.crossPairs(
+      embeddingSignatures(incoming, idCol, vecCol, bands, bitsPerBand, seed, d),
+      corpusSig, SigKeys, maxBatchBucket = 0, maxBucket)
+    val cVecs = corpusVecs.select(col("id"), col("vec"),
+      sqrt(sumSqNative(col("vec"))).as("__nm"))
+    BandedJoin.joinBack(
+        BandedJoin.joinBack(cand, normedVectors(incoming, idCol, vecCol),
+          Seq("vec", "__nm"), "batch_id" -> "_b"),
+        cVecs, Seq("vec", "__nm"), "corpus_id" -> "_c")
       .select(col("batch_id"), col("corpus_id"),
         round(cosinePrenorm(col("vec_b"), col("vec_c"),
-          col("__nb") * col("__nc")), 4).as("cos_sim"))
+          col("__nm_b") * col("__nm_c")), 4).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
   }
 
@@ -771,14 +676,6 @@ object Similarity {
     semDedupIndexTwoLevelFull(df, idCol, vecCol, targetClusterSize,
       coarseCells, seed, fitFraction, maxCodebookBytes).assigned
 
-  /** The full two-level artifact: router centroids (driver-sized),
-    * fine-centroid rows (ccell, cluster, centroid) — a DATAFRAME, so
-    * at scale it stores partitioned by ccell and a probe reads only
-    * its probed cells' rows — and the per-vector assignment. Note the
-    * DRIVER transiently holds every fine model's centers during the
-    * build (MLlib KMeans models are driver-side objects); that is
-    * inherent to fitting with MLlib and is the build-time analogue of
-    * the storage the table then distributes. */
   /** Build parameters of a two-level index — persisted as field
     * metadata by `Ivf.writeIndexTwoLevel` so a stored index is
     * self-describing and the append path can enforce its contract
@@ -792,6 +689,14 @@ object Similarity {
       assigned: DataFrame,
       params: TwoLevelParams)
 
+  /** The full two-level artifact: router centroids (driver-sized),
+    * fine-centroid rows (ccell, cluster, centroid) — a DATAFRAME, so
+    * at scale it stores partitioned by ccell and a probe reads only
+    * its probed cells' rows — and the per-vector assignment. Note the
+    * DRIVER transiently holds every fine model's centers during the
+    * build (MLlib KMeans models are driver-side objects); that is
+    * inherent to fitting with MLlib and is the build-time analogue of
+    * the storage the table then distributes. */
   def semDedupIndexTwoLevelFull(df: DataFrame, idCol: String, vecCol: String,
                                 targetClusterSize: Int = 1024,
                                 coarseCells: Int = 16, seed: Long = 42L,

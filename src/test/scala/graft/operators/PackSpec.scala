@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -106,28 +105,8 @@ class PackSpec extends AnyFunSuite {
 
   test("plan: a noop write of a built plan runs exactly one Spark job") {
     val p = Pack.plan(fixture, "doc_id", "text")
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val ends = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.tag")))
-          .foreach(t => if (t == tag) jobs.incrementAndGet() else ends.put(t))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.tag", tag)
-      try p.write.format("noop").mode("overwrite").save()
-      finally sc.setLocalProperty("graft.test.tag", s"$tag:end")
-      // the listener bus delivers in order: once this thread's end
-      // marker job is seen, so is every job the write submitted
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.tag", null)
-      while (Option(ends.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-          .getOrElse(fail("marker job never reached the listener")) !=
-          s"$tag:end") ()
-      assert(jobs.get === 1)
-    } finally sc.removeSparkListener(listener)
+    val (_, jobs) =
+      TestSpark.jobsOf(p.write.format("noop").mode("overwrite").save())
+    assert(jobs === 1)
   }
 }
