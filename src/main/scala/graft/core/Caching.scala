@@ -72,12 +72,12 @@ object Caching {
     * during it, leaving every other tracked frame — earlier persists
     * and concurrent work on other threads alike — untouched. The
     * polite form of `releaseAll` for long-running hosts of one-shot
-    * work: each StreamingIngest micro-batch releases its own signature
-    * caches this way, so two ingest streams sharing a session (text +
-    * embedding tiers over the same crawl) never drop each other's
-    * in-flight caches. Scopes nest; an inner scope's frames are not
-    * double-released by the outer (unpersist on a released frame is a
-    * no-op anyway). */
+    * work: [[graft.streaming.MicroBatch]] opens one scope per
+    * micro-batch and owns its persist, probe and release, so two ingest
+    * streams sharing a session (text + embedding tiers over the same
+    * crawl) never drop each other's in-flight caches. Scopes nest; an
+    * inner scope's frames are not double-released by the outer
+    * (unpersist on a released frame is a no-op anyway). */
   def scopedRelease[T](f: => T): T = {
     val mine = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
     scopes.set(mine :: scopes.get())

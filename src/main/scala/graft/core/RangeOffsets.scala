@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Exclusive running sums of long weights over a global total order in
   * ONE range shuffle and ONE narrow probe job. The shuffled, sorted rows
-  * are persisted ([[Caching.persistTracked]]); the probe fills the cache
-  * and returns (rows, weight totals) per non-empty partition, whose
+  * are persisted ([[Caching.persistTracked]]); one [[Probe]] fills the
+  * cache and returns (rows, weight totals) per non-empty partition, whose
   * exclusive prefix sums in partition-id order (range partitioning puts
   * lower keys in lower ids) are the frozen partition offsets. The output
   * is one narrow `mapPartitions` over the cache adding its partition's
@@ -28,7 +28,6 @@ object RangeOffsets {
   def apply(df: DataFrame, order: Seq[Column], weights: Seq[(String, Column)],
             numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
     val (nCols, nW) = (df.columns.length, weights.length)
@@ -48,13 +47,7 @@ object RangeOffsets {
       totals(0) += 1
       for (i <- 0 until nW) totals(i + 1) += r.getLong(base + i)
     }
-    val probe = sorted.select(col("__pid") +: wCols.map(col): _*)
-      .mapPartitions { it =>
-        val totals = new Array[Long](nW + 1)
-        var pid = -1
-        it.foreach { r => pid = r.getInt(0); add(totals, r, 1) }
-        if (pid < 0) Iterator.empty else Iterator((pid, totals.toSeq))
-      }.collect().sortBy(_._1)
+    val probe = Probe(sorted, wCols.map(col))
     val offs = probe.scanLeft(Seq.fill(nW)(0L)) { case (off, (_, t)) =>
       off.zip(t.tail).map { case (a, b) => a + b } }
     val frozen = probe.zip(offs).map { case ((p, t), o) => p -> (t, o) }.toMap

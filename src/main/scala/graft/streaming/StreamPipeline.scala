@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.score.Autoencoder
 
 /** Structured-Streaming scoring pipeline with the reference's dataflow
@@ -181,13 +181,11 @@ object StreamPipeline {
     * sink inside foreachBatch, at-least-once.
     *
     * Per micro-batch the work is one cache-filling probe plus one sink
-    * write per non-empty split, and nothing else. The batch is persisted;
-    * a narrow, shuffle-free job over it parses and scores every row once
-    * into the cache and returns the set of `prediction` labels present;
-    * each sink is then called only for a label in that set, on a filter
-    * of the cache. An empty batch therefore calls no sink (ST8) without a
-    * separate emptiness probe. The probe must stay shuffle-free: under
-    * AQE every shuffle-map stage is submitted as its own job. */
+    * write per non-empty split, and nothing else: [[MicroBatch]] persists
+    * the batch and its probe parses and scores every row once into the
+    * cache while counting each label; each sink is then called only for
+    * a label it counted, on a filter of the cache. An empty batch calls no
+    * sink (ST8) without a separate emptiness probe. */
   def run(raw: DataFrame, weights: Autoencoder.Weights, threshold: Double,
           normalSink: Sink, anomalySink: Sink,
           checkpointDir: String,
@@ -195,24 +193,13 @@ object StreamPipeline {
           features: Seq[String] = FlowSchema.featureColumns): StreamingQuery = {
     val scored = score(prepareFeatures(parse(raw, schema), features),
       weights, threshold, features)
-    scored.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import batch.sparkSession.implicits._
-        val cached = batch.persist()
-        try {
-          val labels = cached.select(col("prediction")).as[String]
-            .mapPartitions(_.toSet.iterator).collect().toSet
-          def route(label: String, sink: Sink): Unit =
-            if (labels(label))
-              sink.write(cached.filter(col("prediction") === label), batchId)
-          route("normal", normalSink)
-          route("anomaly", anomalySink)
-        } finally cached.unpersist()
-        ()
+    val routes = Seq("normal" -> normalSink, "anomaly" -> anomalySink)
+    MicroBatch.start(scored, checkpointDir,
+        routes.map { case (label, _) => col("prediction") === label }) { mb =>
+      routes.zip(mb.sums).foreach { case ((label, sink), n) =>
+        if (n > 0) sink.write(mb.df.filter(col("prediction") === label), mb.id)
       }
-      .start()
+    }
   }
 
   /** A12+ST5: event-time tumbling-window counts by prediction with a

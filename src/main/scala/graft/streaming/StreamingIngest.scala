@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.core.{Caching, Probe}
 import graft.operators.{CorpusStats, Dedup, Ivf, Pq, Similarity, Vocab}
 
 /** Continuous corpus ingest checked against STORED signature indexes —
@@ -15,13 +16,17 @@ import graft.operators.{CorpusStats, Dedup, Ivf, Pq, Similarity, Vocab}
   *
   * Cost per batch is O(batch + index) — the incremental-tier
   * guarantee; the stream never rescans settled text/vectors outside
-  * shared LSH buckets. The index frame is re-persisted per batch (it
-  * feeds two subtrees inside one screen) and released after the batch
-  * via `Caching.scopedRelease` — only the caches the batch itself
-  * tracked are dropped, so an ingest coexists with other queries'
-  * persisted frames in a shared session, and nothing accumulates
-  * across a long-running stream (the steady-state at 100 TB is
-  * exactly this re-read-per-ingest of a stored parquet index).
+  * shared LSH buckets. Every ingest runs on [[MicroBatch]], which owns
+  * the per-batch persist, probe and release: the batch is persisted and
+  * one narrow probe fills its cache and counts it (an empty batch runs
+  * no body), tier counts come from [[graft.core.Probe]] rather than one
+  * aggregate job each, and every frame the batch tracked (the batch, its
+  * tiers, the re-persisted index) is released when it ends — only the
+  * caches the batch itself tracked are dropped, so an ingest coexists
+  * with other queries' persisted frames in a shared session, and
+  * nothing accumulates across a long-running stream (the steady-state
+  * at 100 TB is exactly this re-read-per-ingest of a stored parquet
+  * index).
   *
   * Delivery composes with the ST2/ST3 machinery: checkpointed offsets
   * give at-least-once batch screening; the flagged-pair sink must
@@ -44,26 +49,16 @@ object StreamingIngest {
                     thrNum: Int = 4, thrDen: Int = 5,
                     maxBucket: Int = 1000,
                     statsPath: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.core.Caching.scopedRelease {
-            sink.write(
-              Dedup.incrementalNearDup(batch, idCol, textCol, corpusSig,
-                shingleN, k, bands, thrNum, thrDen, maxBucket),
-              batchId)
-          }
-          // one ingest stream = screen + stats: the same micro-batch
-          // contributes its mergeable accumulator row (see statsIngest
-          // for the delivery caveat on replays)
-          statsPath.foreach(p =>
-            CorpusStats.appendSnapshot(batch, textCol, p))
-          ()
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      sink.write(
+        Dedup.incrementalNearDup(mb.df, idCol, textCol, corpusSig,
+          shingleN, k, bands, thrNum, thrDen, maxBucket),
+        mb.id)
+      // one ingest stream = screen + stats: the same micro-batch
+      // contributes its mergeable accumulator row (see statsIngest
+      // for the delivery caveat on replays)
+      statsPath.foreach(p => CorpusStats.appendSnapshot(mb.df, textCol, p))
+    }
 
   /** Continuous corpus statistics on ingest: per micro-batch, append
     * ONE mergeable `CorpusStats` accumulator row to the parquet stats
@@ -87,18 +82,11 @@ object StreamingIngest {
   def statsIngest(docs: DataFrame, textCol: String, statsPath: String,
                   checkpointDir: String,
                   exactlyOnce: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          if (exactlyOnce)
-            CorpusStats.appendSnapshotIdempotent(batch, textCol, statsPath,
-              batchId)
-          else CorpusStats.appendSnapshot(batch, textCol, statsPath)
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      if (exactlyOnce)
+        CorpusStats.appendSnapshotIdempotent(mb.df, textCol, statsPath, mb.id)
+      else CorpusStats.appendSnapshot(mb.df, textCol, statsPath)
+    }
 
   /** Vocabulary-drift monitoring on ingest — the OOV twin of the ANN
     * staleness verdict: every micro-batch's OOV rate is checked
@@ -118,30 +106,23 @@ object StreamingIngest {
                        driftFactor: Double = 2.0, marginBp: Long = 500L,
                        onBatch: Vocab.VocabDrift => Unit = _ => ())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val (vocab, _, baselineBp) = Vocab.readVocab(spark, vocabPath)
-          val d = Vocab.vocabDrift(batch, textCol, vocab, baselineBp,
-            driftFactor, marginBp)
-          // the monitor TABLE is exactly-once (overwrite-by-batch_id);
-          // the onBatch callback is at-least-once — a redelivered batch
-          // re-fires the verdict, so a refit TRIGGER keyed off it must
-          // be idempotent (the monitor row it would read is)
-          new StreamPipeline.IdempotentFileSink(monitorPath).write(
-            Seq((d.nTokens, d.nOov, d.oovBp, d.baselineBp, d.drifted))
-              .toDF("n_tokens", "n_oov", "oov_bp", "baseline_bp",
-                "drifted")
-              .coalesce(1),
-            batchId)
-          onBatch(d)
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      val spark = mb.df.sparkSession
+      import spark.implicits._
+      val (vocab, _, baselineBp) = Vocab.readVocab(spark, vocabPath)
+      val d = Vocab.vocabDrift(mb.df, textCol, vocab, baselineBp,
+        driftFactor, marginBp)
+      // the monitor TABLE is exactly-once (overwrite-by-batch_id);
+      // the onBatch callback is at-least-once — a redelivered batch
+      // re-fires the verdict, so a refit TRIGGER keyed off it must
+      // be idempotent (the monitor row it would read is)
+      new StreamPipeline.IdempotentFileSink(monitorPath).write(
+        Seq((d.nTokens, d.nOov, d.oovBp, d.baselineBp, d.drifted))
+          .toDF("n_tokens", "n_oov", "oov_bp", "baseline_bp", "drifted")
+          .coalesce(1),
+        mb.id)
+      onBatch(d)
+    }
 
   /** Source-mix drift monitoring on ingest — the mixture twin of the
     * vocab-drift verdict: every micro-batch's realized per-source
@@ -158,27 +139,20 @@ object StreamingIngest {
                      checkpointDir: String, marginBp: Long = 1000L,
                      onBatch: graft.operators.Mix.MixDrift => Unit = _ => ())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val target = spark.read.parquet(targetPath)
-            .select(col("source").cast("string"),
-              col("weight_bp").cast("long"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          val d = graft.operators.Mix.mixDrift(batch, sourceCol, textCol,
-            target, marginBp)
-          new StreamPipeline.IdempotentFileSink(monitorPath).write(
-            Seq((d.worstSource, d.maxDevBp, d.drifted))
-              .toDF("worst_source", "max_dev_bp", "drifted").coalesce(1),
-            batchId)
-          onBatch(d)
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      val spark = mb.df.sparkSession
+      import spark.implicits._
+      val target = spark.read.parquet(targetPath)
+        .select(col("source").cast("string"), col("weight_bp").cast("long"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val d = graft.operators.Mix.mixDrift(mb.df, sourceCol, textCol,
+        target, marginBp)
+      new StreamPipeline.IdempotentFileSink(monitorPath).write(
+        Seq((d.worstSource, d.maxDevBp, d.drifted))
+          .toDF("worst_source", "max_dev_bp", "drifted").coalesce(1),
+        mb.id)
+      onBatch(d)
+    }
 
   /** Target-shaped selection on ingest — the streaming face of the
     * `select` command: every micro-batch is scored against the STORED
@@ -199,45 +173,38 @@ object StreamingIngest {
                       monitorPath: String, checkpointDir: String,
                       minCb: Long = 0L, minGrams: Long = 1L)
       : StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions.{count, lit, sum, when}
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val w = spark.read.parquet(weightsPath)
-          val scored = graft.operators.Dsir
-            .score(batch, idCol, textCol, w).persist()
-          try {
-            // the keep verdict: score gate AND a length gate — score()
-            // zero-fills empty docs at dsir_cb = 0 on the explicit
-            // "caller's length gate decides" contract, and this caller
-            // decides they do NOT pass a quality-selection sink
-            val keep = col("dsir_cb") >= minCb &&
-              col("n_grams") >= minGrams
-            // aliased selection id: an unqualified col("id") would be
-            // ambiguous whenever the caller's idCol is itself "id"
-            val selIds = scored.filter(keep)
-              .select(col("id").as("__sel_id"))
-            val kept = batch.join(selIds,
-              batch(idCol).cast("long") === col("__sel_id"), "leftsemi")
-            new StreamPipeline.IdempotentFileSink(keptPath)
-              .write(kept, batchId)
-            val a = scored.agg(count(lit(1)).as("n"),
-              sum(when(keep, 1L).otherwise(0L)).as("k")).head()
-            val nIn: Long = a.getLong(0)
-            val nKept: Long = if (a.isNullAt(1)) 0L else a.getLong(1)
-            new StreamPipeline.IdempotentFileSink(monitorPath).write(
-              Seq((nIn, nKept,
-                if (nIn > 0) nKept * 10000 / nIn else 0L))
-                .toDF("n_in", "n_kept", "kept_bp").coalesce(1),
-              batchId)
-          } finally { scored.unpersist(); () }
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      val w = mb.df.sparkSession.read.parquet(weightsPath)
+      // the keep verdict: score gate AND a length gate — score()
+      // zero-fills empty docs at dsir_cb = 0 on the explicit
+      // "caller's length gate decides" contract, and this caller
+      // decides they do NOT pass a quality-selection sink
+      landKept(mb, idCol, graft.operators.Dsir.score(mb.df, idCol, textCol, w),
+        col("dsir_cb") >= minCb && col("n_grams") >= minGrams,
+        keptPath, monitorPath)
+    }
+
+  /** The tail selectionIngest and relevanceIngest share: the batch rows
+    * whose `scored` row (one per batch row, keyed by `id`) passes `keep`
+    * land in `keptPath`, and one (n_in, n_kept, kept_bp) funnel row in
+    * `monitorPath`, both keyed by batch id. `scored` is persisted and
+    * one probe fills it while counting n_in and n_kept. */
+  private def landKept(mb: MicroBatch, idCol: String, scored: DataFrame,
+                       keep: Column, keptPath: String,
+                       monitorPath: String): Unit = {
+    import mb.df.sparkSession.implicits._
+    val s = Caching.persistTracked(scored)
+    val Seq(nIn, nKept) = Probe.totals(s, Seq(keep))
+    // aliased selection id: an unqualified col("id") would be
+    // ambiguous whenever the caller's idCol is itself "id"
+    val selIds = s.filter(keep).select(col("id").as("__sel_id"))
+    new StreamPipeline.IdempotentFileSink(keptPath).write(
+      mb.df.join(selIds, mb.df(idCol).cast("long") === col("__sel_id"),
+        "leftsemi"), mb.id)
+    new StreamPipeline.IdempotentFileSink(monitorPath).write(
+      Seq((nIn, nKept, if (nIn > 0) nKept * 10000 / nIn else 0L))
+        .toDF("n_in", "n_kept", "kept_bp").coalesce(1), mb.id)
+  }
 
   /** Quality gate on ingest — the FIRST tier a streaming crawl
     * applies before anything touches settled state: each micro-batch
@@ -254,59 +221,53 @@ object StreamingIngest {
                     keptPath: String, monitorPath: String,
                     checkpointDir: String, minWords: Int = 50,
                     withRepetition: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val rep = graft.operators.QualityRules
-            .report(batch, idCol, textCol, minWords = minWords).persist()
-          try {
-            // ONE aggregate job over the persisted report: n_in plus
-            // rule-passers counted as pass === TRUE — a null verdict
-            // (null text tokenizes to null) is dropped by the gate, so
-            // it must count as a RULE kill, not leak into the
-            // repetition tier's attribution
-            import org.apache.spark.sql.functions.{count => fCount, coalesce, countDistinct, lit, sum, when}
-            val a = rep.agg(fCount(lit(1)).as("n"),
-              sum(when(col("pass"), 1L).otherwise(0L)).as("p"),
-              countDistinct(col("id")).as("d")).head()
-            val nIn: Long = a.getLong(0)
-            val nRulePass: Long = if (a.isNullAt(1)) 0L else a.getLong(1)
-            // the funnel attributes kills by SUBTRACTION across the
-            // leftsemi joins — duplicate ids would re-multiply kept
-            // rows and drive n_rep_killed negative, so batch id
-            // uniqueness is a hard contract here (the same contract
-            // the idempotent sinks and index appends already state)
-            require(a.getLong(2) == nIn,
-              s"qualityIngest: batch $batchId carries duplicate ids " +
-                s"(${nIn} rows, ${a.getLong(2)} distinct) — the funnel " +
-                s"attribution requires unique ids per batch")
-            val rulePassIds = rep.filter(col("pass"))
-              .select(col("id").as("__q_id"))
-            val afterRules = batch.join(rulePassIds,
-              batch(idCol).cast("long") === col("__q_id"), "leftsemi")
-            val kept =
-              (if (!withRepetition) afterRules
-               else graft.operators.QualityRules
-                 .keepRepetition(afterRules, idCol, textCol)).persist()
-            try {
-              val nKept = kept.count()
-              new StreamPipeline.IdempotentFileSink(keptPath)
-                .write(kept, batchId)
-              new StreamPipeline.IdempotentFileSink(monitorPath).write(
-                Seq((nIn, nIn - nRulePass, nRulePass - nKept, nKept,
-                  if (nIn > 0) nKept * 10000 / nIn else 0L))
-                  .toDF("n_in", "n_rule_killed", "n_rep_killed",
-                    "n_kept", "kept_bp").coalesce(1),
-                batchId)
-            } finally { kept.unpersist(); () }
-          } finally { rep.unpersist(); () }
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      import mb.df.sparkSession.implicits._
+      val (nIn, nRulePass, afterRules) =
+        ruleGate(mb, idCol, textCol, minWords, "qualityIngest")
+      val kept = Caching.persistTracked(
+        if (!withRepetition) afterRules
+        else graft.operators.QualityRules
+          .keepRepetition(afterRules, idCol, textCol))
+      val nKept = Probe.totals(kept).head
+      new StreamPipeline.IdempotentFileSink(keptPath).write(kept, mb.id)
+      new StreamPipeline.IdempotentFileSink(monitorPath).write(
+        Seq((nIn, nIn - nRulePass, nRulePass - nKept, nKept,
+          if (nIn > 0) nKept * 10000 / nIn else 0L))
+          .toDF("n_in", "n_rule_killed", "n_rep_killed", "n_kept",
+            "kept_bp").coalesce(1),
+        mb.id)
+    }
+
+  /** The Gopher rule gate qualityIngest and fullIngest share: returns
+    * (n_in, rule passers, the batch rows that pass). ONE aggregate job
+    * over the persisted report counts rule-passers as pass === TRUE — a
+    * null verdict (null text tokenizes to null) is dropped by the gate,
+    * so it must count as a RULE kill, not leak into the next tier's
+    * attribution. The funnel attributes kills by SUBTRACTION across the
+    * leftsemi joins — duplicate ids would re-multiply kept rows and drive
+    * later kill counts negative, so batch id uniqueness is a hard
+    * contract (the same contract the idempotent sinks and index appends
+    * already state); its countDistinct is the one shuffle left here. */
+  private def ruleGate(mb: MicroBatch, idCol: String, textCol: String,
+                       minWords: Int, caller: String)
+      : (Long, Long, DataFrame) = {
+    import org.apache.spark.sql.functions.{count, countDistinct, lit, sum, when}
+    val rep = Caching.persistTracked(graft.operators.QualityRules
+      .report(mb.df, idCol, textCol, minWords = minWords))
+    val a = rep.agg(count(lit(1)).as("n"),
+      sum(when(col("pass"), 1L).otherwise(0L)).as("p"),
+      countDistinct(col("id")).as("d")).head()
+    val nIn: Long = a.getLong(0)
+    require(a.getLong(2) == nIn,
+      s"$caller: batch ${mb.id} carries duplicate ids " +
+        s"($nIn rows, ${a.getLong(2)} distinct) — the funnel " +
+        "attribution requires unique ids per batch")
+    val afterRules = mb.df.join(
+      rep.filter(col("pass")).select(col("id").as("__q_id")),
+      mb.df(idCol).cast("long") === col("__q_id"), "leftsemi")
+    (nIn, if (a.isNullAt(1)) 0L else a.getLong(1), afterRules)
+  }
 
   /** Shape-watch on ingest — the streaming face of the motif search:
     * every micro-batch's bucketed activity is scanned for the STORED
@@ -324,33 +285,24 @@ object StreamingIngest {
                   bucketSec: Int = 60, alertE4: Long = 8000L,
                   onBatch: Option[Long] => Unit = _ => ())
       : StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val pattern = graft.operators.Motif.readPattern(spark,
-            patternPath)
-          val top = graft.operators.Motif
-            .topKWindows(batch, timeCol, bucketSec, pattern, k = 1)
-            .collect().headOption
-          val row = top match {
-            case Some(r) => Seq((Option(r.getTimestamp(0).toString),
-              Option(r.getLong(1)), r.getLong(2),
-              r.getLong(1) >= alertE4))
-            case None =>
-              Seq((Option.empty[String], Option.empty[Long], 0L, false))
-          }
-          new StreamPipeline.IdempotentFileSink(monitorPath).write(
-            row.toDF("window_start", "score_e4", "n_events", "matched")
-              .coalesce(1), batchId)
-          onBatch(top.map(_.getLong(1)))
-          ()
-        }
+    MicroBatch.start(events, checkpointDir) { mb =>
+      val spark = mb.df.sparkSession
+      import spark.implicits._
+      val pattern = graft.operators.Motif.readPattern(spark, patternPath)
+      val top = graft.operators.Motif
+        .topKWindows(mb.df, timeCol, bucketSec, pattern, k = 1)
+        .collect().headOption
+      val row = top match {
+        case Some(r) => Seq((Option(r.getTimestamp(0).toString),
+          Option(r.getLong(1)), r.getLong(2), r.getLong(1) >= alertE4))
+        case None =>
+          Seq((Option.empty[String], Option.empty[Long], 0L, false))
       }
-      .start()
+      new StreamPipeline.IdempotentFileSink(monitorPath).write(
+        row.toDF("window_start", "score_e4", "n_events", "matched")
+          .coalesce(1), mb.id)
+      onBatch(top.map(_.getLong(1)))
+    }
 
   /** Surprisal-drift watch on ingest — the quality-distribution twin
     * of the vocab-drift verdict: each micro-batch scores against the
@@ -367,31 +319,19 @@ object StreamingIngest {
                     driftFactor: Double = 1.5, marginCb: Long = 50L,
                     onBatch: (Long, Boolean) => Unit = (_, _) => ())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val a = graft.operators.Vocab
-            .surprisalFromLm(batch, idCol, textCol, lmPath)
-            .agg(count(lit(1)).as("n"),
-              coalesce(sum(col("surprisal_cb")), lit(0L)).as("s")).head()
-          val n = a.getLong(0)
-          val mean = if (n > 0) a.getLong(1) / n else 0L
-          val drifted =
-            mean > (baselineCb * driftFactor).toLong + marginCb
-          new StreamPipeline.IdempotentFileSink(monitorPath).write(
-            Seq((n, mean, baselineCb, drifted))
-              .toDF("n_docs", "mean_surprisal_cb", "baseline_cb",
-                "drifted").coalesce(1), batchId)
-          onBatch(mean, drifted)
-          ()
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      import mb.df.sparkSession.implicits._
+      val Seq(n, total) = Probe.totals(graft.operators.Vocab
+        .surprisalFromLm(mb.df, idCol, textCol, lmPath),
+        Seq(col("surprisal_cb")))
+      val mean = if (n > 0) total / n else 0L
+      val drifted = mean > (baselineCb * driftFactor).toLong + marginCb
+      new StreamPipeline.IdempotentFileSink(monitorPath).write(
+        Seq((n, mean, baselineCb, drifted))
+          .toDF("n_docs", "mean_surprisal_cb", "baseline_cb", "drifted")
+          .coalesce(1), mb.id)
+      onBatch(mean, drifted)
+    }
 
   /** Relevance gate on ingest — the retrieval twin of selectionIngest:
     * each micro-batch's docs are BM25-scored against the STORED
@@ -406,37 +346,11 @@ object StreamingIngest {
                       keptPath: String, monitorPath: String,
                       checkpointDir: String, minScoreE4: Long,
                       idfMode: String = "ln"): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions.{count, lit, sum, when}
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val scored = graft.operators.Rank.bm25ScoreDocs(batch, idCol,
-            textCol, indexPath, terms, idfMode).persist()
-          try {
-            val selIds = scored.filter(col("score_e4") >= minScoreE4)
-              .select(col("id").as("__rel_id"))
-            val kept = batch.join(selIds,
-              batch(idCol).cast("long") === col("__rel_id"), "leftsemi")
-            new StreamPipeline.IdempotentFileSink(keptPath)
-              .write(kept, batchId)
-            val a = scored.agg(count(lit(1)).as("n"),
-              sum(when(col("score_e4") >= minScoreE4, 1L).otherwise(0L))
-                .as("k")).head()
-            val nIn: Long = a.getLong(0)
-            val nKept: Long = if (a.isNullAt(1)) 0L else a.getLong(1)
-            new StreamPipeline.IdempotentFileSink(monitorPath).write(
-              Seq((nIn, nKept,
-                if (nIn > 0) nKept * 10000 / nIn else 0L))
-                .toDF("n_in", "n_kept", "kept_bp").coalesce(1),
-              batchId)
-          } finally { scored.unpersist(); () }
-        }
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      landKept(mb, idCol, graft.operators.Rank.bm25ScoreDocs(mb.df, idCol,
+          textCol, indexPath, terms, idfMode),
+        col("score_e4") >= minScoreE4, keptPath, monitorPath)
+    }
 
   /** Screen an embedding stream against a settled hyperplane-signature
     * index + slim vector table: per micro-batch,
@@ -453,22 +367,13 @@ object StreamingIngest {
                              seed: Long = 7L,
                              maxBucket: Int = 1000): StreamingQuery = {
     require(dim > 0, "pass the embedding dim explicitly (no per-batch inference)")
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.core.Caching.scopedRelease {
-            sink.write(
-              Similarity.incrementalEmbeddingNearDup(batch, idCol, vecCol,
-                corpusSig, corpusVecs, threshold, bands, bitsPerBand, seed,
-                dim, maxBucket),
-              batchId)
-          }
-          ()
-        }
-      }
-      .start()
+    MicroBatch.start(vecs, checkpointDir) { mb =>
+      sink.write(
+        Similarity.incrementalEmbeddingNearDup(mb.df, idCol, vecCol,
+          corpusSig, corpusVecs, threshold, bands, bitsPerBand, seed,
+          dim, maxBucket),
+        mb.id)
+    }
   }
 
   /** The FULL embedding-ingest lifecycle: per micro-batch, screen
@@ -527,10 +432,6 @@ object StreamingIngest {
         accepted.sparkSession, indexPath, accepted, idCol, vecCol))
     }
 
-  /** The shared screen→sink→accept loop behind both settle variants:
-    * per micro-batch, flag near-dups against the stored signature
-    * index, write them to `sink`, and hand the anti-joined accepted
-    * rows to `appendAccepted` (the store-specific maintenance step). */
   /** THE composed ingest — the monitor family chained over ONE feed
     * inside ONE foreachBatch, in the curation stacking order a crawl
     * actually wants:
@@ -622,303 +523,276 @@ object StreamingIngest {
                  fuzzyMaxBucket: Int = 1000,
                  onBatchDone: Long => Unit = _ => ())
       : StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          import org.apache.spark.sql.functions.{count => fCount, coalesce, countDistinct, lit, sum, when}
-          graft.core.Caching.scopedRelease {
-            val b = graft.core.Caching.persistTracked(batch)
+    MicroBatch.start(docs, checkpointDir) { mb =>
+      val (b, batchId, spark) = (mb.df, mb.id, mb.df.sparkSession)
+      import spark.implicits._
+      def rows(df: DataFrame): Long = Probe.totals(df).head
 
-            // tier 1: quality rules (+ optional repetition family)
-            val rep = graft.core.Caching.persistTracked(
-              graft.operators.QualityRules
-                .report(b, idCol, textCol, minWords = minWords))
-            val a = rep.agg(fCount(lit(1)).as("n"),
-              sum(when(col("pass"), 1L).otherwise(0L)).as("p"),
-              countDistinct(col("id")).as("d")).head()
-            val nIn: Long = a.getLong(0)
-            val nRulePass: Long = if (a.isNullAt(1)) 0L else a.getLong(1)
-            require(a.getLong(2) == nIn,
-              s"fullIngest: batch $batchId carries duplicate ids " +
-                s"($nIn rows, ${a.getLong(2)} distinct) — funnel " +
-                "attribution requires unique ids per batch")
-            val afterRules = b.join(
-              rep.filter(col("pass")).select(col("id").as("__q_id")),
-              b(idCol).cast("long") === col("__q_id"), "leftsemi")
-            val afterRep = graft.core.Caching.persistTracked(
-              if (!withRepetition) afterRules
-              else graft.operators.QualityRules
-                .keepRepetition(afterRules, idCol, textCol))
-            val nAfterRep = afterRep.count()
+      // tier 1: quality rules (+ optional repetition family)
+      val (nIn, nRulePass, afterRules) =
+        ruleGate(mb, idCol, textCol, minWords, "fullIngest")
+      val afterRep = Caching.persistTracked(
+        if (!withRepetition) afterRules
+        else graft.operators.QualityRules
+          .keepRepetition(afterRules, idCol, textCol))
+      val nAfterRep = rows(afterRep)
 
-            // tier 1.5 (optional): decontamination screen vs the
-            // STORED eval-gram index (Decontaminate.evalGramIndex) —
-            // docs carrying > deconMaxHits eval n-grams DIE here,
-            // BEFORE anything is signed or settled: a contaminated doc
-            // must never poison the signature index, and killing it
-            // pre-signing keeps the tier's cost one gram probe
-            // (O(batch + probed index), eval text never re-read). The
-            // eval index grows out-of-band (decon --mode index
-            // --append-index) — like the lm index, its maintenance is
-            // a merge, never an in-stream write, so redelivery replays
-            // the screen deterministically against the same store.
-            require(Set("kill", "redact")(deconMode),
-              s"fullIngest: deconMode must be kill|redact, got '$deconMode'")
-            var nDeconTokensCut = 0L
-            val afterDecon = deconIndexPath match {
-              case None => afterRep
-              case Some(dp) if deconMode == "redact" =>
-                // redact posture: leaked spans are CUT, the doc
-                // SURVIVES (the lm-tier trade applied to eval leakage;
-                // sub-n whole-text leaks are the kill mode's job).
-                // Running BEFORE signing means cut docs sign from
-                // their post-cut text with no re-sign special case.
-                // A doc cut to nothing dies in selection.
-                val cleaned = graft.core.Caching.persistTracked(
-                  graft.operators.Decontaminate
-                    .redactEvalNgramsFromIndex(afterRep, idCol, textCol,
-                      graft.core.Stores.readOrEmpty(spark, dp), deconN, deconKeyMode)
-                    .filter(col("n_removed") > 0))
-                nDeconTokensCut = cleaned
-                  .agg(coalesce(sum(col("n_removed")), lit(0L)))
-                  .head().getLong(0)
-                val untouched = afterRep.join(
-                  cleaned.select(col("id").as("__dc_id")),
-                  afterRep(idCol).cast("long") === col("__dc_id"),
-                  "left_anti")
-                graft.core.Caching.persistTracked(
-                  untouched.unionByName(
-                    Dedup.rewriteText(afterRep, idCol, textCol, cleaned)))
-              case Some(dp) =>
-                val killIds = graft.operators.Decontaminate
-                  .ngramHitsFromIndex(afterRep, idCol, textCol,
-                    graft.core.Stores.readOrEmpty(spark, dp), deconN, deconKeyMode)
-                  .filter(col("n_hits") > deconMaxHits)
-                  .select(col(idCol).cast("long").as("__dc_id"))
-                graft.core.Caching.persistTracked(
-                  afterRep.join(killIds,
-                    afterRep(idCol).cast("long") === col("__dc_id"),
-                    "left_anti"))
-            }
-            val nAfterDecon =
-              if (deconIndexPath.isEmpty || deconMode == "redact")
-                nAfterRep
-              else afterDecon.count()
-
-            // ONE signing pass for everything minhash-shaped this
-            // batch needs: the optional FUZZY decon screen (tier
-            // 1.75), intra-batch self-dedup, the cross screen, and the
-            // settle append all slice these signatures — no tier
-            // re-shingles the batch.
-            val bSigAll = graft.core.Caching.persistTracked(
-              Dedup.minhashSignatures(afterDecon, idCol, textCol,
-                shingleN, k, bands))
-
-            // tier 1.75 (optional): FUZZY decontamination vs STORED
-            // eval minhash signatures (Dedup.minhashSignatures over
-            // the benchmark set, persisted once out-of-band) — the
-            // paraphrase / partial-copy leakage the exact n-gram tier
-            // cannot see dies here, before anything settles. The eval
-            // store must be signed with THIS ingest's shingleN/k/bands
-            // (the signature-parameter metadata check refuses a
-            // drifted store loudly). Kill-only by nature: a paraphrase
-            // has no exact spans to redact.
-            val (afterFuzzy, nAfterFuzzy) = fuzzyEvalSigsPath match {
-              case None => (afterDecon, nAfterDecon)
-              case Some(fp) =>
-                val fz = Dedup.incrementalNearDupFromSigs(bSigAll,
-                    spark.read.parquet(fp), shingleN, k, bands,
-                    fuzzyThrNum, fuzzyThrDen,
-                    maxBucket = fuzzyMaxBucket,
-                    maxBatchBucket = fuzzyMaxBucket)
-                  .select(col("batch_id").as("__fz_id")).distinct()
-                val keptFz = graft.core.Caching.persistTracked(
-                  afterDecon.join(fz,
-                    afterDecon(idCol).cast("long") === col("__fz_id"),
-                    "left_anti"))
-                (keptFz, keptFz.count())
-            }
-
-            // tier 2: near-dup dedup, SELF-SETTLING — the batch is
-            // signed ONCE (bSig) and that one signing pass feeds
-            //   (a) intra-batch self-dedup: verified near-dup pairs
-            //       within the batch collapse to their min-id
-            //       canonical (connected components, batch scale), so
-            //       two copies arriving together cannot both pass;
-            //   (b) the cross screen of the surviving canonicals
-            //       against the settled index = stored base signatures
-            //       ∪ this run's settled appends, so a copy arriving
-            //       batches after its original dies without any
-            //       out-of-band screen+append;
-            //   (c) the settle append after selection (below).
-            // Order is load-bearing: self-dedup first means a canonical
-            // that then dies against settled state takes its whole
-            // intra-batch cluster with it (the content IS settled
-            // content — re-admitting a sibling copy would undo the
-            // screen).
-            // without the fuzzy tier, afterFuzzy IS afterDecon and the
-            // slice would be an identity join caching the signatures
-            // TWICE — keep the single-cached-copy memory profile the
-            // heavy ingest tests size the heap for
-            val bSig =
-              if (fuzzyEvalSigsPath.isEmpty) bSigAll
-              else graft.core.Caching.persistTracked(
-                bSigAll.join(
-                  afterFuzzy.select(afterFuzzy(idCol).cast("long")
-                    .as("id")),
-                  Seq("id"), "leftsemi"))
-            val selfKill = Dedup.connectedComponents(
-                Dedup.minhashNearDupCountsFromSigs(bSig, thrNum, thrDen,
-                  maxBucket), "id_a", "id_b")
-              .filter(col("id") =!= col("root"))
-              .select(col("id").as("__dup_id"))
-            val afterSelf = graft.core.Caching.persistTracked(
-              afterFuzzy.join(selfKill,
-                afterFuzzy(idCol).cast("long") === col("__dup_id"),
-                "left_anti"))
-            val corpusSig = corpusSigWithSettled(spark, corpusSigPath,
-              excludeBatchId = batchId)
-            val survSig = bSig.join(
-              afterSelf.select(afterSelf(idCol).cast("long").as("id")),
-              Seq("id"), "leftsemi")
-            val crossDup = Dedup.incrementalNearDupFromSigs(survSig,
-                corpusSig, shingleN, k, bands, thrNum, thrDen, maxBucket)
-              .select(col("batch_id").as("__dup_id")).distinct()
-            val afterDedup = graft.core.Caching.persistTracked(
-              afterSelf.join(crossDup,
-                afterSelf(idCol).cast("long") === col("__dup_id"),
-                "left_anti"))
-            val nAfterDedup = afterDedup.count()
-
-            // tier 2.75 (optional): passage-level long-match screen vs
-            // the STORED window index (Dedup.longMatchIndex) — settled
-            // substrings get CUT from the doc (rewriteText), the doc
-            // itself SURVIVES (the CCNet posture: unique prose stays,
-            // boilerplate the corpus already carries never lands), so
-            // DSIR downstream scores only genuinely novel text. Only
-            // docs with spans are rewritten — an untouched doc's text
-            // passes through byte-identical (the rewrite is a token
-            // rejoin, which would otherwise normalize whitespace
-            // corpus-wide). The index is NOT appended in-stream: the
-            // append is a merge, not an idempotent keyed write, so an
-            // at-least-once redelivery would double-count — fold kept
-            // batches in out-of-band (screen --kind longmatch
-            // --append-index / Dedup.appendLongMatchIndex), the same
-            // settle-then-compact lifecycle as the signature sidecar.
-            // A doc cut to nothing dies in selection (n_grams = 0
-            // < minGrams) and is attributed there.
-            // one spans pass feeds the cut-id set, the rewrite and the
-            // funnel count; `cleaned` keeps only rewritten docs
-            val lmTier: Option[(DataFrame, DataFrame, Long)] =
-              lmIndexPath.map { ip =>
-                val spans = graft.core.Caching.persistTracked(
-                  Dedup.incrementalLongMatchSpans(afterDedup, idCol,
-                    textCol, spark.read.parquet(ip), lmMinLen, lmMaxDf))
-                val cutIds = spans.select(col("id").as("__lm_id"))
-                  .distinct()
-                val cleaned = graft.core.Caching.persistTracked(
-                  Dedup.removeSpans(afterDedup, idCol, textCol, spans,
-                    lmMinLen).filter(col("n_removed") > 0))
-                val cut = cleaned.agg(coalesce(sum(col("n_removed")),
-                  lit(0L))).head().getLong(0)
-                (cutIds, cleaned, cut)
-              }
-            val nLmTokensCut: Long = lmTier.map(_._3).getOrElse(0L)
-            val lmCutIds: Option[DataFrame] = lmTier.map(_._1)
-            val afterLm = lmTier match {
-              case Some((ids, cleaned, _)) =>
-                val untouched = afterDedup.join(ids,
-                  afterDedup(idCol).cast("long") === col("__lm_id"),
-                  "left_anti")
-                untouched.unionByName(
-                  Dedup.rewriteText(afterDedup, idCol, textCol, cleaned))
-              case None => afterDedup
-            }
-
-            // tier 3: DSIR selection against the stored target weights
-            val w = spark.read.parquet(weightsPath)
-            val scored = graft.operators.Dsir
-              .score(afterLm, idCol, textCol, w)
-            val selIds = scored
-              .filter(col("dsir_cb") >= minCb && col("n_grams") >= minGrams)
-              .select(col("id").as("__sel_id"))
-            val kept = graft.core.Caching.persistTracked(
-              afterLm.join(selIds,
-                afterLm(idCol).cast("long") === col("__sel_id"),
-                "leftsemi"))
-            val nKept = kept.count()
-
-            // land: kept docs + stats snapshot, both keyed by batch id
-            new StreamPipeline.IdempotentFileSink(keptPath)
-              .write(kept, batchId)
-            graft.operators.CorpusStats
-              .appendSnapshotIdempotent(kept, textCol, statsPath, batchId)
-
-            // (c) settle: the kept docs' signatures (sliced from the
-            // same bSig pass) append to the run's settled store, keyed
-            // by batch id — a replayed batch OVERWRITES its own
-            // partition, leaving the index unchanged, and the next
-            // batch's cross screen reads them via corpusSigWithSettled.
-            // Only KEPT docs settle: selection-killed text never lands
-            // in the corpus, so it must not poison the screen either.
-            // Long-match-CUT docs re-sign from their LANDED (post-cut)
-            // text — settling the pre-cut signature would screen future
-            // batches against content the corpus never kept. Cost
-            // O(cut docs); uncut docs still ride the one bSig pass.
-            val keptIds = kept.select(kept(idCol).cast("long").as("id"))
-            val settleBase = bSig.join(keptIds, Seq("id"), "leftsemi")
-            val settleSig = lmCutIds match {
-              case None => settleBase
-              case Some(ids) =>
-                val cutKept = kept.join(ids,
-                  kept(idCol).cast("long") === col("__lm_id"), "leftsemi")
-                settleBase.join(ids, settleBase("id") === col("__lm_id"),
-                    "left_anti")
-                  .unionByName(Dedup.minhashSignatures(cutKept, idCol,
-                    textCol, shingleN, k, bands))
-            }
-            new StreamPipeline.IdempotentFileSink(
-                settledSigPath(corpusSigPath))
-              .write(settleSig, batchId)
-
-            // optional monitor: vocab drift on the RAW feed (a drifting
-            // source should alert even when the gates absorb it)
-            val drift = vocabPath.map { vp =>
-              val (vocab, _, baselineBp) = Vocab.readVocab(spark, vp)
-              Vocab.vocabDrift(b, textCol, vocab, baselineBp,
-                driftFactor, marginBp)
-            }
-
-            new StreamPipeline.IdempotentFileSink(funnelPath).write(
-              Seq((nIn, nIn - nRulePass, nRulePass - nAfterRep,
-                nAfterRep - nAfterDecon, nDeconTokensCut,
-                nAfterDecon - nAfterFuzzy,
-                nAfterFuzzy - nAfterDedup, nLmTokensCut,
-                nAfterDedup - nKept, nKept,
-                if (nIn > 0) nKept * 10000 / nIn else 0L,
-                drift.map(_.oovBp), drift.map(_.drifted)))
-                .toDF("n_in", "n_rule_killed", "n_rep_killed",
-                  "n_decon_killed", "n_decon_tokens_cut",
-                  "n_fuzzy_killed",
-                  "n_dup_killed", "n_lm_tokens_cut",
-                  "n_sel_killed", "n_kept", "kept_bp", "oov_bp",
-                  "drifted")
-                .coalesce(1),
-              batchId)
-          }
-          // fires AFTER every sink landed but BEFORE Structured
-          // Streaming commits the batch offset — the at-least-once
-          // crash window, made injectable (the cross-JVM restart drill
-          // kills the process here; production leaves the default)
-          onBatchDone(batchId)
-          ()
-        }
+      // tier 1.5 (optional): decontamination screen vs the
+      // STORED eval-gram index (Decontaminate.evalGramIndex) —
+      // docs carrying > deconMaxHits eval n-grams DIE here,
+      // BEFORE anything is signed or settled: a contaminated doc
+      // must never poison the signature index, and killing it
+      // pre-signing keeps the tier's cost one gram probe
+      // (O(batch + probed index), eval text never re-read). The
+      // eval index grows out-of-band (decon --mode index
+      // --append-index) — like the lm index, its maintenance is
+      // a merge, never an in-stream write, so redelivery replays
+      // the screen deterministically against the same store.
+      require(Set("kill", "redact")(deconMode),
+        s"fullIngest: deconMode must be kill|redact, got '$deconMode'")
+      var nDeconTokensCut = 0L
+      val afterDecon = deconIndexPath match {
+        case None => afterRep
+        case Some(dp) if deconMode == "redact" =>
+          // redact posture: leaked spans are CUT, the doc
+          // SURVIVES (the lm-tier trade applied to eval leakage;
+          // sub-n whole-text leaks are the kill mode's job).
+          // Running BEFORE signing means cut docs sign from
+          // their post-cut text with no re-sign special case.
+          // A doc cut to nothing dies in selection.
+          val cleaned = Caching.persistTracked(
+            graft.operators.Decontaminate
+              .redactEvalNgramsFromIndex(afterRep, idCol, textCol,
+                graft.core.Stores.readOrEmpty(spark, dp), deconN, deconKeyMode)
+              .filter(col("n_removed") > 0))
+          nDeconTokensCut = Probe.totals(cleaned, Seq(col("n_removed")))(1)
+          val untouched = afterRep.join(
+            cleaned.select(col("id").as("__dc_id")),
+            afterRep(idCol).cast("long") === col("__dc_id"),
+            "left_anti")
+          Caching.persistTracked(
+            untouched.unionByName(
+              Dedup.rewriteText(afterRep, idCol, textCol, cleaned)))
+        case Some(dp) =>
+          val killIds = graft.operators.Decontaminate
+            .ngramHitsFromIndex(afterRep, idCol, textCol,
+              graft.core.Stores.readOrEmpty(spark, dp), deconN, deconKeyMode)
+            .filter(col("n_hits") > deconMaxHits)
+            .select(col(idCol).cast("long").as("__dc_id"))
+          Caching.persistTracked(
+            afterRep.join(killIds,
+              afterRep(idCol).cast("long") === col("__dc_id"),
+              "left_anti"))
       }
-      .start()
+      val nAfterDecon =
+        if (deconIndexPath.isEmpty || deconMode == "redact")
+          nAfterRep
+        else rows(afterDecon)
+
+      // ONE signing pass for everything minhash-shaped this
+      // batch needs: the optional FUZZY decon screen (tier
+      // 1.75), intra-batch self-dedup, the cross screen, and the
+      // settle append all slice these signatures — no tier
+      // re-shingles the batch.
+      val bSigAll = Caching.persistTracked(
+        Dedup.minhashSignatures(afterDecon, idCol, textCol,
+          shingleN, k, bands))
+
+      // tier 1.75 (optional): FUZZY decontamination vs STORED
+      // eval minhash signatures (Dedup.minhashSignatures over
+      // the benchmark set, persisted once out-of-band) — the
+      // paraphrase / partial-copy leakage the exact n-gram tier
+      // cannot see dies here, before anything settles. The eval
+      // store must be signed with THIS ingest's shingleN/k/bands
+      // (the signature-parameter metadata check refuses a
+      // drifted store loudly). Kill-only by nature: a paraphrase
+      // has no exact spans to redact.
+      val (afterFuzzy, nAfterFuzzy) = fuzzyEvalSigsPath match {
+        case None => (afterDecon, nAfterDecon)
+        case Some(fp) =>
+          val fz = Dedup.incrementalNearDupFromSigs(bSigAll,
+              spark.read.parquet(fp), shingleN, k, bands,
+              fuzzyThrNum, fuzzyThrDen,
+              maxBucket = fuzzyMaxBucket,
+              maxBatchBucket = fuzzyMaxBucket)
+            .select(col("batch_id").as("__fz_id")).distinct()
+          val keptFz = Caching.persistTracked(
+            afterDecon.join(fz,
+              afterDecon(idCol).cast("long") === col("__fz_id"),
+              "left_anti"))
+          (keptFz, rows(keptFz))
+      }
+
+      // tier 2: near-dup dedup, SELF-SETTLING — the batch is
+      // signed ONCE (bSig) and that one signing pass feeds
+      //   (a) intra-batch self-dedup: verified near-dup pairs
+      //       within the batch collapse to their min-id
+      //       canonical (connected components, batch scale), so
+      //       two copies arriving together cannot both pass;
+      //   (b) the cross screen of the surviving canonicals
+      //       against the settled index = stored base signatures
+      //       ∪ this run's settled appends, so a copy arriving
+      //       batches after its original dies without any
+      //       out-of-band screen+append;
+      //   (c) the settle append after selection (below).
+      // Order is load-bearing: self-dedup first means a canonical
+      // that then dies against settled state takes its whole
+      // intra-batch cluster with it (the content IS settled
+      // content — re-admitting a sibling copy would undo the
+      // screen).
+      // without the fuzzy tier, afterFuzzy IS afterDecon and the
+      // slice would be an identity join caching the signatures
+      // TWICE — keep the single-cached-copy memory profile the
+      // heavy ingest tests size the heap for
+      val bSig =
+        if (fuzzyEvalSigsPath.isEmpty) bSigAll
+        else Caching.persistTracked(
+          bSigAll.join(
+            afterFuzzy.select(afterFuzzy(idCol).cast("long")
+              .as("id")),
+            Seq("id"), "leftsemi"))
+      val selfKill = Dedup.connectedComponents(
+          Dedup.minhashNearDupCountsFromSigs(bSig, thrNum, thrDen,
+            maxBucket), "id_a", "id_b")
+        .filter(col("id") =!= col("root"))
+        .select(col("id").as("__dup_id"))
+      val afterSelf = Caching.persistTracked(
+        afterFuzzy.join(selfKill,
+          afterFuzzy(idCol).cast("long") === col("__dup_id"),
+          "left_anti"))
+      val corpusSig = corpusSigWithSettled(spark, corpusSigPath,
+        excludeBatchId = batchId)
+      val survSig = bSig.join(
+        afterSelf.select(afterSelf(idCol).cast("long").as("id")),
+        Seq("id"), "leftsemi")
+      val crossDup = Dedup.incrementalNearDupFromSigs(survSig,
+          corpusSig, shingleN, k, bands, thrNum, thrDen, maxBucket)
+        .select(col("batch_id").as("__dup_id")).distinct()
+      val afterDedup = Caching.persistTracked(
+        afterSelf.join(crossDup,
+          afterSelf(idCol).cast("long") === col("__dup_id"),
+          "left_anti"))
+      val nAfterDedup = rows(afterDedup)
+
+      // tier 2.75 (optional): passage-level long-match screen vs
+      // the STORED window index (Dedup.longMatchIndex) — settled
+      // substrings get CUT from the doc (rewriteText), the doc
+      // itself SURVIVES (the CCNet posture: unique prose stays,
+      // boilerplate the corpus already carries never lands), so
+      // DSIR downstream scores only genuinely novel text. Only
+      // docs with spans are rewritten — an untouched doc's text
+      // passes through byte-identical (the rewrite is a token
+      // rejoin, which would otherwise normalize whitespace
+      // corpus-wide). The index is NOT appended in-stream: the
+      // append is a merge, not an idempotent keyed write, so an
+      // at-least-once redelivery would double-count — fold kept
+      // batches in out-of-band (screen --kind longmatch
+      // --append-index / Dedup.appendLongMatchIndex), the same
+      // settle-then-compact lifecycle as the signature sidecar.
+      // A doc cut to nothing dies in selection (n_grams = 0
+      // < minGrams) and is attributed there.
+      // one spans pass feeds the cut-id set, the rewrite and the
+      // funnel count; `cleaned` keeps only rewritten docs
+      val lmTier: Option[(DataFrame, DataFrame, Long)] =
+        lmIndexPath.map { ip =>
+          val spans = Caching.persistTracked(
+            Dedup.incrementalLongMatchSpans(afterDedup, idCol,
+              textCol, spark.read.parquet(ip), lmMinLen, lmMaxDf))
+          val cutIds = spans.select(col("id").as("__lm_id"))
+            .distinct()
+          val cleaned = Caching.persistTracked(
+            Dedup.removeSpans(afterDedup, idCol, textCol, spans,
+              lmMinLen).filter(col("n_removed") > 0))
+          (cutIds, cleaned, Probe.totals(cleaned, Seq(col("n_removed")))(1))
+        }
+      val nLmTokensCut: Long = lmTier.map(_._3).getOrElse(0L)
+      val lmCutIds: Option[DataFrame] = lmTier.map(_._1)
+      val afterLm = lmTier match {
+        case Some((ids, cleaned, _)) =>
+          val untouched = afterDedup.join(ids,
+            afterDedup(idCol).cast("long") === col("__lm_id"),
+            "left_anti")
+          untouched.unionByName(
+            Dedup.rewriteText(afterDedup, idCol, textCol, cleaned))
+        case None => afterDedup
+      }
+
+      // tier 3: DSIR selection against the stored target weights
+      val w = spark.read.parquet(weightsPath)
+      val scored = graft.operators.Dsir
+        .score(afterLm, idCol, textCol, w)
+      val selIds = scored
+        .filter(col("dsir_cb") >= minCb && col("n_grams") >= minGrams)
+        .select(col("id").as("__sel_id"))
+      val kept = Caching.persistTracked(
+        afterLm.join(selIds,
+          afterLm(idCol).cast("long") === col("__sel_id"),
+          "leftsemi"))
+      val nKept = rows(kept)
+
+      // land: kept docs + stats snapshot, both keyed by batch id
+      new StreamPipeline.IdempotentFileSink(keptPath)
+        .write(kept, batchId)
+      graft.operators.CorpusStats
+        .appendSnapshotIdempotent(kept, textCol, statsPath, batchId)
+
+      // (c) settle: the kept docs' signatures (sliced from the
+      // same bSig pass) append to the run's settled store, keyed
+      // by batch id — a replayed batch OVERWRITES its own
+      // partition, leaving the index unchanged, and the next
+      // batch's cross screen reads them via corpusSigWithSettled.
+      // Only KEPT docs settle: selection-killed text never lands
+      // in the corpus, so it must not poison the screen either.
+      // Long-match-CUT docs re-sign from their LANDED (post-cut)
+      // text — settling the pre-cut signature would screen future
+      // batches against content the corpus never kept. Cost
+      // O(cut docs); uncut docs still ride the one bSig pass.
+      val keptIds = kept.select(kept(idCol).cast("long").as("id"))
+      val settleBase = bSig.join(keptIds, Seq("id"), "leftsemi")
+      val settleSig = lmCutIds match {
+        case None => settleBase
+        case Some(ids) =>
+          val cutKept = kept.join(ids,
+            kept(idCol).cast("long") === col("__lm_id"), "leftsemi")
+          settleBase.join(ids, settleBase("id") === col("__lm_id"),
+              "left_anti")
+            .unionByName(Dedup.minhashSignatures(cutKept, idCol,
+              textCol, shingleN, k, bands))
+      }
+      new StreamPipeline.IdempotentFileSink(
+          settledSigPath(corpusSigPath))
+        .write(settleSig, batchId)
+
+      // optional monitor: vocab drift on the RAW feed (a drifting
+      // source should alert even when the gates absorb it)
+      val drift = vocabPath.map { vp =>
+        val (vocab, _, baselineBp) = Vocab.readVocab(spark, vp)
+        Vocab.vocabDrift(b, textCol, vocab, baselineBp,
+          driftFactor, marginBp)
+      }
+
+      new StreamPipeline.IdempotentFileSink(funnelPath).write(
+        Seq((nIn, nIn - nRulePass, nRulePass - nAfterRep,
+          nAfterRep - nAfterDecon, nDeconTokensCut,
+          nAfterDecon - nAfterFuzzy,
+          nAfterFuzzy - nAfterDedup, nLmTokensCut,
+          nAfterDedup - nKept, nKept,
+          if (nIn > 0) nKept * 10000 / nIn else 0L,
+          drift.map(_.oovBp), drift.map(_.drifted)))
+          .toDF("n_in", "n_rule_killed", "n_rep_killed",
+            "n_decon_killed", "n_decon_tokens_cut",
+            "n_fuzzy_killed",
+            "n_dup_killed", "n_lm_tokens_cut",
+            "n_sel_killed", "n_kept", "kept_bp", "oov_bp",
+            "drifted")
+          .coalesce(1),
+        batchId)
+      // fires AFTER every sink landed but BEFORE Structured
+      // Streaming commits the batch offset — the at-least-once
+      // crash window, made injectable (the cross-JVM restart drill
+      // kills the process here; production leaves the default)
+      onBatchDone(batchId)
+    }
 
   /** Retract documents from a kept-corpus store (the fullIngest
     * `keptPath` layout: docs partitioned by batch_id via the
@@ -1263,6 +1137,10 @@ object StreamingIngest {
     }
   }
 
+  /** The shared screen→sink→accept loop behind both settle variants:
+    * per micro-batch, flag near-dups against the stored signature
+    * index, write them to `sink`, and hand the anti-joined accepted
+    * rows to `appendAccepted` (the store-specific maintenance step). */
   private def screenSettleLoop(vecs: DataFrame, idCol: String,
                                vecCol: String, corpusSig: DataFrame,
                                corpusVecs: DataFrame, threshold: Double,
@@ -1273,28 +1151,18 @@ object StreamingIngest {
                               (appendAccepted: DataFrame => Unit)
       : StreamingQuery = {
     require(dim > 0, "pass the embedding dim explicitly (no per-batch inference)")
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.core.Caching.scopedRelease {
-            // the batch feeds the screen AND the accepted-rows
-            // anti-join; flagged feeds the sink AND that same join
-            val b = graft.core.Caching.persistTracked(batch)
-            val flagged = graft.core.Caching.persistTracked(
-              Similarity.incrementalEmbeddingNearDup(b, idCol, vecCol,
-                corpusSig, corpusVecs, threshold, bands, bitsPerBand,
-                seed, dim, maxBucket))
-            sink.write(flagged, batchId)
-            val accepted = b.join(
-              flagged.select(col("batch_id").as(idCol)).distinct(),
-              Seq(idCol), "left_anti")
-            if (!accepted.isEmpty) appendAccepted(accepted)
-          }
-          ()
-        }
-      }
-      .start()
+    MicroBatch.start(vecs, checkpointDir) { mb =>
+      // flagged feeds the sink AND the accepted-rows anti-join; the
+      // accepted rows feed the emptiness probe AND the append
+      val flagged = Caching.persistTracked(
+        Similarity.incrementalEmbeddingNearDup(mb.df, idCol, vecCol,
+          corpusSig, corpusVecs, threshold, bands, bitsPerBand,
+          seed, dim, maxBucket))
+      sink.write(flagged, mb.id)
+      val accepted = Caching.persistTracked(mb.df.join(
+        flagged.select(col("batch_id").as(idCol)).distinct(),
+        Seq(idCol), "left_anti"))
+      if (Probe.totals(accepted).head > 0) appendAccepted(accepted)
+    }
   }
 }

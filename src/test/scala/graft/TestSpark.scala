@@ -17,32 +17,57 @@ object TestSpark {
 
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Run `body` and count the Spark jobs it started on this thread: a
-    * listener counts jobs tagged with a fresh local property, and an
-    * in-order marker job after `body` flushes the listener bus, so
-    * every job `body` submitted has been seen when the count is read. */
+  /** Run `body` and count the Spark jobs it started on this thread
+    * (jobs tagged with a fresh local property). */
   def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
+    countJobs("graft.test.tag", tag) {
+      sc.setLocalProperty("graft.test.tag", tag)
+      try body finally sc.setLocalProperty("graft.test.tag", null)
+    }
+  }
+
+  /** Run `body` (typically `addData` + `processAllAvailable`) and count
+    * the Spark jobs streaming query `q` started meanwhile: the jobs its
+    * micro-batch thread tags with `sql.streaming.queryId`. */
+  def streamJobsOf(q: org.apache.spark.sql.streaming.StreamingQuery)
+                  (body: => Unit): Int =
+    countJobs("sql.streaming.queryId", q.id.toString)(body)._2
+
+  /** Count the jobs started while `body` runs whose local property `key`
+    * equals `value`. The listener bus delivers in order, so once a marker
+    * job submitted from this thread has been seen, so has every job
+    * submitted before it: one marker before `body` and one after bound
+    * exactly its jobs. */
+  private def countJobs[T](key: String, value: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val ends = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val markers = new java.util.concurrent.LinkedBlockingQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.tag")))
-          .foreach(t => if (t == tag) jobs.incrementAndGet() else ends.put(t))
+        Option(e.properties).foreach { p =>
+          if (p.getProperty(key) == value) jobs.incrementAndGet()
+          Option(p.getProperty("graft.test.marker")).foreach(markers.put)
+        }
+    }
+    def settle(): Unit = {
+      val tag = java.util.UUID.randomUUID().toString
+      sc.setLocalProperty("graft.test.marker", tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      while (Option(markers.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(throw new AssertionError(
+            "marker job never reached the listener")) != tag) ()
     }
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty("graft.test.tag", tag)
-      val out = try body
-        finally sc.setLocalProperty("graft.test.tag", s"$tag:end")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.tag", null)
-      while (Option(ends.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-          .getOrElse(throw new AssertionError(
-            "marker job never reached the listener")) != s"$tag:end") ()
-      (out, jobs.get)
+      settle()
+      val from = jobs.get
+      val out = body
+      settle()
+      (out, jobs.get - from)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.score.Autoencoder
@@ -82,47 +81,17 @@ class StreamPipelineSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_jobs").toString
     val q = StreamPipeline.run(stream.toDF().toDF("value"), weights,
       threshold = 0.5, normal, anomaly, ckpt)
-    val queryId = q.id.toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markers = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          if (p.getProperty("sql.streaming.queryId") == queryId)
-            jobs.incrementAndGet()
-          Option(p.getProperty("graft.test.marker")).foreach(markers.put)
-        }
-    }
-    // The listener bus delivers in order, so once a marker job submitted
-    // from this thread has been seen, so has every job submitted before it.
-    def settle(): Unit = {
-      val tag = java.util.UUID.randomUUID().toString
-      val sc = spark.sparkContext
-      sc.setLocalProperty("graft.test.marker", tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.marker", null)
-      while (Option(markers.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-          .getOrElse(fail("marker job never reached the listener")) != tag) ()
-    }
-    def jobsFor(events: String*): Int = {
-      settle()
-      val from = jobs.get
+    def jobsFor(events: String*): Int = TestSpark.streamJobsOf(q) {
       stream.addData(events: _*)
       q.processAllAvailable()
-      settle()
-      jobs.get - from
     }
-    spark.sparkContext.addSparkListener(listener)
     try {
       assert(jobsFor(event(1, 0.1, "BENIGN"), event(2, 9999.0, "DoS Hulk")) === 3)
       assert(normal.batches.length === 1 && anomaly.batches.length === 1)
       assert(jobsFor(event(3, 0.2, "BENIGN"), event(4, 0.1, "BENIGN")) === 2)
       assert(normal.batches.length === 2 && normal.totalRows === 3)
       assert(anomaly.batches.length === 1, "all-normal batch called the anomaly sink")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      q.stop()
-    }
+    } finally q.stop()
   }
 
   test("windowed counts with watermark aggregate by event-time bucket") {

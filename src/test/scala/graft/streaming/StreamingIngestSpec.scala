@@ -622,6 +622,93 @@ class StreamingIngestSpec extends AnyFunSuite {
       mon(1).getAs[Long]("kept_bp") === 0L)
   }
 
+  test("selectionIngest: a batch with kept and dropped rows runs " +
+    "11 Spark jobs") {
+    import graft.operators.Dsir
+    implicit val sc = spark.sqlContext
+    val target = Seq(1L -> "spark scala catalyst spark",
+      2L -> "scala spark tungsten").toDF("doc_id", "text")
+    val raw = Seq(10L -> "cobol fortran basic",
+      11L -> "fortran cobol pascal basic").toDF("doc_id", "text")
+    val wDir = tmp("dsir_jobs_w") + "/weights"
+    Dsir.bucketWeights(target, raw, "text", buckets = 64)
+      .write.mode("overwrite").parquet(wDir)
+    val keptPath = tmp("dsir_jobs_kept") + "/kept"
+    val monPath = tmp("dsir_jobs_mon") + "/monitor"
+    val stream = MemoryStream[(Long, String)]
+    val q = StreamingIngest.selectionIngest(
+      stream.toDS().toDF("id", "text"), "id", "text",
+      wDir, keptPath, monPath, tmp("dsir_jobs_ckpt"), minCb = 0L)
+    try {
+      // a warm batch first: the pin is the steady-state batch
+      stream.addData((100L, "spark scala catalyst"), (101L, "cobol basic"))
+      q.processAllAvailable()
+      val jobs = TestSpark.streamJobsOf(q) {
+        stream.addData((200L, "spark tungsten scala"),
+          (201L, "cobol fortran basic"), (202L, "catalyst spark"))
+        q.processAllAvailable()
+      }
+      val mon = spark.read.parquet(monPath).filter($"batch_id" === 1L)
+        .head()
+      assert(mon.getAs[Long]("n_in") === 3L &&
+        mon.getAs[Long]("n_kept") === 2L, mon.toString)
+      assert(jobs === 11)
+    } finally q.stop()
+  }
+
+  test("an empty micro-batch runs no body: no funnel or monitor row, no " +
+    "callback, and the next batch lands normally") {
+    import graft.operators.{Dsir, Vocab}
+    implicit val sc = spark.sqlContext
+    val base = tmp("empty_batch")
+    val text = "the a spark scala catalyst tungsten " +
+      (1 to 20).map(i => f"g$i%02dab").mkString(" ")
+    val settled = Seq((1L, "the a settled corpus document " +
+      (1 to 20).map(i => f"s$i%02dab").mkString(" "))).toDF("doc_id", "text")
+    Dedup.minhashSignatures(settled, "doc_id", "text")
+      .write.mode("overwrite").parquet(s"$base/sig")
+    Dsir.bucketWeights(Seq(1L -> "spark scala catalyst tungsten")
+        .toDF("doc_id", "text"),
+      Seq(2L -> "cobol fortran basic").toDF("doc_id", "text"), "text",
+      buckets = 64).write.mode("overwrite").parquet(s"$base/weights")
+    Vocab.writeLm(settled, "text", s"$base/lm")
+
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val full = MemoryStream[(Long, String)]
+    val qFull = StreamingIngest.fullIngest(full.toDS().toDF("id", "text"),
+      "id", "text", s"$base/sig", s"$base/weights", s"$base/kept",
+      s"$base/funnel", s"$base/stats", s"$base/ckpt_full", minWords = 5,
+      onBatchDone = id => { done.add(id); () })
+    val fired = new java.util.concurrent.atomic.AtomicInteger(0)
+    val lm = MemoryStream[(Long, String)]
+    val qLm = StreamingIngest.lmDriftIngest(lm.toDS().toDF("id", "text"),
+      "id", "text", s"$base/lm", s"$base/monitor", s"$base/ckpt_lm",
+      baselineCb = 100L, onBatch = (_, _) => { fired.incrementAndGet(); () })
+    try {
+      full.addData()
+      lm.addData()
+      qFull.processAllAvailable()
+      qLm.processAllAvailable()
+      assert(qFull.lastProgress.batchId === 0L &&
+        qLm.lastProgress.batchId === 0L, "the empty batch must run")
+      assert(!new java.io.File(s"$base/funnel").exists() &&
+        !new java.io.File(s"$base/monitor").exists() &&
+        !new java.io.File(s"$base/kept").exists())
+      assert(done.isEmpty && fired.get === 0)
+
+      full.addData((100L, text))
+      lm.addData((100L, text))
+      qFull.processAllAvailable()
+      qLm.processAllAvailable()
+    } finally { qFull.stop(); qLm.stop() }
+    def batchIds(path: String): Seq[Long] = spark.read.parquet(path)
+      .select($"batch_id".cast("long")).as[Long].collect().toSeq
+    assert(batchIds(s"$base/funnel") === Seq(1L))
+    assert(batchIds(s"$base/kept") === Seq(1L))
+    assert(batchIds(s"$base/monitor") === Seq(1L))
+    assert(done.toArray.toSeq === Seq(1L) && fired.get === 1)
+  }
+
   test("qualityIngest: rule gate + repetition family per micro-batch " +
     "with funnel attribution") {
     implicit val sc = spark.sqlContext
