@@ -318,6 +318,16 @@ object Main {
     opts.getOrElse(key,
       throw new IllegalArgumentException(s"missing required option --$key"))
 
+  /** The store audit's `--sample-mod N [--sample-rem R]` slice, checked
+    * before any store is read. */
+  private def sampleSlice(opts: Map[String, String]): Option[(Long, Long)] = {
+    val sample = opts.get("sample-mod").map { m =>
+      (m.toLong, opts.getOrElse("sample-rem", "0").toLong)
+    }
+    graft.core.StoreVerify.requireSlice(sample)
+    sample
+  }
+
   /** Minimal JSON string escape for interpolated values: user-supplied
     * paths may contain quotes or backslashes, and a raw `"$path"`
     * interpolation would emit invalid JSON. */
@@ -1246,9 +1256,7 @@ object Main {
       // legs are read-only; anything red routes to `--fsck --repair`
       // or the README "Store verify" recovery table.
       val root = opts("health")
-      val sample = opts.get("sample-mod").map { m =>
-        (m.toLong, opts.getOrElse("sample-rem", "0").toLong)
-      }
+      val sample = sampleSlice(opts)
       val findings = graft.core.StoreFsck.fsck(spark, root, repair = false)
       val stores = graft.core.StoreVerify.verifyTree(spark, root,
         idCol = opts.getOrElse("id", "doc_id"), sample = sample)
@@ -1273,9 +1281,7 @@ object Main {
       // audit each (kept stores run without the sig pairing here — the
       // targeted --verify <kept> --sig <sig> owns the agreement checks)
       val root = opts("verify-tree")
-      val sample = opts.get("sample-mod").map { m =>
-        (m.toLong, opts.getOrElse("sample-rem", "0").toLong)
-      }
+      val sample = sampleSlice(opts)
       val stores = graft.core.StoreVerify.verifyTree(spark, root,
         idCol = opts.getOrElse("id", "doc_id"), sample = sample)
       val failed = stores.map(_._3.count(!_.ok)).sum
@@ -1296,9 +1302,7 @@ object Main {
       // each failed invariant names its recovery recipe in README
       // ("Store verify").
       val dir = opts("verify")
-      val sample = opts.get("sample-mod").map { m =>
-        (m.toLong, opts.getOrElse("sample-rem", "0").toLong)
-      }
+      val sample = sampleSlice(opts)
       val (family, checks) = graft.core.StoreVerify.verify(spark, dir,
         sigPath = opts.get("sig"), idCol = opts.getOrElse("id", "doc_id"),
         sample = sample)

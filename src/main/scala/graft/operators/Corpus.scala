@@ -1583,7 +1583,6 @@ object Corpus {
       val postings = s.read.parquet(s"$dir/postings")
       val nBuckets = s.read.parquet(s"$dir/stats").head()
         .getAs[Long]("n_buckets")
-      val emptyTh = graft.core.StoreVerify.emptyThHash(s)
       // THE audit's own reconstruction (shared definition — certifying
       // a copy would let the real audit drift while q133 stays green)
       val perDoc = graft.core.StoreVerify
@@ -1593,7 +1592,8 @@ object Corpus {
         coalesce(sum(col("dl")), lit(0L)).as("total_tokens"),
         sum(when(coalesce(col("tf_sum"), lit(0L)) === col("dl"), 1L)
           .otherwise(0L)).as("n_tf_ok"),
-        sum(when(coalesce(col("th_rec"), lit(emptyTh)) === col("th"), 1L)
+        sum(when(coalesce(col("th_rec"),
+          graft.core.StoreVerify.emptyThHash) === col("th"), 1L)
           .otherwise(0L)).as("n_th_ok"))
       val postSide = postings.agg(count(lit(1)).as("n_postings"))
         .crossJoin(perDoc.agg(

@@ -256,6 +256,16 @@ class StoreVerifySpec extends AnyFunSuite {
     one.write.mode("append").parquet(dir)
     val bad = failing(StoreVerify.verify(spark, dir)._2)
     assert(bad === Set("lm_total_tokens", "lm_token_unique"), bad)
+    // a null count is no count: Σ cnt and token uniqueness still hold,
+    // only the count law may catch it
+    val dir2 = s"$base/lm_null"
+    Vocab.writeLm(corpus, "text", dir2)
+    val md = spark.read.parquet(dir2).schema("token").metadata
+    Seq(("zzz", None: Option[Long])).toDF("token", "cnt")
+      .select(col("token").as("token", md), col("cnt"))
+      .write.mode("append").parquet(dir2)
+    val badNull = failing(StoreVerify.verify(spark, dir2)._2)
+    assert(badNull === Set("lm_counts_positive"), badNull)
   }
 
   test("longmatch: a fresh store passes; a duplicated gram key is " +
@@ -273,6 +283,16 @@ class StoreVerifySpec extends AnyFunSuite {
     spark.read.parquet(dir).limit(1).write.mode("append").parquet(dir)
     val bad = failing(StoreVerify.verify(spark, dir)._2)
     assert(bad === Set("longmatch_gk_unique"), bad)
+    // a fresh gram key with a null df is no count either
+    val dir2 = s"$base/lmidx_null"
+    Dedup.longMatchIndex(corpus, "doc_id", "text", minLen = 3)
+      .write.parquet(dir2)
+    val md = spark.read.parquet(dir2).schema("gk").metadata
+    Seq((0L, None: Option[Long])).toDF("gk", "df")
+      .select(col("gk").as("gk", md), col("df"))
+      .write.mode("append").parquet(dir2)
+    val badNull = failing(StoreVerify.verify(spark, dir2)._2)
+    assert(badNull === Set("longmatch_df_positive"), badNull)
   }
 
   test("store --rebuild-stats re-derives the stats leg from doclen " +
@@ -498,6 +518,21 @@ class StoreVerifySpec extends AnyFunSuite {
       Map("verify-tree" -> base))
     assert(res.contains(""""n_stores":3""") &&
       res.contains(""""n_failed":1"""), res)
+  }
+
+  test("a bad sample slice fails loudly before the sweep instead of " +
+    "reading as damage to every store") {
+    val base = tmpBase("badslice")
+    freshBm25(s"$base/bm25")
+    Seq("verify-tree", "health").foreach { cmd =>
+      val e = intercept[IllegalArgumentException] {
+        graft.Main.run(spark, "store", Map(cmd -> base, "sample-mod" -> "0"))
+      }
+      assert(e.getMessage.contains("0 <= rem < mod"), e.getMessage)
+    }
+    intercept[IllegalArgumentException] {
+      StoreVerify.verifyTree(spark, base, sample = Some((3L, 3L)))
+    }
   }
 
   test("verify-tree surfaces the states a naive sweep hides: an " +
@@ -932,5 +967,89 @@ class StoreVerifySpec extends AnyFunSuite {
       graft.Main.run(spark, "store", Map("verify" -> s"$base/random"))
     }
     assert(e.getMessage.contains("no known store family"), e.getMessage)
+  }
+
+  test("audit cost: each store leg is read once and tallied by one " +
+    "probe — pinned Spark jobs per family and for the lake sweep") {
+    import graft.TestSpark.jobsOf
+    import graft.operators.{CorpusStats, Dsir, Vocab}
+    import graft.ops.ModelRegistry
+    import graft.score.Autoencoder
+    // one lake holding one store of every family the CLI can create
+    val lake = tmpBase("jobs")
+    freshBm25(s"$lake/bm25")
+    freshIvf(s"$lake/ann")
+    val emb = (1L to 4L).map(i => (i, Array.fill(4)(i.toDouble / 4)))
+      .toDF("vec_id", "embedding")
+    val (_, assigned) = Ivf.index(emb, "vec_id", "embedding",
+      nCells = 2, seed = 3L)
+    Ivf.writeIndexQuantized(assigned, s"$lake/q/cells")
+    assigned.unpersist()
+    Caching.releaseAll()
+    val batch = Seq((21L, "fresh kept doc"), (22L, "another kept doc"))
+      .toDF("doc_id", "text")
+    Dedup.minhashSignatures(corpus, "doc_id", "text")
+      .write.parquet(s"$lake/sig")
+    Dedup.minhashSignatures(batch, "doc_id", "text")
+      .withColumn("batch_id", lit(5L))
+      .write.partitionBy("batch_id").parquet(s"$lake/sig_settled")
+    batch.withColumn("batch_id", lit(5L))
+      .write.partitionBy("batch_id").parquet(s"$lake/kept")
+    Decontaminate.writeEvalIndex(corpus, "text", s"$lake/evalgram", n = 2,
+      keyMode = "md5", suite = "mmlu")
+    Vocab.writeLm(corpus, "text", s"$lake/lm")
+    Vocab.writeVocab(corpus, "text", topK = 4, s"$lake/vocab")
+    Dedup.longMatchIndex(corpus, "doc_id", "text", minLen = 3)
+      .write.parquet(s"$lake/longmatch")
+    Dsir.bucketWeights(corpus.filter(col("doc_id") === 1L), corpus, "text",
+        buckets = 16)
+      .coalesce(1).write.parquet(s"$lake/dsir")
+    CorpusStats.appendSnapshotIdempotent(corpus, "text", s"$lake/stats", 1L)
+    CorpusStats.appendSnapshotIdempotent(
+      corpus.filter(col("doc_id") =!= 3L), "text", s"$lake/stats", 2L)
+    val sink = new graft.streaming.StreamPipeline.IdempotentFileSink(
+      s"$lake/funnel")
+    sink.write(Seq((100L, 10L, 5L, 85L, 8500L)).toDF("n_in",
+      "n_rule_killed", "n_rep_killed", "n_kept", "kept_bp"), 0L)
+    sink.write(Seq((50L, 50L, 0L, 0L, 0L)).toDF("n_in",
+      "n_rule_killed", "n_rep_killed", "n_kept", "kept_bp"), 1L)
+    Autoencoder.save(spark, Autoencoder.seededWeights(Seq(3, 4, 2, 4, 3)),
+      s"$lake/model")
+    ModelRegistry.save(ModelRegistry.table(spark, Seq(
+      ModelRegistry.ModelVersion("ae", 1, "Archived", "t1", 0.5),
+      ModelRegistry.ModelVersion("ae", 2, "Production", "t2", 0.4))),
+      s"$lake/registry")
+
+    val audits = Seq("bm25" -> "bm25", "ivf (by_id)" -> "ann",
+      "ivf (pq cells)" -> "q", "kept + sig" -> "kept", "sig" -> "sig",
+      "sig _settled" -> "sig_settled", "evalgram" -> "evalgram",
+      "lm" -> "lm", "vocab" -> "vocab", "longmatch" -> "longmatch",
+      "dsir" -> "dsir", "stats" -> "stats", "funnel" -> "funnel",
+      "model" -> "model", "registry" -> "registry")
+    def audit(name: String, dir: String): Seq[StoreVerify.Check] =
+      StoreVerify.verify(spark, s"$lake/$dir",
+        sigPath = if (name == "kept + sig") Some(s"$lake/sig") else None)._2
+    // warm pass: every store is clean
+    audits.foreach { case (name, dir) =>
+      assert(failing(audit(name, dir)).isEmpty, name)
+    }
+    val jobs = audits.map { case (name, dir) =>
+      name -> jobsOf(audit(name, dir))._2 }.toMap
+    val (tree, treeJobs) = jobsOf(StoreVerify.verifyTree(spark, lake))
+    assert(tree.length === audits.length, tree.map(_._1))
+    assert(tree.forall(_._3.forall(_.ok)), tree)
+    // one schema read per leg and one probe per leg, plus one job when
+    // a check needs per-key counts; the sketch union (stats), DSIR's
+    // totals probe and the settled batch set (kept + sig) are the only
+    // other actions here
+    val expected = Map("bm25" -> 7, "ivf (by_id)" -> 5,
+      "ivf (pq cells)" -> 3, "kept + sig" -> 7, "sig" -> 4,
+      "sig _settled" -> 3, "evalgram" -> 2, "lm" -> 3, "vocab" -> 3,
+      "longmatch" -> 3, "dsir" -> 4, "stats" -> 5, "funnel" -> 3,
+      "model" -> 3, "registry" -> 3)
+    assert(jobs === expected)
+    // the sweep audits the frame detect read and re-detects nothing;
+    // kept runs unpaired there (3 jobs instead of 7)
+    assert(treeJobs === expected.values.sum - 4)
   }
 }
