@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.{Failure, Success, Try}
+
 /** Content-level cross-leg invariant audit for the graft stores —
   * `store --verify <dir>`.
   *
@@ -78,12 +80,11 @@ object StoreVerify {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"verify: $dir does not exist")
     detectFrame(spark, dir, idCol) match {
-      case Some((family, frame)) =>
+      case Success(Some((family, frame))) =>
         (family, audit(spark, dir, family, frame, sigPath, idCol, sample))
-      case None =>
-        // detect() swallows read errors — re-read here so a genuinely
-        // corrupt dir surfaces ITS error, not the family menu
-        Stores.readOrEmpty(spark, dir)
+      // a genuinely corrupt dir surfaces ITS read error, not the menu
+      case Failure(e) => throw e
+      case Success(None) =>
         throw new IllegalArgumentException(
           s"verify: $dir matches no known store family (bm25 needs " +
             "postings/doclen/stats, ivf needs cells/, eval-gram needs " +
@@ -190,19 +191,23 @@ object StoreVerify {
     * anything unreadable or unrecognized is None (not a store). */
   def detect(spark: SparkSession, dir: String,
              idCol: String = "doc_id"): Option[String] =
-    detectFrame(spark, dir, idCol).map(_._1)
+    detectFrame(spark, dir, idCol).toOption.flatten.map(_._1)
 
   /** [[detect]], keeping the frame it read to tell a single-dir family
     * by its schema: that frame is the one the family's audit tallies,
-    * so no leg is schema-read twice (None for bm25/ivf). */
+    * so no leg is schema-read twice (None for bm25/ivf). The one read
+    * also tells the two non-store cases apart: Failure when the dir
+    * cannot be read as parquet at all, Success(None) when it reads but
+    * matches no family. */
   private def detectFrame(spark: SparkSession, dir: String, idCol: String)
-      : Option[(String, Option[DataFrame])] = {
+      : Try[Option[(String, Option[DataFrame])]] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def has(child: String) = fs.exists(new Path(dir, child))
-    if (has("postings") && has("doclen") && has("stats")) Some(("bm25", None))
-    else if (has("cells")) Some(("ivf", None))
-    else try {
+    if (has("postings") && has("doclen") && has("stats"))
+      Success(Some(("bm25", None)))
+    else if (has("cells")) Success(Some(("ivf", None)))
+    else Try {
       val df = Stores.readOrEmpty(spark, dir)
       val cols = df.columns.toSet
       def all(cs: String*) = cs.forall(cols)
@@ -227,7 +232,7 @@ object StoreVerify {
         else if (all("batch_id", idCol)) Some("kept")
         else None
       family.map(f => (f, Some(df)))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    }
   }
 
   /** Sweep a TREE for stores and audit each — the whole-lake health
@@ -260,7 +265,7 @@ object StoreVerify {
           name.endsWith("_next") || name.endsWith("_old") ||
           name.endsWith("_rm_next") || name.endsWith("_lease"))) ()
       else detectFrame(spark, p.toString, idCol) match {
-        case Some((family, frame)) =>
+        case Success(Some((family, frame))) =>
           // per-store isolation: one damaged store must not abort the
           // lake sweep — its audit error IS its verdict
           val checks =
@@ -273,7 +278,7 @@ object StoreVerify {
                     s"unreadable: ${e.getMessage}".take(300)))
             }
           out += ((p.toString, family, checks))
-        case None =>
+        case notStore =>
           // unreadable PARQUET data is a finding, not a silent skip: a
           // dir of .parquet files that cannot be read is the worst
           // corruption state — exactly what a health sweep must
@@ -282,7 +287,7 @@ object StoreVerify {
           val children = fs.listStatus(p)
           val parquetFiles = children.exists(st => !st.isDirectory &&
             st.getPath.getName.endsWith(".parquet"))
-          if (parquetFiles && !readable(spark, p.toString))
+          if (parquetFiles && notStore.isFailure)
             out += ((p.toString, "unreadable",
               Seq(Check("store_readable", ok = false,
                 "directory holds .parquet files that cannot be read — " +
@@ -297,11 +302,6 @@ object StoreVerify {
     walk(rp, isRoot = true)
     out.result()
   }
-
-  /** Can this dir be read as parquet at all? (schema-only probe) */
-  private def readable(spark: SparkSession, dir: String): Boolean =
-    try { Stores.readOrEmpty(spark, dir).schema; true }
-    catch { case scala.util.control.NonFatal(_) => false }
 
   // ----- BM25 ------------------------------------------------------
 

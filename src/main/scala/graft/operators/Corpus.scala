@@ -1124,8 +1124,8 @@ object Corpus {
     "quality_classifier_cert" -> ((s, d) => {
       import s.implicits._
       val m = graft.ml.QualityClassifier.load(s,
-        fixtureStoreFor(s, s"qc_model") { dir =>
-          graft.ml.QualityClassifier.save(s, qcFixtureModel, dir)
+        fixtureStoreFor(s, d, "qc_model") { dir =>
+          graft.ml.QualityClassifier.save(s, qcFixtureModel, dir); dir
         })
       Featurize.hashedEmbedding(Tables.documents(s, d), "doc_id",
           "text", m.dim)
@@ -1152,8 +1152,8 @@ object Corpus {
     "ae_score_cert" -> ((s, d) => {
       import s.implicits._
       val w = graft.score.Autoencoder.load(s,
-        fixtureStoreFor(s, "ae_weights") { dir =>
-          graft.score.Autoencoder.save(s, aeFixtureWeights, dir)
+        fixtureStoreFor(s, d, "ae_weights") { dir =>
+          graft.score.Autoencoder.save(s, aeFixtureWeights, dir); dir
         })
       val x = Tables.documents(s, d).select($"doc_id",
         array((0 until 4).map(j =>
@@ -1187,8 +1187,8 @@ object Corpus {
     "ae_train_cert" -> ((s, d) => {
       import s.implicits._
       val w0 = graft.score.Autoencoder.load(s,
-        fixtureStoreFor(s, "ae_weights") { dir =>
-          graft.score.Autoencoder.save(s, aeFixtureWeights, dir)
+        fixtureStoreFor(s, d, "ae_weights") { dir =>
+          graft.score.Autoencoder.save(s, aeFixtureWeights, dir); dir
         })
       val x = Tables.documents(s, d).select($"doc_id",
         array((0 until 4).map(j =>
@@ -1282,8 +1282,8 @@ object Corpus {
       import s.implicits._
       import graft.functions.VectorFunctions.asDouble
       val basis = graft.ml.MlBridge.readBasis(s,
-        fixtureStoreFor(s, "pca_basis") { dir =>
-          graft.ml.MlBridge.writeBasis(s, pcaFixtureBasis, dir)
+        fixtureStoreFor(s, d, "pca_basis") { dir =>
+          graft.ml.MlBridge.writeBasis(s, pcaFixtureBasis, dir); dir
         })
       val comps = basis.map { row =>
         aggregate(zip_with($"v", typedlit(row.toSeq),
@@ -1837,117 +1837,77 @@ object Corpus {
     })
   )
 
-  /** Once-per-(session, sfDir) memo of the demo BPE fit: the fertility
-    * report serves from a stored tokenizer in production, so repeated
-    * harness iterations must not re-pay the training loop (the
-    * Relational.bucketedSetup argument). WEAK-keyed on the session
-    * OBJECT (not its identity hash): entries die with the session, so
-    * a long-lived harness can't pin merge tables forever, and a reused
-    * identity hash after GC can't alias two sessions. */
-  private val bpeFitMemo =
+  /** Once-per-(session, sfDir, key) memo of a harness artifact: the
+    * queries serve from a standing store (a fitted tokenizer, an
+    * inverted index, a vector index) in production, so repeated harness
+    * iterations must not re-pay the build (the Relational.bucketedSetup
+    * argument). WEAK-keyed on the session OBJECT (not its identity
+    * hash): entries die with the session, so a long-lived harness can't
+    * pin artifacts forever, and a reused identity hash after GC can't
+    * alias two sessions. Each entry builds once, outside the map's
+    * lock: concurrent callers of one key wait for its build, other keys
+    * do not. */
+  private[operators] def sessionMemo[T <: AnyRef](s: SparkSession,
+                                                 d: String, key: String)
+                                                (build: => T): T =
+    sessionMemos.computeIfAbsent(s, _ =>
+        new java.util.concurrent.ConcurrentHashMap[(String, String), Once]())
+      .computeIfAbsent((d, key), _ => new Once(build)).get
+      .asInstanceOf[T]
+
+  private final class Once(f: => AnyRef) { lazy val get: AnyRef = f }
+
+  private val sessionMemos =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, Seq[Bpe.Merge]]]())
+        java.util.concurrent.ConcurrentHashMap[(String, String), Once]]())
 
+  /** [[sessionMemo]] of a store written once under a fresh temp dir;
+    * `build` writes it and returns the path the queries read. */
+  private def fixtureStoreFor(s: SparkSession, d: String, key: String)
+                             (build: String => String): String =
+    sessionMemo(s, d, key) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_$key")
+      dir.toFile.deleteOnExit()
+      build(dir.toString)
+    }
+
+  /** The demo BPE fit, memoized per (session, sfDir). */
   private def bpeFitFor(s: SparkSession, d: String,
-                        fit: => Seq[Bpe.Merge]): Seq[Bpe.Merge] = {
-    val perSession = bpeFitMemo.synchronized {
-      var m = bpeFitMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String,
-          Seq[Bpe.Merge]]()
-        bpeFitMemo.put(s, m)
-      }
-      m
+                        fit: => Seq[Bpe.Merge]): Seq[Bpe.Merge] =
+    sessionMemo(s, d, "bpe_fit")(fit)
+
+  /** The BM25 inverted-index store over the documents fixture. */
+  private def bm25IndexFor(s: SparkSession, d: String): String =
+    fixtureStoreFor(s, d, "bm25") { dir =>
+      Rank.buildBm25Index(Tables.documents(s, d), "doc_id", "text", dir)
+      dir
     }
-    perSession.computeIfAbsent(d, _ => fit)
-  }
 
-  /** Once-per-(session, sfDir) BM25 inverted-index store (the
-    * bpeFitMemo/bucketedSetup argument: production serves from a
-    * standing index, so repeated harness iterations time the
-    * partition-pruned probe, not the build; weak-keyed so stores die
-    * with their session). */
-  private val bm25IndexMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private def bm25IndexFor(s: SparkSession, d: String): String = {
-    val perSession = bm25IndexMemo.synchronized {
-      var m = bm25IndexMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        bm25IndexMemo.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_bm25")
-      dir.toFile.deleteOnExit()
-      Rank.buildBm25Index(Tables.documents(s, d), "doc_id", "text",
-        dir.toString)
-      dir.toString
-    })
-  }
-
-  /** Once-per-(session, sfDir) RETRACTED BM25 index (the q131 store):
-    * built over the FULL documents corpus, then the doc_id % 7 == 3
-    * slice is removed via [[Rank.removeFromBm25Index]] — so the
-    * certificate covers build, retraction (postings bucket rewrites,
-    * doclen anti-join, exact stats subtraction) and serving in one
-    * hash. Same memo rationale as [[bm25IndexFor]]. */
-  private val bm25RetractMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private def bm25RetractIndexFor(s: SparkSession, d: String): String = {
-    val perSession = bm25RetractMemo.synchronized {
-      var m = bm25RetractMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        bm25RetractMemo.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(d, _ => {
+  /** The RETRACTED BM25 index (the q131 store): built over the FULL
+    * documents corpus, then the doc_id % 7 == 3 slice is removed via
+    * [[Rank.removeFromBm25Index]] — so the certificate covers build,
+    * retraction (postings bucket rewrites, doclen anti-join, exact
+    * stats subtraction) and serving in one hash. */
+  private def bm25RetractIndexFor(s: SparkSession, d: String): String =
+    fixtureStoreFor(s, d, "bm25rm") { dir =>
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_bm25rm")
-      dir.toFile.deleteOnExit()
       val docs = Tables.documents(s, d)
-      Rank.buildBm25Index(docs, "doc_id", "text", dir.toString)
+      Rank.buildBm25Index(docs, "doc_id", "text", dir)
       Rank.removeFromBm25Index(docs.filter($"doc_id" % 7 === 3),
-        "doc_id", "text", dir.toString)
-      dir.toString
-    })
-  }
-
-  /** Once-per-(session, sfDir) stored EVAL-GRAM decontamination index
-    * (the q130 store): HALF the eval slice signed as suite_a at
-    * creation, the other half signed in as suite_b via
-    * [[Decontaminate.appendEvalIndex]] — so the certificate covers
-    * write, the per-suite sign (the partitioned layout's merge law:
-    * two suites probe like one build over the union), and read-back
-    * in one hash. Same memo rationale as [[bm25IndexFor]]. */
-  private val deconIndexMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private def deconIndexFor(s: SparkSession, d: String): String = {
-    val perSession = deconIndexMemo.synchronized {
-      var m = deconIndexMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        deconIndexMemo.put(s, m)
-      }
-      m
+        "doc_id", "text", dir)
+      dir
     }
-    perSession.computeIfAbsent(d, _ => {
+
+  /** The stored EVAL-GRAM decontamination index (the q130 store): HALF
+    * the eval slice signed as suite_a at creation, the other half
+    * signed in as suite_b via [[Decontaminate.appendEvalIndex]] — so the
+    * certificate covers write, the per-suite sign (the partitioned
+    * layout's merge law: two suites probe like one build over the
+    * union), and read-back in one hash. */
+  private def deconIndexFor(s: SparkSession, d: String): String =
+    fixtureStoreFor(s, d, "decon") { dir =>
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_decon")
-      dir.toFile.deleteOnExit()
       val docs = Tables.documents(s, d)
       val path = s"$dir/eval_grams"
       Decontaminate.writeEvalIndex(
@@ -1957,51 +1917,24 @@ object Corpus {
         docs.filter($"doc_id" % 20 === 10), "text", path,
         suite = "suite_b")
       path
-    })
-  }
-
-  /** Once-per-(session, sfDir) stored FLAT IVF index over the
-    * embeddings fixture (the CLI `index` layout: MLlib model at
-    * /model, cell-partitioned assignments at /cells, by-id sidecar at
-    * /by_id) — q126/q128's dense leg probes THIS store, so the hybrid
-    * certificates cover a genuine parquet round-trip of the ANN side,
-    * not an in-query fit. Same memo rationale as [[bm25IndexFor]]. */
-  private val ivfIndexMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  /** Once-per-(session, sfDir) stored SEMANTIC-DEDUP indexes — the
-    * flat learned-codebook assignment and the two-level (router +
-    * per-cell fine quantizers) assignment, each written through
-    * `Ivf.writeIndex` with the learned cluster as the partition key.
-    * The bench-shared `semdedup_kmeans`/`semdedup_twolevel` keys time
-    * the SERVING path over these stores: at 100× the production
-    * question is the stored-index within-cluster collapse, not the
-    * 1–5 MLlib k-means fits per pass the old in-query form measured
-    * (which made those two keys the suite's most contention-sensitive
-    * for three rounds running). Training cost stays visible through
-    * the `_cert` twins, which must fit in-query on their derived-copy
-    * corpora by construction. Same memo rationale as [[ivfIndexFor]]. */
-  private val semDedupMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private def semDedupIndexFor(s: SparkSession, d: String,
-                               twoLevel: Boolean): String = {
-    val perSession = semDedupMemo.synchronized {
-      var m = semDedupMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        semDedupMemo.put(s, m)
-      }
-      m
     }
-    perSession.computeIfAbsent(s"$d#${if (twoLevel) "two" else "flat"}",
-      _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_semdedup")
-        dir.toFile.deleteOnExit()
+
+  /** The stored SEMANTIC-DEDUP indexes — the flat learned-codebook
+    * assignment and the two-level (router + per-cell fine quantizers)
+    * assignment, each written through `Ivf.writeIndex` with the learned
+    * cluster as the partition key. The bench-shared
+    * `semdedup_kmeans`/`semdedup_twolevel` keys time the SERVING path
+    * over these stores: at 100× the production question is the
+    * stored-index within-cluster collapse, not the 1–5 MLlib k-means
+    * fits per pass the old in-query form measured (which made those two
+    * keys the suite's most contention-sensitive for three rounds
+    * running). Training cost stays visible through the `_cert` twins,
+    * which must fit in-query on their derived-copy corpora by
+    * construction. */
+  private def semDedupIndexFor(s: SparkSession, d: String,
+                               twoLevel: Boolean): String =
+    fixtureStoreFor(s, d, s"semdedup_${if (twoLevel) "two" else "flat"}") {
+      dir =>
         val cells =
           if (twoLevel)
             Similarity.semDedupIndexTwoLevel(Tables.embeddings(s, d),
@@ -2013,30 +1946,23 @@ object Corpus {
                 "embedding", targetClusterSize = 64)._2
               .select(col("id"), col("vec"), col("cell"))
         Ivf.writeIndex(cells, s"$dir/cells")
-        dir.toString
-      })
-  }
-
-  private def ivfIndexFor(s: SparkSession, d: String): String = {
-    val perSession = ivfIndexMemo.synchronized {
-      var m = ivfIndexMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        ivfIndexMemo.put(s, m)
-      }
-      m
+        dir
     }
-    perSession.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf")
-      dir.toFile.deleteOnExit()
+
+  /** The stored FLAT IVF index over the embeddings fixture (the CLI
+    * `index` layout: MLlib model at /model, cell-partitioned
+    * assignments at /cells, by-id sidecar at /by_id) — q126/q128's
+    * dense leg probes THIS store, so the hybrid certificates cover a
+    * genuine parquet round-trip of the ANN side, not an in-query fit. */
+  private def ivfIndexFor(s: SparkSession, d: String): String =
+    fixtureStoreFor(s, d, "ivf") { dir =>
       val (model, assigned) = Ivf.index(Tables.embeddings(s, d),
         "vec_id", "embedding", nCells = 16, seed = 42L)
       model.write.overwrite().save(s"$dir/model")
       Ivf.writeIndex(assigned, s"$dir/cells")
       Ivf.writeIdLookup(assigned, s"$dir/by_id")
-      dir.toString
-    })
-  }
+      dir
+    }
 
   /** Once-per-(session, sfDir) stored FIXTURE models for the
     * apply-step certificates (quality_classifier_cert /
@@ -2239,55 +2165,15 @@ object Corpus {
        |${(wRows ++ bRows).mkString("\nUNION ALL\n")}""".stripMargin
   }
 
-  private val fixtureStoreMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private def fixtureStoreFor(s: SparkSession, key: String)
-                             (build: String => Unit): String = {
-    val perSession = fixtureStoreMemo.synchronized {
-      var m = fixtureStoreMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        fixtureStoreMemo.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(key, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_$key")
-      dir.toFile.deleteOnExit()
-      build(dir.toString)
-      dir.toString
-    })
-  }
-
-  /** Once-per-(session, sfDir) stored unigram LM over the settled
-    * slice (doc_id % 5 != 0) — q119 serves the held-out slice against
-    * it; same memo rationale as the BM25 index. */
-  private val lmStoreMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private def lmStoreFor(s: SparkSession, d: String): String = {
-    val perSession = lmStoreMemo.synchronized {
-      var m = lmStoreMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        lmStoreMemo.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(d, _ => {
+  /** The stored unigram LM over the settled slice (doc_id % 5 != 0) —
+    * q119 serves the held-out slice against it. */
+  private def lmStoreFor(s: SparkSession, d: String): String =
+    fixtureStoreFor(s, d, "lm") { dir =>
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_lm")
-      dir.toFile.deleteOnExit()
       Vocab.writeLm(Tables.documents(s, d).filter($"doc_id" % 5 =!= 0),
         "text", s"$dir/lm")
       s"$dir/lm"
-    })
-  }
+    }
 
   private val stop = EnglishStopwords.map(w => s"'$w'").mkString(", ")
   // DuckDB mirrors of the TextFunctions expressions (incl. the blank-text

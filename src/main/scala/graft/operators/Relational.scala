@@ -553,22 +553,18 @@ object Relational {
     })
   )
 
-  /** Once-per-(session, sfDir) setup memos for the layout queries.
-    * q85/q87 are registry queries the harness may run repeatedly
-    * (bench min-of-n) or concurrently; the settle-time writes they
-    * depend on are side effects, so they are (a) memoized per session —
-    * re-invocation reuses the artifact instead of re-paying the write —
-    * and (b) uniquely named, so two sessions in one JVM (or two
-    * harnesses on one catalog) can never race on a shared table name
-    * or path. */
-  private val bucketedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (String, String)]()
-  private val zorderMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
+  /** Once-per-(session, sfDir) setups for the layout queries. q85/q87
+    * are registry queries the harness may run repeatedly (bench
+    * min-of-n) or concurrently; the settle-time writes they depend on
+    * are side effects, so they are (a) memoized per session through
+    * [[Corpus.sessionMemo]] — re-invocation reuses the artifact instead
+    * of re-paying the write — and (b) uniquely named, so two sessions
+    * in one JVM (or two harnesses on one catalog) can never race on a
+    * shared table name or path. */
   private val setupSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def bucketedSetup(s: SparkSession, d: String): (String, String) =
-    bucketedMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
+    Corpus.sessionMemo(s, d, "bucketed") {
       import s.implicits._
       val tag = s"${setupSeq.incrementAndGet()}_" +
         java.util.UUID.randomUUID().toString.take(8)
@@ -582,17 +578,17 @@ object Relational {
           .select($"l_orderkey", $"l_quantity", $"l_extendedprice"),
         tLineitem, s"$dir/lineitem", "l_orderkey", buckets = 8)
       (tOrders, tLineitem)
-    })
+    }
 
   private def zorderSetup(s: SparkSession, d: String,
                           ev: DataFrame): String =
-    zorderMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
+    Corpus.sessionMemo(s, d, "zorder") {
       val dir = java.nio.file.Files.createTempDirectory("graft_zorder")
       dir.toFile.deleteOnExit()
       graft.sources.Layout.writeZOrdered(
         ev, s"$dir/z", "user_id", "value", numFiles = 16)
       s"$dir/z"
-    })
+    }
 
   def oracleSql: Map[String, String] = Map(
     "q01_pricing_summary" ->

@@ -65,7 +65,7 @@ class MainSpec extends AnyFunSuite {
     Seq(("normal", 0.1), ("normal", 0.2), ("anomaly", 2.0))
       .toDF("prediction", "anomaly_score").write.parquet(dir)
     val seen = scala.collection.mutable.ArrayBuffer[String]()
-    val last = Main.dashboardFollow(spark, dir, Map.empty, polls = 2,
+    val last = Main.dashboardFollow(spark, dir, "5 seconds", polls = 2,
       intervalMs = 0L,
       onPoll = line => {
         seen += line
@@ -645,6 +645,102 @@ class MainSpec extends AnyFunSuite {
       Main.run(spark, "datacard", Map("in" -> okDocs, "text" -> "body"))
     }
     assert(exCol.getMessage.contains("body"), exCol.getMessage)
+  }
+
+  test("option table: a mistyped flag fails before any Spark job or " +
+    "file write, naming the nearest declared flag") {
+    import graft.TestSpark.jobsOf
+    // one command per family: ETL, dedup, index/query, store, corpus,
+    // release — each with a near-miss of a flag it declares
+    val calls = Seq(
+      ("score", Map("in" -> "x.csv", "model" -> "m", "treshold" -> "0.5"),
+        "treshold", "threshold"),
+      ("dedup", Map("in" -> "x.csv", "mode" -> "substr", "min-doc" -> "3"),
+        "min-doc", "min-docs"),
+      ("index", Map("in" -> "x.csv", "seeed" -> "7"), "seeed", "seed"),
+      ("store", Map("verify-tre" -> "lake"), "verify-tre", "verify-tree"),
+      ("settle", Map("in" -> "x.csv", "min-word" -> "5"), "min-word",
+        "min-words"),
+      ("release", Map("in" -> "x.csv", "shard" -> "4"), "shard", "shards"))
+    for ((cmd, opts, typo, want) <- calls) {
+      val out = tmpDir("main_typo") + "/out"
+      val withOut =
+        if (cmd == "store") opts else opts + ("out" -> out)
+      val (res, jobs) = jobsOf(scala.util.Try(
+        Main.run(spark, cmd, withOut)))
+      val msg = res.failed.get match {
+        case e: IllegalArgumentException => e.getMessage
+        case e => fail(s"$cmd: expected an IllegalArgumentException, got $e")
+      }
+      assert(msg.contains(s"unknown option --$typo") &&
+        msg.contains(s"did you mean --$want?"), s"$cmd: $msg")
+      assert(jobs === 0, cmd)
+      assert(!Files.exists(java.nio.file.Paths.get(out)), cmd)
+    }
+    // a value that does not parse as the declared type names the flag
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, "train", Map("in" -> "x.csv", "out" -> "m",
+        "epochs" -> "ten"))
+    }
+    assert(e.getMessage.contains("--epochs") &&
+      e.getMessage.contains("ten"), e.getMessage)
+    // a command body reading a key its entry does not declare is a
+    // programming error, not a user error
+    val opts = Cli.parse(Main.commands, "score", Map.empty)
+    intercept[IllegalStateException](opts.str("treshold"))
+  }
+
+  test("option table: parseOpts rejects a key given twice") {
+    val e = intercept[IllegalArgumentException] {
+      Main.parseOpts(Array("--in", "a.csv", "--threshold", "0.5",
+        "--in", "b.csv"))
+    }
+    assert(e.getMessage.contains("--in"), e.getMessage)
+  }
+
+  test("option table: the generated usage names every command, and " +
+    "every command in the table reaches its body") {
+    val header = Main.usage.substring(0,
+      Main.usage.indexOf(s"\n  ${Main.commands.head.name}: "))
+    val listed = header.split("\\s+").toSet
+    for (c <- Seq("rank", "colloc", "buckets", "lm", "release", "store"))
+      assert(listed.contains(c), header)
+    for (c <- Main.commands) {
+      assert(listed.contains(c.name), c.name)
+      assert(Main.usage.contains(s"\n  ${c.name}: "), c.name)
+      c.opts.foreach(o => assert(Cli.usage(c).contains(s"--${o.name} "),
+        s"${c.name} --${o.name}"))
+      // empty options reach the body, which stops at its first required
+      // read — a declared command without a body would throw
+      // IllegalStateException instead
+      val e = intercept[IllegalArgumentException] {
+        Main.run(spark, c.name, Map.empty)
+      }
+      assert(e.getMessage.startsWith("missing required option --"),
+        s"${c.name}: ${e.getMessage}")
+    }
+    val unknown = intercept[IllegalArgumentException] {
+      Main.run(spark, "rnak", Map.empty)
+    }
+    assert(unknown.getMessage.contains("did you mean rank?"),
+      unknown.getMessage)
+  }
+
+  test("option table: release declares exactly the keys it forwards") {
+    // pack's --salt is no stage's option: release must refuse it
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, "release", Map("in" -> "x.csv", "out" -> "o",
+        "salt" -> "pack"))
+    }
+    assert(e.getMessage.contains("unknown option --salt"), e.getMessage)
+    val release = Main.commands.find(_.name == "release").get
+    val forwarded = Seq("id", "text", "source", "min-words", "n",
+      "min-docs", "budget", "repetition", "para-split", "para-delim",
+      "longmatch", "max-df", "mode", "keep-bp", "buckets", "dim", "alpha",
+      "neardup", "bin-bp", "shards", "epochs", "format", "compress",
+      "seed", "balance")
+    assert(release.opts.map(_.name).toSet ===
+      (Set("in", "out", "target", "target-text") ++ forwarded))
   }
 
   test("vocab: build persists the store, drift verdict fires on alien batches") {

@@ -1052,4 +1052,24 @@ class StoreVerifySpec extends AnyFunSuite {
     // kept runs unpaired there (3 jobs instead of 7)
     assert(treeJobs === expected.values.sum - 4)
   }
+
+  test("verify-tree reads a plain (non-store) table once: its one " +
+    "detect read also tells unreadable from unrecognized") {
+    import graft.TestSpark.jobsOf
+    val lake = tmpBase("plain")
+    Seq((1L, "x"), (2L, "y")).toDF("a", "b").write.parquet(s"$lake/raw")
+    val (tree, jobs) = jobsOf(StoreVerify.verifyTree(spark, lake))
+    assert(tree.isEmpty, tree)
+    // the root's own read and the table's detect read — no second
+    // read to tell a corrupt table from a foreign one
+    assert(jobs === 2)
+    fs.mkdirs(new Path(s"$lake/corrupt"))
+    val w = fs.create(new Path(s"$lake/corrupt/part-0.parquet"), true)
+    w.write("not parquet at all".getBytes("UTF-8")); w.close()
+    val swept = StoreVerify.verifyTree(spark, lake)
+    assert(swept.map(t => (t._1.split("/").last, t._2)) ===
+      Seq(("corrupt", "unreadable")), swept)
+    assert(swept.head._3.map(c => (c.invariant, c.ok)) ===
+      Seq(("store_readable", false)))
+  }
 }
