@@ -1,8 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.Cli.opt
+import graft.core.{Caching, Jsons, Metrics, Sessions}
 
 /** Benchmark main: times every SparkEntry query at the given SF dir and
-  * prints one JSON line for the driver.
+  * prints two JSON lines (the per-key line, then a compact summary).
+  *
+  * Options in [[cmd]]. `--stages` and `--plans` add stderr tables and
+  * plan files; the stdout lines are the same in every mode, and a plain
+  * run attaches no listener.
   *
   * Measurement hygiene:
   *  - one untimed warm-up action first, so JVM/codegen/classloading cost
@@ -67,12 +80,80 @@ object Bench {
     else "unresolved"
   }
 
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Bench's options, checked by [[Cli.parse]] before a session starts. */
+  private[graft] val cmd = Cli.Cmd("bench", "time every SparkEntry " +
+    "query at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on " +
+    "local[$SPARK_GRAFT_CPUS] (default 32) and print two JSON lines.", Seq(
+    opt("only", "comma list of the query keys to time (default: all)"),
+    opt("isolate", "comma list of keys to re-run isolated, beside the " +
+      "automatic picks"),
+    opt("stages:bool=false", "print each timed pass's per-stage table " +
+      "to stderr"),
+    opt("plans", "dir: write each selected key's formatted plan to " +
+      "<dir>/<key>.txt")))
+
+  // The harness Bench and Verify share: key selection, session, run.
+  /** The SparkEntry queries named in `only` (all when None),
+    * name-sorted; an unknown name fails naming the nearest key. */
+  private[graft] def select(only: Option[Seq[String]]): Seq[(String, Query)] = {
+    only.foreach(Cli.requireKnown("query key", _, SparkEntry.queries.keys))
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+  }
+
+  private[graft] def cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  private[graft] def session(): SparkSession = Sessions.local(cpus)
+
+  /** Build `fn`'s DataFrame, hand it to `act`, then drop the operator
+    * caches (LSH signatures, IVF index, ...) so one run's cached blocks
+    * neither speed up nor crowd the next. The first line of the error,
+    * if any. */
+  private[graft] def runKey(spark: SparkSession, sfDir: String, fn: Query)
+                           (act: DataFrame => Unit): Option[String] =
+    try { act(fn(spark, sfDir)); None }
+    catch { case e: Throwable =>
+      Some(Option(e.getMessage).getOrElse(e.getClass.getName)
+        .linesIterator.take(1).mkString.take(200))
+    }
+    finally Caching.releaseAll()
+
+  /** One timed pass's stages, slowest first (at most 25). */
+  private def stageTable(label: String, secs: Either[String, Double],
+                         rep: Metrics.Report): String = {
+    val head = s"== $label: " +
+      s"${secs.fold(_ => "failed", s => f"wall=$s%.2f s")}, " +
+      s"${rep.completed.length} stages"
+    (head +: rep.completed.sortBy(-_.ms).take(25).map { r =>
+      f"  stage ${r.id}%4d ${r.ms}%6d ms tasks=${r.tasks}%4d " +
+        f"taskTime=${r.runMs}%7d ms shR=${r.shuffleRead}%9d " +
+        f"shW=${r.shuffleWrite}%9d spill=${r.spill} in=${r.input}%9d  " +
+        r.name.take(70)
+    }).mkString("\n")
+  }
+
+  /** `args` checked against [[cmd]]: the options, the selected queries
+    * and the `--isolate` keys. */
+  private[graft] def parseArgs(args: Array[String])
+      : (Cli.Opts, Seq[(String, Query)], Seq[String]) = {
+    val o = Cli.parse(Seq(cmd), "bench", Main.parseOpts(args))
+    val isolate = o.get("isolate").map(Cli.items).getOrElse(Nil)
+    Cli.requireKnown("query key", isolate, SparkEntry.queries.keys)
+    (o, select(o.get("only").map(Cli.items)), isolate)
+  }
+
   def main(args: Array[String]): Unit = {
+    val (o, selected, isolateAsked) =
+      Cli.orExit(Cli.usage(cmd))(parseArgs(args))
+    val stages = o.bool("stages")
+    val plans = o.get("plans")
+    plans.foreach(d => Files.createDirectories(Paths.get(d)))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val loadStart = loadAvg()
     val calib = calibrate()
-    val spark = graft.core.Sessions.local(cpus.toInt)
+    val spark = session()
 
     // Untimed warm-up: a scan + shuffle + codegen'd aggregate touching the
     // big fixture table, run twice so both the first-job and first-shuffle
@@ -85,137 +166,92 @@ object Bench {
       System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
 
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Full materialization, not count(): under a bare count aggregate
     // Catalyst prunes every unreferenced projection expression and
     // eliminates the final sort, so expression-heavy queries (md5
     // fingerprints, normalize regexes, chunk slicing) would be timed
     // as bare row-count scans. The noop sink consumes every row and
-    // column the query produces.
-    def runFully(name: String,
-                 fn: (org.apache.spark.sql.SparkSession, String)
-                   => org.apache.spark.sql.DataFrame): Boolean =
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        true
-      } catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-          .linesIterator.take(1).mkString.take(200)
-        false
-      }
-    // Optional comma-separated EXACT-name filter for local iteration
-    // (SPARK_GRAFT_ONLY=q62_dedup_clusters,q15_quantiles or
-    // `runMain graft.Bench --only q62,...`); unset = the full
-    // driver-run suite. Exact match, not prefix — "q6" must select
-    // nothing rather than q60–q69.
-    val argOpts = args.grouped(2)
-      .collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }
-      .toMap
-    def csv(s: String): Set[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .orElse(argOpts.get("only")).map(csv)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.contains(n))
+    // column the query produces. Under --plans the plan file is
+    // written from the DataFrame as built, inside the timed window.
+    def act(name: String)(df: DataFrame): Unit = {
+      plans.foreach(d => Files.writeString(Paths.get(d, s"$name.txt"),
+        df.queryExecution.explainString(FormattedMode)))
+      df.write.format("noop").mode("overwrite").save()
     }
+    // One timed pass: the seconds, or the error's first line.
+    def pass(name: String, fn: Query, label: String): Either[String, Double] = {
+      // settle OUTSIDE the timed window: collect the previous query's
+      // garbage and let its cleanup (unpersist, shuffle file deletion)
+      // drain, so one query's debris does not bill the next (r5→r7)
+      System.gc()
+      Thread.sleep(150)
+      def timed(): Either[String, Double] = {
+        val t0 = System.nanoTime()
+        runKey(spark, sfDir, fn)(act(name))
+          .toLeft((System.nanoTime() - t0) / 1e9)
+      }
+      if (!stages) timed()
+      else {
+        val (secs, rep) = Metrics.of(spark)(timed())
+        System.err.println(stageTable(s"$name $label", secs, rep))
+        secs
+      }
+    }
+
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
       // stderr marker (NOT the stdout JSON contract): lets a reader
       // attribute interleaved Spark warnings (e.g. "Block already
       // exists" = a raced lazy cache) to the key that produced them
       System.err.println(s"[bench] ${java.time.Instant.now()} $name")
-      spark.sparkContext.setJobDescription(s"bench:$name")
+      def suitePass(p: Int): Option[Double] =
+        pass(name, fn, s"pass $p").left.map(errors(name) = _).toOption
       // min of two passes: this box shows occasional multi-second
       // scheduler stalls that would otherwise charge a noise spike to
       // whichever query it lands on; the min is the steady-state cost
-      def pass(): Option[Double] = {
-        // settle before the timed pass: collect the previous query's
-        // garbage and let in-flight cleanup (unpersist, shuffle file
-        // deletion) drain OUTSIDE the measured window — three rounds of
-        // identical-code bench deltas (r5→r7) were session contention,
-        // not plans; the settle keeps one query's debris from billing
-        // the next
-        System.gc()
-        Thread.sleep(150)
-        val t0 = System.nanoTime()
-        val ok = runFully(name, fn)
-        // drop operator-internal caches (LSH signatures, IVF index, ...)
-        // so one pass's cached blocks don't speed up or crowd the next
-        graft.core.Caching.releaseAll()
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-      }
-      var times = (1 to 2).flatMap(_ => pass())
-      // queries under ~3 s live at this box's noise floor (r14 measured
-      // ±40–50% run-to-run scatter on sub-second keys at matched
-      // calib; r7→r8 showed nine drifting 1.5–2.1x with unchanged code
-      // under min-of-2; an r16 run caught q54 at 2.65/2.25 in-suite vs
-      // 0.93 isolated — both passes slow is exactly when the old
-      // <2 s trigger never fired). One extra pass costs little
-      // exactly where queries are cheap and tightens the floor where
-      // jitter dominates the signal → min-of-3 below 3 s
-      if (times.nonEmpty && times.min < 3.0) times ++= pass()
+      var times = (1 to 2).flatMap(suitePass)
+      // min-of-3 below 3 s: sub-second keys scatter ±40–50% run to run
+      // (r14), and a third pass is cheap exactly where jitter dominates
+      if (times.nonEmpty && times.min < 3.0) times ++= suitePass(3)
       // a transient pass-1 failure with a clean pass 2 is a timing, not
       // an error — only an all-passes failure reports as one
       if (times.nonEmpty) errors.remove(name)
       name -> times
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    // "queries" stays the per-key MIN (the steady-state cost — the
-    // driver-compared value); "queries_runs" carries every pass so a
-    // reader can see per-key dispersion, and the loadavg pair lets a
-    // host-contended run self-identify. Accept/reject rule (SURVEY
-    // §16): treat a per-key delta as plan drift only when calib is
-    // steady, loadavg_start/end are below ~cpus/8, and the key's
-    // max/min dispersion is < 2 in both runs being compared.
-    // Regression gate vs a COMMITTED reference (bench_reference.json:
-    // {"calib_s": c, "cpus": n, "queries": {key: clean-run min}}): the
-    // artifact itself says "ok | contended | unresolved | regressed |
-    // new | error" per key (rule in [[verdict]]).
+    // "queries" is the per-key MIN (the driver-compared value);
+    // "queries_runs" carries every pass, and the loadavg pair lets a
+    // host-contended run self-identify (SURVEY §16). The gate reads a
+    // COMMITTED reference (bench_reference.json: {"calib_s": c,
+    // "queries": {key: clean-run min}}) and says "ok | contended |
+    // unresolved | regressed | new | error" per key ([[verdict]]).
     val reference: Option[(Double, Map[String, Double])] =
       try {
-        val p = java.nio.file.Paths.get("bench_reference.json")
-        if (!java.nio.file.Files.exists(p)) None
-        else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val node = om.readTree(p.toFile)
-          val qs = node.get("queries")
-          val it = qs.fieldNames()
-          val m = scala.collection.mutable.Map.empty[String, Double]
-          while (it.hasNext) { val n = it.next(); m(n) = qs.get(n).asDouble }
-          Some((node.get("calib_s").asDouble, m.toMap))
+        val p = Paths.get("bench_reference.json")
+        Option.when(Files.exists(p)) {
+          val node = new com.fasterxml.jackson.databind.ObjectMapper()
+            .readTree(p.toFile)
+          (node.get("calib_s").asDouble, node.get("queries").properties().asScala
+            .map(e => e.getKey -> e.getValue.asDouble).toMap)
         }
       } catch { case e: Throwable =>
         System.err.println(
           s"[bench] bench_reference.json unreadable: ${e.getMessage}")
         None
       }
-    val loadBound = cpus.toDouble / 8.0
+    val loadBound = cpus / 8.0
     // a clean host reading: calib within ±10% of the reference's and
     // loadavg below cpus/8
     def hostOk(c: Double, load: Double) = load <= loadBound &&
       reference.exists { case (refCalib, _) =>
         refCalib > 0 && math.abs(c - refCalib) / refCalib <= 0.10
       }
-    // Isolated adjudication pass: an in-suite number can read 1.5–3×
-    // slow from CONTENTION (q54 measured 2.65 s in-suite vs 0.93 s
-    // isolated with identical code), so suspect keys get a quiet-box
-    // re-run appended to the JSON as "isolated": long settle, fresh
-    // min-of-2. EVERY key whose in-suite min is above its reference
-    // band is re-run — a verdict never rests on the in-suite read
-    // alone. Beside those: keys whose passes DISPERSE (max/min ≥ 1.4
-    // at min ≥ 1 s — the contention signature), then the slowest keys
-    // overall, eight auto-picks in all, plus explicit keys via
-    // SPARK_GRAFT_ISOLATE or `--isolate k1,k2`.
-    val isolateAsked = sys.env.get("SPARK_GRAFT_ISOLATE")
-      .orElse(argOpts.get("isolate")).map(csv).getOrElse(Set.empty)
-    // loadavg_end belongs to the SUITE window — sample it before the
-    // isolated block, whose own Spark jobs would otherwise dominate
-    // the 1-minute average and let a reader reject a clean suite run
-    // (or accept a contended one whose load decayed)
+    // Isolated adjudication: an in-suite read can be 1.5–3× slow from
+    // CONTENTION (q54: 2.65 s in-suite, 0.93 s isolated), so suspect
+    // keys get a quiet re-run (long settle, min-of-2) in "isolated":
+    // every key above its band, then keys whose passes DISPERSE
+    // (max/min ≥ 1.4 at min ≥ 1 s), then the slowest keys, eight
+    // auto-picks in all, plus the `--isolate` keys. loadavg_end
+    // belongs to the SUITE window, so it is sampled first.
     val loadEnd = loadAvg()
     val aboveBand = reference.toSeq.flatMap { case (_, refMap) =>
       results.collect {
@@ -235,35 +271,21 @@ object Bench {
         !dispersed.contains(k) => k -> v.min
     }.sortBy(-_._2).map(_._1)
     val autoIsolate = (dispersed ++ uniformSuspects).take(8)
-    val toIsolate = (aboveBand ++ autoIsolate ++ isolateAsked.filter(k =>
-      SparkEntry.queries.contains(k))).distinct
-    // each isolated re-run carries its OWN calib + loadavg stamp: the
-    // r17 artifact's isolated q89 read 7.53 s vs 2.29 in-suite because
-    // the "quiet box" ran at end-of-suite residual load — an unstamped
-    // isolated number can mislead HIGH exactly as an in-suite number
-    // misleads low, so the reader gets the evidence to reject either
+    val toIsolate = (aboveBand ++ autoIsolate ++ isolateAsked).distinct
+    // each isolated re-run carries its OWN calib + loadavg stamp: an
+    // unstamped one can mislead high (r17: q89 7.53 s isolated at
+    // residual load vs 2.29 in-suite) as an in-suite one misleads low
     val isolated: Seq[(String, (Double, Double, Double))] =
       toIsolate.flatMap { k =>
         System.gc()
         Thread.sleep(1500) // drain in-flight cleanup OUTSIDE the window
         val isoLoad = loadAvg()
         val isoCalib = calibrate(passes = 2)
-        val fn = SparkEntry.queries(k)
         // isolated-local failure handling: a transient flake here must
         // NOT mark an in-suite-green key as errored in the main maps —
         // it just yields no isolated number
-        def quietPass(): Option[Double] = {
-          System.gc()
-          Thread.sleep(150)
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite")
-                    .save(); true }
-            catch { case _: Throwable => false }
-          graft.core.Caching.releaseAll()
-          if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-        }
-        val vs = (1 to 2).flatMap(_ => quietPass())
+        val vs = (1 to 2).flatMap(p =>
+          pass(k, SparkEntry.queries(k), s"isolated pass $p").toOption)
         if (vs.isEmpty) None else Some(k -> (vs.min, isoCalib, isoLoad))
       }
 
@@ -281,20 +303,17 @@ object Bench {
         }
     }
 
-    val qs = results.map { case (k, v) =>
-      val t = if (errors.contains(k) || v.isEmpty) -1.0 else v.min
-      s"${jstr(k)}:$t"
-    }.mkString("{", ",", "}")
-    val isoJson = isolated.map { case (k, (s, c, l)) =>
-      s"""${jstr(k)}:{"s":$s,"calib_s":$c,"loadavg":$l}"""
-    }.mkString("{", ",", "}")
-    val runs = results.collect { case (k, v) if !errors.contains(k) =>
-      s"${jstr(k)}:${v.mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-    val verdictJson = verdicts.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
+    // a JSON object from (key, already-encoded value) pairs
+    def obj(kvs: Iterable[(String, Any)]): String = kvs
+      .map { case (k, v) => s"${Jsons.str(k)}:$v" }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v) =>
+      k -> (if (errors.contains(k) || v.isEmpty) -1.0 else v.min) })
+    val isoJson = obj(isolated.map { case (k, (s, c, l)) =>
+      k -> s"""{"s":$s,"calib_s":$c,"loadavg":$l}""" })
+    val runs = obj(results.collect { case (k, v) if !errors.contains(k) =>
+      k -> v.mkString("[", ",", "]") })
+    val errJson = obj(errors.map { case (k, v) => k -> Jsons.str(v) })
+    val verdictJson = obj(verdicts.map { case (k, v) => k -> Jsons.str(v) })
     val total = results.collect {
       case (k, v) if !errors.contains(k) && v.nonEmpty => v.min
     }.sum
@@ -305,19 +324,14 @@ object Bench {
         s""""verdicts":$verdictJson,""" +
         s""""errors":$errJson,"sf":"$sfDir"}"""
     println(line)
-    // COMPACT trailing summary, printed LAST: the driver's stdout
-    // capture has been a truncated 2000-char tail of the big line —
-    // unparseable — for 17 straight rounds. This line is small enough
-    // that any tail window holds it whole, so a line-wise reader gets
-    // totals, host-contention evidence, and the verdict counts even
-    // when the per-key line is cut.
+    // COMPACT summary, printed LAST: small enough that a truncated
+    // stdout tail still holds it whole when the per-key line is cut.
     val nReg = verdicts.count(_._2 == "regressed")
     val nCon = verdicts.count(_._2 == "contended")
     val nUnres = verdicts.count(_._2 == "unresolved")
-    val top5 = results.collect {
+    val top5 = obj(results.collect {
       case (k, v) if !errors.contains(k) && v.nonEmpty => k -> v.min
-    }.sortBy(-_._2).take(5).map { case (k, v) => s"${jstr(k)}:$v" }
-      .mkString("{", ",", "}")
+    }.sortBy(-_._2).take(5))
     val summary =
       s"""{"metric":"graft_bench_summary","n_keys":${results.length},""" +
         s""""total_s":$total,"calib_s":$calib,""" +
@@ -328,20 +342,13 @@ object Bench {
         s""""has_reference":${reference.isDefined},""" +
         s""""top5":$top5,"sf":"$sfDir"}"""
     println(summary)
-    // Audit copies the driver's stdout tail can't truncate: the r13
-    // driver tail dropped calib_s and the q0xx–q1xx keys, letting a
-    // host-contended run masquerade as a plan regression. Best-effort —
-    // the stdout lines stay the contract. bench_last.json remains ONE
-    // JSON object (round-over-round graders json.load it whole); the
-    // summary gets its own file.
+    // Best-effort audit copies no stdout tail can truncate, one JSON
+    // object per file; the stdout lines stay the contract.
     try {
-      val p = java.nio.file.Paths.get("target", "bench_last.json")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("target", "bench_summary.json"),
-        (summary + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.createDirectories(Paths.get("target"))
+      Files.writeString(Paths.get("target", "bench_last.json"), line + "\n")
+      Files.writeString(Paths.get("target", "bench_summary.json"),
+        summary + "\n")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] bench_last.json write failed: ${e.getMessage}")
     }

@@ -99,6 +99,23 @@ private[graft] object Cli {
     new Opts(c, given)
   }
 
+  /** Fail naming the nearest of `allowed` when a name in `names` is not
+    * one of them. */
+  def requireKnown(what: String, names: Seq[String],
+                   allowed: Iterable[String]): Unit =
+    names.filterNot(allowed.toSet).headOption.foreach(n =>
+      throw new IllegalArgumentException(
+        s"unknown $what '$n'" + hint(n, allowed.toSeq.sorted)))
+
+  /** `body`, or exit 2 with its message and `usage` on stderr when it
+    * rejects its arguments. */
+  def orExit[T](usage: => String)(body: => T): T =
+    try body catch { case e: IllegalArgumentException =>
+      System.err.println(e.getMessage)
+      System.err.println(usage)
+      sys.exit(2)
+    }
+
   /** The declared name nearest to `k` by edit distance, as a hint. */
   private def hint(k: String, names: Seq[String]): String =
     if (names.isEmpty) ""

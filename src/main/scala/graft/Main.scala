@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Cli.opt
 import graft.core.Caching.persistTracked
+import graft.core.Jsons
 import graft.etl.{Etl, Preprocess}
 import graft.score.{Autoencoder, Trainer}
 import graft.streaming.StreamPipeline
@@ -439,23 +440,18 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println(usage); sys.exit(2) }
-    def fail(e: IllegalArgumentException): Nothing = {
-      System.err.println(e.getMessage)
-      System.err.println(commands.find(_.name == args.head)
-        .fold(usage)(Cli.usage))
-      sys.exit(2)
-    }
+    def checked[T](body: => T): T = Cli.orExit(
+      commands.find(_.name == args.head).fold(usage)(Cli.usage))(body)
     // the option check runs before the session starts: a bad call
     // costs no Spark start-up and writes nothing
-    val opts = try {
+    val opts = checked {
       val o = parseOpts(args.tail)
       Cli.parse(commands, args.head, o)
       o
-    } catch { case e: IllegalArgumentException => fail(e) }
+    }
     val spark = graft.core.Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    try println(run(spark, args.head, opts))
-    catch { case e: IllegalArgumentException => fail(e) }
+    try println(checked(run(spark, args.head, opts)))
     finally spark.stop()
   }
 
@@ -478,17 +474,6 @@ object Main {
     sample
   }
 
-  /** Minimal JSON string escape for interpolated values: user-supplied
-    * paths may contain quotes or backslashes, and a raw `"$path"`
-    * interpolation would emit invalid JSON. */
-  private def jstr(s: String): String =
-    s.flatMap {
-      case '"'            => "\\\""
-      case '\\'           => "\\\\"
-      case c if c < ' '   => f"\\u${c.toInt}%04x"
-      case c              => c.toString
-    }.mkString("\"", "", "\"")
-
   /** Shared landing path of the text-REWRITING dedup modes (substr /
     * paragraph / chunk): order by id, persist, audit (units removed +
     * docs touched), land as one CSV. The operator output contract is
@@ -505,7 +490,7 @@ object Main {
     Etl.writeSingleCsv(cleaned, outFile)
     s"""{"command":"dedup","mode":"$modeName","rows":$total,""" +
       s""""$countKey":${agg.getLong(0)},""" +
-      s""""docsTouched":${agg.getLong(1)},"out":${jstr(outFile)}}"""
+      s""""docsTouched":${agg.getLong(1)},"out":${Jsons.str(outFile)}}"""
   }
 
   /** Exact rational form of a decimal threshold string ("0.95" →
@@ -651,7 +636,7 @@ object Main {
 
   /** The JSON tail naming the optional `--out` a command wrote. */
   private def outTail(o: Cli.Opts): String =
-    o.get("out").fold("}")(f => s""","out":${jstr(f)}}""")
+    o.get("out").fold("}")(f => s""","out":${Jsons.str(f)}}""")
 
   /** Feature vector column from every numeric column of `df` — the same
     * feature-selection rule the preprocess chain uses (U4). */
@@ -706,7 +691,7 @@ object Main {
       Autoencoder.save(spark, w, modelDir)
       s"""{"command":"train","dims":[${dims.mkString(",")}],""" +
         s""""epochs":${losses.length},"final_loss":${losses.last},""" +
-        s""""model_dir":${jstr(modelDir)}}"""
+        s""""model_dir":${Jsons.str(modelDir)}}"""
 
     case "score" =>
       val w = Autoencoder.load(spark, o.str("model"))
@@ -719,7 +704,7 @@ object Main {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       s"""{"command":"score","rows":${byClass.values.sum},""" +
         s""""normal":${byClass.getOrElse("normal", 0L)},""" +
-        s""""anomaly":${byClass.getOrElse("anomaly", 0L)},"out":${jstr(outFile)}}"""
+        s""""anomaly":${byClass.getOrElse("anomaly", 0L)},"out":${Jsons.str(outFile)}}"""
 
     case "replay" =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -804,7 +789,7 @@ object Main {
           s""""kept":${c("kept")},"droppedExact":${c("dropped_exact")},""" +
           s""""droppedCanonical":${c("dropped_canonical")},""" +
           s""""cleanedSubstr":${c("cleaned_substr")},""" +
-          s""""out":${jstr(outFile)}}"""
+          s""""out":${Jsons.str(outFile)}}"""
       } else if (mode == "sweep") {
         // Threshold-sweep study: the exact-Jaccard pair histogram with
         // a top-down cumulative — run this BEFORE choosing a minhash /
@@ -819,7 +804,7 @@ object Main {
         val pairs = rows.map(_.getLong(1)).sum
         s"""{"command":"dedup","mode":"sweep","rows":$total,""" +
           s""""n_pairs":$pairs,"bins":[${binsJson(rows)}],""" +
-          s""""out":${jstr(outFile)}}"""
+          s""""out":${Jsons.str(outFile)}}"""
       } else if (mode == "substr") {
         // Repeated-passage removal: every doc survives, but n-token
         // spans seen in >= min-docs distinct docs are cut from ALL
@@ -907,7 +892,7 @@ object Main {
       val nKept = keptSorted.count()
       Etl.writeSingleCsv(keptSorted, outFile)
       s"""{"command":"dedup","mode":"$mode","rows":$total,""" +
-        s""""kept":$nKept,"dropped":${total - nKept},"out":${jstr(outFile)}}"""
+        s""""kept":$nKept,"dropped":${total - nKept},"out":${Jsons.str(outFile)}}"""
       }
 
     case "index" if o.has("compact") =>
@@ -932,9 +917,9 @@ object Main {
       val before = dataFiles(s"$srcDir/cells") + dataFiles(s"$srcDir/by_id")
       graft.operators.Ivf.compactIndex(spark, srcDir, outDir)
       val after = dataFiles(s"$outDir/cells") + dataFiles(s"$outDir/by_id")
-      s"""{"command":"index","mode":"compact","src":${jstr(srcDir)},""" +
+      s"""{"command":"index","mode":"compact","src":${Jsons.str(srcDir)},""" +
         s""""files_before":$before,"files_after":$after,""" +
-        s""""out":${jstr(outDir)}}"""
+        s""""out":${Jsons.str(outDir)}}"""
 
     case "index" if o.has("remove-ids") || o.has("remove-in") =>
       // retraction: delete vectors from a stored index — only the
@@ -951,7 +936,7 @@ object Main {
           df.select(col(o.str("id")).cast("long").as("id"))
         }
       val rep = graft.operators.Ivf.removeFromIndex(spark, dir, ids)
-      s"""{"command":"index","mode":"remove","index":${jstr(dir)},""" +
+      s"""{"command":"index","mode":"remove","index":${Jsons.str(dir)},""" +
         s""""removed":${rep.removed},"cells_touched":${rep.cellsTouched},""" +
         s""""idb_touched":${rep.idbTouched}}"""
 
@@ -985,7 +970,7 @@ object Main {
           model.write.overwrite().save(s"$outDir/model")
           s"""{"command":"index","codebook":"flat","rows":$rows,""" +
             s""""cells":${model.getK},"quantized":$quantize,""" +
-            s""""out":${jstr(outDir)}}"""
+            s""""out":${Jsons.str(outDir)}}"""
         case "two-level" =>
           val idx = graft.operators.Similarity.semDedupIndexTwoLevelFull(
             df, idCol, vecCol, targetClusterSize = target,
@@ -996,7 +981,7 @@ object Main {
             quantize = quantize)
           s"""{"command":"index","codebook":"two-level","rows":$rows,""" +
             s""""cells":${idx.routerCents.length},"clusters":$clusters,""" +
-            s""""quantized":$quantize,"out":${jstr(outDir)}}"""
+            s""""quantized":$quantize,"out":${Jsons.str(outDir)}}"""
         case "pq" =>
           // product-quantized cells: m one-byte codes + one norm per
           // vector (~dim·8/(m+8)× smaller than raw cells); probes ADC-
@@ -1013,7 +998,7 @@ object Main {
           graft.operators.Pq.writeIndexPq(assigned, pq, router, outDir)
           s"""{"command":"index","codebook":"pq","rows":$rows,""" +
             s""""cells":${router.length},"m":$pqM,"ksub":$pqKsub,""" +
-            s""""out":${jstr(outDir)}}"""
+            s""""out":${Jsons.str(outDir)}}"""
         case other => throw new IllegalArgumentException(
           s"unknown --codebook '$other' (flat | two-level | pq)")
       }
@@ -1132,7 +1117,7 @@ object Main {
         s""""settled_parts_before":$partsBefore,""" +
         s""""settled_bytes_before":$bytesBefore,""" +
         s""""folded_rows":$folded,"folded_parts":$nParts,""" +
-        s""""sig":${jstr(sig)}}"""
+        s""""sig":${Jsons.str(sig)}}"""
 
     case "ingest" =>
       // THE composed streaming ingest (StreamingIngest.fullIngest):
@@ -1269,12 +1254,12 @@ object Main {
         s""""n_dup_killed":${g(7)},""" +
         s""""n_lm_tokens_cut":${g(8)},""" +
         s""""n_sel_killed":${g(9)},"n_kept":${g(10)},""" +
-        s""""settled_sigs":${jstr(
+        s""""settled_sigs":${Jsons.str(
           graft.streaming.StreamingIngest.settledSigPath(o.str("sig")))},""" +
         s""""settled_parts":$sParts,"settled_bytes":$sBytes,""" +
         s""""compacted":$compacted,"folded_rows":$folded,""" +
         s""""folded_funnel_batches":$foldedFunnel,""" +
-        s""""out":${jstr(outDir)}}"""
+        s""""out":${Jsons.str(outDir)}}"""
 
     case "store" if o.has("compact-bm25") =>
       // fold a churned BM25 postings layout back to one file per term
@@ -1283,7 +1268,7 @@ object Main {
       val dir = o.str("compact-bm25")
       val (before, after, nb) =
         graft.operators.Rank.compactBm25Postings(spark, dir)
-      s"""{"command":"store","compact_bm25":${jstr(dir)},""" +
+      s"""{"command":"store","compact_bm25":${Jsons.str(dir)},""" +
         s""""files_before":$before,"files_after":$after,""" +
         s""""buckets":$nb}"""
 
@@ -1293,7 +1278,7 @@ object Main {
       val dir = o.str("compact-kept")
       val (before, after, np) =
         graft.streaming.StreamingIngest.compactKept(spark, dir)
-      s"""{"command":"store","compact_kept":${jstr(dir)},""" +
+      s"""{"command":"store","compact_kept":${Jsons.str(dir)},""" +
         s""""files_before":$before,"files_after":$after,""" +
         s""""partitions":$np}"""
 
@@ -1305,7 +1290,7 @@ object Main {
       val keep = o.int("keep")
       val (foldedB, histRows) =
         graft.streaming.StreamingIngest.compactFunnel(spark, dir, keep)
-      s"""{"command":"store","compact_funnel":${jstr(dir)},""" +
+      s"""{"command":"store","compact_funnel":${Jsons.str(dir)},""" +
         s""""folded_batches":$foldedB,"hist_rows":$histRows,""" +
         s""""keep_last":$keep}"""
 
@@ -1316,7 +1301,7 @@ object Main {
       val dir = o.str("rebuild-stats")
       val (n, t) = graft.operators.Rank.rebuildBm25Stats(spark, dir,
         o.get("buckets").map(_.toLong))
-      s"""{"command":"store","rebuild_stats":${jstr(dir)},""" +
+      s"""{"command":"store","rebuild_stats":${Jsons.str(dir)},""" +
         s""""n_docs":$n,"total_tokens":$t}"""
 
     case "store" if o.has("rebuild-by-id") =>
@@ -1325,7 +1310,7 @@ object Main {
       val dir = o.str("rebuild-by-id")
       val rows = graft.operators.Ivf.rebuildIdLookup(spark, dir,
         o.get("buckets").map(_.toInt))
-      s"""{"command":"store","rebuild_by_id":${jstr(dir)},""" +
+      s"""{"command":"store","rebuild_by_id":${Jsons.str(dir)},""" +
         s""""rows":$rows}"""
 
     case "store" if o.has("health") =>
@@ -1340,13 +1325,13 @@ object Main {
         idCol = o.str("id"), sample = sample)
       val contentFailed = stores.map(_._3.count(!_.ok)).sum
       val body = stores.map { case (path, family, checks) =>
-        s"""{"path":${jstr(path)},"family":${jstr(family)},""" +
+        s"""{"path":${Jsons.str(path)},"family":${Jsons.str(family)},""" +
           s""""n_failed":${checks.count(!_.ok)},""" +
           s""""checks":[${checks.filterNot(_.ok).map(_.json)
             .mkString(",")}]}"""
       }.mkString(",")
       val healthy = findings.isEmpty && contentFailed == 0
-      s"""{"command":"store","health":${jstr(root)},""" +
+      s"""{"command":"store","health":${Jsons.str(root)},""" +
         s""""healthy":$healthy,""" +
         s""""n_crash_windows":${findings.length},""" +
         s""""crash_windows":[${findings.map(_.json).mkString(",")}],""" +
@@ -1364,11 +1349,11 @@ object Main {
         idCol = o.str("id"), sample = sample)
       val failed = stores.map(_._3.count(!_.ok)).sum
       val body = stores.map { case (path, family, checks) =>
-        s"""{"path":${jstr(path)},"family":${jstr(family)},""" +
+        s"""{"path":${Jsons.str(path)},"family":${Jsons.str(family)},""" +
           s""""n_failed":${checks.count(!_.ok)},""" +
           s""""checks":[${checks.map(_.json).mkString(",")}]}"""
       }.mkString(",")
-      s"""{"command":"store","verify_tree":${jstr(root)},""" +
+      s"""{"command":"store","verify_tree":${Jsons.str(root)},""" +
         s""""n_stores":${stores.length},"n_failed":$failed,""" +
         s""""stores":[$body]}"""
 
@@ -1388,8 +1373,8 @@ object Main {
       val sampleJson = sample.fold("") { case (m, r) =>
         s""""sample_mod":$m,"sample_rem":$r,"""
       }
-      s"""{"command":"store","verify":${jstr(dir)},""" +
-        s""""family":${jstr(family)},$sampleJson""" +
+      s"""{"command":"store","verify":${Jsons.str(dir)},""" +
+        s""""family":${Jsons.str(family)},$sampleJson""" +
         s""""n_checks":${checks.length},"n_failed":$failed,""" +
         s""""checks":[${checks.map(_.json).mkString(",")}]}"""
 
@@ -1408,7 +1393,7 @@ object Main {
       val unresolved = findings.count(f => f.action == "report" &&
         Set("bm25_stats_inconsistent", "orphan_next",
           "staging_anomaly", "lease_writer_live")(f.kind))
-      s"""{"command":"store","fsck":${jstr(dir)},"repair":$repair,""" +
+      s"""{"command":"store","fsck":${Jsons.str(dir)},"repair":$repair,""" +
         s""""n_findings":${findings.length},"n_repaired":$repaired,""" +
         s""""n_unresolved":$unresolved,""" +
         s""""findings":[${findings.map(_.json).mkString(",")}]}"""
@@ -1620,9 +1605,9 @@ object Main {
       s"""{"command":"screen","kind":"$kind",""" +
         s""""batch_rows":${batch.count()},""" +
         s""""${if (pairs) "flagged_pairs" else "flagged_spans"}":$n,""" +
-        (if (appendIdx) s""""appended_index":${jstr(o.str("index"))},"""
+        (if (appendIdx) s""""appended_index":${Jsons.str(o.str("index"))},"""
          else "") +
-        s""""out":${jstr(outFile)}}"""
+        s""""out":${Jsons.str(outFile)}}"""
 
     case "curate" =>
       // token-budgeted per-source curation (Curate): keep each source's
@@ -1640,7 +1625,7 @@ object Main {
       val toks = kept.agg(sum(col("n_tokens"))).head().getLong(0)
       Etl.writeSingleCsv(kept, outFile)
       s"""{"command":"curate","budget_per_source":$budget,""" +
-        s""""kept_docs":$n,"kept_tokens":$toks,"out":${jstr(outFile)}}"""
+        s""""kept_docs":$n,"kept_tokens":$toks,"out":${Jsons.str(outFile)}}"""
 
     case "stats" =>
       // incremental corpus stats (CorpusStats): each ingested batch
@@ -1656,7 +1641,7 @@ object Main {
           graft.operators.CorpusStats.appendSnapshot(batch, o.str("text"),
             statsDir)
           s"""{"command":"stats","appended":1,""" +
-            s""""batch_rows":${batch.count()},"stats":${jstr(statsDir)}}"""
+            s""""batch_rows":${batch.count()},"stats":${Jsons.str(statsDir)}}"""
         case None =>
           val snapshots = spark.read.parquet(statsDir)
           val nSnap = snapshots.count()
@@ -1691,7 +1676,7 @@ object Main {
         val (_, k, baseline) =
           graft.operators.Vocab.readVocab(spark, vocabDir)
         s"""{"command":"vocab","built":true,"top_k":$k,""" +
-          s""""baseline_oov_bp":$baseline,"vocab":${jstr(vocabDir)}}"""
+          s""""baseline_oov_bp":$baseline,"vocab":${Jsons.str(vocabDir)}}"""
       } else {
         val (vocab, k, baseline) =
           graft.operators.Vocab.readVocab(spark, vocabDir)
@@ -1717,24 +1702,24 @@ object Main {
           val df = read(spark, o.str("in"))
           graft.sources.Layout.writePartitioned(df, outDir, by)
           s"""{"command":"layout","mode":"partition","rows":${df.count()},""" +
-            s""""by":${jstr(by.mkString(","))},"out":${jstr(outDir)}}"""
+            s""""by":${Jsons.str(by.mkString(","))},"out":${Jsons.str(outDir)}}"""
         case "range" =>
           val df = read(spark, o.str("in"))
           require(by.size == 1, "--mode range takes exactly one --by column")
           graft.sources.Layout.writeRangeSorted(df, outDir, by.head, files)
           s"""{"command":"layout","mode":"range","rows":${df.count()},""" +
-            s""""files":$files,"out":${jstr(outDir)}}"""
+            s""""files":$files,"out":${Jsons.str(outDir)}}"""
         case "zorder" =>
           val df = read(spark, o.str("in"))
           require(by.size == 2, "--mode zorder takes exactly two --by columns")
           graft.sources.Layout.writeZOrdered(df, outDir, by(0), by(1), files)
           s"""{"command":"layout","mode":"zorder","rows":${df.count()},""" +
-            s""""files":$files,"out":${jstr(outDir)}}"""
+            s""""files":$files,"out":${Jsons.str(outDir)}}"""
         case "compact" =>
           val n = graft.sources.Layout.compact(spark, o.str("in"), outDir,
             o.long("target-bytes"))
           s"""{"command":"layout","mode":"compact","filesWritten":$n,""" +
-            s""""out":${jstr(outDir)}}"""
+            s""""out":${Jsons.str(outDir)}}"""
         case other =>
           throw new IllegalArgumentException(s"unknown layout mode '$other'")
       }
@@ -1829,7 +1814,7 @@ object Main {
         .map(l => s""""longmatch":${l.count()},""").getOrElse("")
       s"""{"command":"settle","raw":$nRaw,"quality":$nQuality,""" +
         repJson + paraJson + lmJson + tierJson +
-        s""","settled":$nSettled,"out":${jstr(outDir)}}"""
+        s""","settled":$nSettled,"out":${Jsons.str(outDir)}}"""
 
     case "diff" =>
       // Corpus snapshot diff: per-id verdicts between two settles, with
@@ -1877,7 +1862,7 @@ object Main {
       def jlong(r: org.apache.spark.sql.Row, i: Int): String =
         if (r.isNullAt(i)) "null" else r.getLong(i).toString
       val arr = rows.map { r =>
-        s"""{"source":${jstr(r.getString(0))},"n_tokens":${r.getLong(2)},""" +
+        s"""{"source":${Jsons.str(r.getString(0))},"n_tokens":${r.getLong(2)},""" +
           s""""target_tokens":${jlong(r, 4)},"epochs_bp":${jlong(r, 5)},""" +
           s""""capped_bp":${jlong(r, 6)},"deficit_tokens":${jlong(r, 8)}}"""
       }.mkString("[", ",", "]")
@@ -1921,7 +1906,7 @@ object Main {
       }
       s"""{"command":"bpe","n_merges":${merges.length},""" +
         s""""n_symbols":$nSymbols,"n_rounds":$rounds""" +
-        landed.fold("}")(d => s""","out":${jstr(d)}}""")
+        landed.fold("}")(d => s""","out":${Jsons.str(d)}}""")
 
     case "decon" if o.str("mode") == "index" =>
       // STORED eval-gram index lifecycle — the sign-once/screen-forever
@@ -1950,18 +1935,18 @@ object Main {
             textCol, dir, n, keyMode, o.str("suite"))
           val (nk, ns) = grams(dir)
           s"""{"command":"decon","mode":"index",""" +
-            s""""index":${jstr(dir)},"n_grams":$nk,"n_suites":$ns}"""
+            s""""index":${Jsons.str(dir)},"n_grams":$nk,"n_suites":$ns}"""
         case (None, Some(dir), None) =>
           Decontaminate.appendEvalIndex(read(spark, o.str("eval")),
             textCol, dir, o.str("suite"))
           val (nk, ns) = grams(dir)
-          s"""{"command":"decon","mode":"index","appended":${jstr(dir)},""" +
+          s"""{"command":"decon","mode":"index","appended":${Jsons.str(dir)},""" +
             s""""n_grams":$nk,"n_suites":$ns}"""
         case (None, None, Some(dir)) if o.has("retire-suite") =>
           Decontaminate.retireEvalSuite(spark, dir,
             o.str("retire-suite"))
           val (nk, ns) = grams(dir)
-          s"""{"command":"decon","mode":"index","retired":${jstr(
+          s"""{"command":"decon","mode":"index","retired":${Jsons.str(
             o.str("retire-suite"))},"n_grams":$nk,"n_suites":$ns}"""
         case (None, None, Some(dir)) =>
           val train = read(spark, o.str("in"))
@@ -2049,7 +2034,7 @@ object Main {
         val caps = Decontaminate.fuzzyCapReportFromSigs(train, idCol,
             textCol, fuzzySigs.get, shingleN = o.int("shingle-n"))
           .collect()
-          .map(r => s"""{"side":${jstr(r.getAs[String]("side"))},""" +
+          .map(r => s"""{"side":${Jsons.str(r.getAs[String]("side"))},""" +
             s""""n_buckets":${r.getAs[Long]("n_buckets")},""" +
             s""""n_dropped_buckets":${r.getAs[Long]("n_dropped_buckets")},""" +
             s""""dropped_rows":${r.getAs[Long]("dropped_rows")},""" +
@@ -2063,7 +2048,7 @@ object Main {
       val total = if (t.isNullAt(1)) 0L else t.getLong(1)
       // the fuzzy tier's order is the shingle order, not --n
       val effN = if (mode == "fuzzy") o.int("shingle-n") else n
-      s"""{"command":"decon","mode":${jstr(mode)},"n":$effN,""" +
+      s"""{"command":"decon","mode":${Jsons.str(mode)},"n":$effN,""" +
         s""""rows":${t.getLong(0)},"total_$metric":$total""" + capJson +
         outTail(o)
 
@@ -2083,7 +2068,7 @@ object Main {
             .gramIndex(corpus, idCol, textCol, n)
             .write.mode("overwrite").parquet(dir)
           val nk = spark.read.parquet(dir).count()
-          s"""{"command":"novelty","index":${jstr(dir)},"n_grams":$nk}"""
+          s"""{"command":"novelty","index":${Jsons.str(dir)},"n_grams":$nk}"""
         case (None, maybeIdx) =>
           val df = read(spark, o.str("in"))
           needCols(df, o, "id")
@@ -2308,9 +2293,9 @@ object Main {
       if (epochs == 1) {
         val seed = o.str("seed")
         val per = exportOne(seed, out)
-        s"""{"command":"export","shards":$shards,"seed":${jstr(seed)},""" +
-          s""""format":${jstr(fmt)},"per_shard":[${per.mkString(",")}],""" +
-          s""""out":${jstr(out)}}"""
+        s"""{"command":"export","shards":$shards,"seed":${Jsons.str(seed)},""" +
+          s""""format":${Jsons.str(fmt)},"per_shard":[${per.mkString(",")}],""" +
+          s""""out":${Jsons.str(out)}}"""
       } else {
         // clear the out root first: each epoch only overwrites its own
         // epoch=K subdir, so stale epoch dirs from a previous wider
@@ -2324,8 +2309,8 @@ object Main {
           s"""{"epoch":$e,"per_shard":[${stats.mkString(",")}]}"""
         }
         s"""{"command":"export","shards":$shards,"epochs":$epochs,""" +
-          s""""format":${jstr(fmt)},""" +
-          s""""per_epoch":[${per.mkString(",")}],"out":${jstr(out)}}"""
+          s""""format":${Jsons.str(fmt)},""" +
+          s""""per_epoch":[${per.mkString(",")}],"out":${Jsons.str(out)}}"""
       }
 
     case "datacard" =>
@@ -2353,7 +2338,7 @@ object Main {
               val tok = if (r.isNullAt(2)) 0L else r.getLong(2)
               val share =
                 if (nTokens > 0) tok * 10000 / nTokens else 0L
-              s"""{"source":${jstr(r.getString(0))},"n_docs":${r.getLong(1)},""" +
+              s"""{"source":${Jsons.str(r.getString(0))},"n_docs":${r.getLong(1)},""" +
                 s""""n_tokens":$tok,"share_bp":$share}"""
             }
         else Seq.empty
@@ -2480,10 +2465,10 @@ object Main {
       // schema preserved) — the release path
       o.get("out-parquet").foreach(d =>
         keptRows().write.mode("overwrite").parquet(d))
-      s"""{"command":"select","mode":${jstr(mode)},""" +
+      s"""{"command":"select","mode":${Jsons.str(mode)},""" +
         s""""n_pool":$nPool,"n_kept":$nKept""" +
-        o.get("out").fold("")(f => s""","out":${jstr(f)}""") +
-        o.get("out-parquet").fold("")(d => s""","out_parquet":${jstr(d)}""") +
+        o.get("out").fold("")(f => s""","out":${Jsons.str(f)}""") +
+        o.get("out-parquet").fold("")(d => s""","out_parquet":${Jsons.str(d)}""") +
         "}"
 
     case "pack" =>
@@ -2512,7 +2497,7 @@ object Main {
         o.str("text"), minCount = o.long("min-count"), topK = o.int("top")))
       o.get("out").foreach(f => Etl.writeSingleCsv(top, f))
       val rows = top.collect().map(r =>
-        s"""{"a":${jstr(r.getString(0))},"b":${jstr(r.getString(1))},""" +
+        s"""{"a":${Jsons.str(r.getString(0))},"b":${Jsons.str(r.getString(1))},""" +
           s""""c2":${r.getLong(2)},"lift_e4":${r.getLong(3)}}""")
       s"""{"command":"colloc","n":${rows.length},""" +
         s""""top":[${rows.mkString(",")}]""" + outTail(o)
@@ -2543,7 +2528,7 @@ object Main {
         needCols(df, o, "text")
         graft.operators.Vocab.writeLm(df, o.str("text"), lmDir)
         val (_, total) = graft.operators.Vocab.readLm(spark, lmDir)
-        s"""{"command":"lm","built":${jstr(lmDir)},""" +
+        s"""{"command":"lm","built":${Jsons.str(lmDir)},""" +
           s""""total_tokens":$total}"""
       } else {
         needCols(df, o, "id", "text")
@@ -2554,7 +2539,7 @@ object Main {
           coalesce(sum(col("surprisal_cb")), lit(0L)).as("s")).head()
         val n = a.getLong(0)
         val mean = if (n > 0) a.getLong(1) / n else 0L
-        s"""{"command":"lm","probed":${jstr(lmDir)},"n_docs":$n,""" +
+        s"""{"command":"lm","probed":${Jsons.str(lmDir)},"n_docs":$n,""" +
           s""""mean_surprisal_cb":$mean""" + outTail(o)
       }
 
@@ -2584,7 +2569,7 @@ object Main {
         // the stored doclen before anything mutates)
         val dir = o.str("remove-index")
         graft.operators.Rank.removeFromBm25Index(docs(), idCol, textCol, dir)
-        s"""{"command":"rank","removed_from":${jstr(dir)},${stats(dir)}}"""
+        s"""{"command":"rank","removed_from":${Jsons.str(dir)},${stats(dir)}}"""
       } else (o.get("append-index"), o.get("build-index")) match {
         case (Some(dir), _) =>
           graft.operators.Rank.appendBm25Index(docs(), idCol, textCol, dir)
@@ -2593,16 +2578,16 @@ object Main {
           // its queries at max/mean× the probe IO)
           val (nb, nonEmpty, mx, meanE2, verdict) =
             graft.operators.Rank.bm25BucketBalance(spark, dir)
-          s"""{"command":"rank","appended":${jstr(dir)},${stats(dir)},""" +
+          s"""{"command":"rank","appended":${Jsons.str(dir)},${stats(dir)},""" +
             s""""n_buckets":$nb,"n_nonempty_buckets":$nonEmpty,""" +
             s""""max_bucket_postings":$mx,""" +
             s""""mean_bucket_postings_e2":$meanE2,""" +
-            s""""bucket_balance":${jstr(verdict)}}"""
+            s""""bucket_balance":${Jsons.str(verdict)}}"""
         case (None, Some(dir)) =>
           val buckets = o.int("buckets")
           graft.operators.Rank.buildBm25Index(docs(), idCol, textCol, dir,
             buckets)
-          s"""{"command":"rank","built":${jstr(dir)},${stats(dir)},""" +
+          s"""{"command":"rank","built":${Jsons.str(dir)},${stats(dir)},""" +
             s""""n_buckets":$buckets}"""
         case (None, None) if o.has("queries") =>
           // batch serving: many probe queries in ONE plan from the
@@ -2621,7 +2606,7 @@ object Main {
           o.get("out").foreach(d => ranked.write.mode("overwrite").parquet(d))
           val perQ = ranked.groupBy("qid").count().collect()
             .map(r => s""""${r.getLong(0)}":${r.getLong(1)}""")
-          s"""{"command":"rank","idf":${jstr(idfMode)},""" +
+          s"""{"command":"rank","idf":${Jsons.str(idfMode)},""" +
             s""""n_queries":${queries.size},""" +
             s""""ranked_per_query":${perQ.mkString("{", ",", "}")}""" +
             outTail(o)
@@ -2641,7 +2626,7 @@ object Main {
           val top = hits.headOption.map(r =>
             s""","top_id":${r.getLong(0)},""" +
               s""""top_score_e4":${r.getLong(2)}""").getOrElse("")
-          s"""{"command":"rank","idf":${jstr(idfMode)},""" +
+          s"""{"command":"rank","idf":${Jsons.str(idfMode)},""" +
             s""""n_terms":${terms.size},"n_ranked":${hits.length}""" +
             top + outTail(o)
       }
@@ -2690,7 +2675,7 @@ object Main {
       val exportJson = run(spark, "export", Map(
         "in" -> corpusDir, "id" -> "id", "text" -> "clean_text",
         "out" -> s"$outDir/shards") ++ fwd("export"))
-      s"""{"command":"release","out":${jstr(outDir)},""" +
+      s"""{"command":"release","out":${Jsons.str(outDir)},""" +
         s""""settle":$settleJson,""" +
         selectJson.map(s => s""""select":$s,""").getOrElse("") +
         s""""datacard":$cardJson,"export":$exportJson}"""
@@ -2716,7 +2701,7 @@ object Main {
         bucketSec = o.int("bucket-sec"), pattern = pattern, k = o.int("k"))
         .collect()
       val rows = hits.map(r =>
-        s"""{"window_start":${jstr(r.getTimestamp(0).toString)},""" +
+        s"""{"window_start":${Jsons.str(r.getTimestamp(0).toString)},""" +
           s""""score_e4":${r.getLong(1)},"n_events":${r.getLong(2)}}""")
       s"""{"command":"motif","pattern":[${pattern.mkString(",")}],""" +
         s""""windows":${rows.mkString("[", ",", "]")}}"""
@@ -2775,10 +2760,10 @@ object Main {
         case other => throw new IllegalArgumentException(
           s"--execute must be shell|admin, got '$other'")
       }
-      val planJson = plan.map(_.map(jstr).mkString("[", ",", "]"))
+      val planJson = plan.map(_.map(Jsons.str).mkString("[", ",", "]"))
         .mkString("[", ",", "]")
-      s"""{"command":"topics","mode":${jstr(mode)},"plan":$planJson""" +
-        executed.map(e => s""","executed":${jstr(e)}}""").getOrElse("}")
+      s"""{"command":"topics","mode":${Jsons.str(mode)},"plan":$planJson""" +
+        executed.map(e => s""","executed":${Jsons.str(e)}}""").getOrElse("}")
 
     case other =>
       throw new IllegalStateException(s"command '$other' has no body")

@@ -1,42 +1,30 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+
+import graft.core.Jsons
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `graft.Verify <sfDir> <outDir> [k1,k2,...]`. The optional key
+  * list (spot checks) is checked like Bench's `--only`: an unknown key
+  * exits 2 naming the nearest one. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (builder-side
-    // spot checks; the driver always passes exactly two args)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.local(cpus.toInt)
+    val selected = Cli.orExit("usage: graft.Verify <sfDir> <outDir> [k1,k2,...]")(
+      Bench.select(args.lift(2).map(Cli.items)))
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally graft.core.Caching.releaseAll()
+    selected.foreach { case (name, fn) =>
+      Bench.runKey(spark, sfDir, fn)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Jsons.str(k)}: ${Jsons.str(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -281,14 +281,7 @@ object Ivf {
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id"),
         round(cosineNative(col("vec"), col("qvec")), 4).as("cos_sim"))
-    val topk = org.apache.spark.sql.functions.udaf(
-      graft.functions.Aggregators.topK(k),
-      org.apache.spark.sql.Encoders.product[graft.functions.Aggregators.Ranked])
-    cand.groupBy(col("qid"))
-      .agg(topk(col("cos_sim"), col("id")).as("__top"))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__i", "__r")))
-      .select(col("qid"), (col("__i") + 1).as("rn"),
-        col("__r.id").as("id"), col("__r.v").as("cos_sim"))
+    TopK.perKey(cand, "qid", "cos_sim", "id", k)
   }
 
   /** Driver-side cell ranking: the `nProbe` best centroid ids for `q`.

@@ -584,15 +584,8 @@ object Pq {
         }
       }
       .toDF("qid", "id", "adc_sim")
-    val keep = if (refine <= 0) k else refine * k
-    val topk = org.apache.spark.sql.functions.udaf(
-      graft.functions.Aggregators.topK(keep),
-      org.apache.spark.sql.Encoders.product[graft.functions.Aggregators.Ranked])
-    val short = cand.groupBy(col("qid"))
-      .agg(topk(col("adc_sim"), col("id")).as("__top"))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__i", "__r")))
-      .select(col("qid"), (col("__i") + 1).as("rn"),
-        col("__r.id").as("id"), col("__r.v").as("adc_sim"))
+    val short = TopK.perKey(cand, "qid", "adc_sim", "id",
+      if (refine <= 0) k else refine * k)
     if (refine <= 0) short
     else {
       import graft.functions.VectorFunctions.cosineNative
@@ -613,14 +606,7 @@ object Pq {
         .join(broadcast(qvecs), "qid")
         .select(col("qid"), col("id"),
           round(cosineNative(col("vec"), col("qvec")), 4).as("cos_sim"))
-      val topkFinal = org.apache.spark.sql.functions.udaf(
-        graft.functions.Aggregators.topK(k),
-        org.apache.spark.sql.Encoders.product[graft.functions.Aggregators.Ranked])
-      rescored.groupBy(col("qid"))
-        .agg(topkFinal(col("cos_sim"), col("id")).as("__top"))
-        .select(col("qid"), posexplode(col("__top")).as(Seq("__i", "__r")))
-        .select(col("qid"), (col("__i") + 1).as("rn"),
-          col("__r.id").as("id"), col("__r.v").as("cos_sim"))
+      TopK.perKey(rescored, "qid", "cos_sim", "id", k)
     }
   }
 

@@ -324,14 +324,7 @@ object Similarity {
     val cand = BandedJoin.selfPairs(sigs, SigKeys, maxBucket, ordered = false)
     val scored = cosinePairs(cand, normedVectors(df, idCol, vecCol))
       .select(col("id_a").as("qid"), col("id_b").as("nid"), col("cos_sim"))
-    val topk = org.apache.spark.sql.functions.udaf(
-      graft.functions.Aggregators.topK(k),
-      org.apache.spark.sql.Encoders.product[graft.functions.Aggregators.Ranked])
-    scored.groupBy(col("qid"))
-      .agg(topk(col("cos_sim"), col("nid")).as("__top"))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__i", "__r")))
-      .select(col("qid"), (col("__i") + 1).as("rn"),
-        col("__r.id").as("nid"), col("__r.v").as("cos_sim"))
+    TopK.perKey(scored, "qid", "cos_sim", "nid", k)
   }
 
   /** (id, vec, __nm) with the per-ROW norm riding the slim vector frame,

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.Metrics
 
 /** Skew stress for the dedup tiers: the plans DEFEND against viral
   * keys (bucket caps, map-side-combining aggregates, banded joins) —
@@ -33,34 +33,11 @@ class DedupHardeningSpec extends AnyFunSuite {
     }
   }
 
-  /** Collect per-task shuffle-read record counts for every task that
-    * runs inside `body` (tasks with zero shuffle reads are skipped).
-    * Listener events are asynchronous — poll until the count is
-    * stable rather than sleeping a fixed interval. */
+  /** Per-task shuffle-read record counts of the tasks `body` started
+    * (tasks with zero shuffle reads are skipped). */
   private def withShuffleRecords[A](body: => A): (A, Seq[Long]) = {
-    val recs = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.recordsRead
-          if (r > 0) recs.synchronized { recs += r; () }
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = body
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 5000) {
-        Thread.sleep(250); waited += 250
-        val now = recs.synchronized(recs.size)
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      (a, recs.synchronized(recs.toSeq))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (a, rep) = Metrics.of(spark)(body)
+    (a, rep.completed.flatMap(_.recordsRead).filter(_ > 0))
   }
 
   test("viral paragraph (10% of docs share one footer): paragraphDedup " +
