@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.Cli.opt
-import graft.core.{Caching, Jsons, Metrics, Sessions}
+import graft.core.{Caching, Metrics, Sessions}
+import graft.core.Jsons.obj
 
 /** Benchmark main: times every SparkEntry query at the given SF dir and
   * prints two JSON lines (the per-key line, then a compact summary).
@@ -303,44 +304,36 @@ object Bench {
         }
     }
 
-    // a JSON object from (key, already-encoded value) pairs
-    def obj(kvs: Iterable[(String, Any)]): String = kvs
-      .map { case (k, v) => s"${Jsons.str(k)}:$v" }.mkString("{", ",", "}")
-    val qs = obj(results.map { case (k, v) =>
-      k -> (if (errors.contains(k) || v.isEmpty) -1.0 else v.min) })
-    val isoJson = obj(isolated.map { case (k, (s, c, l)) =>
-      k -> s"""{"s":$s,"calib_s":$c,"loadavg":$l}""" })
-    val runs = obj(results.collect { case (k, v) if !errors.contains(k) =>
-      k -> v.mkString("[", ",", "]") })
-    val errJson = obj(errors.map { case (k, v) => k -> Jsons.str(v) })
-    val verdictJson = obj(verdicts.map { case (k, v) => k -> Jsons.str(v) })
     val total = results.collect {
       case (k, v) if !errors.contains(k) && v.nonEmpty => v.min
     }.sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","calib_s":$calib,""" +
-        s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
-        s""""queries":$qs,"queries_runs":$runs,"isolated":$isoJson,""" +
-        s""""verdicts":$verdictJson,""" +
-        s""""errors":$errJson,"sf":"$sfDir"}"""
+    val line = obj("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "calib_s" -> calib, "loadavg_start" -> loadStart,
+      "loadavg_end" -> loadEnd,
+      "queries" -> obj(results.map { case (k, v) =>
+        k -> (if (errors.contains(k) || v.isEmpty) -1.0 else v.min) }: _*),
+      "queries_runs" -> obj(results.collect {
+        case (k, v) if !errors.contains(k) => k -> v }: _*),
+      "isolated" -> obj(isolated.map { case (k, (s, c, l)) =>
+        k -> obj("s" -> s, "calib_s" -> c, "loadavg" -> l) }: _*),
+      "verdicts" -> obj(verdicts: _*), "errors" -> obj(errors.toSeq: _*),
+      "sf" -> sfDir).text
     println(line)
     // COMPACT summary, printed LAST: small enough that a truncated
     // stdout tail still holds it whole when the per-key line is cut.
     val nReg = verdicts.count(_._2 == "regressed")
     val nCon = verdicts.count(_._2 == "contended")
     val nUnres = verdicts.count(_._2 == "unresolved")
-    val top5 = obj(results.collect {
+    val top5 = results.collect {
       case (k, v) if !errors.contains(k) && v.nonEmpty => k -> v.min
-    }.sortBy(-_._2).take(5))
-    val summary =
-      s"""{"metric":"graft_bench_summary","n_keys":${results.length},""" +
-        s""""total_s":$total,"calib_s":$calib,""" +
-        s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
-        s""""n_errors":${errors.size},"n_isolated":${isolated.length},""" +
-        s""""n_regressed":$nReg,"n_contended":$nCon,""" +
-        s""""n_unresolved":$nUnres,""" +
-        s""""has_reference":${reference.isDefined},""" +
-        s""""top5":$top5,"sf":"$sfDir"}"""
+    }.sortBy(-_._2).take(5)
+    val summary = obj("metric" -> "graft_bench_summary",
+      "n_keys" -> results.length, "total_s" -> total, "calib_s" -> calib,
+      "loadavg_start" -> loadStart, "loadavg_end" -> loadEnd,
+      "n_errors" -> errors.size, "n_isolated" -> isolated.length,
+      "n_regressed" -> nReg, "n_contended" -> nCon, "n_unresolved" -> nUnres,
+      "has_reference" -> reference.isDefined, "top5" -> obj(top5: _*),
+      "sf" -> sfDir).text
     println(summary)
     // Best-effort audit copies no stdout tail can truncate, one JSON
     // object per file; the stdout lines stay the contract.

@@ -92,7 +92,8 @@ private[graft] object Cli {
         hint(cmd, table.map(_.name))))
     given.toSeq.sortBy(_._1).foreach { case (k, v) =>
       val o = c.byName.getOrElse(k, throw new IllegalArgumentException(
-        s"$cmd: unknown option --$k" + hint(k, c.opts.map("--" + _.name))))
+        s"$cmd: unknown option --$k" +
+          hint(s"--$k", c.opts.map("--" + _.name))))
       require(o.kind.accepts(v),
         s"$cmd: --$k expects a ${o.kind.name} value, got '$v'")
     }
@@ -116,10 +117,15 @@ private[graft] object Cli {
       sys.exit(2)
     }
 
-  /** The declared name nearest to `k` by edit distance, as a hint. */
-  private def hint(k: String, names: Seq[String]): String =
-    if (names.isEmpty) ""
-    else s" (did you mean ${names.minBy(n => (editDistance(k, n), n))}?)"
+  /** The declared name nearest to `k` by edit distance, as a hint;
+    * among the names `k` is a prefix of, when there are any (`q6` →
+    * one of the q6x keys, not an unrelated short name). */
+  private def hint(k: String, names: Seq[String]): String = {
+    val pool = Some(names.filter(_.startsWith(k))).filter(_.nonEmpty)
+      .getOrElse(names)
+    if (pool.isEmpty) ""
+    else s" (did you mean ${pool.minBy(n => (editDistance(k, n), n))}?)"
+  }
 
   private def editDistance(a: String, b: String): Int = {
     var prev = Array.tabulate(b.length + 1)(identity)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Cli.opt
 import graft.core.Caching.persistTracked
-import graft.core.Jsons
+import graft.core.{Jsons, Land}
+import graft.core.Jsons.obj
 import graft.etl.{Etl, Preprocess}
 import graft.score.{Autoencoder, Trainer}
 import graft.streaming.StreamPipeline
@@ -29,7 +30,9 @@ import graft.streaming.StreamPipeline
   * one [[graft.core.Caching.scopedRelease]] scope, so every frame the
   * command persists is released when it returns; the usage text is
   * rendered from the same table. Each command prints one JSON result
-  * line, mirroring the reference's structured-log counters. Inputs:
+  * line, mirroring the reference's structured-log counters, rendered by
+  * [[graft.core.Jsons.obj]]; counts that read only the frame a command
+  * writes come from that write, through [[graft.core.Land]]. Inputs:
   * *.csv (header + inferSchema) or parquet.
   */
 object Main {
@@ -475,22 +478,18 @@ object Main {
   }
 
   /** Shared landing path of the text-REWRITING dedup modes (substr /
-    * paragraph / chunk): order by id, persist, audit (units removed +
-    * docs touched), land as one CSV. The operator output contract is
-    * (id, clean_text, …, n_removed). */
-  private def landCleanedCorpus(cleaned0: DataFrame, idCol: String,
+    * paragraph / chunk / longmatch): land ordered by id as one CSV,
+    * tallying units removed + docs touched in the write. The operator
+    * output contract is (id, clean_text, …, n_removed). */
+  private def landCleanedCorpus(cleaned: DataFrame, idCol: String,
                                 outFile: String, total: Long,
-                                modeName: String, countKey: String)
-      : String = {
-    val cleaned = persistTracked(cleaned0.withColumnRenamed("id", idCol)
-      .orderBy(col(idCol)))
-    val agg = cleaned.agg(
-      coalesce(sum(col("n_removed")), lit(0L)).as("cut"),
-      count(when(col("n_removed") > 0, 1)).as("touched")).head()
-    Etl.writeSingleCsv(cleaned, outFile)
-    s"""{"command":"dedup","mode":"$modeName","rows":$total,""" +
-      s""""$countKey":${agg.getLong(0)},""" +
-      s""""docsTouched":${agg.getLong(1)},"out":${Jsons.str(outFile)}}"""
+                                modeName: String, countKey: String,
+                                extra: (String, Any)*): Jsons.Raw = {
+    val t = Land(cleaned.withColumnRenamed("id", idCol),
+      Land.Csv(outFile, col(idCol)))(countKey -> sum(col("n_removed")),
+      "docsTouched" -> count_if(col("n_removed") > 0))
+    obj(Seq("command" -> "dedup", "mode" -> modeName, "rows" -> total) ++
+      t ++ Seq("out" -> outFile) ++ extra: _*)
   }
 
   /** Exact rational form of a decimal threshold string ("0.95" →
@@ -602,14 +601,6 @@ object Main {
     }
   }
 
-  /** The sweep-histogram rows as JSON objects — shared by `dedup
-    * --mode sweep` and `datacard --neardup` so the two surfaces can't
-    * drift. */
-  private def binsJson(rows: Array[org.apache.spark.sql.Row]): String =
-    rows.map(r =>
-      s"""{"bin_bp":${r.getLong(0)},"n_pairs":${r.getLong(1)},""" +
-        s""""n_pairs_ge":${r.getLong(2)}}""").mkString(",")
-
   private def read(spark: SparkSession, path: String): DataFrame =
     if (path.endsWith(".csv"))
       graft.sources.CsvSource.readInferred(spark, Seq(path))
@@ -634,9 +625,31 @@ object Main {
     }
   }
 
-  /** The JSON tail naming the optional `--out` a command wrote. */
-  private def outTail(o: Cli.Opts): String =
-    o.get("out").fold("}")(f => s""","out":${Jsons.str(f)}}""")
+  /** The per-store objects of a `verifyTree` sweep, listing the checks
+    * `shown` keeps. */
+  private def storesJson(
+      stores: Seq[(String, String, Seq[graft.core.StoreVerify.Check])],
+      shown: Seq[graft.core.StoreVerify.Check] =>
+        Seq[graft.core.StoreVerify.Check]): Seq[Jsons.Raw] =
+    stores.map { case (path, family, checks) =>
+      obj("path" -> path, "family" -> family,
+        "n_failed" -> checks.count(!_.ok),
+        "checks" -> shown(checks).map(c => Jsons.Raw(c.json)))
+    }
+
+  /** The per-rule kill counts of a `QualityRules.killReport` row, as
+    * result fields. */
+  private def killFields(kills: org.apache.spark.sql.Row): Seq[(String, Any)] =
+    Seq("n_docs", "n_killed", "kill_word_count", "kill_mean_word_len",
+      "kill_symbol_ratio", "kill_alpha_words", "kill_stopwords",
+      "kill_repetition").map(f => f -> kills.getAs[Long](f))
+
+  /** A BM25 index's stored totals, as result fields. */
+  private def bm25Stats(spark: SparkSession, dir: String): Seq[(String, Any)] = {
+    val st = spark.read.parquet(s"$dir/stats").head()
+    Seq("n_docs" -> st.getAs[Long]("n_docs"),
+      "total_tokens" -> st.getAs[Long]("total"))
+  }
 
   /** Feature vector column from every numeric column of `df` — the same
     * feature-selection rule the preprocess chain uses (U4). */
@@ -655,10 +668,10 @@ object Main {
   private[graft] def run(spark: SparkSession, cmd: String,
                          opts: Map[String, String]): String = {
     val o = Cli.parse(commands, cmd, opts)
-    graft.core.Caching.scopedRelease(dispatch(spark, o))
+    graft.core.Caching.scopedRelease(dispatch(spark, o)).text
   }
 
-  private def dispatch(spark: SparkSession, o: Cli.Opts): String =
+  private def dispatch(spark: SparkSession, o: Cli.Opts): Jsons.Raw =
     o.cmd.name match {
 
     case "preprocess" =>
@@ -670,9 +683,7 @@ object Main {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(out, "scaler.json"),
         p.scaler.toJson.getBytes("UTF-8"))
-      p.counts.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }
-        .mkString("""{"command":"preprocess",""", ",", "}")
+      obj(("command" -> "preprocess") +: p.counts.toSeq.sortBy(_._1): _*)
 
     case "train" =>
       val (vec, nFeats) = vecFrame(read(spark, o.str("in")))
@@ -689,9 +700,8 @@ object Main {
         epochs = o.int("epochs"), lr = o.double("lr"))
       val modelDir = o.str("out")
       Autoencoder.save(spark, w, modelDir)
-      s"""{"command":"train","dims":[${dims.mkString(",")}],""" +
-        s""""epochs":${losses.length},"final_loss":${losses.last},""" +
-        s""""model_dir":${Jsons.str(modelDir)}}"""
+      obj("command" -> "train", "dims" -> dims, "epochs" -> losses.length,
+        "final_loss" -> losses.last, "model_dir" -> modelDir)
 
     case "score" =>
       val w = Autoencoder.load(spark, o.str("model"))
@@ -699,12 +709,10 @@ object Main {
       val scored = Autoencoder.scoreVectors(vec, "row_id", "vec", w,
         threshold = o.double("threshold"))
       val outFile = o.str("out")
-      Etl.writeSingleCsv(scored, outFile)
-      val byClass = scored.groupBy(col("prediction")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      s"""{"command":"score","rows":${byClass.values.sum},""" +
-        s""""normal":${byClass.getOrElse("normal", 0L)},""" +
-        s""""anomaly":${byClass.getOrElse("anomaly", 0L)},"out":${Jsons.str(outFile)}}"""
+      val t = Land(scored, Land.Csv(outFile))("rows" -> count(lit(1)),
+        "normal" -> count_if(col("prediction") === "normal"),
+        "anomaly" -> count_if(col("prediction") === "anomaly"))
+      obj(("command" -> "score") +: t.toSeq :+ ("out" -> outFile): _*)
 
     case "replay" =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -744,14 +752,14 @@ object Main {
           sent += buf.length
         }
       } finally q.stop()
-      s"""{"command":"replay","sent":$sent,""" +
-        s""""normal":${normal.totalRows},"anomaly":${anomaly.totalRows}}"""
+      obj("command" -> "replay", "sent" -> sent,
+        "normal" -> normal.totalRows, "anomaly" -> anomaly.totalRows)
 
     case "dashboard" =>
       val polls = o.int("follow")
       require(polls >= 1, s"--follow must be >= 1, got $polls")
-      dashboardFollow(spark, o.str("in"), o.str("window"), polls,
-        intervalMs = o.long("interval-ms"), onPoll = line => println(line))
+      Jsons.Raw(dashboardFollow(spark, o.str("in"), o.str("window"), polls,
+        intervalMs = o.long("interval-ms"), onPoll = line => println(line)))
 
     case "dedup" =>
       // the engine's headline corpus capability, user-invocable: read a
@@ -778,18 +786,15 @@ object Main {
         // The tiered cascade with provenance: exact → canonical →
         // substring, each tier on the previous tier's survivors; --out
         // receives the per-doc audit (id, status, keep_id, n_removed).
-        val report = persistTracked(graft.operators.Dedup.cascade(df, idCol,
-            textCol, n = o.int("n"), minDocs = o.int("min-docs"))
-          .withColumnRenamed("id", idCol).orderBy(col(idCol)))
-        val byTier = report.groupBy(col("status")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        Etl.writeSingleCsv(report, outFile)
-        def c(k: String) = byTier.getOrElse(k, 0L)
-        s"""{"command":"dedup","mode":"cascade","rows":$total,""" +
-          s""""kept":${c("kept")},"droppedExact":${c("dropped_exact")},""" +
-          s""""droppedCanonical":${c("dropped_canonical")},""" +
-          s""""cleanedSubstr":${c("cleaned_substr")},""" +
-          s""""out":${Jsons.str(outFile)}}"""
+        val t = Land(graft.operators.Dedup.cascade(df, idCol, textCol,
+            n = o.int("n"), minDocs = o.int("min-docs"))
+          .withColumnRenamed("id", idCol), Land.Csv(outFile, col(idCol)))(
+          Seq("kept" -> "kept", "droppedExact" -> "dropped_exact",
+            "droppedCanonical" -> "dropped_canonical",
+            "cleanedSubstr" -> "cleaned_substr").map { case (k, status) =>
+            k -> count_if(col("status") === status) }: _*)
+        obj(Seq("command" -> "dedup", "mode" -> "cascade", "rows" -> total) ++
+          t :+ ("out" -> outFile): _*)
       } else if (mode == "sweep") {
         // Threshold-sweep study: the exact-Jaccard pair histogram with
         // a top-down cumulative — run this BEFORE choosing a minhash /
@@ -801,10 +806,9 @@ object Main {
           .orderBy(col("bin_bp")))
         Etl.writeSingleCsv(hist, outFile)
         val rows = hist.collect()
-        val pairs = rows.map(_.getLong(1)).sum
-        s"""{"command":"dedup","mode":"sweep","rows":$total,""" +
-          s""""n_pairs":$pairs,"bins":[${binsJson(rows)}],""" +
-          s""""out":${Jsons.str(outFile)}}"""
+        obj("command" -> "dedup", "mode" -> "sweep", "rows" -> total,
+          "n_pairs" -> rows.map(_.getLong(1)).sum, "bins" -> rows,
+          "out" -> outFile)
       } else if (mode == "substr") {
         // Repeated-passage removal: every doc survives, but n-token
         // spans seen in >= min-docs distinct docs are cut from ALL
@@ -824,15 +828,10 @@ object Main {
         // decon-fuzzy sign-once lesson).
         val (cleaned, repDf) = graft.operators.Dedup.longMatchRemoveReport(
           df, idCol, textCol, o.int("min-len"), o.int("max-df"))
-        val rep = repDf.head()
-        val capJson = s""","capReport":{"n_windows":${
-          rep.getAs[Long]("n_windows")},"n_dropped_windows":${
-          rep.getAs[Long]("n_dropped_windows")},"dropped_rows":${
-          rep.getAs[Long]("dropped_rows")},"max_df":${
-          rep.getAs[Long]("max_df")}}"""
-        landCleanedCorpus(cleaned,
-          idCol, outFile, total, "longmatch", "tokensRemoved")
-          .stripSuffix("}") + capJson + "}"
+        // the (n_windows, n_dropped_windows, dropped_rows, max_df) row
+        val capReport = repDf.head()
+        landCleanedCorpus(cleaned, idCol, outFile, total, "longmatch",
+          "tokensRemoved", "capReport" -> capReport)
       } else if (mode == "paragraph") {
         // CCNet paragraph-level dedup: each paragraph survives only in
         // its corpus-wide first carrier; --out receives the
@@ -888,11 +887,10 @@ object Main {
             "(exact | minhash | semantic | substr | longmatch | " +
             "paragraph | chunk | cascade | sweep)")
       }
-      val keptSorted = persistTracked(kept.orderBy(col(idCol)))
-      val nKept = keptSorted.count()
-      Etl.writeSingleCsv(keptSorted, outFile)
-      s"""{"command":"dedup","mode":"$mode","rows":$total,""" +
-        s""""kept":$nKept,"dropped":${total - nKept},"out":${Jsons.str(outFile)}}"""
+      val nKept = Land(kept, Land.Csv(outFile, col(idCol)))(
+        "kept" -> count(lit(1)))("kept")
+      obj("command" -> "dedup", "mode" -> mode, "rows" -> total,
+        "kept" -> nKept, "dropped" -> (total - nKept), "out" -> outFile)
       }
 
     case "index" if o.has("compact") =>
@@ -917,9 +915,8 @@ object Main {
       val before = dataFiles(s"$srcDir/cells") + dataFiles(s"$srcDir/by_id")
       graft.operators.Ivf.compactIndex(spark, srcDir, outDir)
       val after = dataFiles(s"$outDir/cells") + dataFiles(s"$outDir/by_id")
-      s"""{"command":"index","mode":"compact","src":${Jsons.str(srcDir)},""" +
-        s""""files_before":$before,"files_after":$after,""" +
-        s""""out":${Jsons.str(outDir)}}"""
+      obj("command" -> "index", "mode" -> "compact", "src" -> srcDir,
+        "files_before" -> before, "files_after" -> after, "out" -> outDir)
 
     case "index" if o.has("remove-ids") || o.has("remove-in") =>
       // retraction: delete vectors from a stored index — only the
@@ -936,9 +933,9 @@ object Main {
           df.select(col(o.str("id")).cast("long").as("id"))
         }
       val rep = graft.operators.Ivf.removeFromIndex(spark, dir, ids)
-      s"""{"command":"index","mode":"remove","index":${Jsons.str(dir)},""" +
-        s""""removed":${rep.removed},"cells_touched":${rep.cellsTouched},""" +
-        s""""idb_touched":${rep.idbTouched}}"""
+      obj("command" -> "index", "mode" -> "remove", "index" -> dir,
+        "removed" -> rep.removed, "cells_touched" -> rep.cellsTouched,
+        "idb_touched" -> rep.idbTouched)
 
     case "index" =>
       // build + persist the SHARED semantic-dedup / ANN artifact from
@@ -968,9 +965,8 @@ object Main {
           // store (whose partition key cannot serve a by-id lookup)
           graft.operators.Ivf.writeIdLookup(assigned, s"$outDir/by_id")
           model.write.overwrite().save(s"$outDir/model")
-          s"""{"command":"index","codebook":"flat","rows":$rows,""" +
-            s""""cells":${model.getK},"quantized":$quantize,""" +
-            s""""out":${Jsons.str(outDir)}}"""
+          obj("command" -> "index", "codebook" -> "flat", "rows" -> rows,
+            "cells" -> model.getK, "quantized" -> quantize, "out" -> outDir)
         case "two-level" =>
           val idx = graft.operators.Similarity.semDedupIndexTwoLevelFull(
             df, idCol, vecCol, targetClusterSize = target,
@@ -979,9 +975,9 @@ object Main {
           val clusters = idx.fineCents.count()
           graft.operators.Ivf.writeIndexTwoLevel(idx, outDir,
             quantize = quantize)
-          s"""{"command":"index","codebook":"two-level","rows":$rows,""" +
-            s""""cells":${idx.routerCents.length},"clusters":$clusters,""" +
-            s""""quantized":$quantize,"out":${Jsons.str(outDir)}}"""
+          obj("command" -> "index", "codebook" -> "two-level", "rows" -> rows,
+            "cells" -> idx.routerCents.length, "clusters" -> clusters,
+            "quantized" -> quantize, "out" -> outDir)
         case "pq" =>
           // product-quantized cells: m one-byte codes + one norm per
           // vector (~dim·8/(m+8)× smaller than raw cells); probes ADC-
@@ -996,9 +992,9 @@ object Main {
           val router = model.clusterCenters.zipWithIndex
             .map { case (c, i) => (i.toLong, c.toArray) }
           graft.operators.Pq.writeIndexPq(assigned, pq, router, outDir)
-          s"""{"command":"index","codebook":"pq","rows":$rows,""" +
-            s""""cells":${router.length},"m":$pqM,"ksub":$pqKsub,""" +
-            s""""out":${Jsons.str(outDir)}}"""
+          obj("command" -> "index", "codebook" -> "pq", "rows" -> rows,
+            "cells" -> router.length, "m" -> pqM, "ksub" -> pqKsub,
+            "out" -> outDir)
         case other => throw new IllegalArgumentException(
           s"unknown --codebook '$other' (flat | two-level | pq)")
       }
@@ -1036,20 +1032,13 @@ object Main {
           "id", Seq(col("score_e4").desc, col("id")))
         val fused = graft.operators.Rank.rrfFuse(
           Seq(lexRanked, denseRanked), topK = k).collect()
-        val fusedJson = fused.map(r =>
-          s"""{"id":${r.getAs[Long]("id")},""" +
-            s""""rrf_e6":${r.getAs[Long]("rrf_e6")},""" +
-            s""""n_legs":${r.getAs[Long]("n_legs")},""" +
-            s""""best_rank":${r.getAs[Long]("best_rank")}}""")
-        s"""{"command":"query","hybrid":true,"k":${fused.length},""" +
-          s""""n_terms":${terms.size},""" +
-          s""""hits":${fusedJson.mkString("[", ",", "]")}}"""
-      } else {
-        val hitJson = hits
-          .map(r => s"""{"id":${r.getLong(0)},"cos_sim":${r.getDouble(1)}}""")
-        s"""{"command":"query","k":${hits.length},""" +
-          s""""hits":${hitJson.mkString("[", ",", "]")}}"""
-      }
+        obj("command" -> "query", "hybrid" -> true, "k" -> fused.length,
+          "n_terms" -> terms.size, "hits" -> fused.map(r => obj(
+            Seq("id", "rrf_e6", "n_legs", "best_rank")
+              .map(c => c -> r.getAs[Long](c)): _*)))
+      } else
+        obj("command" -> "query", "k" -> hits.length, "hits" -> hits.map(r =>
+          obj("id" -> r.getLong(0), "cos_sim" -> r.getDouble(1))))
 
     case "recall" =>
       // ops-grade index health check: recall@k of the stored index's
@@ -1095,13 +1084,12 @@ object Main {
       val rows = graft.operators.Similarity
         .recallAtK(approx, exact, "qid", "id")
         .orderBy(col("qid")).collect()
-      val per = rows.map(r =>
-        s"""{"qid":${r.getLong(0)},"recall_bp":${r.getLong(3)}}""")
       val mean = if (rows.isEmpty) 0L
         else rows.map(_.getLong(3)).sum / rows.length
-      s"""{"command":"recall","k":$k,"probe":$nProbe,""" +
-        s""""sampled":${qids.length},"mean_recall_bp":$mean,""" +
-        s""""per_query":${per.mkString("[", ",", "]")}}"""
+      obj("command" -> "recall", "k" -> k, "probe" -> nProbe,
+        "sampled" -> qids.length, "mean_recall_bp" -> mean,
+        "per_query" -> rows.map(r =>
+          obj("qid" -> r.getLong(0), "recall_bp" -> r.getLong(3))))
 
     case "ingest" if o.bool("compact-only") =>
       // standalone settled-signature compaction: fold the per-batch
@@ -1113,11 +1101,10 @@ object Main {
         graft.streaming.StreamingIngest.settledStats(spark, sig)
       val (folded, nParts) =
         graft.streaming.StreamingIngest.compactSettled(spark, sig)
-      s"""{"command":"ingest","compact_only":true,""" +
-        s""""settled_parts_before":$partsBefore,""" +
-        s""""settled_bytes_before":$bytesBefore,""" +
-        s""""folded_rows":$folded,"folded_parts":$nParts,""" +
-        s""""sig":${Jsons.str(sig)}}"""
+      obj("command" -> "ingest", "compact_only" -> true,
+        "settled_parts_before" -> partsBefore,
+        "settled_bytes_before" -> bytesBefore, "folded_rows" -> folded,
+        "folded_parts" -> nParts, "sig" -> sig)
 
     case "ingest" =>
       // THE composed streaming ingest (StreamingIngest.fullIngest):
@@ -1203,6 +1190,9 @@ object Main {
       // An empty input fires no micro-batch, so the funnel directory is
       // never created — report a zeroed funnel instead of dying on the
       // missing path.
+      val tiers = Seq("n_in", "n_rule_killed", "n_rep_killed",
+        "n_decon_killed", "n_decon_tokens_cut", "n_fuzzy_killed",
+        "n_dup_killed", "n_lm_tokens_cut", "n_sel_killed", "n_kept")
       val t: Option[org.apache.spark.sql.Row] =
         if (sent == 0L) None
         else {
@@ -1215,12 +1205,7 @@ object Main {
           def s0(c: String) =
             if (f.columns.contains(c)) sum(coalesce(col(c), lit(0L)))
             else sum(lit(0L))
-          Some(f.agg(count(lit(1)), s0("n_in"),
-            s0("n_rule_killed"), s0("n_rep_killed"),
-            s0("n_decon_killed"), s0("n_decon_tokens_cut"),
-            s0("n_fuzzy_killed"),
-            s0("n_dup_killed"), s0("n_lm_tokens_cut"),
-            s0("n_sel_killed"), s0("n_kept")).head())
+          Some(f.agg(count(lit(1)), tiers.map(s0): _*).head())
         }
       def g(i: Int): Long =
         t match {
@@ -1246,20 +1231,13 @@ object Main {
           graft.streaming.StreamingIngest
             .compactFunnel(spark, s"$outDir/funnel")._1
         else 0L
-      s"""{"command":"ingest","sent":$sent,"batches":${g(0)},""" +
-        s""""n_in":${g(1)},"n_rule_killed":${g(2)},""" +
-        s""""n_rep_killed":${g(3)},"n_decon_killed":${g(4)},""" +
-        s""""n_decon_tokens_cut":${g(5)},""" +
-        s""""n_fuzzy_killed":${g(6)},""" +
-        s""""n_dup_killed":${g(7)},""" +
-        s""""n_lm_tokens_cut":${g(8)},""" +
-        s""""n_sel_killed":${g(9)},"n_kept":${g(10)},""" +
-        s""""settled_sigs":${Jsons.str(
-          graft.streaming.StreamingIngest.settledSigPath(o.str("sig")))},""" +
-        s""""settled_parts":$sParts,"settled_bytes":$sBytes,""" +
-        s""""compacted":$compacted,"folded_rows":$folded,""" +
-        s""""folded_funnel_batches":$foldedFunnel,""" +
-        s""""out":${Jsons.str(outDir)}}"""
+      obj(Seq("command" -> "ingest", "sent" -> sent, "batches" -> g(0)) ++
+        tiers.zipWithIndex.map { case (c, i) => c -> g(i + 1) } ++ Seq(
+        "settled_sigs" ->
+          graft.streaming.StreamingIngest.settledSigPath(o.str("sig")),
+        "settled_parts" -> sParts, "settled_bytes" -> sBytes,
+        "compacted" -> compacted, "folded_rows" -> folded,
+        "folded_funnel_batches" -> foldedFunnel, "out" -> outDir): _*)
 
     case "store" if o.has("compact-bm25") =>
       // fold a churned BM25 postings layout back to one file per term
@@ -1268,9 +1246,8 @@ object Main {
       val dir = o.str("compact-bm25")
       val (before, after, nb) =
         graft.operators.Rank.compactBm25Postings(spark, dir)
-      s"""{"command":"store","compact_bm25":${Jsons.str(dir)},""" +
-        s""""files_before":$before,"files_after":$after,""" +
-        s""""buckets":$nb}"""
+      obj("command" -> "store", "compact_bm25" -> dir,
+        "files_before" -> before, "files_after" -> after, "buckets" -> nb)
 
     case "store" if o.has("compact-kept") =>
       // fold a churned kept-corpus store back to one file per batch
@@ -1278,9 +1255,8 @@ object Main {
       val dir = o.str("compact-kept")
       val (before, after, np) =
         graft.streaming.StreamingIngest.compactKept(spark, dir)
-      s"""{"command":"store","compact_kept":${Jsons.str(dir)},""" +
-        s""""files_before":$before,"files_after":$after,""" +
-        s""""partitions":$np}"""
+      obj("command" -> "store", "compact_kept" -> dir,
+        "files_before" -> before, "files_after" -> after, "partitions" -> np)
 
     case "store" if o.has("compact-funnel") =>
       // fold old per-batch funnel partitions into the _hist sibling —
@@ -1290,9 +1266,9 @@ object Main {
       val keep = o.int("keep")
       val (foldedB, histRows) =
         graft.streaming.StreamingIngest.compactFunnel(spark, dir, keep)
-      s"""{"command":"store","compact_funnel":${Jsons.str(dir)},""" +
-        s""""folded_batches":$foldedB,"hist_rows":$histRows,""" +
-        s""""keep_last":$keep}"""
+      obj("command" -> "store", "compact_funnel" -> dir,
+        "folded_batches" -> foldedB, "hist_rows" -> histRows,
+        "keep_last" -> keep)
 
     case "store" if o.has("rebuild-stats") =>
       // one-command recovery for a bm25_stats_doclen / fsck
@@ -1301,8 +1277,8 @@ object Main {
       val dir = o.str("rebuild-stats")
       val (n, t) = graft.operators.Rank.rebuildBm25Stats(spark, dir,
         o.get("buckets").map(_.toLong))
-      s"""{"command":"store","rebuild_stats":${Jsons.str(dir)},""" +
-        s""""n_docs":$n,"total_tokens":$t}"""
+      obj("command" -> "store", "rebuild_stats" -> dir, "n_docs" -> n,
+        "total_tokens" -> t)
 
     case "store" if o.has("rebuild-by-id") =>
       // one-command recovery for an ivf_idb_routing / ivf_cells_by_id
@@ -1310,8 +1286,7 @@ object Main {
       val dir = o.str("rebuild-by-id")
       val rows = graft.operators.Ivf.rebuildIdLookup(spark, dir,
         o.get("buckets").map(_.toInt))
-      s"""{"command":"store","rebuild_by_id":${Jsons.str(dir)},""" +
-        s""""rows":$rows}"""
+      obj("command" -> "store", "rebuild_by_id" -> dir, "rows" -> rows)
 
     case "store" if o.has("health") =>
       // the morning command: structural sweep (fsck, detect-only) +
@@ -1324,20 +1299,12 @@ object Main {
       val stores = graft.core.StoreVerify.verifyTree(spark, root,
         idCol = o.str("id"), sample = sample)
       val contentFailed = stores.map(_._3.count(!_.ok)).sum
-      val body = stores.map { case (path, family, checks) =>
-        s"""{"path":${Jsons.str(path)},"family":${Jsons.str(family)},""" +
-          s""""n_failed":${checks.count(!_.ok)},""" +
-          s""""checks":[${checks.filterNot(_.ok).map(_.json)
-            .mkString(",")}]}"""
-      }.mkString(",")
-      val healthy = findings.isEmpty && contentFailed == 0
-      s"""{"command":"store","health":${Jsons.str(root)},""" +
-        s""""healthy":$healthy,""" +
-        s""""n_crash_windows":${findings.length},""" +
-        s""""crash_windows":[${findings.map(_.json).mkString(",")}],""" +
-        s""""n_stores":${stores.length},""" +
-        s""""n_content_failed":$contentFailed,""" +
-        s""""stores":[$body]}"""
+      obj("command" -> "store", "health" -> root,
+        "healthy" -> (findings.isEmpty && contentFailed == 0),
+        "n_crash_windows" -> findings.length,
+        "crash_windows" -> findings.map(f => Jsons.Raw(f.json)),
+        "n_stores" -> stores.length, "n_content_failed" -> contentFailed,
+        "stores" -> storesJson(stores, _.filterNot(_.ok)))
 
     case "store" if o.has("verify-tree") =>
       // whole-lake health sweep: detect every store under the root and
@@ -1347,15 +1314,10 @@ object Main {
       val sample = sampleSlice(o)
       val stores = graft.core.StoreVerify.verifyTree(spark, root,
         idCol = o.str("id"), sample = sample)
-      val failed = stores.map(_._3.count(!_.ok)).sum
-      val body = stores.map { case (path, family, checks) =>
-        s"""{"path":${Jsons.str(path)},"family":${Jsons.str(family)},""" +
-          s""""n_failed":${checks.count(!_.ok)},""" +
-          s""""checks":[${checks.map(_.json).mkString(",")}]}"""
-      }.mkString(",")
-      s"""{"command":"store","verify_tree":${Jsons.str(root)},""" +
-        s""""n_stores":${stores.length},"n_failed":$failed,""" +
-        s""""stores":[$body]}"""
+      obj("command" -> "store", "verify_tree" -> root,
+        "n_stores" -> stores.length,
+        "n_failed" -> stores.map(_._3.count(!_.ok)).sum,
+        "stores" -> storesJson(stores, identity))
 
     case "store" if o.has("verify") =>
       // content-level cross-leg invariant audit: fsck proves a store is
@@ -1369,14 +1331,10 @@ object Main {
       val (family, checks) = graft.core.StoreVerify.verify(spark, dir,
         sigPath = o.get("sig"), idCol = o.str("id"),
         sample = sample)
-      val failed = checks.count(!_.ok)
-      val sampleJson = sample.fold("") { case (m, r) =>
-        s""""sample_mod":$m,"sample_rem":$r,"""
-      }
-      s"""{"command":"store","verify":${Jsons.str(dir)},""" +
-        s""""family":${Jsons.str(family)},$sampleJson""" +
-        s""""n_checks":${checks.length},"n_failed":$failed,""" +
-        s""""checks":[${checks.map(_.json).mkString(",")}]}"""
+      obj("command" -> "store", "verify" -> dir, "family" -> family,
+        "sample_mod" -> sample.map(_._1), "sample_rem" -> sample.map(_._2),
+        "n_checks" -> checks.length, "n_failed" -> checks.count(!_.ok),
+        "checks" -> checks.map(c => Jsons.Raw(c.json)))
 
     case "store" =>
       // store lifecycle maintenance: fsck sweeps a tree for the crash
@@ -1393,10 +1351,10 @@ object Main {
       val unresolved = findings.count(f => f.action == "report" &&
         Set("bm25_stats_inconsistent", "orphan_next",
           "staging_anomaly", "lease_writer_live")(f.kind))
-      s"""{"command":"store","fsck":${Jsons.str(dir)},"repair":$repair,""" +
-        s""""n_findings":${findings.length},"n_repaired":$repaired,""" +
-        s""""n_unresolved":$unresolved,""" +
-        s""""findings":[${findings.map(_.json).mkString(",")}]}"""
+      obj("command" -> "store", "fsck" -> dir, "repair" -> repair,
+        "n_findings" -> findings.length, "n_repaired" -> repaired,
+        "n_unresolved" -> unresolved,
+        "findings" -> findings.map(f => Jsons.Raw(f.json)))
 
     case "retract" =>
       // THE composed takedown: remove a document set from every store
@@ -1426,39 +1384,35 @@ object Main {
       // Phase 2 then mutates; an unexpected mid-mutation failure (a
       // filesystem error, a crash window) still reports which stores
       // completed so the operator can resume store-by-store.
-      def perStore(store: String, validateOnly: Boolean): String =
+      def perStore(store: String, validateOnly: Boolean): Any =
         store match {
           case "sig" =>
             val (rows, parts) = graft.operators.Dedup
               .removeFromSignatureIndex(spark, idsOnly, o.str("sig"),
                 validateOnly = validateOnly)
-            s""""sig":{"base_rows":$rows,"settled_parts":$parts}"""
+            obj("base_rows" -> rows, "settled_parts" -> parts)
           case "bm25" =>
             graft.operators.Rank.removeFromBm25Index(df, idCol, textCol,
               o.str("bm25"), validateOnly = validateOnly)
-            if (validateOnly) "" else {
-              val st = spark.read.parquet(s"${o.str("bm25")}/stats").head()
-              s""""bm25":{"n_docs":${st.getAs[Long]("n_docs")},""" +
-                s""""total_tokens":${st.getAs[Long]("total")}}"""
-            }
+            if (validateOnly) None
+            else obj(bm25Stats(spark, o.str("bm25")): _*)
           case "ann" =>
             val rep = graft.operators.Ivf.removeFromIndex(spark,
               o.str("ann"), idsOnly, validateOnly = validateOnly)
-            s""""ann":{"removed":${rep.removed},""" +
-              s""""cells_touched":${rep.cellsTouched}}"""
+            obj("removed" -> rep.removed, "cells_touched" -> rep.cellsTouched)
           case "lm" =>
             graft.operators.Vocab.removeFromLm(df, textCol, o.str("lm"),
               validateOnly = validateOnly)
-            s""""lm":"removed""""
+            "removed"
           case "longmatch" =>
             graft.operators.Dedup.removeFromLongMatchIndex(df, idCol,
               textCol, o.str("longmatch"), validateOnly = validateOnly)
-            s""""longmatch":"removed""""
+            "removed"
           case "kept" =>
             val (rows, parts) = graft.streaming.StreamingIngest
               .removeFromKept(spark, o.str("kept"), idsOnly, idCol,
                 validateOnly = validateOnly)
-            s""""kept":{"rows":$rows,"parts_touched":$parts}"""
+            obj("rows" -> rows, "parts_touched" -> parts)
         }
       stores.foreach { st =>
         try perStore(st, validateOnly = true)
@@ -1478,7 +1432,7 @@ object Main {
         try {
           val r = perStore(st, validateOnly = false)
           done += st
-          r
+          st -> r
         } catch {
           case scala.util.control.NonFatal(e) =>
             throw new IllegalStateException(
@@ -1489,9 +1443,8 @@ object Main {
                   .mkString(",")}). ${e.getMessage}", e)
         }
       }
-      val n = idsOnly.distinct().count()
-      s"""{"command":"retract","n_ids":$n,""" +
-        s""""stores":{${reports.mkString(",")}}}"""
+      obj("command" -> "retract", "n_ids" -> idsOnly.distinct().count(),
+        "stores" -> obj(reports: _*))
 
     case "screen" =>
       // incremental ingest screening: which batch rows are near-dups of
@@ -1525,7 +1478,7 @@ object Main {
         df.write.mode("overwrite").parquet(dir)
         spark.read.parquet(dir)
       }
-      val flagged = persistTracked(kind match {
+      val flagged = kind match {
         case "minhash" =>
           val sig = o.get("index") match {
             case Some(dir) => spark.read.parquet(dir)
@@ -1582,16 +1535,16 @@ object Main {
               col("span_len"))
         case other => throw new IllegalArgumentException(
           s"unknown --kind '$other' (minhash | embedding | longmatch)")
-      })
+      }
       val pairs = flagged.columns.contains("corpus_id")
-      val n = flagged.count()
-      Etl.writeSingleCsv(flagged.orderBy(col("batch_id"),
-        col(if (pairs) "corpus_id" else "span_start")), outFile)
+      val t = Land(flagged, Land.Csv(outFile, col("batch_id"),
+        col(if (pairs) "corpus_id" else "span_start")))(
+        (if (pairs) "flagged_pairs" else "flagged_spans") -> count(lit(1)))
       // --append-index: fold this batch's windows into the STORED
       // index so the NEXT batch screens against corpus ∪ this batch
       // (the settle step of the screen-forever lifecycle). Runs AFTER
-      // the flagged frame is fully materialized — the append swaps
-      // the store directory the screening plan reads from.
+      // the flagged frame has landed — the append swaps the store
+      // directory the screening plan reads from.
       val appendIdx = o.bool("append-index")
       if (appendIdx) {
         require(kind == "longmatch",
@@ -1602,12 +1555,10 @@ object Main {
         graft.operators.Dedup.appendLongMatchIndex(batch, idCol,
           textCol, o.str("index"))
       }
-      s"""{"command":"screen","kind":"$kind",""" +
-        s""""batch_rows":${batch.count()},""" +
-        s""""${if (pairs) "flagged_pairs" else "flagged_spans"}":$n,""" +
-        (if (appendIdx) s""""appended_index":${Jsons.str(o.str("index"))},"""
-         else "") +
-        s""""out":${Jsons.str(outFile)}}"""
+      obj(Seq("command" -> "screen", "kind" -> kind,
+        "batch_rows" -> batch.count()) ++ t ++ Seq(
+        "appended_index" -> (if (appendIdx) o.get("index") else None),
+        "out" -> outFile): _*)
 
     case "curate" =>
       // token-budgeted per-source curation (Curate): keep each source's
@@ -1617,15 +1568,12 @@ object Main {
       needCols(df, o, "id", "text", "source")
       val budget = o.long("budget")
       val outFile = o.str("out")
-      val kept = persistTracked(graft.operators.Curate
-        .tokenBudgetPerSource(df, o.str("id"), o.str("text"),
-          o.str("source"), budget)
-        .orderBy(col("source"), col("id")))
-      val n = kept.count()
-      val toks = kept.agg(sum(col("n_tokens"))).head().getLong(0)
-      Etl.writeSingleCsv(kept, outFile)
-      s"""{"command":"curate","budget_per_source":$budget,""" +
-        s""""kept_docs":$n,"kept_tokens":$toks,"out":${Jsons.str(outFile)}}"""
+      val t = Land(graft.operators.Curate.tokenBudgetPerSource(df,
+          o.str("id"), o.str("text"), o.str("source"), budget),
+        Land.Csv(outFile, col("source"), col("id")))(
+        "kept_docs" -> count(lit(1)), "kept_tokens" -> sum(col("n_tokens")))
+      obj(Seq("command" -> "curate", "budget_per_source" -> budget) ++ t :+
+        ("out" -> outFile): _*)
 
     case "stats" =>
       // incremental corpus stats (CorpusStats): each ingested batch
@@ -1640,22 +1588,17 @@ object Main {
           needCols(batch, o, "text")
           graft.operators.CorpusStats.appendSnapshot(batch, o.str("text"),
             statsDir)
-          s"""{"command":"stats","appended":1,""" +
-            s""""batch_rows":${batch.count()},"stats":${Jsons.str(statsDir)}}"""
+          obj("command" -> "stats", "appended" -> 1,
+            "batch_rows" -> batch.count(), "stats" -> statsDir)
         case None =>
           val snapshots = spark.read.parquet(statsDir)
           val nSnap = snapshots.count()
           val r = graft.operators.CorpusStats
             .report(graft.operators.CorpusStats.merge(snapshots)).head()
-          s"""{"command":"stats","snapshots":$nSnap,""" +
-            s""""n_docs":${r.getAs[Long]("n_docs")},""" +
-            s""""sum_tokens":${r.getAs[Long]("sum_tokens")},""" +
-            s""""n_blank":${r.getAs[Long]("n_blank")},""" +
-            s""""token_mean":${r.getAs[Double]("token_mean")},""" +
-            s""""token_std":${r.getAs[Double]("token_std")},""" +
-            s""""median_tokens_lo":${r.getAs[Long]("median_tokens_lo")},""" +
-            s""""median_tokens_hi":${r.getAs[Long]("median_tokens_hi")},""" +
-            s""""approx_distinct_docs":${r.getAs[Long]("approx_distinct_docs")}}"""
+          obj(("command" -> "stats") +: ("snapshots" -> nSnap) +: Seq(
+            "n_docs", "sum_tokens", "n_blank", "token_mean", "token_std",
+            "median_tokens_lo", "median_tokens_hi", "approx_distinct_docs")
+            .map(c => c -> r.getAs[Any](c)): _*)
       }
 
     case "vocab" =>
@@ -1675,17 +1618,16 @@ object Main {
           vocabDir)
         val (_, k, baseline) =
           graft.operators.Vocab.readVocab(spark, vocabDir)
-        s"""{"command":"vocab","built":true,"top_k":$k,""" +
-          s""""baseline_oov_bp":$baseline,"vocab":${Jsons.str(vocabDir)}}"""
+        obj("command" -> "vocab", "built" -> true, "top_k" -> k,
+          "baseline_oov_bp" -> baseline, "vocab" -> vocabDir)
       } else {
         val (vocab, k, baseline) =
           graft.operators.Vocab.readVocab(spark, vocabDir)
         val d = graft.operators.Vocab.vocabDrift(batch, textCol, vocab,
           baseline, o.double("drift-factor"), o.long("margin-bp"))
-        s"""{"command":"vocab","top_k":$k,""" +
-          s""""n_tokens":${d.nTokens},"n_oov":${d.nOov},""" +
-          s""""oov_bp":${d.oovBp},"baseline_oov_bp":${d.baselineBp},""" +
-          s""""drifted":${d.drifted}}"""
+        obj("command" -> "vocab", "top_k" -> k, "n_tokens" -> d.nTokens,
+          "n_oov" -> d.nOov, "oov_bp" -> d.oovBp,
+          "baseline_oov_bp" -> d.baselineBp, "drifted" -> d.drifted)
       }
 
     case "layout" =>
@@ -1697,29 +1639,28 @@ object Main {
       val mode = o.str("mode")
       def by: Seq[String] = o.str("by").split(",").map(_.trim).toSeq
       val files = o.int("files")
+      import graft.sources.Layout
+      def landed(df: DataFrame, sink: Land.Sink, fields: (String, Any)*) =
+        obj(Seq("command" -> "layout", "mode" -> mode,
+          "rows" -> Land(df, sink)("rows" -> count(lit(1)))("rows")) ++
+          fields :+ ("out" -> outDir): _*)
       mode match {
         case "partition" =>
-          val df = read(spark, o.str("in"))
-          graft.sources.Layout.writePartitioned(df, outDir, by)
-          s"""{"command":"layout","mode":"partition","rows":${df.count()},""" +
-            s""""by":${Jsons.str(by.mkString(","))},"out":${Jsons.str(outDir)}}"""
+          landed(read(spark, o.str("in")), Land.Parquet(outDir, by: _*),
+            "by" -> by.mkString(","))
         case "range" =>
-          val df = read(spark, o.str("in"))
           require(by.size == 1, "--mode range takes exactly one --by column")
-          graft.sources.Layout.writeRangeSorted(df, outDir, by.head, files)
-          s"""{"command":"layout","mode":"range","rows":${df.count()},""" +
-            s""""files":$files,"out":${Jsons.str(outDir)}}"""
+          landed(Layout.rangeSorted(read(spark, o.str("in")), by.head, files),
+            Land.Parquet(outDir), "files" -> files)
         case "zorder" =>
-          val df = read(spark, o.str("in"))
           require(by.size == 2, "--mode zorder takes exactly two --by columns")
-          graft.sources.Layout.writeZOrdered(df, outDir, by(0), by(1), files)
-          s"""{"command":"layout","mode":"zorder","rows":${df.count()},""" +
-            s""""files":$files,"out":${Jsons.str(outDir)}}"""
+          landed(Layout.zOrdered(read(spark, o.str("in")), by(0), by(1),
+            files), Land.Parquet(outDir), "files" -> files)
         case "compact" =>
-          val n = graft.sources.Layout.compact(spark, o.str("in"), outDir,
+          val n = Layout.compact(spark, o.str("in"), outDir,
             o.long("target-bytes"))
-          s"""{"command":"layout","mode":"compact","filesWritten":$n,""" +
-            s""""out":${Jsons.str(outDir)}}"""
+          obj("command" -> "layout", "mode" -> "compact", "filesWritten" -> n,
+            "out" -> outDir)
         case other =>
           throw new IllegalArgumentException(s"unknown layout mode '$other'")
       }
@@ -1778,7 +1719,9 @@ object Main {
       // tier 2: dedup cascade with provenance
       val (audit, corpus0) = graft.operators.Dedup.cascadeWithCorpus(
         deduped, idCol, textCol, n = o.int("n"), minDocs = o.int("min-docs"))
-      audit.write.mode("overwrite").parquet(s"$outDir/audit")
+      val tiers = Land(audit, Land.Parquet(s"$outDir/audit"))(
+        Seq("dropped_exact", "dropped_canonical", "cleaned_substr", "kept")
+          .map(t => t -> count_if(col("status") === t)): _*)
       // re-attach passthrough columns (e.g. source) for curation
       val srcCol = o.str("source")
       val corpus =
@@ -1797,24 +1740,14 @@ object Main {
           corpus.join(kept.select(col("id")), Seq("id"), "leftsemi")
         case None => corpus
       }
-      val settledP = persistTracked(settled)
-      val nQuality = rep.filter(col("pass")).count()
-      val nSettled = settledP.count()
-      val tiers = audit.groupBy(col("status")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      settledP.write.mode("overwrite").parquet(s"$outDir/corpus")
-      val tierJson = Seq("dropped_exact", "dropped_canonical",
-        "cleaned_substr", "kept")
-        .map(t => s""""$t":${tiers.getOrElse(t, 0L)}""").mkString(",")
-      val paraJson = paraP
-        .map(p => s""""para":${p.count()},""").getOrElse("")
-      val repJson = repGateP
-        .map(r => s""""repetition":${r.count()},""").getOrElse("")
-      val lmJson = lmP
-        .map(l => s""""longmatch":${l.count()},""").getOrElse("")
-      s"""{"command":"settle","raw":$nRaw,"quality":$nQuality,""" +
-        repJson + paraJson + lmJson + tierJson +
-        s""","settled":$nSettled,"out":${Jsons.str(outDir)}}"""
+      val nSettled = Land(settled, Land.Parquet(s"$outDir/corpus"))(
+        "settled" -> count(lit(1)))
+      obj(Seq("command" -> "settle", "raw" -> nRaw,
+        "quality" -> rep.filter(col("pass")).count(),
+        "repetition" -> repGateP.map(_.count()),
+        "para" -> paraP.map(_.count()),
+        "longmatch" -> lmP.map(_.count())) ++ tiers ++ nSettled :+
+        ("out" -> outDir): _*)
 
     case "diff" =>
       // Corpus snapshot diff: per-id verdicts between two settles, with
@@ -1826,19 +1759,15 @@ object Main {
       // duplicate ids would fan the full-outer join out and inflate
       // every summary count — reject loudly (snapshotDiff contract)
       for ((df, name) <- Seq((a, "a"), (b, "b"))) {
-        val dups = df.groupBy(col(idCol)).count()
-          .filter(col("count") > 1).count()
+        val dups = graft.core.Probe.totals(df.groupBy(col(idCol)).count()
+          .filter(col("count") > 1)).head
         require(dups == 0L,
           s"snapshot --$name has $dups duplicated '$idCol' ids; " +
             "diff requires unique ids per snapshot")
       }
-      val d = persistTracked(
-        graft.operators.Diff.snapshotDiff(a, b, idCol, textCol))
-      o.get("out").foreach(f => Etl.writeSingleCsv(d.orderBy(col("id")), f))
-      val s = graft.operators.Diff.diffSummary(d).head()
-      s"""{"command":"diff","n_added":${s.getLong(0)},""" +
-        s""""n_removed":${s.getLong(1)},"n_changed":${s.getLong(2)},""" +
-        s""""n_unchanged":${s.getLong(3)}""" + outTail(o)
+      val t = Land(graft.operators.Diff.snapshotDiff(a, b, idCol, textCol),
+        Land.csvOr(o.get("out"), col("id")))(graft.operators.Diff.summary: _*)
+      obj(("command" -> "diff") +: t.toSeq :+ ("out" -> o.get("out")): _*)
 
     case "plan" =>
       // Token-budget epoch planner: mixture weights × budget →
@@ -1858,15 +1787,11 @@ object Main {
         .orderBy(col("source")).collect()
       // epochs/capped/deficit are deliberately NULL for a weighted
       // source with no corpus tokens (epochPlan surfaces the
-      // misconfiguration) — render JSON null, don't crash on it
-      def jlong(r: org.apache.spark.sql.Row, i: Int): String =
-        if (r.isNullAt(i)) "null" else r.getLong(i).toString
-      val arr = rows.map { r =>
-        s"""{"source":${Jsons.str(r.getString(0))},"n_tokens":${r.getLong(2)},""" +
-          s""""target_tokens":${jlong(r, 4)},"epochs_bp":${jlong(r, 5)},""" +
-          s""""capped_bp":${jlong(r, 6)},"deficit_tokens":${jlong(r, 8)}}"""
-      }.mkString("[", ",", "]")
-      s"""{"command":"plan","budget":$budget,"sources":$arr}"""
+      // misconfiguration) — they render as JSON null
+      obj("command" -> "plan", "budget" -> budget, "sources" -> rows.map(r =>
+        obj(Seq("source" -> 0, "n_tokens" -> 2, "target_tokens" -> 4,
+          "epochs_bp" -> 5, "capped_bp" -> 6, "deficit_tokens" -> 8)
+          .map { case (k, i) => k -> r.get(i) }: _*)))
 
     case "bpe" =>
       // Distributed BPE training: learn the merge table, land it (plus
@@ -1904,9 +1829,8 @@ object Main {
         graft.operators.Bpe.writeMerges(spark, merges, s"$dir/merges")
         vocab.write.mode("overwrite").parquet(s"$dir/vocab")
       }
-      s"""{"command":"bpe","n_merges":${merges.length},""" +
-        s""""n_symbols":$nSymbols,"n_rounds":$rounds""" +
-        landed.fold("}")(d => s""","out":${Jsons.str(d)}}""")
+      obj("command" -> "bpe", "n_merges" -> merges.length,
+        "n_symbols" -> nSymbols, "n_rounds" -> rounds, "out" -> landed)
 
     case "decon" if o.str("mode") == "index" =>
       // STORED eval-gram index lifecycle — the sign-once/screen-forever
@@ -1921,45 +1845,39 @@ object Main {
       val n = o.int("n")
       val keyMode = o.str("key-mode")
       import graft.operators.Decontaminate
-      def grams(dir: String): (Long, Long) = {
+      def grams(dir: String): Seq[(String, Long)] = {
         // readOrEmpty: a store whose last suite was retired has no
         // partitions left; its _schema marker reads as zero rows
         val idx = graft.core.Stores.readOrEmpty(spark, dir)
-        (idx.select(col("gk")).distinct().count(),
-          idx.select(col("suite")).distinct().count())
+        Seq("n_grams" -> idx.select(col("gk")).distinct().count(),
+          "n_suites" -> idx.select(col("suite")).distinct().count())
       }
+      def indexed(field: (String, String), dir: String) =
+        obj(Seq("command" -> "decon", "mode" -> "index", field) ++
+          grams(dir): _*)
       (o.get("save-index"), o.get("append-index"),
           o.get("index")) match {
         case (Some(dir), None, None) =>
           Decontaminate.writeEvalIndex(read(spark, o.str("eval")),
             textCol, dir, n, keyMode, o.str("suite"))
-          val (nk, ns) = grams(dir)
-          s"""{"command":"decon","mode":"index",""" +
-            s""""index":${Jsons.str(dir)},"n_grams":$nk,"n_suites":$ns}"""
+          indexed("index" -> dir, dir)
         case (None, Some(dir), None) =>
           Decontaminate.appendEvalIndex(read(spark, o.str("eval")),
             textCol, dir, o.str("suite"))
-          val (nk, ns) = grams(dir)
-          s"""{"command":"decon","mode":"index","appended":${Jsons.str(dir)},""" +
-            s""""n_grams":$nk,"n_suites":$ns}"""
+          indexed("appended" -> dir, dir)
         case (None, None, Some(dir)) if o.has("retire-suite") =>
           Decontaminate.retireEvalSuite(spark, dir,
             o.str("retire-suite"))
-          val (nk, ns) = grams(dir)
-          s"""{"command":"decon","mode":"index","retired":${Jsons.str(
-            o.str("retire-suite"))},"n_grams":$nk,"n_suites":$ns}"""
+          indexed("retired" -> o.str("retire-suite"), dir)
         case (None, None, Some(dir)) =>
           val train = read(spark, o.str("in"))
           needCols(train, o, "id")
-          val hits = persistTracked(Decontaminate.ngramHitsFromIndex(train,
-            idCol, textCol, graft.core.Stores.readOrEmpty(spark, dir), n,
-            keyMode))
-          o.get("out").foreach(f =>
-            Etl.writeSingleCsv(hits.orderBy(col(idCol)), f))
-          val t = hits.agg(count(lit(1)), sum(col("n_hits"))).head()
-          val total = if (t.isNullAt(1)) 0L else t.getLong(1)
-          s"""{"command":"decon","mode":"index","n":$n,""" +
-            s""""rows":${t.getLong(0)},"total_n_hits":$total""" + outTail(o)
+          val t = Land(Decontaminate.ngramHitsFromIndex(train, idCol,
+              textCol, graft.core.Stores.readOrEmpty(spark, dir), n, keyMode),
+            Land.csvOr(o.get("out"), col(idCol)))("rows" -> count(lit(1)),
+            "total_n_hits" -> sum(col("n_hits")))
+          obj(Seq("command" -> "decon", "mode" -> "index", "n" -> n) ++ t :+
+            ("out" -> o.get("out")): _*)
         case _ => throw new IllegalArgumentException(
           "decon --mode index: pass exactly one of --save-index (with " +
             "--eval), --append-index (with --eval), or --index (with --in)")
@@ -2030,27 +1948,16 @@ object Main {
       // cap observability: a skipped viral bucket is a recall trade,
       // so the fuzzy report carries the dropped-bucket counts per side
       // instead of leaving the cap silent
-      val capJson = if (mode != "fuzzy") "" else {
-        val caps = Decontaminate.fuzzyCapReportFromSigs(train, idCol,
-            textCol, fuzzySigs.get, shingleN = o.int("shingle-n"))
-          .collect()
-          .map(r => s"""{"side":${Jsons.str(r.getAs[String]("side"))},""" +
-            s""""n_buckets":${r.getAs[Long]("n_buckets")},""" +
-            s""""n_dropped_buckets":${r.getAs[Long]("n_dropped_buckets")},""" +
-            s""""dropped_rows":${r.getAs[Long]("dropped_rows")},""" +
-            s""""max_bucket":${r.getAs[Long]("max_bucket")}}""")
-        s""","caps":${caps.mkString("[", ",", "]")}"""
-      }
-      val cached = persistTracked(rep)
-      o.get("out").foreach(f =>
-        Etl.writeSingleCsv(cached.orderBy(sortCols.map(col): _*), f))
-      val t = cached.agg(count(lit(1)), sum(col(metric))).head()
-      val total = if (t.isNullAt(1)) 0L else t.getLong(1)
+      val caps = fuzzySigs.map(sigs => Decontaminate.fuzzyCapReportFromSigs(
+          train, idCol, textCol, sigs, shingleN = o.int("shingle-n"))
+        .select("side", "n_buckets", "n_dropped_buckets", "dropped_rows",
+          "max_bucket").collect())
+      val t = Land(rep, Land.csvOr(o.get("out"), sortCols.map(col): _*))(
+        "rows" -> count(lit(1)), s"total_$metric" -> sum(col(metric)))
       // the fuzzy tier's order is the shingle order, not --n
       val effN = if (mode == "fuzzy") o.int("shingle-n") else n
-      s"""{"command":"decon","mode":${Jsons.str(mode)},"n":$effN,""" +
-        s""""rows":${t.getLong(0)},"total_$metric":$total""" + capJson +
-        outTail(o)
+      obj(Seq("command" -> "decon", "mode" -> mode, "n" -> effN) ++ t ++
+        Seq("caps" -> caps, "out" -> o.get("out")): _*)
 
     case "novelty" =>
       // Per-doc gram novelty. Three modes, the screen/vocab lifecycle:
@@ -2064,31 +1971,27 @@ object Main {
         case (Some(dir), _) =>
           val corpus = read(spark, o.str("corpus"))
           needCols(corpus, o, "id")
-          graft.operators.Novelty
-            .gramIndex(corpus, idCol, textCol, n)
-            .write.mode("overwrite").parquet(dir)
-          val nk = spark.read.parquet(dir).count()
-          s"""{"command":"novelty","index":${Jsons.str(dir)},"n_grams":$nk}"""
+          val t = Land(graft.operators.Novelty.gramIndex(corpus, idCol,
+            textCol, n), Land.Parquet(dir))("n_grams" -> count(lit(1)))
+          obj(Seq("command" -> "novelty", "index" -> dir) ++ t: _*)
         case (None, maybeIdx) =>
           val df = read(spark, o.str("in"))
           needCols(df, o, "id")
-          val nov = persistTracked(maybeIdx match {
+          val nov = maybeIdx match {
             case Some(idxDir) => graft.operators.Novelty.incrementalNovelty(
               df, idCol, textCol, spark.read.parquet(idxDir), n)
             case None =>
               graft.operators.Novelty.gramNovelty(df, idCol, textCol, n)
-          })
-          o.get("out").foreach(f =>
-            Etl.writeSingleCsv(nov.orderBy(col("id")), f))
-          val t = nov.agg(count(lit(1)),
-            count(when(col("novelty_bp") === 0, 1)),
-            sum(col("n_grams")), sum(col("n_seen"))).head()
-          val (tg, ts) = (if (t.isNullAt(2)) 0L else t.getLong(2),
-            if (t.isNullAt(3)) 0L else t.getLong(3))
-          val corpusBp = if (tg == 0L) 10000L else (tg - ts) * 10000L / tg
-          s"""{"command":"novelty","n_docs":${t.getLong(0)},""" +
-            s""""n_fully_seen":${t.getLong(1)},""" +
-            s""""corpus_novelty_bp":$corpusBp""" + outTail(o)
+          }
+          val t = Land(nov, Land.csvOr(o.get("out"), col("id")))(
+            "n_docs" -> count(lit(1)),
+            "n_fully_seen" -> count_if(col("novelty_bp") === 0),
+            "grams" -> sum(col("n_grams")), "seen" -> sum(col("n_seen")))
+          val (tg, ts) = (t("grams"), t("seen"))
+          obj("command" -> "novelty", "n_docs" -> t("n_docs"),
+            "n_fully_seen" -> t("n_fully_seen"), "corpus_novelty_bp" ->
+              (if (tg == 0L) 10000L else (tg - ts) * 10000L / tg),
+            "out" -> o.get("out"))
       }
 
     case "encode" =>
@@ -2100,14 +2003,11 @@ object Main {
       needCols(df, o, "id")
       val textCol = o.str("text")
       val seg = graft.operators.Bpe.segmentCorpus(df, textCol, merges)
-      val counts = persistTracked(graft.operators.Bpe
-        .encodeCounts(df, o.str("id"), textCol, seg))
-      o.get("out").foreach(f =>
-        Etl.writeSingleCsv(counts.orderBy(col("id")), f))
-      val t = counts.agg(count(lit(1)), sum(col("n_subwords"))).head()
-      val nSub = if (t.isNullAt(1)) 0L else t.getLong(1)
-      s"""{"command":"encode","n_merges":${merges.length},""" +
-        s""""n_docs":${t.getLong(0)},"n_subwords":$nSub""" + outTail(o)
+      val t = Land(graft.operators.Bpe.encodeCounts(df, o.str("id"),
+          textCol, seg), Land.csvOr(o.get("out"), col("id")))(
+        "n_docs" -> count(lit(1)), "n_subwords" -> sum(col("n_subwords")))
+      obj(Seq("command" -> "encode", "n_merges" -> merges.length) ++ t :+
+        ("out" -> o.get("out")): _*)
 
     case "leakage" =>
       // Split-leakage audit: canonical dup groups straddling the
@@ -2115,19 +2015,13 @@ object Main {
       val df = read(spark, o.str("in"))
       needCols(df, o, "id")
       val trainBp = o.int("train-bp")
-      val l = persistTracked(graft.etl.Preprocess
-        .splitLeakage(df, o.str("id"), o.str("text"), trainBp))
-      o.get("out").foreach(f =>
-        Etl.writeSingleCsv(l.orderBy(col("train_id"), col("val_id")), f))
-      val (groups, docs) = l
-        .agg(count(lit(1)), sum(col("n_train") + col("n_val")))
-        .head() match {
-          case r => (r.getLong(0),
-            if (r.isNullAt(1)) 0L else r.getLong(1))
-        }
-      s"""{"command":"leakage","train_bp":$trainBp,""" +
-        s""""leaked_groups":$groups,"leaked_docs":$docs""" +
-        outTail(o)
+      val t = Land(graft.etl.Preprocess.splitLeakage(df, o.str("id"),
+          o.str("text"), trainBp),
+        Land.csvOr(o.get("out"), col("train_id"), col("val_id")))(
+        "leaked_groups" -> count(lit(1)),
+        "leaked_docs" -> sum(col("n_train") + col("n_val")))
+      obj(Seq("command" -> "leakage", "train_bp" -> trainBp) ++ t :+
+        ("out" -> o.get("out")): _*)
 
     case "quality" =>
       // Gopher-style rule filter (QualityRules): land the kept docs and
@@ -2181,18 +2075,12 @@ object Main {
           afterBlock(idCol).cast("long") === r("__rep_id"), "left_anti"))
         Etl.writeSingleCsv(kept, outFile)
       }
-      val fields = Seq("n_docs", "n_killed", "kill_word_count",
-        "kill_mean_word_len", "kill_symbol_ratio", "kill_alpha_words",
-        "kill_stopwords", "kill_repetition")
-        .map(f => s""""$f":${kills.getAs[Long](f)}""").mkString(",")
-      s"""{"command":"quality","min_words":$minWords,$fields""" +
-        nBlocked.map(n => s""","n_blocklisted":$n""").getOrElse("") +
-        nBlockedRulePass.map(n =>
-          s""","n_blocklisted_rule_pass":$n""").getOrElse("") +
-        nRepKilled.map(n => s""","n_repetition_killed":$n""").getOrElse("") +
-        nRepKilledRulePass.map(n =>
-          s""","n_repetition_killed_rule_pass":$n""").getOrElse("") +
-        outTail(o)
+      obj(Seq("command" -> "quality", "min_words" -> minWords) ++
+        killFields(kills) ++ Seq("n_blocklisted" -> nBlocked,
+        "n_blocklisted_rule_pass" -> nBlockedRulePass,
+        "n_repetition_killed" -> nRepKilled,
+        "n_repetition_killed_rule_pass" -> nRepKilledRulePass,
+        "out" -> o.get("out")): _*)
 
     case "export" =>
       // Training-shard export: the pipeline's last mile. The corpus is
@@ -2236,7 +2124,7 @@ object Main {
       if (balance == "tokens")
         require(df.columns.contains(textCol),
           s"--balance tokens needs a text column '$textCol' (set --text)")
-      def exportOne(seed: String, dest: String): Seq[String] = {
+      def exportOne(seed: String, dest: String): Seq[Jsons.Raw] = {
         // tokens balance: deal round-robin over a LONGEST-FIRST order
         // (seeded shuffle breaking ties) — sorted-list bin packing in
         // one distributed sort; shard token totals end within one
@@ -2275,9 +2163,9 @@ object Main {
             expr(s"bit_xor(xxhash64(${df.columns
               .map(c => s"`$c`").mkString(", ")}))").as("csum"))
           .orderBy(col("shard")).collect().toSeq.map { r =>
-            val tok = if (r.isNullAt(2)) 0L else r.getLong(2)
-            s"""{"shard":${r.getLong(0)},"n_docs":${r.getLong(1)},""" +
-              s""""n_tokens":$tok,"checksum":${r.getLong(3)}}"""
+            obj("shard" -> r.getLong(0), "n_docs" -> r.getLong(1),
+              "n_tokens" -> (if (r.isNullAt(2)) 0L else r.getLong(2)),
+              "checksum" -> r.getLong(3))
           }
         // manifest lands INSIDE the epoch dir as an underscore file
         // (ignored by Spark's source listing, so round-trip reads of
@@ -2292,10 +2180,8 @@ object Main {
       }
       if (epochs == 1) {
         val seed = o.str("seed")
-        val per = exportOne(seed, out)
-        s"""{"command":"export","shards":$shards,"seed":${Jsons.str(seed)},""" +
-          s""""format":${Jsons.str(fmt)},"per_shard":[${per.mkString(",")}],""" +
-          s""""out":${Jsons.str(out)}}"""
+        obj("command" -> "export", "shards" -> shards, "seed" -> seed,
+          "format" -> fmt, "per_shard" -> exportOne(seed, out), "out" -> out)
       } else {
         // clear the out root first: each epoch only overwrites its own
         // epoch=K subdir, so stale epoch dirs from a previous wider
@@ -2304,13 +2190,10 @@ object Main {
         val outP = new org.apache.hadoop.fs.Path(out)
         val outFs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (outFs.exists(outP)) { outFs.delete(outP, true); () }
-        val per = (0 until epochs).map { e =>
-          val stats = exportOne(s"epoch-$e", s"$out/epoch=$e")
-          s"""{"epoch":$e,"per_shard":[${stats.mkString(",")}]}"""
-        }
-        s"""{"command":"export","shards":$shards,"epochs":$epochs,""" +
-          s""""format":${Jsons.str(fmt)},""" +
-          s""""per_epoch":[${per.mkString(",")}],"out":${Jsons.str(out)}}"""
+        val per = (0 until epochs).map(e => obj("epoch" -> e,
+          "per_shard" -> exportOne(s"epoch-$e", s"$out/epoch=$e")))
+        obj("command" -> "export", "shards" -> shards, "epochs" -> epochs,
+          "format" -> fmt, "per_epoch" -> per, "out" -> out)
       }
 
     case "datacard" =>
@@ -2330,43 +2213,35 @@ object Main {
       val (nDocs, nTokens, nChars) = (overall.getLong(0),
         if (overall.isNullAt(1)) 0L else overall.getLong(1),
         if (overall.isNullAt(2)) 0L else overall.getLong(2))
-      val bySource: Seq[String] =
+      val bySource: Seq[Jsons.Raw] =
         if (df.columns.contains(sourceCol))
           df.groupBy(col(sourceCol).cast("string").as("s"))
             .agg(count(lit(1)).as("n"), sum(nt).as("tok"))
             .orderBy(col("s")).collect().toSeq.map { r =>
               val tok = if (r.isNullAt(2)) 0L else r.getLong(2)
-              val share =
-                if (nTokens > 0) tok * 10000 / nTokens else 0L
-              s"""{"source":${Jsons.str(r.getString(0))},"n_docs":${r.getLong(1)},""" +
-                s""""n_tokens":$tok,"share_bp":$share}"""
+              obj("source" -> r.getString(0), "n_docs" -> r.getLong(1),
+                "n_tokens" -> tok,
+                "share_bp" -> (if (nTokens > 0) tok * 10000 / nTokens else 0L))
             }
         else Seq.empty
       val rep = graft.operators.QualityRules.report(df, idCol, textCol,
         minWords = o.int("min-words"), maxWords = o.int("max-words"))
       val kills = graft.operators.QualityRules.killReport(rep).head()
-      val qualityJson = Seq("n_docs", "n_killed", "kill_word_count",
-        "kill_mean_word_len", "kill_symbol_ratio", "kill_alpha_words",
-        "kill_stopwords", "kill_repetition")
-        .map(f => s""""$f":${kills.getAs[Long](f)}""").mkString(",")
       val dups = graft.operators.Dedup.exact(df, idCol, Seq(textCol))
       val dupAgg = dups.agg(count(lit(1)).as("groups"),
         sum(col("n_dups") - 1).as("extra")).head()
       val (dupGroups, dupExtra) = (dupAgg.getLong(0),
         if (dupAgg.isNullAt(1)) 0L else dupAgg.getLong(1))
       val dupRateBp = if (nDocs > 0) dupExtra * 10000 / nDocs else 0L
-      val sweepJson: String =
-        if (o.bool("neardup")) {
-          val rows = graft.operators.Dedup.similarityHistogram(df, idCol,
-              textCol, binBp = o.int("bin-bp"), maxDf = o.int("max-df"))
-            .orderBy(col("bin_bp")).collect()
-          "," + s""""neardup_bins":[${binsJson(rows)}]"""
-        } else ""
+      val neardupBins = Option.when(o.bool("neardup"))(
+        graft.operators.Dedup.similarityHistogram(df, idCol, textCol,
+            binBp = o.int("bin-bp"), maxDf = o.int("max-df"))
+          .orderBy(col("bin_bp")).collect())
       // opt-in (it pays a window-occurrence pass): what fraction of
       // corpus tokens sit inside duplicated runs of >= --longmatch
       // tokens (first carrier exempt) — the Lee et al. duplication
       // metric a release datasheet reports
-      val lmJson: String = o.get("longmatch").map { ml =>
+      val longmatch = o.get("longmatch").map { ml =>
         val (cleaned, repDf) = graft.operators.Dedup.longMatchRemoveReport(
           df, idCol, textCol, ml.toInt, maxDf = o.int("max-df"))
         val agg = cleaned.agg(
@@ -2374,17 +2249,17 @@ object Main {
           count(when(col("n_removed") > 0, 1)).as("touched")).head()
         val rep = repDf.head()
         val cut = agg.getLong(0)
-        val share = if (nTokens > 0) cut * 10000 / nTokens else 0L
-        s""","longmatch":{"min_len":${ml.toInt},""" +
-          s""""dup_tokens":$cut,"dup_token_bp":$share,""" +
-          s""""docs_touched":${agg.getLong(1)},""" +
-          s""""n_dropped_windows":${rep.getAs[Long]("n_dropped_windows")}}"""
-      }.getOrElse("")
-      s"""{"command":"datacard","n_docs":$nDocs,"n_tokens":$nTokens,""" +
-        s""""n_chars":$nChars,"sources":[${bySource.mkString(",")}],""" +
-        s""""quality":{$qualityJson},""" +
-        s""""exact_dup":{"groups":$dupGroups,"extra_copies":$dupExtra,""" +
-        s""""dup_rate_bp":$dupRateBp}$sweepJson$lmJson}"""
+        obj("min_len" -> ml.toInt, "dup_tokens" -> cut, "dup_token_bp" ->
+          (if (nTokens > 0) cut * 10000 / nTokens else 0L),
+          "docs_touched" -> agg.getLong(1),
+          "n_dropped_windows" -> rep.getAs[Long]("n_dropped_windows"))
+      }
+      obj("command" -> "datacard", "n_docs" -> nDocs, "n_tokens" -> nTokens,
+        "n_chars" -> nChars, "sources" -> bySource,
+        "quality" -> obj(killFields(kills): _*),
+        "exact_dup" -> obj("groups" -> dupGroups, "extra_copies" -> dupExtra,
+          "dup_rate_bp" -> dupRateBp),
+        "neardup_bins" -> neardupBins, "longmatch" -> longmatch)
 
     case "select" =>
       // Target-shaped data selection: score the pool against a target
@@ -2455,21 +2330,19 @@ object Main {
         case other => throw new IllegalArgumentException(
           s"unknown --mode '$other' (dsir | classifier)")
       }
-      val keptIds = persistTracked(kept)
-      val nKept = keptIds.count()
-      def keptRows() = pool.join(keptIds,
-        pool(idCol).cast("long") === keptIds("id"), "leftsemi")
-      o.get("out").foreach(f =>
-        Etl.writeSingleCsv(keptRows().orderBy(col(idCol)), f))
+      val keptRows = pool.join(kept,
+        pool(idCol).cast("long") === kept("id"), "leftsemi")
       // --out-parquet: the pipeline-chaining sink (distributed write,
-      // schema preserved) — the release path
-      o.get("out-parquet").foreach(d =>
-        keptRows().write.mode("overwrite").parquet(d))
-      s"""{"command":"select","mode":${Jsons.str(mode)},""" +
-        s""""n_pool":$nPool,"n_kept":$nKept""" +
-        o.get("out").fold("")(f => s""","out":${Jsons.str(f)}""") +
-        o.get("out-parquet").fold("")(d => s""","out_parquet":${Jsons.str(d)}""") +
-        "}"
+      // schema preserved) — the release path. Given both sinks, the
+      // parquet copy is a second write of the same (deterministic) rows.
+      val nKept = Land(keptRows, o.get("out").fold(
+          Land.parquetOr(o.get("out-parquet")))(Land.Csv(_, col(idCol))))(
+        "n_kept" -> count(lit(1)))
+      if (o.has("out"))
+        o.get("out-parquet").foreach(keptRows.write.mode("overwrite").parquet)
+      obj(Seq("command" -> "select", "mode" -> mode, "n_pool" -> nPool) ++
+        nKept ++ Seq("out" -> o.get("out"),
+        "out_parquet" -> o.get("out-parquet")): _*)
 
     case "pack" =>
       // Sequence packing (Pack.pack): concat-and-chunk the corpus into
@@ -2483,9 +2356,9 @@ object Main {
       o.get("out").foreach(d => graft.operators.Pack.segments(packPlan,
         seqLen).write.mode("overwrite").parquet(d))
       val r = graft.operators.Pack.report(packPlan, seqLen).head()
-      s"""{"command":"pack","seq_len":$seqLen,""" +
-        s""""n_seqs":${r.getLong(0)},"n_tokens":${r.getLong(1)},""" +
-        s""""last_fill_bp":${r.getLong(2)}""" + outTail(o)
+      obj("command" -> "pack", "seq_len" -> seqLen, "n_seqs" -> r.getLong(0),
+        "n_tokens" -> r.getLong(1), "last_fill_bp" -> r.getLong(2),
+        "out" -> o.get("out"))
 
     case "colloc" =>
       // Collocation mining (Vocab.collocations): top-k adjacent pairs
@@ -2496,11 +2369,10 @@ object Main {
       val top = persistTracked(graft.operators.Vocab.collocations(df,
         o.str("text"), minCount = o.long("min-count"), topK = o.int("top")))
       o.get("out").foreach(f => Etl.writeSingleCsv(top, f))
-      val rows = top.collect().map(r =>
-        s"""{"a":${Jsons.str(r.getString(0))},"b":${Jsons.str(r.getString(1))},""" +
-          s""""c2":${r.getLong(2)},"lift_e4":${r.getLong(3)}}""")
-      s"""{"command":"colloc","n":${rows.length},""" +
-        s""""top":[${rows.mkString(",")}]""" + outTail(o)
+      val rows = top.collect().map(r => obj("a" -> r.getString(0),
+        "b" -> r.getString(1), "c2" -> r.getLong(2), "lift_e4" -> r.getLong(3)))
+      obj("command" -> "colloc", "n" -> rows.length, "top" -> rows,
+        "out" -> o.get("out"))
 
     case "buckets" =>
       // CCNet perplexity buckets (Curate.surprisalBuckets): per-source
@@ -2508,14 +2380,11 @@ object Main {
       // gets the per-doc labels, the JSON line the per-bucket counts.
       val df = read(spark, o.str("in"))
       needCols(df, o, "id", "text", "source")
-      val labeled = persistTracked(graft.operators.Curate.surprisalBuckets(
-        df, o.str("id"), o.str("text"), o.str("source")))
-      o.get("out").foreach(d => labeled.write.mode("overwrite").parquet(d))
-      val counts = labeled.groupBy(col("bucket")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      s"""{"command":"buckets","head":${counts.getOrElse("head", 0L)},""" +
-        s""""middle":${counts.getOrElse("middle", 0L)},""" +
-        s""""tail":${counts.getOrElse("tail", 0L)}""" + outTail(o)
+      val t = Land(graft.operators.Curate.surprisalBuckets(df, o.str("id"),
+          o.str("text"), o.str("source")), Land.parquetOr(o.get("out")))(
+        Seq("head", "middle", "tail")
+          .map(b => b -> count_if(col("bucket") === b)): _*)
+      obj(("command" -> "buckets") +: t.toSeq :+ ("out" -> o.get("out")): _*)
 
     case "lm" =>
       // Stored unigram-LM lifecycle (the vocab subcommand's twin):
@@ -2528,19 +2397,16 @@ object Main {
         needCols(df, o, "text")
         graft.operators.Vocab.writeLm(df, o.str("text"), lmDir)
         val (_, total) = graft.operators.Vocab.readLm(spark, lmDir)
-        s"""{"command":"lm","built":${Jsons.str(lmDir)},""" +
-          s""""total_tokens":$total}"""
+        obj("command" -> "lm", "built" -> lmDir, "total_tokens" -> total)
       } else {
         needCols(df, o, "id", "text")
-        val scored = persistTracked(graft.operators.Vocab.surprisalFromLm(
-          df, o.str("id"), o.str("text"), lmDir))
-        o.get("out").foreach(d => scored.write.mode("overwrite").parquet(d))
-        val a = scored.agg(count(lit(1)).as("n"),
-          coalesce(sum(col("surprisal_cb")), lit(0L)).as("s")).head()
-        val n = a.getLong(0)
-        val mean = if (n > 0) a.getLong(1) / n else 0L
-        s"""{"command":"lm","probed":${Jsons.str(lmDir)},"n_docs":$n,""" +
-          s""""mean_surprisal_cb":$mean""" + outTail(o)
+        val t = Land(graft.operators.Vocab.surprisalFromLm(df, o.str("id"),
+            o.str("text"), lmDir), Land.parquetOr(o.get("out")))(
+          "n" -> count(lit(1)), "s" -> sum(col("surprisal_cb")))
+        val n = t("n")
+        obj("command" -> "lm", "probed" -> lmDir, "n_docs" -> n,
+          "mean_surprisal_cb" -> (if (n > 0) t("s") / n else 0L),
+          "out" -> o.get("out"))
       }
 
     case "rank" =>
@@ -2557,11 +2423,6 @@ object Main {
         needCols(df, o, "id", "text")
         df
       }
-      def stats(dir: String): String = {
-        val st = spark.read.parquet(s"$dir/stats").head()
-        s""""n_docs":${st.getAs[Long]("n_docs")},""" +
-          s""""total_tokens":${st.getAs[Long]("total")}"""
-      }
       val (idCol, textCol) = (o.str("id"), o.str("text"))
       if (o.has("remove-index")) {
         // retraction: the exact inverse of --append-index — pass the
@@ -2569,7 +2430,8 @@ object Main {
         // the stored doclen before anything mutates)
         val dir = o.str("remove-index")
         graft.operators.Rank.removeFromBm25Index(docs(), idCol, textCol, dir)
-        s"""{"command":"rank","removed_from":${Jsons.str(dir)},${stats(dir)}}"""
+        obj(Seq("command" -> "rank", "removed_from" -> dir) ++
+          bm25Stats(spark, dir): _*)
       } else (o.get("append-index"), o.get("build-index")) match {
         case (Some(dir), _) =>
           graft.operators.Rank.appendBm25Index(docs(), idCol, textCol, dir)
@@ -2578,17 +2440,17 @@ object Main {
           // its queries at max/mean× the probe IO)
           val (nb, nonEmpty, mx, meanE2, verdict) =
             graft.operators.Rank.bm25BucketBalance(spark, dir)
-          s"""{"command":"rank","appended":${Jsons.str(dir)},${stats(dir)},""" +
-            s""""n_buckets":$nb,"n_nonempty_buckets":$nonEmpty,""" +
-            s""""max_bucket_postings":$mx,""" +
-            s""""mean_bucket_postings_e2":$meanE2,""" +
-            s""""bucket_balance":${Jsons.str(verdict)}}"""
+          obj(Seq("command" -> "rank", "appended" -> dir) ++
+            bm25Stats(spark, dir) ++ Seq("n_buckets" -> nb,
+            "n_nonempty_buckets" -> nonEmpty, "max_bucket_postings" -> mx,
+            "mean_bucket_postings_e2" -> meanE2,
+            "bucket_balance" -> verdict): _*)
         case (None, Some(dir)) =>
           val buckets = o.int("buckets")
           graft.operators.Rank.buildBm25Index(docs(), idCol, textCol, dir,
             buckets)
-          s"""{"command":"rank","built":${Jsons.str(dir)},${stats(dir)},""" +
-            s""""n_buckets":$buckets}"""
+          obj(Seq("command" -> "rank", "built" -> dir) ++
+            bm25Stats(spark, dir) :+ ("n_buckets" -> buckets): _*)
         case (None, None) if o.has("queries") =>
           // batch serving: many probe queries in ONE plan from the
           // stored index — "qid:term,term;qid:term,..." (the
@@ -2605,11 +2467,10 @@ object Main {
               o.int("top")))
           o.get("out").foreach(d => ranked.write.mode("overwrite").parquet(d))
           val perQ = ranked.groupBy("qid").count().collect()
-            .map(r => s""""${r.getLong(0)}":${r.getLong(1)}""")
-          s"""{"command":"rank","idf":${Jsons.str(idfMode)},""" +
-            s""""n_queries":${queries.size},""" +
-            s""""ranked_per_query":${perQ.mkString("{", ",", "}")}""" +
-            outTail(o)
+            .map(r => r.getLong(0).toString -> r.getLong(1))
+          obj("command" -> "rank", "idf" -> idfMode,
+            "n_queries" -> queries.size,
+            "ranked_per_query" -> obj(perQ.toSeq: _*), "out" -> o.get("out"))
         case (None, None) =>
           val terms = o.list("terms")
           val topK = o.int("top")
@@ -2623,12 +2484,10 @@ object Main {
           })
           o.get("out").foreach(d => ranked.write.mode("overwrite").parquet(d))
           val hits = ranked.collect()
-          val top = hits.headOption.map(r =>
-            s""","top_id":${r.getLong(0)},""" +
-              s""""top_score_e4":${r.getLong(2)}""").getOrElse("")
-          s"""{"command":"rank","idf":${Jsons.str(idfMode)},""" +
-            s""""n_terms":${terms.size},"n_ranked":${hits.length}""" +
-            top + outTail(o)
+          obj("command" -> "rank", "idf" -> idfMode, "n_terms" -> terms.size,
+            "n_ranked" -> hits.length, "top_id" -> hits.headOption.map(_.getLong(0)),
+            "top_score_e4" -> hits.headOption.map(_.getLong(2)),
+            "out" -> o.get("out"))
       }
 
     case "release" =>
@@ -2675,10 +2534,10 @@ object Main {
       val exportJson = run(spark, "export", Map(
         "in" -> corpusDir, "id" -> "id", "text" -> "clean_text",
         "out" -> s"$outDir/shards") ++ fwd("export"))
-      s"""{"command":"release","out":${Jsons.str(outDir)},""" +
-        s""""settle":$settleJson,""" +
-        selectJson.map(s => s""""select":$s,""").getOrElse("") +
-        s""""datacard":$cardJson,"export":$exportJson}"""
+      obj("command" -> "release", "out" -> outDir,
+        "settle" -> Jsons.Raw(settleJson),
+        "select" -> selectJson.map(Jsons.Raw), "datacard" -> Jsons.Raw(cardJson),
+        "export" -> Jsons.Raw(exportJson))
 
     case "motif" =>
       // time-series motif search: when did the event stream look like
@@ -2700,11 +2559,9 @@ object Main {
       val hits = graft.operators.Motif.topKWindows(df, timeCol,
         bucketSec = o.int("bucket-sec"), pattern = pattern, k = o.int("k"))
         .collect()
-      val rows = hits.map(r =>
-        s"""{"window_start":${Jsons.str(r.getTimestamp(0).toString)},""" +
-          s""""score_e4":${r.getLong(1)},"n_events":${r.getLong(2)}}""")
-      s"""{"command":"motif","pattern":[${pattern.mkString(",")}],""" +
-        s""""windows":${rows.mkString("[", ",", "]")}}"""
+      obj("command" -> "motif", "pattern" -> pattern, "windows" -> hits.map(r =>
+        obj("window_start" -> r.getTimestamp(0).toString,
+          "score_e4" -> r.getLong(1), "n_events" -> r.getLong(2))))
 
     case "topics" =>
       // ST9 topic-admin ops surface: validate the spec and PRINT the
@@ -2760,10 +2617,8 @@ object Main {
         case other => throw new IllegalArgumentException(
           s"--execute must be shell|admin, got '$other'")
       }
-      val planJson = plan.map(_.map(Jsons.str).mkString("[", ",", "]"))
-        .mkString("[", ",", "]")
-      s"""{"command":"topics","mode":${Jsons.str(mode)},"plan":$planJson""" +
-        executed.map(e => s""","executed":${Jsons.str(e)}}""").getOrElse("}")
+      obj("command" -> "topics", "mode" -> mode, "plan" -> plan,
+        "executed" -> executed)
 
     case other =>
       throw new IllegalStateException(s"command '$other' has no body")
@@ -2772,9 +2627,10 @@ object Main {
   /** The streamlit dashboard's aggregations (A10–A14) as one JSON
     * report line over the CURRENT state of `inPath`: per-class counts +
     * rate, score summary, and — when an event-time column exists —
-    * tumbling-window counts per class. Re-reads the input on every
-    * call, so a growing scored table (the replay/score sink) yields a
-    * fresh snapshot per poll. */
+    * tumbling-window counts per class. Counts and score summary are
+    * one aggregate; the window counts are a second query. Re-reads the
+    * input on every call, so a growing scored table (the replay/score
+    * sink) yields a fresh snapshot per poll. */
   private def dashboardReport(spark: SparkSession, inPath: String,
                               width: String, poll: Int): String = {
     val df = read(spark, inPath)
@@ -2782,34 +2638,25 @@ object Main {
       df.columns.contains("anomaly_score"),
       "dashboard input needs 'prediction' and 'anomaly_score' columns " +
         "(the score/replay output shape)")
-    val cached = persistTracked(df)
-    val total = cached.count()
-    val byClass = cached.groupBy(col("prediction")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val stats = cached.agg(
-      round(avg(col("anomaly_score")), 6).as("mean"),
-      round(max(col("anomaly_score")), 6).as("max"),
-      round(min(col("anomaly_score")), 6).as("min")).head()
-    val windows = if (cached.columns.contains("timestamp")) {
-      val top = cached
-        .groupBy(window(to_timestamp(col("timestamp")), width).as("w"),
+    val score = col("anomaly_score")
+    val a = df.agg(count(lit(1)), count_if(col("prediction") === "normal"),
+      count_if(col("prediction") === "anomaly"), round(avg(score), 6),
+      round(max(score), 6), round(min(score), 6)).head()
+    val (total, anomalies) = (a.getLong(0), a.getLong(2))
+    val windows = if (!df.columns.contains("timestamp")) Seq.empty
+      else df.groupBy(window(to_timestamp(col("timestamp")), width).as("w"),
           col("prediction"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("w.start"), col("prediction"))
         .limit(20)
-        .collect()
-        .map(r => s"""{"start":"${r.getStruct(0).get(0)}",""" +
-          s""""prediction":"${r.getString(1)}","n":${r.getLong(2)}}""")
-      top.mkString("[", ",", "]")
-    } else "[]"
-    val anomalies = byClass.getOrElse("anomaly", 0L)
-    val pollField = if (poll > 0) s""""poll":$poll,""" else ""
-    s"""{"command":"dashboard",$pollField"rows":$total,""" +
-      s""""normal":${byClass.getOrElse("normal", 0L)},""" +
-      s""""anomaly":$anomalies,""" +
-      s""""anomaly_rate":${if (total == 0) 0.0 else anomalies.toDouble / total},""" +
-      s""""score_mean":${stats.get(0)},"score_max":${stats.get(1)},""" +
-      s""""score_min":${stats.get(2)},"windows":$windows}"""
+        .collect().toSeq
+        .map(r => obj("start" -> String.valueOf(r.getStruct(0).get(0)),
+          "prediction" -> r.getString(1), "n" -> r.getLong(2)))
+    obj("command" -> "dashboard", "poll" -> Option.when(poll > 0)(poll),
+      "rows" -> total, "normal" -> a.getLong(1), "anomaly" -> anomalies,
+      "anomaly_rate" -> (if (total == 0) 0.0 else anomalies.toDouble / total),
+      "score_mean" -> a.get(3), "score_max" -> a.get(4),
+      "score_min" -> a.get(5), "windows" -> windows).text
   }
 
   /** Live-refresh mode (streamlit_dashboard.py:47-89's polling loop as
@@ -2818,15 +2665,14 @@ object Main {
     * the FINAL report is the return value (so the CLI's single
     * result-line contract holds — `main` prints the return). Each poll
     * re-reads the input, so rows appended between polls show up in the
-    * next snapshot; each poll releases its own cache. Package-private
+    * next snapshot. Package-private
     * so tests can drive the loop with an `onPoll` that mutates the
     * input deterministically. */
   private[graft] def dashboardFollow(spark: SparkSession, inPath: String,
                                      width: String, polls: Int,
                                      intervalMs: Long,
                                      onPoll: String => Unit): String = {
-    def report(poll: Int) = graft.core.Caching.scopedRelease(
-      dashboardReport(spark, inPath, width, poll))
+    def report(poll: Int) = dashboardReport(spark, inPath, width, poll)
     var i = 1
     while (i < polls) {
       onPoll(report(i))

@@ -22,10 +22,8 @@ object Verify {
         _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
         .foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Jsons.str(k)}: ${Jsons.str(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Jsons.obj(SparkEntry.oracleSql.toSeq: _*).text)
     spark.stop()
   }
 }

@@ -60,9 +60,8 @@ object StoreFsck {
     * "removed_lease"). */
   final case class Finding(kind: String, path: String, detail: String,
                            action: String) {
-    def json: String =
-      s"""{"kind":${Jsons.str(kind)},"path":${Jsons.str(path)},""" +
-        s""""detail":${Jsons.str(detail)},"action":${Jsons.str(action)}}"""
+    def json: String = Jsons.obj("kind" -> kind, "path" -> path,
+      "detail" -> detail, "action" -> action).text
   }
 
   private val MaxRounds = 6

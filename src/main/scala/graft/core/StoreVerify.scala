@@ -46,13 +46,12 @@ object StoreVerify {
 
   /** One invariant verdict. `ok = true` means the invariant HELD.
     * Details routinely embed exception messages (multi-line on Spark
-    * errors), so quoting goes through [[Jsons.str]] — control chars
-    * included — or the audit JSON would be malformed exactly when a
-    * store is damaged. */
+    * errors), so the JSON renders through [[Jsons.obj]], control chars
+    * escaped, or the audit JSON would be malformed exactly when a store
+    * is damaged. */
   final case class Check(invariant: String, ok: Boolean, detail: String) {
-    def json: String =
-      s"""{"invariant":${Jsons.str(invariant)},"ok":$ok,""" +
-        s""""detail":${Jsons.str(detail)}}"""
+    def json: String = Jsons.obj("invariant" -> invariant, "ok" -> ok,
+      "detail" -> detail).text
   }
 
   /** Detect the store family under `dir` by its layout and run that

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, NumericType, StringType}
 
+import graft.core.Jsons
+
 /** Batch-ETL stages with the semantics of the reference preprocessing
   * chain (reference scripts/preprocess_cicids2017.py:98-342), re-expressed
   * as composable `DataFrame => DataFrame` transforms that each stay a
@@ -88,9 +90,9 @@ object Etl {
         }
       }.toSeq: _*)
 
-    def toJson: String = stats.toSeq.sortBy(_._1).map { case (c, (m, s)) =>
-      s"""{"column":"$c","mean":$m,"std":$s}"""
-    }.mkString("[", ",", "]")
+    def toJson: String = Jsons.value(stats.toSeq.sortBy(_._1).map {
+      case (c, (m, s)) => Jsons.obj("column" -> c, "mean" -> m, "std" -> s)
+    })
   }
 
   /** A4: fit mean/std-pop for the given columns in ONE distributed

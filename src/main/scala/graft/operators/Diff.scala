@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Corpus snapshot diff — what changed between two crawls/settles of
@@ -52,10 +52,14 @@ object Diff {
     * count(when(...)) rather than sum(when/otherwise): count is 0 over
     * an empty frame where sum is NULL — two empty snapshots roll up to
     * zeros, not a row of nulls. */
-  def diffSummary(diff: DataFrame): DataFrame =
-    diff.agg(
-      count(when(col("status") === "added", 1)).as("n_added"),
-      count(when(col("status") === "removed", 1)).as("n_removed"),
-      count(when(col("status") === "changed", 1)).as("n_changed"),
-      count(when(col("status") === "unchanged", 1)).as("n_unchanged"))
+  def diffSummary(diff: DataFrame): DataFrame = {
+    val cols = summary.map { case (k, c) => c.as(k) }
+    diff.agg(cols.head, cols.tail: _*)
+  }
+
+  /** The summary's (name, aggregate) pairs, for a caller that tallies
+    * them while it writes the diff. */
+  val summary: Seq[(String, Column)] =
+    Seq("added", "removed", "changed", "unchanged")
+      .map(s => s"n_$s" -> count(when(col("status") === s, 1)))
 }

@@ -34,10 +34,12 @@ object Layout {
     * of `rangeCol` (tight per-file and per-row-group min/max stats). */
   def writeRangeSorted(df: DataFrame, path: String, rangeCol: String,
                        numFiles: Int): Unit =
+    rangeSorted(df, rangeCol, numFiles).write.mode("overwrite").parquet(path)
+
+  /** `df` in the partitions [[writeRangeSorted]] writes, one per file. */
+  def rangeSorted(df: DataFrame, rangeCol: String, numFiles: Int): DataFrame =
     df.repartitionByRange(numFiles, col(rangeCol))
       .sortWithinPartitions(col(rangeCol))
-      .write.mode("overwrite")
-      .parquet(path)
 
   /** Z-order (Morton-curve) layout over TWO numeric columns — the
     * multi-dimensional member of the layout family: `writeRangeSorted`
@@ -58,6 +60,15 @@ object Layout {
     * either column maps to grid cell 0 (nulls cluster, never spray). */
   def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
                     numFiles: Int, bits: Int = 16): DataFrame = {
+    zOrdered(df, colA, colB, numFiles, bits)
+      .write.mode("overwrite").parquet(path)
+    read(df.sparkSession, path)
+  }
+
+  /** `df` in the partitions [[writeZOrdered]] writes, one per file. The
+    * bounds aggregate runs here, before the plan is returned. */
+  def zOrdered(df: DataFrame, colA: String, colB: String, numFiles: Int,
+               bits: Int = 16): DataFrame = {
     require(bits >= 1 && bits <= 31, s"bits must be in [1,31], got $bits")
     // LOUD type gate: cast("double") of a string yields NULL, which
     // would silently collapse that dimension to grid cell 0 — a
@@ -91,8 +102,6 @@ object Layout {
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-      .write.mode("overwrite").parquet(path)
-    read(df.sparkSession, path)
   }
 
   /** Read back a layout written by the writers above. */

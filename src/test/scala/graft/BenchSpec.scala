@@ -60,6 +60,13 @@ class BenchSpec extends AnyFunSuite {
       .contains("did you mean ann_knn_join?"))
   }
 
+  test("flags: a key prefix hints a key it starts") {
+    // plain edit distance named ann_ivf here
+    val msg = rejected("--only", "q6")
+    assert(msg.contains("unknown query key 'q6'") &&
+      """did you mean q6\d""".r.findFirstIn(msg).isDefined, msg)
+  }
+
   test("flags: --only selects exactly its keys, name-sorted") {
     val (o, selected, isolate) = Bench.parseArgs(Array(
       "--only", "q02_filter_project,q01_pricing_summary",

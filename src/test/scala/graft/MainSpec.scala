@@ -18,6 +18,39 @@ class MainSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** [[graft.Main]] as these tests drive it: every result line a call
+    * returns, or a dashboard poll hands to `onPoll`, must parse as ONE
+    * strict JSON object (no trailing text, no duplicate key, no NaN). */
+  private object Main {
+    private val mapper = com.fasterxml.jackson.databind.json.JsonMapper
+      .builder()
+      .enable(com.fasterxml.jackson.core.StreamReadFeature
+        .STRICT_DUPLICATE_DETECTION)
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature
+        .FAIL_ON_TRAILING_TOKENS)
+      .build()
+
+    def json(line: String): String = {
+      assert(mapper.readTree(line).isObject, line)
+      line
+    }
+
+    def run(spark: org.apache.spark.sql.SparkSession, cmd: String,
+            opts: Map[String, String]): String =
+      json(graft.Main.run(spark, cmd, opts))
+
+    def dashboardFollow(spark: org.apache.spark.sql.SparkSession,
+                        inPath: String, width: String, polls: Int,
+                        intervalMs: Long, onPoll: String => Unit): String =
+      json(graft.Main.dashboardFollow(spark, inPath, width, polls,
+        intervalMs, line => onPoll(json(line))))
+
+    def commands: Seq[Cli.Cmd] = graft.Main.commands
+    def usage: String = graft.Main.usage
+    def parseOpts(args: Array[String]): Map[String, String] =
+      graft.Main.parseOpts(args)
+  }
+
   test("preprocess → train → score chain via the CLI") {
     val rnd = new scala.util.Random(11)
     val raw = ((1 to 50).map(i => (s"f$i", 10.0 + rnd.nextGaussian(),
@@ -329,6 +362,28 @@ class MainSpec extends AnyFunSuite {
     assert(res.contains(""""kept_docs":6"""), res)
     assert(res.contains(""""kept_tokens":24"""), res)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(outFile)))
+  }
+
+  test("job pins: score, curate and leakage without --out tally in their " +
+    "one write") {
+    import graft.TestSpark.jobsOf
+    val docs = s"${TestSpark.sf}/documents.parquet"
+    val base = tmpDir("main_jobs")
+    spark.read.parquet(docs).select("doc_id", "n_chars")
+      .write.parquet(s"$base/num")
+    Main.run(spark, "train", Map("in" -> s"$base/num",
+      "out" -> s"$base/model", "epochs" -> "1"))
+    val jobs = Seq(
+      "score" -> Map("in" -> s"$base/num", "model" -> s"$base/model",
+        "out" -> s"$base/scored.csv"),
+      "curate" -> Map("in" -> docs, "out" -> s"$base/kept.csv",
+        "budget" -> "2000"),
+      "leakage" -> Map("in" -> docs))
+      .map { case (cmd, opts) => cmd -> jobsOf(Main.run(spark, cmd, opts))._2 }
+    // no tally runs a job of its own and score's forward pass runs once
+    // (a count or aggregate per tally, a persist filled by its own job
+    // and a second scoring pass made these 6, 15 and 5)
+    assert(jobs === Seq("score" -> 4, "curate" -> 10, "leakage" -> 3), jobs)
   }
 
   test("screen flags ingest near-dups against a saved signature index") {
@@ -724,6 +779,15 @@ class MainSpec extends AnyFunSuite {
     }
     assert(unknown.getMessage.contains("did you mean rank?"),
       unknown.getMessage)
+  }
+
+  test("option table: a command-name prefix hints the command it starts") {
+    // plain edit distance would name the nearest short command (bpe)
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, "rel", Map.empty)
+    }
+    assert(e.getMessage.contains("unknown command 'rel'") &&
+      e.getMessage.contains("did you mean release?"), e.getMessage)
   }
 
   test("option table: release declares exactly the keys it forwards") {
