@@ -899,19 +899,7 @@ object Main {
       // always lands in a FRESH --out, never in place
       val srcDir = o.str("compact")
       val outDir = o.str("out")
-      def dataFiles(dir: String): Long = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) 0L
-        else {
-          var n = 0L
-          val it = fs.listFiles(p, true)
-          while (it.hasNext) {
-            if (it.next().getPath.getName.startsWith("part-")) n += 1
-          }
-          n
-        }
-      }
+      def dataFiles(dir: String) = graft.core.Stores.dataFiles(spark, dir)
       val before = dataFiles(s"$srcDir/cells") + dataFiles(s"$srcDir/by_id")
       graft.operators.Ivf.compactIndex(spark, srcDir, outDir)
       val after = dataFiles(s"$outDir/cells") + dataFiles(s"$outDir/by_id")

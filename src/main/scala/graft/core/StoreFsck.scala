@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * Scaladoc crash-semantics notes.
   *
   * The windows (each produced by a specific step of
-  * [[Stores.promoteNext]] / [[Stores.swapPartitions]], exercised
+  * [[Stores.replace]] / [[Stores.replaceParts]], exercised
   * step-by-step in StoreFsckSpec via [[Stores.withCrashAt]]):
   *
   *  - **`X_next` beside a live `X`** — a successor landed but the
@@ -31,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   *  - **`X` beside `X_old`** — death after the promote, before the
   *    aside cleanup. Drop `X_old`.
   *  - **`X_rm_next` partition-swap staging** — death anywhere inside
-  *    [[Stores.swapPartitions]]. Per aside `_old_pc=v`: live present →
+  *    [[Stores.replaceParts]]. Per aside `_old_pc=v`: live present →
   *    drop the superseded aside; live absent with a staged successor →
   *    finish that partition's swap; live absent without one → restore
   *    the aside. Then, with a `_SUCCESS` marker (the staging write
@@ -119,12 +119,7 @@ object StoreFsck {
   }
 
   private def siblingPaths(root: Path): Seq[Path] =
-    // _hist_next/_hist_old: the funnel-history fold lands its
-    // successor beside the `_hist` sibling store, so `store --fsck
-    // <funnel>` must reach those windows too
-    Seq("_next", "_rm_next", "_old", "_lease", "_settled_rm_next",
-        "_hist_next", "_hist_old")
-      .map(suf => new Path(root.toString.stripSuffix("/") + suf))
+    Stores.artifactsOf(root.toString).map(new Path(_))
 
   /** Visit only `root`'s name-derived sibling artifacts — the whole
     * sweep when `root` itself is absent (promote-interrupted leaves
@@ -227,8 +222,7 @@ object StoreFsck {
       // staging/aside dirs are handled as units by their fixers —
       // never descend into them (their contents are not stores)
       val n = st.getPath.getName
-      if (st.isDirectory && !n.endsWith("_next") && !n.endsWith("_old")
-          && !n.startsWith("_old_"))
+      if (st.isDirectory && !Stores.isArtifact(n) && !n.startsWith("_old_"))
         walk(fs, st.getPath)(f)
     }
   }
@@ -264,7 +258,8 @@ object StoreFsck {
       // validate it against
       Seq(Finding("orphan_next", next.toString,
         s"successor staged but no live $base and no aside — likely a " +
-          "crashed first build; finish or remove it by hand", "report"))
+          "crashed first build; re-run the build (it overwrites the " +
+          "successor) or remove it by hand", "report"))
     } else if (baseName == "stats" && isBm25Root(fs, next.getParent)) {
       fixBm25StatsNext(spark, fs, next, base, repair)
     } else if (baseName == "doclen" && isBm25Root(fs, next.getParent)) {

@@ -239,9 +239,9 @@ object StoreVerify {
     * family is audited once, on the frame detect read, and not
     * descended into (its legs/partitions are that family's internals);
     * unrecognized dirs are walked further. A bad `sample` slice fails
-    * before the walk. Store-lifecycle artifacts (`_next`/`_old`/
-    * `_rm_next` siblings, hidden names) are fsck's domain and skipped
-    * here. Kept stores run WITHOUT the signature pairing in tree mode
+    * before the walk. Store-lifecycle artifacts
+    * ([[Stores.isArtifact]]) and hidden names are fsck's domain and
+    * skipped here. Kept stores run WITHOUT the signature pairing in tree mode
     * (pairing is per-store knowledge — run the targeted `--verify
     * <kept> --sig <sig>` for the agreement checks). Returns (path,
     * family, checks) per store in path order. */
@@ -261,8 +261,7 @@ object StoreVerify {
       // skipped by its own name (a lake legitimately called `…_old`
       // would otherwise "verify" zero stores)
       if (!isRoot && (name.startsWith("_") || name.startsWith(".") ||
-          name.endsWith("_next") || name.endsWith("_old") ||
-          name.endsWith("_rm_next") || name.endsWith("_lease"))) ()
+          Stores.isArtifact(name))) ()
       else detectFrame(spark, p.toString, idCol) match {
         case Success(Some((family, frame))) =>
           // per-store isolation: one damaged store must not abort the
@@ -525,7 +524,7 @@ object StoreVerify {
       sigKeys.map(k => Option.when(md.contains(k))(md.getLong(k)))
     }
     val baseParams = params(base)
-    val settledP = dir.stripSuffix("/") + "_settled"
+    val settledP = Stores.settledOf(dir)
     val fs = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(
@@ -565,7 +564,7 @@ object StoreVerify {
     sigPath.fold(Seq(unique(tally(kept, Seq("id"))("dup")))) { sp =>
       val fs = new Path(sp)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val settledP = sp.stripSuffix("/") + "_settled"
+      val settledP = Stores.settledOf(sp)
       // every side cut by the SAME id rule, so slice agreement is exact
       // agreement; signature ids outside the slice cannot match sliced
       // kept ids — cutting them is free IO off the audit
@@ -987,9 +986,7 @@ object StoreVerify {
     if (hasMarker)
       out += Check("evalgram_marker_params", markerParams.isDefined,
         s"marker build params: $markerParams")
-    val liveSuites = fs.listStatus(new Path(dir)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("suite="))
-      .map(_.getPath.getName.stripPrefix("suite="))
+    val liveSuites = Stores.partitionValues(spark, dir, "suite")
     if (liveSuites.nonEmpty) {
       // with live suites present, the frame detect read IS the live data
       val liveParams = params(live)

@@ -1,21 +1,49 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Shared store-lifecycle plumbing for the parquet side-stores (LM,
-  * BM25 stats, signature indexes): never rewrite a serving store in
-  * place — land the successor beside it and swap.
+/** The one way to rewrite a graft store (registry, kept corpus,
+  * funnel, LM, BM25, IVF, signature, long-match and eval-gram
+  * indexes): never in place — land the successor beside the store,
+  * then commit it by rename. Two calls cover every rewrite:
+  *
+  *  - [[replace]] — a whole store dir. The successor is staged at
+  *    `${path}_next` and promoted: the live store moves aside to
+  *    `${path}_old`, the successor renames in, the aside is dropped.
+  *  - [[replaceParts]] — named Hive partitions of a store. The
+  *    successors are staged under `${live}_rm_next` and swapped in one
+  *    partition at a time behind a swap manifest; a partition with no
+  *    successor (or every partition, when no rows are given) is
+  *    emptied.
+  *
+  * First-land rule, the same for every store: when `path` is absent,
+  * a lingering `${path}_old` means an interrupted promote, and the call
+  * refuses and names `store --fsck --repair` (writing a fresh store
+  * then would let a later repair roll it back). Otherwise the
+  * successor stages at `_next` as usual and renames into the empty
+  * slot; a stale `_next` from a crashed first build is overwritten.
+  *
+  * Every rename or delete of store data is a crash step (see
+  * [[withCrashAt]]) and each crash window it leaves is one that
+  * [[StoreFsck]] repairs. A `replace` or `replaceParts` run inside
+  * another `replace`'s stage body commits before the outer store
+  * promotes, so every inner crash step finds the outer successor
+  * committed beside its store and fsck rolls both forward. Callers
+  * hold the store's [[withLease]] around the call; one writer at a
+  * time.
   */
 object Stores {
 
   /** Test-only crash injection for the fsck specs: while armed (≥ 0) on
-    * the calling thread, every rename/delete step inside
-    * [[swapPartitions]]/[[promoteNext]] that runs on that thread
-    * decrements it, and the step that reaches −1 THROWS instead of
-    * running — "kill the process between step k and step k+1", so a
-    * spec can exercise every crash window mechanically. Thread-scoped:
-    * a store step on any other thread never sees it. Production never
-    * arms it; specs arm it only through [[withCrashAt]]. */
+    * the calling thread, every rename/delete step of store data that
+    * runs on that thread decrements it, and the step that reaches −1
+    * THROWS instead of running — "kill the process between step k and
+    * step k+1", so a spec can exercise every crash window mechanically.
+    * Thread-scoped: a store step on any other thread never sees it.
+    * Production never arms it; specs arm it only through
+    * [[withCrashAt]]. */
   private val crashCountdown: ThreadLocal[Int] =
     ThreadLocal.withInitial[Int](() => -1)
 
@@ -37,7 +65,7 @@ object Stores {
   }
 
   /** Sibling writer-lease path for a store root: a FILE beside the
-    * store (never inside — [[promoteNext]] renames the store dir
+    * store (never inside — [[replace]] renames the store dir
     * itself, and a lease that travelled with the rename could never be
     * released). */
   def leasePath(storeRoot: String): String =
@@ -68,8 +96,8 @@ object Stores {
     * writers externally). */
   def withLease[A](spark: SparkSession, storeRoot: String,
                    who: String)(body: => A): A = {
-    val p = new org.apache.hadoop.fs.Path(leasePath(storeRoot))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = new Path(leasePath(storeRoot))
+    val fs = fsOf(spark, p)
     requireAtomicCreate(spark, fs.getUri.getScheme, who)
     val local = fs.getUri.getScheme == "file"
     val out =
@@ -171,84 +199,135 @@ object Stores {
         "pointer-file generation layout for object stores")
   }
 
-  /** Clear a stale partition-swap staging dir before re-staging — with
-    * the guard the blind delete was missing: a staging dir holding
-    * `_old_…` asides is a CRASHED MID-SWAP (the live store is half
-    * old/half new and some pre-swap copies exist only here), so
-    * deleting it would destroy the roll-forward evidence `store --fsck
-    * --repair` needs and leave the re-staged operation refusing on
-    * partial presence forever. Refuse loudly instead; a marker-only or
-    * never-swapped leftover (no asides) deletes as before. */
-  def clearStaging(spark: SparkSession, tmp: String, who: String): Unit = {
-    val tp = new org.apache.hadoop.fs.Path(tmp)
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tp)) {
-      val midSwap = fs.listStatus(tp)
-        .exists(_.getPath.getName.startsWith("_old_"))
-      require(!midSwap,
-        s"$who: stale staging $tmp holds mid-swap asides from a " +
-          "crashed writer — run `store --fsck <store> --repair` before " +
-          "retrying (deleting it would destroy the roll-forward " +
-          "evidence and strand a half-swapped store)")
-      require(fs.delete(tp, true), s"$who: could not clear stale $tmp")
+  private def strip(path: String): String = path.stripSuffix("/")
+
+  /** Where [[replace]] stages the successor of `path`. */
+  def nextOf(path: String): String = strip(path) + "_next"
+
+  private def oldOf(path: String): String = strip(path) + "_old"
+
+  private def partsStagingOf(live: String): String =
+    strip(live) + "_rm_next"
+
+  /** The settled per-batch sidecar of a signature store. */
+  def settledOf(sigPath: String): String = strip(sigPath) + "_settled"
+
+  /** The folded history sibling of a funnel store. */
+  def histOf(funnelPath: String): String = strip(funnelPath) + "_hist"
+
+  /** Name suffixes of the lifecycle artifacts beside a store: staging,
+    * partition staging, aside, lease. */
+  private val ArtifactSuffixes = Seq("_next", "_rm_next", "_old", "_lease")
+
+  /** True for a store-lifecycle artifact name (fsck's domain). */
+  private[core] def isArtifact(name: String): Boolean =
+    ArtifactSuffixes.exists(name.endsWith)
+
+  /** Every artifact path a crashed writer can leave beside `root`: its
+    * own, plus those of the sidecars derived from it (the settled
+    * sidecar's partition staging, the funnel history's promote). */
+  private[core] def artifactsOf(root: String): Seq[String] =
+    ArtifactSuffixes.map(strip(root) + _) ++ Seq(
+      partsStagingOf(settledOf(root)), nextOf(histOf(root)),
+      oldOf(histOf(root)))
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Replace the store dir `path` by what `stage` writes to the staging
+    * path it is given (`${path}_next`), then promote it — or land it,
+    * under the first-land rule, when `path` is absent. */
+  def replace(spark: SparkSession, path: String, who: String)(
+      stage: String => Unit): Unit = {
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    val firstLand = !fs.exists(p)
+    if (firstLand && fs.exists(new Path(oldOf(path))))
+      throw new IllegalStateException(
+        s"$who: $path is absent but ${oldOf(path)} exists — an " +
+          s"interrupted promote (its successor, if it landed, is " +
+          s"${nextOf(path)}); a fresh store written now would be rolled " +
+          s"back by a later repair. Run `store --fsck $path --repair` " +
+          "first, then retry")
+    stage(nextOf(path))
+    if (!firstLand) promoteNext(spark, path, who)
+    else {
+      requireAtomicRename(spark, fs.getUri.getScheme, who)
+      step(s"first land of ${nextOf(path)}")
+      require(fs.rename(new Path(nextOf(path)), p),
+        s"$who: could not land ${nextOf(path)} as $p")
     }
   }
 
-  /** Swap a named set of Hive partitions of `liveDir` for their
-    * successors under `nextDir` (which holds `partCol=v` subdirs for
-    * the partitions that still have rows): each live `partCol=v` dir
-    * moves ASIDE (under `nextDir/_old_…`) before its successor renames
-    * in — nothing is DELETED until its replacement is in place, so no
-    * crash window loses a partition's rows (a crash mid-swap leaves
-    * the pre-swap data recoverable under the `_old_` name; the
-    * promoteNext discipline applied per partition). A partition with
-    * NO successor dir stays out, which is how a removal empties one.
-    * Untouched partitions are never listed, read, or moved. Re-running
-    * the same logical operation converges (the caller re-derives
-    * `nextDir` from the already-partially-updated live data, so
-    * converged partitions rewrite to themselves). One writer at a
-    * time; `nextDir` — asides included — is removed at the end. */
-  def swapPartitions(spark: SparkSession, liveDir: String,
-                     nextDir: String, partCol: String,
-                     values: Seq[Long], who: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(liveDir)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireAtomicRename(spark, fs.getUri.getScheme, who)
-    // swap manifest: which partitions this swap OWNS and whether each
-    // has a staged successor ("v 1") or is being EMPTIED ("v 0"),
-    // persisted before the first rename. Without it, two crash states
-    // are byte-identical on disk and fsck could not repair: "this
-    // partition's swap fully completed" and "this partition's empty-
-    // case never started" both read staged-absent/aside-absent/live-
-    // present. Hidden name: parquet reads ignore it.
-    val mf = new org.apache.hadoop.fs.Path(s"$nextDir/_swap_manifest")
-    val out = fs.create(mf, true)
-    try out.write((partCol +: values.map { v =>
-        val staged = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$nextDir/$partCol=$v"))
-        s"$v ${if (staged) 1 else 0}"
-      }).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    values.foreach { v =>
-      val lp = new org.apache.hadoop.fs.Path(s"$liveDir/$partCol=$v")
-      val op = new org.apache.hadoop.fs.Path(s"$nextDir/_old_$partCol=$v")
-      val np = new org.apache.hadoop.fs.Path(s"$nextDir/$partCol=$v")
-      if (fs.exists(lp)) {
-        step(s"aside of $lp")
-        require(fs.rename(lp, op), s"$who: could not move $lp aside")
-      }
-      if (fs.exists(np)) {
-        step(s"swap-in of $np")
-        require(fs.rename(np, lp), s"$who: could not swap $np into $lp")
-      }
-      step(s"aside delete of $op")
-      require(fs.delete(op, true) || !fs.exists(op),
-        s"$who: could not remove superseded $op")
+  /** Replace the `partCol=v` partitions of `live` for each of `values`
+    * by the partitions of `rows` (partition column cast to long), or
+    * empty them all when `rows` is None: `rows` is staged under
+    * `${live}_rm_next`, then each named partition swaps in — or, with
+    * no staged successor, is emptied. Partitions not named are never
+    * listed, read or moved. */
+  def replaceParts(spark: SparkSession, live: String, partCol: String,
+                   values: Seq[String], who: String,
+                   rows: Option[DataFrame] = None): Unit = {
+    val staging = partsStagingOf(live)
+    clearStaging(spark, staging, who)
+    rows.foreach(_.withColumn(partCol, col(partCol).cast("long"))
+      .write.partitionBy(partCol).mode("overwrite").parquet(staging))
+    swapPartitions(spark, live, staging, partCol, values, who)
+  }
+
+  /** Delete a whole store dir (a sidecar folded elsewhere) as one crash
+    * step. */
+  def drop(spark: SparkSession, path: String, who: String): Unit = {
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    step(s"drop of $p")
+    require(fs.delete(p, true) || !fs.exists(p),
+      s"$who: could not remove $p")
+  }
+
+  /** The values of `dir`'s `partCol=v` partition dirs (none when `dir`
+    * is absent). */
+  def partitionValues(spark: SparkSession, dir: String,
+                      partCol: String): Seq[String] = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, p)
+    if (!fs.exists(p)) Seq.empty
+    else Option(fs.globStatus(new Path(s"${strip(dir)}/$partCol=*")))
+      .getOrElse(Array.empty)
+      .map(_.getPath.getName.stripPrefix(s"$partCol=")).toSeq
+  }
+
+  /** Data files under `dir` (none when `dir` is absent): every file
+    * whose path below `dir` has no hidden (`_`/`.`) component —
+    * markers, manifests and the `_schema` dir are not data. */
+  def dataFiles(spark: SparkSession, dir: String): Long = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, p)
+    val root = fs.makeQualified(p).toString.stripSuffix("/")
+    val it = if (fs.exists(p)) fs.listFiles(p, true) else null
+    var n = 0L
+    while (it != null && it.hasNext) {
+      val rel = it.next().getPath.toString.stripPrefix(root)
+      if (!rel.split('/').exists(c =>
+          c.startsWith("_") || c.startsWith("."))) n += 1
     }
-    step(s"next-dir delete of $nextDir")
-    fs.delete(new org.apache.hadoop.fs.Path(nextDir), true)
-    ()
+    n
+  }
+
+  /** Rewrite every `partCol=v` partition of `live` to one file (same
+    * rows) through [[replaceParts]] — the read-amplification escape for
+    * a store fragmented by appends and removals. Returns (data files
+    * before, data files after, partitions rewritten). */
+  def compactParts(spark: SparkSession, live: String, partCol: String,
+                   who: String): (Long, Long, Long) = {
+    val before = dataFiles(spark, live)
+    val parts = partitionValues(spark, live, partCol)
+    if (parts.nonEmpty)
+      replaceParts(spark, live, partCol, parts, who,
+        Some(spark.read.parquet(live)
+          .withColumn(partCol, col(partCol).cast("long"))
+          .repartition(col(partCol))))
+    (before, dataFiles(spark, live), parts.length.toLong)
   }
 
   /** Land a zero-row `_schema` marker under `dir` — the empty-store
@@ -260,8 +339,7 @@ object Stores {
     * preserved) lives under an underscore name, which Spark's file
     * index treats as hidden — the live read never sees it; only
     * [[readOrEmpty]]'s fallback does. Written once at store creation. */
-  def writeSchemaMarker(df: org.apache.spark.sql.DataFrame,
-                        dir: String): Unit =
+  def writeSchemaMarker(df: DataFrame, dir: String): Unit =
     df.limit(0).coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/_schema")
 
@@ -275,17 +353,16 @@ object Stores {
     * reader does, see no difference.) A dir with neither data nor
     * marker still fails loudly — that is a wrong path, not an emptied
     * store. */
-  def readOrEmpty(spark: SparkSession,
-                  dir: String): org.apache.spark.sql.DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def readOrEmpty(spark: SparkSession, dir: String): DataFrame = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, p)
     val visible = fs.exists(p) && fs.listStatus(p).exists { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
     if (visible) spark.read.parquet(dir)
     else {
-      val marker = new org.apache.hadoop.fs.Path(s"$dir/_schema")
+      val marker = new Path(s"$dir/_schema")
       require(fs.exists(marker),
         s"$dir has no readable data and no _schema marker — not a " +
           "graft store (or one created before the empty-store " +
@@ -294,28 +371,96 @@ object Stores {
     }
   }
 
-  /** Crash-safe promotion of `${path}_next` over `path`: the old store
-    * moves ASIDE before the new one promotes, so no failure window
-    * leaves the store absent — a crash leaves either the old store in
-    * place, or both (`_old` recoverable). Hadoop rename/delete report
-    * failure as a false RETURN, not an exception — an unchecked false
-    * would leave the stale store serving after the successor was
-    * already built. Fail loudly instead. One writer at a time, the
-    * usual append contract. */
-  def promoteNext(spark: SparkSession, path: String, who: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Clear a stale partition-swap staging dir before re-staging. A
+    * staging dir holding `_old_…` asides is a crashed mid-swap (the
+    * live store is half old, half new, and some pre-swap copies exist
+    * only here): deleting it would destroy the roll-forward evidence
+    * `store --fsck --repair` needs, so refuse instead. A leftover with
+    * no asides deletes. */
+  private def clearStaging(spark: SparkSession, tmp: String,
+                           who: String): Unit = {
+    val tp = new Path(tmp)
+    val fs = fsOf(spark, tp)
+    if (fs.exists(tp)) {
+      val midSwap = fs.listStatus(tp)
+        .exists(_.getPath.getName.startsWith("_old_"))
+      require(!midSwap,
+        s"$who: stale staging $tmp holds mid-swap asides from a " +
+          "crashed writer — run `store --fsck <store> --repair` before " +
+          "retrying (deleting it would destroy the roll-forward " +
+          "evidence and strand a half-swapped store)")
+      require(fs.delete(tp, true), s"$who: could not clear stale $tmp")
+    }
+  }
+
+  /** Swap the named partitions of `liveDir` for their successors under
+    * `nextDir`: each live `partCol=v` dir moves aside (to
+    * `nextDir/_old_partCol=v`) before its successor renames in, and the
+    * aside is deleted only after, so no crash window loses a
+    * partition's rows. A value with no successor dir is emptied.
+    * Re-running the same logical operation converges (the caller
+    * re-derives `nextDir` from the partially updated live data).
+    * `nextDir`, asides included, is removed at the end. */
+  private def swapPartitions(spark: SparkSession, liveDir: String,
+                             nextDir: String, partCol: String,
+                             values: Seq[String], who: String): Unit = {
+    val fs = fsOf(spark, new Path(liveDir))
     requireAtomicRename(spark, fs.getUri.getScheme, who)
-    val old = new org.apache.hadoop.fs.Path(s"${path}_old")
+    // swap manifest: which partitions this swap OWNS and whether each
+    // has a staged successor ("v 1") or is being EMPTIED ("v 0"),
+    // persisted before the first rename. Without it, two crash states
+    // are byte-identical on disk and fsck could not repair: "this
+    // partition's swap fully completed" and "this partition's empty-
+    // case never started" both read staged-absent/aside-absent/live-
+    // present. Hidden name: parquet reads ignore it.
+    val out = fs.create(new Path(s"$nextDir/_swap_manifest"), true)
+    try out.write((partCol +: values.map { v =>
+        val staged = fs.exists(new Path(s"$nextDir/$partCol=$v"))
+        s"$v ${if (staged) 1 else 0}"
+      }).mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    values.foreach { v =>
+      val lp = new Path(s"$liveDir/$partCol=$v")
+      val op = new Path(s"$nextDir/_old_$partCol=$v")
+      val np = new Path(s"$nextDir/$partCol=$v")
+      if (fs.exists(lp)) {
+        step(s"aside of $lp")
+        require(fs.rename(lp, op), s"$who: could not move $lp aside")
+      }
+      if (fs.exists(np)) {
+        step(s"swap-in of $np")
+        require(fs.rename(np, lp), s"$who: could not swap $np into $lp")
+      }
+      step(s"aside delete of $op")
+      require(fs.delete(op, true) || !fs.exists(op),
+        s"$who: could not remove superseded $op")
+    }
+    step(s"next-dir delete of $nextDir")
+    fs.delete(new Path(nextDir), true)
+    ()
+  }
+
+  /** Promote `${path}_next` over a present `path`: the old store moves
+    * aside before the successor renames in, so a crash leaves either
+    * the old store in place or both (`_old` recoverable). Hadoop
+    * rename/delete report failure as a false return, not an
+    * exception; every one is checked. */
+  private[core] def promoteNext(spark: SparkSession, path: String,
+                                who: String): Unit = {
+    val p = new Path(path)
+    val fs = fsOf(spark, p)
+    requireAtomicRename(spark, fs.getUri.getScheme, who)
+    val old = new Path(oldOf(path))
     step(s"stale-old clear of $old")
     require(fs.delete(old, true) || !fs.exists(old),
       s"$who: could not clear stale $old")
     step(s"aside of $p")
     require(fs.rename(p, old),
       s"$who: could not move $p aside to $old")
-    step(s"promote of ${path}_next")
-    require(fs.rename(new org.apache.hadoop.fs.Path(s"${path}_next"), p),
-      s"$who: could not promote ${path}_next to $p " +
+    step(s"promote of ${nextOf(path)}")
+    require(fs.rename(new Path(nextOf(path)), p),
+      s"$who: could not promote ${nextOf(path)} to $p " +
         s"(old store recoverable at $old)")
     step(s"old delete of $old")
     require(fs.delete(old, true) || !fs.exists(old),

@@ -352,8 +352,8 @@ object Decontaminate {
     * is Hive-partitioned by `suite` (one partition per benchmark
     * suite), which is what makes the whole suite lifecycle O(suite):
     * [[appendEvalIndex]] signs or re-signs one suite as a partition
-    * overwrite (never touching the others), [[retireEvalSuite]] drops
-    * one as a partition delete, and a probe reads all partitions and
+    * overwrite (never touching the others), [[retireEvalSuite]] empties
+    * one partition, and a probe reads all partitions and
     * dedups keys (a gram carried by two suites counts once). */
   def writeEvalIndex(evalDf: DataFrame, textCol: String,
                      indexPath: String, n: Int = 8,
@@ -408,9 +408,11 @@ object Decontaminate {
 
   /** Retire one suite from a stored eval-gram index — the benchmark
     * was rotated out, so its grams must stop gating training data.
-    * A pure partition delete: O(1) metadata work, other suites never
-    * read. Refuses an unknown suite (retiring nothing is a caller
-    * bug a silent no-op would hide). */
+    * The suite's partition is emptied through
+    * [[graft.core.Stores.replaceParts]]: O(1) metadata work, other
+    * suites never read, every crash window fsck-repairable. Refuses an
+    * unknown suite (retiring nothing is a caller bug a silent no-op
+    * would hide). */
   def retireEvalSuite(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String, suite: String): Unit = {
     requireSuiteName(suite)
@@ -419,10 +421,9 @@ object Decontaminate {
     graft.core.Stores.withLease(spark, indexPath, "retireEvalSuite") {
       require(fs.exists(p),
         s"retireEvalSuite: no suite '$suite' in $indexPath")
-      require(fs.delete(p, true),
-        s"retireEvalSuite: could not delete $p")
+      graft.core.Stores.replaceParts(spark, indexPath, "suite", Seq(suite),
+        "retireEvalSuite")
     }
-    ()
   }
 
   /** Suite names become partition directory names — keep them to the

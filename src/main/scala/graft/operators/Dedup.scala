@@ -126,28 +126,38 @@ object Dedup {
       .withColumn("bh", col("bh").as("bh", meta))
   }
 
-  /** Contract check for stored signature indexes: candidates only form
-    * when batch and index agree on every signature parameter, so a
-    * stale / differently-built index MUST fail loudly — silent
-    * low recall is the failure mode this guards against. */
-  private[operators] def requireSigParams(sig: DataFrame, field: String,
-                               expect: Seq[(String, Long)],
-                               builder: String): Unit = {
+  /** The signature parameters `keys` a stored signature frame carries
+    * on `field`'s metadata; refuses a frame that cannot state them. */
+  private[graft] def sigParams(sig: DataFrame, field: String,
+                               keys: Seq[String],
+                               builder: String): Seq[(String, Long)] = {
     require(sig.schema.fieldNames.contains(field),
       s"signature index has no '$field' column; build it with $builder")
     val md = sig.schema(field).metadata
-    expect.foreach { case (key, want) =>
+    keys.map { key =>
       require(md.contains(key),
         s"signature index carries no '$key' metadata; rebuild it with " +
           s"$builder (stored indexes from before the parameter contract " +
           "must be regenerated)")
-      val got = md.getLong(key)
-      require(got == want,
-        s"signature-index parameter mismatch: index was built with " +
-          s"$key=$got but this call uses $key=$want; batch and index " +
-          s"must be built with identical $builder parameters")
+      key -> md.getLong(key)
     }
   }
+
+  /** Contract check for stored signature indexes: candidates only form
+    * when batch and index agree on every signature parameter, so a
+    * stale / differently-built index MUST fail loudly — silent
+    * low recall is the failure mode this guards against. */
+  private[graft] def requireSigParams(sig: DataFrame, field: String,
+                                      expect: Seq[(String, Long)],
+                                      builder: String): Unit =
+    sigParams(sig, field, expect.map(_._1), builder).zip(expect).foreach {
+      case ((key, got), (_, want)) =>
+        require(got == want,
+          s"signature-index parameter mismatch: index was built with " +
+            s"$key=$got but this call uses $key=$want — signatures of a " +
+            s"different index; batch and index must be built with " +
+            s"identical $builder parameters")
+    }
 
   /** Candidate pairs with their shingle sets attached: the shared core
     * of the MinHash tier. Output: (id_a, id_b, sh_a, sh_b). */
@@ -1034,9 +1044,9 @@ object Dedup {
     * bit-for-bit — the merge law SubstrDedupSpec pins. Build
     * parameters come FROM the store metadata (nothing to mis-pass) and
     * re-stamp the merged frame, keeping the store self-describing
-    * across appends. The merged table lands beside and swaps in
-    * crash-safely ([[graft.core.Stores.promoteNext]]); one writer at a
-    * time, the usual append contract. Cost: one window pass over the
+    * across appends. The merged table replaces the store
+    * ([[graft.core.Stores.replace]]); one writer at a time, the usual
+    * append contract. Cost: one window pass over the
     * batch plus a full-outer merge on the slim (gk, df) store —
     * settled text is never re-read. Append what you SETTLE: callers
     * that cut or kill batch content before landing it should fold the
@@ -1053,15 +1063,14 @@ object Dedup {
     val meta = idx.schema("gk").metadata
     graft.core.Stores.withLease(spark, indexPath,
         "appendLongMatchIndex") {
-      idx.select(col("gk"), col("df"))
+      val merged = idx.select(col("gk"), col("df"))
         .join(delta, Seq("gk"), "full")
         .select(col("gk"),
           (coalesce(col("df"), lit(0L)) + coalesce(col("__dc"), lit(0L)))
             .as("df"))
         .withColumn("gk", col("gk").as("gk", meta))
-        .write.mode("overwrite").parquet(s"${indexPath}_next")
-      graft.core.Stores.promoteNext(spark, indexPath,
-        "appendLongMatchIndex")
+      graft.core.Stores.replace(spark, indexPath, "appendLongMatchIndex")(
+        merged.write.mode("overwrite").parquet(_))
     }
   }
 
@@ -1084,28 +1093,28 @@ object Dedup {
     val delta = longMatchOcc(batch, idCol, textCol, minLen, keyMode)
       .groupBy(col("gk")).agg(count(lit(1)).as("__dc"))
     val meta = idx.schema("gk").metadata
-    val merged = graft.core.Caching.persistTracked(
-      idx.select(col("gk"), col("df"))
-        .join(delta, Seq("gk"), "full")
-        .select(col("gk"),
-          (coalesce(col("df"), lit(0L)) - coalesce(col("__dc"), lit(0L)))
-            .as("df")))
-    try {
+    graft.core.Caching.scopedRelease {
+      val merged = graft.core.Caching.persistTracked(
+        idx.select(col("gk"), col("df"))
+          .join(delta, Seq("gk"), "full")
+          .select(col("gk"),
+            (coalesce(col("df"), lit(0L)) - coalesce(col("__dc"), lit(0L)))
+              .as("df")))
       val neg = merged.filter(col("df") < 0L).count()
       require(neg == 0L,
         s"removeFromLongMatchIndex: $neg window keys would go " +
           "negative — the batch is not (fully) contained in this " +
           "index; retract exactly what was folded in")
-      if (validateOnly) return
-      graft.core.Stores.withLease(spark, indexPath,
-          "removeFromLongMatchIndex") {
-        merged.filter(col("df") > 0L)
-          .withColumn("gk", col("gk").as("gk", meta))
-          .write.mode("overwrite").parquet(s"${indexPath}_next")
-        graft.core.Stores.promoteNext(spark, indexPath,
-          "removeFromLongMatchIndex")
-      }
-    } finally { merged.unpersist(); () }
+      if (!validateOnly)
+        graft.core.Stores.withLease(spark, indexPath,
+            "removeFromLongMatchIndex") {
+          graft.core.Stores.replace(spark, indexPath,
+              "removeFromLongMatchIndex")(
+            merged.filter(col("df") > 0L)
+              .withColumn("gk", col("gk").as("gk", meta))
+              .write.mode("overwrite").parquet(_))
+        }
+    }
   }
 
   /** Retract documents from a stored minhash signature index (the
@@ -1116,11 +1125,13 @@ object Dedup {
     * carries. Ids only (signatures need no text); strict presence —
     * every id must match exactly one signature row across base ∪
     * sidecar or the call refuses before anything mutates. The base
-    * rewrite lands beside and swaps ([[graft.core.Stores.promoteNext]],
-    * parameter metadata carried); sidecar partitions rewrite via the
-    * per-partition swap, located by a column-pruned (id, batch_id)
-    * scan. Returns (rows removed from base, sidecar partitions
-    * touched). */
+    * rewrite ([[graft.core.Stores.replace]], parameter metadata
+    * carried) is staged first; the sidecar partitions, located by a
+    * column-pruned (id, batch_id) scan, swap inside its stage body
+    * ([[graft.core.Stores.replaceParts]]), so at every crash step both
+    * legs' successors are committed and `store --fsck --repair`
+    * finishes the removal. Returns (rows removed from base, sidecar
+    * partitions touched). */
   def removeFromSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                                ids: DataFrame, sigPath: String,
                                validateOnly: Boolean = false)
@@ -1133,12 +1144,10 @@ object Dedup {
     require(base.schema.fieldNames.contains("id") &&
       base.schema.fieldNames.contains("bh"),
       s"$sigPath is not a minhash signature store (no id/bh columns)")
-    val settledDir = sigPath.stripSuffix("/") + "_settled"
-    val sp = new org.apache.hadoop.fs.Path(settledDir)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasSettled = fs.exists(sp) &&
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-        settledDir + "/batch_id=*"))).exists(_.nonEmpty)
+    val settledDir = graft.core.Stores.settledOf(sigPath)
+    val hasSettled =
+      graft.core.Stores.partitionValues(spark, settledDir, "batch_id")
+        .nonEmpty
 
     val inBase = base.select(col("id")).join(rm, Seq("id"), "leftsemi")
       .count()
@@ -1158,29 +1167,25 @@ object Dedup {
     // above ran, nothing below mutates
     if (validateOnly) return (0L, 0L)
 
-    graft.core.Stores.withLease(spark, sigPath,
-        "removeFromSignatureIndex") {
-      if (inBase > 0) {
-        // alias-free rewrite: every column passes through; the schema
-        // (and its signature-parameter metadata) is untouched
-        base.join(rm, Seq("id"), "left_anti")
-          .write.mode("overwrite").parquet(s"${sigPath}_next")
-        graft.core.Stores.promoteNext(spark, sigPath,
-          "removeFromSignatureIndex")
-      }
-      if (settledHits.nonEmpty) {
-        val parts = settledHits.map(_._1).toSeq
-        val tmp = settledDir + "_rm_next"
-        graft.core.Stores.clearStaging(spark, tmp,
-          "removeFromSignatureIndex")
-        spark.read.parquet(settledDir)
+    val who = "removeFromSignatureIndex"
+    def settledLeg(): Unit = if (settledHits.nonEmpty) {
+      val parts = settledHits.map(_._1).toSeq
+      graft.core.Stores.replaceParts(spark, settledDir, "batch_id",
+        parts.map(_.toString), who,
+        Some(spark.read.parquet(settledDir)
           .filter(col("batch_id").isin(parts: _*))
-          .join(rm, Seq("id"), "left_anti")
-          .withColumn("batch_id", col("batch_id").cast("long"))
-          .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-        graft.core.Stores.swapPartitions(spark, settledDir, tmp,
-          "batch_id", parts, "removeFromSignatureIndex")
-      }
+          .join(rm, Seq("id"), "left_anti")))
+    }
+    graft.core.Stores.withLease(spark, sigPath, who) {
+      // alias-free rewrite: every column passes through; the schema
+      // (and its signature-parameter metadata) is untouched
+      if (inBase > 0)
+        graft.core.Stores.replace(spark, sigPath, who) { next =>
+          base.join(rm, Seq("id"), "left_anti")
+            .write.mode("overwrite").parquet(next)
+          settledLeg()
+        }
+      else settledLeg()
     }
     (inBase, settledHits.length.toLong)
   }

@@ -404,8 +404,8 @@ object Ivf {
     * cells store RAW vectors). Refuses quantized/PQ cells loudly: a
     * sidecar rebuilt from codes would serve RECONSTRUCTED vectors under
     * the exact-lookup contract — rebuild those from the source vectors
-    * instead. Lands beside and swaps in under the index's writer
-    * lease. Returns the row count. */
+    * instead. Runs under the index's writer lease. Returns the row
+    * count. */
   def rebuildIdLookup(spark: org.apache.spark.sql.SparkSession,
                       path: String,
                       idBuckets: Option[Int] = None): Long = {
@@ -428,14 +428,8 @@ object Ivf {
       else 64
     }
     graft.core.Stores.withLease(spark, path, "rebuildIdLookup") {
-      writeIdLookup(raw.select(col("id"), col("vec")), s"${byId}_next",
-        buckets)
-      if (fs.exists(new org.apache.hadoop.fs.Path(byId)))
-        graft.core.Stores.promoteNext(spark, byId, "rebuildIdLookup")
-      else
-        require(fs.rename(new org.apache.hadoop.fs.Path(s"${byId}_next"),
-          new org.apache.hadoop.fs.Path(byId)),
-          s"rebuildIdLookup: could not land $byId")
+      graft.core.Stores.replace(spark, byId, "rebuildIdLookup")(
+        writeIdLookup(raw.select(col("id"), col("vec")), _, buckets))
       spark.read.parquet(byId).count()
     }
   }
@@ -727,11 +721,11 @@ object Ivf {
     * every column verbatim) — the locate pass is a COLUMN-PRUNED
     * (id, partition) scan (parquet reads two slim columns, never the
     * vector/code data), and only located partitions are rewritten
-    * (read raw → anti-join → land beside → per-partition swap,
-    * [[graft.core.Stores.swapPartitions]] — a partition emptied by the
-    * removal is dropped). A PQ store's codebooks are untouched:
-    * removal drifts the learned quantizer exactly like appends do, and
-    * the drift verdict (`meanReconCos`) owns refit timing.
+    * (read raw → anti-join → [[graft.core.Stores.replaceParts]] — a
+    * partition emptied by the removal is dropped). A PQ store's
+    * codebooks are untouched: removal drifts the learned quantizer
+    * exactly like appends do, and the drift verdict (`meanReconCos`)
+    * owns refit timing.
     *
     * Strict by the BM25-removal argument: every id must be present
     * exactly once or the call refuses before anything mutates —
@@ -795,22 +789,16 @@ object Ivf {
     // preflight mode (the composed-takedown contract): checks ran,
     // nothing below mutates
     if (validateOnly) return RemoveReport(0L, 0L, 0L)
-    val nIdb = graft.core.Stores.withLease(spark, path,
-        "removeFromIndex") {
+    val who = "removeFromIndex"
+    val nIdb = graft.core.Stores.withLease(spark, path, who) {
       if (!sidecarOnly) {
-        val cells = loc.map(_.getAs[Long]("__p")).toSeq
-
         // rewrite ONLY the located partitions, raw (quantized layouts
-        // preserved), long-typed partition values (the written layout —
-        // partition discovery types them int)
-        val tmp = s"$path/cells_rm_next"
-        graft.core.Stores.clearStaging(spark, tmp, "removeFromIndex")
-        raw.filter(col(pcol).isin(cells: _*))
-          .join(ids, Seq("id"), "left_anti")
-          .withColumn(pcol, col(pcol).cast("long"))
-          .write.partitionBy(pcol).mode("overwrite").parquet(tmp)
-        graft.core.Stores.swapPartitions(spark, cellsDir, tmp, pcol,
-          cells, "removeFromIndex")
+        // preserved)
+        val cells = loc.map(_.getAs[Long]("__p")).toSeq
+        graft.core.Stores.replaceParts(spark, cellsDir, pcol,
+          cells.map(_.toString), who,
+          Some(raw.filter(col(pcol).isin(cells: _*))
+            .join(ids, Seq("id"), "left_anti")))
       }
 
       // by-id sidecar: same move over the ids' own hash buckets
@@ -819,15 +807,11 @@ object Ivf {
         val buckets = idLookupBuckets(spark, byIdDir)
         val idb = ids.select(pmod($"id", lit(buckets.toLong)).as("idb"))
           .distinct().collect().map(_.getLong(0)).toSeq
-        val tmpB = s"$path/by_id_rm_next"
-        graft.core.Stores.clearStaging(spark, tmpB, "removeFromIndex")
-        spark.read.parquet(byIdDir)
-          .filter(col("idb").isin(idb: _*))
-          .join(ids, Seq("id"), "left_anti")
-          .withColumn("idb", col("idb").cast("long"))
-          .write.partitionBy("idb").mode("overwrite").parquet(tmpB)
-        graft.core.Stores.swapPartitions(spark, byIdDir, tmpB, "idb",
-          idb, "removeFromIndex")
+        graft.core.Stores.replaceParts(spark, byIdDir, "idb",
+          idb.map(_.toString), who,
+          Some(spark.read.parquet(byIdDir)
+            .filter(col("idb").isin(idb: _*))
+            .join(ids, Seq("id"), "left_anti")))
         idb.length.toLong
       }
     }

@@ -219,13 +219,8 @@ object Rank {
       val merged = Seq((st.getAs[Long]("n_docs") + delta.getAs[Long]("dn"),
           st.getAs[Long]("total") + delta.getAs[Long]("dt"), nBuckets))
         .toDF("n_docs", "total", "n_buckets")
-      // never in place: land beside, then swap — old moves ASIDE before
-      // the new promotes, so no failure window leaves the store without
-      // a stats table (a crash leaves old in place, or both with _old
-      // recoverable)
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/stats_next")
-      graft.core.Stores.promoteNext(spark, s"$dir/stats", "appendBm25Index")
+      graft.core.Stores.replace(spark, s"$dir/stats", "appendBm25Index")(
+        merged.coalesce(1).write.mode("overwrite").parquet(_))
     }
   }
 
@@ -237,68 +232,44 @@ object Rank {
     * many-small-files probes (a pruned bucket read opens every file in
     * its dir). Rewrites each NON-EMPTY bucket partition to one file
     * (same rows — probes serve bit-identically, pinned in RankSpec)
-    * via land-beside + per-partition swap, so a crash anywhere leaves
-    * a store fsck repairs. doclen folds too (one file per append
-    * otherwise): rewritten at a size-derived file count (~128 MB
-    * targets — ONE file would serialize the corpus-wide doclen join at
-    * scale) and promoted crash-safely; stats is one row and never
-    * fragments. Returns (files before, files after, buckets
-    * rewritten). One writer at a time (leased). */
+    * through [[graft.core.Stores.compactParts]]. doclen folds too (one
+    * file per append otherwise): rewritten at a size-derived file count
+    * (~128 MB targets — ONE file would serialize the corpus-wide doclen
+    * join at scale); stats is one row and never fragments. Returns
+    * (files before, files after, buckets rewritten), files counted
+    * over postings and doclen. One writer at a time (leased). */
   def compactBm25Postings(spark: org.apache.spark.sql.SparkSession,
                           dir: String): (Long, Long, Long) = {
     val postings = s"$dir/postings"
+    val doclen = s"$dir/doclen"
     val pp = new org.apache.hadoop.fs.Path(postings)
     val fs = pp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(pp), s"$dir is not a bm25 index store (no postings/)")
-    def dataFiles(): Long =
-      Seq(pp, new org.apache.hadoop.fs.Path(s"$dir/doclen")).map { root =>
-        val it = fs.listFiles(root, true)
-        var n = 0L
-        while (it.hasNext) {
-          val f = it.next()
-          if (!f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".")) n += 1
+    val dlBefore = graft.core.Stores.dataFiles(spark, doclen)
+    val (before, after, nb) =
+      graft.core.Stores.withLease(spark, dir, "compactBm25Postings") {
+        val counts @ (_, _, nBuckets) = graft.core.Stores.compactParts(
+          spark, postings, "tb", "compactBm25Postings")
+        if (nBuckets > 0) {
+          val nFiles = math.max(1L, fs.getContentSummary(
+            new org.apache.hadoop.fs.Path(doclen)).getLength / (128L << 20))
+          graft.core.Stores.replace(spark, doclen, "compactBm25Postings")(
+            spark.read.parquet(doclen).repartition(nFiles.toInt)
+              .write.mode("overwrite").parquet(_))
         }
-        n
-      }.sum
-    val before = dataFiles()
-    val buckets = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$postings/tb=*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.getName.stripPrefix("tb=").toLong).toSeq
-    if (buckets.isEmpty) return (before, before, 0L)
-    graft.core.Stores.withLease(spark, dir, "compactBm25Postings") {
-      val tmp = s"${postings}_rm_next"
-      graft.core.Stores.clearStaging(spark, tmp, "compactBm25Postings")
-      spark.read.parquet(postings)
-        .withColumn("tb", col("tb").cast("long"))
-        .repartition(col("tb"))
-        .write.partitionBy("tb").mode("overwrite").parquet(tmp)
-      graft.core.Stores.swapPartitions(spark, postings, tmp, "tb",
-        buckets, "compactBm25Postings")
-
-      // doclen: appends add one file each; fold to a size-derived
-      // count (~128 MB targets — ONE file would serialize the rewrite
-      // at corpus scale) and promote crash-safely
-      val dlPath = new org.apache.hadoop.fs.Path(s"$dir/doclen")
-      val dlBytes = fs.getContentSummary(dlPath).getLength
-      val nFiles = math.max(1L, dlBytes / (128L << 20)).toInt
-      spark.read.parquet(s"$dir/doclen").repartition(nFiles)
-        .write.mode("overwrite").parquet(s"$dir/doclen_next")
-      graft.core.Stores.promoteNext(spark, s"$dir/doclen",
-        "compactBm25Postings")
-    }
-    (before, dataFiles(), buckets.length.toLong)
+        counts
+      }
+    (before + dlBefore, after + graft.core.Stores.dataFiles(spark, doclen),
+      nb)
   }
 
   /** Re-derive the 1-row stats leg from doclen TRUTH — the one-command
     * recovery for a `bm25_stats_doclen` / `bm25_stats_inconsistent`
     * verify/fsck finding (the stats are fully derivable: n_docs =
     * count(doclen), total = Σ dl; n_buckets is a build parameter, kept
-    * from the existing stats or overridden when that leg is destroyed).
-    * Lands beside and swaps in under the writer lease — the same crash
-    * windows as every append, all fsck-repairable. Returns the
-    * rebuilt (n_docs, total). */
+    * from the existing stats or overridden when that leg is destroyed),
+    * under the index's writer lease. Returns the rebuilt (n_docs,
+    * total). */
   def rebuildBm25Stats(spark: org.apache.spark.sql.SparkSession,
                        dir: String,
                        nBucketsOverride: Option[Long] = None)
@@ -341,16 +312,9 @@ object Rank {
         .agg(count(lit(1)).as("n"),
           coalesce(sum($"dl"), lit(0L)).as("t")).head()
       val (n, t) = (truth.getAs[Long]("n"), truth.getAs[Long]("t"))
-      Seq((n, t, nBuckets)).toDF("n_docs", "total", "n_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats_next")
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")))
-        graft.core.Stores.promoteNext(spark, s"$dir/stats",
-          "rebuildBm25Stats")
-      else
-        require(fs.rename(
-          new org.apache.hadoop.fs.Path(s"$dir/stats_next"),
-          new org.apache.hadoop.fs.Path(s"$dir/stats")),
-          s"rebuildBm25Stats: could not land $dir/stats")
+      graft.core.Stores.replace(spark, s"$dir/stats", "rebuildBm25Stats")(
+        Seq((n, t, nBuckets)).toDF("n_docs", "total", "n_buckets")
+          .coalesce(1).write.mode("overwrite").parquet(_))
       (n, t)
     }
   }
@@ -422,7 +386,9 @@ object Rank {
         chk.getAs[Long]("rmTotal"))
     require(nRm == nDist, s"removeFromBm25Index: removal batch carries " +
       s"duplicate ids ($nRm rows, $nDist distinct)")
-    val statsNext = new org.apache.hadoop.fs.Path(s"$dir/stats_next")
+    val who = "removeFromBm25Index"
+    val statsNext = new org.apache.hadoop.fs.Path(
+      graft.core.Stores.nextOf(s"$dir/stats"))
     val fs = statsNext.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (nRm > 0 && miss == nRm && fs.exists(statsNext)) {
       // resume path candidate: every id is already gone and a
@@ -434,7 +400,7 @@ object Rank {
       // promote, n_docs must equal the doclen row count and total must
       // equal the exact sum of its dl column (total IS Σ dl by
       // construction), and the build param must carry over.
-      val nx = spark.read.parquet(s"$dir/stats_next").head()
+      val nx = spark.read.parquet(statsNext.toString).head()
       val dlTruth = dlStore
         .agg(count(lit(1)).as("n"), coalesce(sum($"dl"), lit(0L)).as("t"))
         .head()
@@ -444,7 +410,7 @@ object Rank {
         nx.getAs[Long]("total") == dlTruth.getAs[Long]("t")
       require(ok,
         s"removeFromBm25Index: all $nRm ids are absent and a " +
-          s"$dir/stats_next exists, but it does NOT match the doclen " +
+          s"$statsNext exists, but it does NOT match the doclen " +
           s"store (stats_next=(${nx.mkString(",")}), doclen has " +
           s"${dlTruth.getAs[Long]("n")} docs / " +
           s"${dlTruth.getAs[Long]("t")} tokens) — it was stranded by a " +
@@ -452,9 +418,10 @@ object Rank {
           "stats. Run `store --fsck` on the index (or remove the " +
           "stale stats_next by hand) and retry")
       if (validateOnly) return
-      graft.core.Stores.withLease(spark, dir, "removeFromBm25Index") {
-        graft.core.Stores.promoteNext(spark, s"$dir/stats",
-          "removeFromBm25Index(resume)")
+      graft.core.Stores.withLease(spark, dir, who) {
+        // the verified successor is already staged: promote it as is
+        graft.core.Stores.replace(spark, s"$dir/stats", s"$who(resume)")(
+          _ => ())
       }
       return
     }
@@ -468,37 +435,33 @@ object Rank {
     // preflight mode (the composed-takedown contract): checks ran,
     // nothing below mutates
     if (validateOnly || nRm == 0L) return
-    graft.core.Stores.withLease(spark, dir, "removeFromBm25Index") {
+    graft.core.Stores.withLease(spark, dir, who) {
 
       // postings: only the removed docs' own terms' hash buckets can
       // carry their rows — rewrite exactly those partitions
       val buckets = docs.select(explode(tk).as("term")).distinct()
         .select(pmod(xxhash64($"term"), lit(nBuckets)).as("tb")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      if (buckets.nonEmpty) {
-        val keptRows = spark.read.parquet(s"$dir/postings")
-          .filter(col("tb").isin(buckets: _*))
-          .join(slim.select($"id"), Seq("id"), "left_anti")
-        val tmp = s"$dir/postings_rm_next"
-        graft.core.Stores.clearStaging(spark, tmp, "removeFromBm25Index")
-        keptRows.write.partitionBy("tb").mode("overwrite").parquet(tmp)
-        graft.core.Stores.swapPartitions(spark, s"$dir/postings", tmp,
-          "tb", buckets, "removeFromBm25Index")
-      }
+      if (buckets.nonEmpty)
+        graft.core.Stores.replaceParts(spark, s"$dir/postings", "tb",
+          buckets.map(_.toString), who,
+          Some(spark.read.parquet(s"$dir/postings")
+            .filter(col("tb").isin(buckets: _*))
+            .join(slim.select($"id"), Seq("id"), "left_anti")))
 
-      // stats successor lands BEFORE the doclen promote, so the one
-      // crash window past the point of no return (ids gone from doclen)
-      // is resumable — see the resume path above.
-      Seq((st.getAs[Long]("n_docs") - nRm,
-          st.getAs[Long]("total") - rmTotal, nBuckets))
-        .toDF("n_docs", "total", "n_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats_next")
-      dlStore.join(slim.select($"id"), Seq("id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$dir/doclen_next")
-      graft.core.Stores.promoteNext(spark, s"$dir/doclen",
-        "removeFromBm25Index")
-      graft.core.Stores.promoteNext(spark, s"$dir/stats",
-        "removeFromBm25Index")
+      // the doclen replace runs inside the stats stage body: the stats
+      // successor lands BEFORE the doclen promote, so the one crash
+      // window past the point of no return (ids gone from doclen) is
+      // resumable — see the resume path above.
+      graft.core.Stores.replace(spark, s"$dir/stats", who) { statsNext =>
+        Seq((st.getAs[Long]("n_docs") - nRm,
+            st.getAs[Long]("total") - rmTotal, nBuckets))
+          .toDF("n_docs", "total", "n_buckets")
+          .coalesce(1).write.mode("overwrite").parquet(statsNext)
+        graft.core.Stores.replace(spark, s"$dir/doclen", who)(
+          dlStore.join(slim.select($"id"), Seq("id"), "left_anti")
+            .write.mode("overwrite").parquet(_))
+      }
     }
   }
 

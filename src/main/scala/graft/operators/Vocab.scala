@@ -220,10 +220,8 @@ object Vocab {
   /** Fold a batch into a stored LM — counts ADD exactly (the
     * CorpusStats merge law: append(writeLm(A), B) == writeLm(A ∪ B)
     * bit-for-bit, spec-pinned), so the reference model can track the
-    * settled corpus incrementally at O(batch + vocab) cost. The
-    * merged table lands beside and swaps in (the compactIndex
-    * never-in-place rule); one writer at a time, the usual append
-    * contract. */
+    * settled corpus incrementally at O(batch + vocab) cost. One writer
+    * at a time, the usual append contract. */
   def appendLm(batch: DataFrame, textCol: String, path: String): Unit = {
     val spark = batch.sparkSession
     val (lm, total) = readLm(spark, path)
@@ -243,9 +241,9 @@ object Vocab {
       .putString("smoothing", "count-floor-1")
       .build()
     graft.core.Stores.withLease(spark, path, "appendLm") {
-      mergedCounts.withColumn("token", col("token").as("token", meta))
-        .write.mode("overwrite").parquet(s"${path}_next")
-      graft.core.Stores.promoteNext(spark, path, "appendLm")
+      graft.core.Stores.replace(spark, path, "appendLm")(
+        mergedCounts.withColumn("token", col("token").as("token", meta))
+          .write.mode("overwrite").parquet(_))
     }
   }
 
@@ -255,21 +253,21 @@ object Vocab {
     * bit-for-bit (spec-pinned). Refuses before anything mutates if the
     * subtraction would go negative anywhere — a batch the store never
     * absorbed (or absorbed differently) must fail loudly, not leave a
-    * silently-skewed background model. Same land-beside-then-swap and
-    * one-writer contract as the append. */
+    * silently-skewed background model. Same one-writer contract as the
+    * append. */
   def removeFromLm(batch: DataFrame, textCol: String, path: String,
                    validateOnly: Boolean = false): Unit = {
     val spark = batch.sparkSession
     val (lm, total) = readLm(spark, path)
     val delta = tokenCounts(batch, textCol)
       .withColumnRenamed("cnt", "__dcnt")
-    val merged = graft.core.Caching.persistTracked(
-      lm.select(col("token"), col("cnt"))
-        .join(delta, Seq("token"), "full")
-        .select(col("token"),
-          (coalesce(col("cnt"), lit(0L)) -
-            coalesce(col("__dcnt"), lit(0L))).as("cnt")))
-    try {
+    graft.core.Caching.scopedRelease {
+      val merged = graft.core.Caching.persistTracked(
+        lm.select(col("token"), col("cnt"))
+          .join(delta, Seq("token"), "full")
+          .select(col("token"),
+            (coalesce(col("cnt"), lit(0L)) -
+              coalesce(col("__dcnt"), lit(0L))).as("cnt")))
       val neg = merged.filter(col("cnt") < 0L).count()
       require(neg == 0L,
         s"removeFromLm: $neg tokens would go negative — the batch is " +
@@ -281,18 +279,19 @@ object Vocab {
         .agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
       require(total - dTotal >= 0L,
         s"removeFromLm: batch total $dTotal exceeds the store's $total")
-      if (validateOnly) return
-      val meta = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("total_tokens", total - dTotal)
-        .putString("smoothing", "count-floor-1")
-        .build()
-      graft.core.Stores.withLease(spark, path, "removeFromLm") {
-        merged.filter(col("cnt") > 0L)
-          .withColumn("token", col("token").as("token", meta))
-          .write.mode("overwrite").parquet(s"${path}_next")
-        graft.core.Stores.promoteNext(spark, path, "removeFromLm")
+      if (!validateOnly) {
+        val meta = new org.apache.spark.sql.types.MetadataBuilder()
+          .putLong("total_tokens", total - dTotal)
+          .putString("smoothing", "count-floor-1")
+          .build()
+        graft.core.Stores.withLease(spark, path, "removeFromLm") {
+          graft.core.Stores.replace(spark, path, "removeFromLm")(
+            merged.filter(col("cnt") > 0L)
+              .withColumn("token", col("token").as("token", meta))
+              .write.mode("overwrite").parquet(_))
+        }
       }
-    } finally { merged.unpersist(); () }
+    }
   }
 
   /** Per-document surprisal of a batch against the STORED LM — the

@@ -38,43 +38,18 @@ object ModelRegistry {
     * The registry is the scorer's model-RESOLUTION table: a crash
     * mid-overwrite that leaves it absent or half-written takes every
     * scorer down at startup — the exact failure the reference's registry
-    * server existed to prevent (manage_model_registry.py:37-93). So the
-    * write follows the store discipline every other serving store uses:
-    * a successor lands BESIDE the live table (`path_next`) and swaps in
-    * via [[graft.core.Stores.promoteNext]] under a writer lease — no
-    * crash window leaves the registry unreadable, and every window
-    * repairs with `store --fsck --repair`. Side benefit: `save(load(p)
-    * .transform(...), p)` now works — the successor never overwrites
-    * the dir it is still reading from. */
+    * server existed to prevent (manage_model_registry.py:37-93). So it
+    * is written like every other serving store, through
+    * [[graft.core.Stores.replace]] under a writer lease: no crash window
+    * leaves the registry unreadable, and every window repairs with
+    * `store --fsck --repair`. Side benefit: `save(load(p)
+    * .transform(...), p)` works — the successor never overwrites the
+    * dir it is still reading from. */
   def save(registry: DataFrame, path: String): Unit = {
     val spark = registry.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.core.Stores.withLease(spark, path, "ModelRegistry.save") {
-      if (!fs.exists(p)) {
-        // first build: nothing live to protect — UNLESS promote
-        // artifacts linger (an aborted promote leaves `path` absent
-        // with a committed `path_next`/`path_old` beside it; the lease
-        // was released by withLease's finally). Writing `path` directly
-        // then would hand a later `fsck --repair` a live dir that is
-        // NEWER than the stranded `path_next`, and the generic
-        // unpromoted_next rule would promote the STALE successor over
-        // it — a silent rollback. Refuse and route to fsck first.
-        Seq("_next", "_old").map(suf =>
-            new org.apache.hadoop.fs.Path(s"$path$suf"))
-          .filter(fs.exists).foreach { art =>
-            throw new IllegalStateException(
-              s"ModelRegistry.save: $path is absent but $art exists — " +
-                "an interrupted promote left artifacts a direct first-" +
-                "build write would silently roll back later. Run " +
-                s"`store --fsck $path --repair` first, then retry")
-          }
-        registry.repartition(1).write.mode("overwrite").parquet(path)
-      } else {
-        registry.repartition(1).write.mode("overwrite")
-          .parquet(s"${path}_next")
-        graft.core.Stores.promoteNext(spark, path, "ModelRegistry.save")
-      }
+      graft.core.Stores.replace(spark, path, "ModelRegistry.save")(
+        registry.repartition(1).write.mode("overwrite").parquet(_))
     }
   }
 

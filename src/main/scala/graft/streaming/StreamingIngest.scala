@@ -828,19 +828,15 @@ object StreamingIngest {
       s"removeFromKept: $nIds ids requested but $found kept rows " +
         "matched — remove only ids the corpus keeps exactly once")
     if (validateOnly) return (0L, 0L)
+    val parts = loc.map(_._1).toSeq
     graft.core.Stores.withLease(spark, keptPath, "removeFromKept") {
-      val parts = loc.map(_._1).toSeq
-      val tmp = keptPath.stripSuffix("/") + "_rm_next"
-      graft.core.Stores.clearStaging(spark, tmp, "removeFromKept")
-      kept.filter(col("batch_id").isin(parts: _*))
-        .join(rm, kept(idCol).cast("long") === col("__rm_id"),
-          "left_anti")
-        .withColumn("batch_id", col("batch_id").cast("long"))
-        .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-      graft.core.Stores.swapPartitions(spark, keptPath, tmp, "batch_id",
-        parts, "removeFromKept")
-      (found, parts.length.toLong)
+      graft.core.Stores.replaceParts(spark, keptPath, "batch_id",
+        parts.map(_.toString), "removeFromKept",
+        Some(kept.filter(col("batch_id").isin(parts: _*))
+          .join(rm, kept(idCol).cast("long") === col("__rm_id"),
+            "left_anti")))
     }
+    (found, parts.length.toLong)
   }
 
   /** Compact a kept-corpus store's batch partitions — the
@@ -849,44 +845,19 @@ object StreamingIngest {
     * fragments and small micro-batches land one-file partitions by the
     * hundreds, so downstream consumers pay an open() per file. Rewrites
     * every batch partition to one file (same rows — the read serves
-    * bit-identically, spec-pinned) via land-beside + per-partition
-    * swap (crash anywhere → `store --fsck --repair`); the `_schema`
-    * marker is untouched. Returns (files before, files after,
-    * partitions rewritten). One writer at a time (leased); run between
-    * ingest runs, never alongside one. */
+    * bit-identically, spec-pinned); the `_schema` marker is untouched.
+    * Returns (files before, files after, partitions rewritten). One
+    * writer at a time (leased); run between ingest runs, never
+    * alongside one. */
   def compactKept(spark: org.apache.spark.sql.SparkSession,
                   keptPath: String): (Long, Long, Long) = {
     val kp = new org.apache.hadoop.fs.Path(keptPath)
-    val fs = kp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(kp), s"$keptPath does not exist")
-    def dataFiles(): Long = {
-      val it = fs.listFiles(kp, true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        val top = f.getPath.getParent.getName
-        if (!f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".") && top != "_schema") n += 1
-      }
-      n
-    }
-    val before = dataFiles()
-    val parts = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$keptPath/batch_id=*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.getName.stripPrefix("batch_id=").toLong).toSeq
-    if (parts.isEmpty) return (before, before, 0L)
+    require(kp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(kp), s"$keptPath does not exist")
     graft.core.Stores.withLease(spark, keptPath, "compactKept") {
-      val tmp = keptPath.stripSuffix("/") + "_rm_next"
-      graft.core.Stores.clearStaging(spark, tmp, "compactKept")
-      spark.read.parquet(keptPath)
-        .withColumn("batch_id", col("batch_id").cast("long"))
-        .repartition(col("batch_id"))
-        .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-      graft.core.Stores.swapPartitions(spark, keptPath, tmp, "batch_id",
-        parts, "compactKept")
+      graft.core.Stores.compactParts(spark, keptPath, "batch_id",
+        "compactKept")
     }
-    (before, dataFiles(), parts.length.toLong)
   }
 
   /** Where [[fullIngest]] settles kept docs' minhash signatures: a
@@ -896,7 +867,7 @@ object StreamingIngest {
     * layouts' reads; [[compactSettled]] folds appends back into the
     * base as an O(index) signature rewrite (`ingest --compact`). */
   def settledSigPath(corpusSigPath: String): String =
-    corpusSigPath.stripSuffix("/") + "_settled"
+    graft.core.Stores.settledOf(corpusSigPath)
 
   /** The settled-index view [[fullIngest]] screens against: the stored
     * base signatures ∪ this run's per-batch settled appends (if any) —
@@ -913,13 +884,8 @@ object StreamingIngest {
                                    excludeBatchId: Long): DataFrame = {
     val base = spark.read.parquet(corpusSigPath)
     val sp = settledSigPath(corpusSigPath)
-    val p = new org.apache.hadoop.fs.Path(sp)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = if (fs.exists(p))
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(sp + "/batch_id=*")))
-        .map(_.length).getOrElse(0)
-    else 0
-    if (parts == 0) base
+    if (graft.core.Stores.partitionValues(spark, sp, "batch_id").isEmpty)
+      base
     else base.select(col("id"), col("sh"), col("bh"))
       .union(spark.read.parquet(sp)
         .filter(col("batch_id") =!= excludeBatchId)
@@ -939,12 +905,8 @@ object StreamingIngest {
     val p = new org.apache.hadoop.fs.Path(sp)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) (0, 0L)
-    else {
-      val parts = Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(sp + "/batch_id=*")))
-        .map(_.length).getOrElse(0)
-      (parts, fs.getContentSummary(p).getLength)
-    }
+    else (graft.core.Stores.partitionValues(spark, sp, "batch_id").length,
+      fs.getContentSummary(p).getLength)
   }
 
   /** Fold the settled per-batch signature appends into the base store —
@@ -966,9 +928,9 @@ object StreamingIngest {
     *    nothing twice — and a post-compaction [[fullIngest]] screen
     *    can never double-count a signature (the sidecar is REMOVED as
     *    the final step, so `corpusSigWithSettled` stops reading it).
-    *  - **crash-safe**: the merged store lands beside (`_next`) and
-    *    swaps in via [[graft.core.Stores.promoteNext]]; the settled
-    *    sidecar clears LAST. Every crash window re-runs cleanly:
+    *  - **crash-safe**: the merged store replaces the base through
+    *    [[graft.core.Stores.replace]]; the settled sidecar is dropped
+    *    LAST. Every crash window re-runs cleanly:
     *    before promote → old base + sidecar intact; after promote,
     *    before clear → idempotent re-fold; after clear → no-op.
     *
@@ -982,27 +944,10 @@ object StreamingIngest {
     else {
       val base = spark.read.parquet(corpusSigPath)
       val settled = spark.read.parquet(sp)
-      val sigKeys = Seq("shingle_n", "minhash_k", "bands")
-      def params(df: DataFrame, name: String): Seq[Long] = {
-        require(df.schema.fieldNames.contains("bh"),
-          s"compactSettled: $name has no 'bh' column — not a " +
-            "minhashSignatures store")
-        val md = df.schema("bh").metadata
-        sigKeys.map { k =>
-          require(md.contains(k),
-            s"compactSettled: $name carries no '$k' signature metadata " +
-              "— rebuild it (stores predating the parameter contract " +
-              "cannot be compacted safely)")
-          md.getLong(k)
-        }
-      }
-      val baseParams = params(base, s"base store $corpusSigPath")
-      val settledParams = params(settled, s"settled sidecar $sp")
-      require(baseParams == settledParams,
-        s"compactSettled: base store was signed with " +
-          s"${sigKeys.zip(baseParams)} but the settled sidecar with " +
-          s"${sigKeys.zip(settledParams)} — the sidecar belongs to a " +
-          "different index; refusing to fold")
+      val builder = "Dedup.minhashSignatures"
+      graft.operators.Dedup.requireSigParams(settled, "bh",
+        graft.operators.Dedup.sigParams(base, "bh",
+          Seq("shingle_n", "minhash_k", "bands"), builder), builder)
       val nFolded = settled.count()
       // base leg first so its field metadata survives the union; the
       // explicit re-stamp below makes the carried params independent
@@ -1014,16 +959,9 @@ object StreamingIngest {
         .withColumn("bh", col("bh").as("bh", baseMeta))
       graft.core.Stores.withLease(spark, corpusSigPath,
           "compactSettled") {
-        merged.write.mode("overwrite").parquet(s"${corpusSigPath}_next")
-        graft.core.Stores.promoteNext(spark, corpusSigPath,
-          "compactSettled")
-        val p = new org.apache.hadoop.fs.Path(sp)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fs.delete(p, true),
-          s"compactSettled: folded $nFolded rows into $corpusSigPath " +
-            s"but could not remove the settled sidecar $sp — remove it " +
-            "manually or re-run (the fold is idempotent); until then " +
-            "screens double-read those signatures")
+        graft.core.Stores.replace(spark, corpusSigPath, "compactSettled")(
+          merged.write.mode("overwrite").parquet(_))
+        graft.core.Stores.drop(spark, sp, "compactSettled")
       }
       (nFolded, parts)
     }
@@ -1032,7 +970,7 @@ object StreamingIngest {
   /** Sibling history store of a funnel dir — the fold target of
     * [[compactFunnel]]. */
   def funnelHistPath(funnelPath: String): String =
-    funnelPath.stripSuffix("/") + "_hist"
+    graft.core.Stores.histOf(funnelPath)
 
   /** The canonical funnel read: live per-batch partitions ∪ the folded
     * history, LIVE WINS per batch_id. The live-wins anti-join is what
@@ -1069,8 +1007,7 @@ object StreamingIngest {
     * fold rewrites all but the newest `keepLast` batches as a few
     * root-level files in `funnel_hist` (batch_id kept as a DATA
     * column — the keying survives the fold) and then EMPTIES the
-    * folded live partitions through [[graft.core.Stores.swapPartitions]]
-    * (aside-first, manifest-tracked, every crash window fsck-repairable).
+    * folded live partitions through [[graft.core.Stores.replaceParts]].
     *
     * Exactly-once across redelivery: [[readFunnel]] prefers a live
     * partition over a history row with the same batch_id, and the fold
@@ -1119,19 +1056,12 @@ object StreamingIngest {
                 Seq("batch_id"), "left_anti")
               .unionByName(folding, allowMissingColumns = true)
           } else folding
-        newHist.coalesce(1).write.mode("overwrite").parquet(s"${hp}_next")
-        if (fs.exists(new org.apache.hadoop.fs.Path(hp)))
-          graft.core.Stores.promoteNext(spark, hp, "compactFunnel")
-        else
-          require(fs.rename(new org.apache.hadoop.fs.Path(s"${hp}_next"),
-            new org.apache.hadoop.fs.Path(hp)),
-            s"compactFunnel: could not land $hp")
+        graft.core.Stores.replace(spark, hp, "compactFunnel")(
+          newHist.coalesce(1).write.mode("overwrite").parquet(_))
         // history is safely in place — now empty the folded live
-        // partitions (no staged successors = the emptying form)
-        val staging = s"${funnelPath}_rm_next"
-        graft.core.Stores.clearStaging(spark, staging, "compactFunnel")
-        graft.core.Stores.swapPartitions(spark, funnelPath, staging,
-          "batch_id", foldIds.toSeq, "compactFunnel")
+        // partitions
+        graft.core.Stores.replaceParts(spark, funnelPath, "batch_id",
+          foldIds.toSeq.map(_.toString), "compactFunnel")
         (foldIds.length.toLong, spark.read.parquet(hp).count())
       }
     }

@@ -189,4 +189,29 @@ class LifecycleSpec extends AnyFunSuite {
     assert(ModelRegistry.load(spark, path).collect()
       .head.getAs[String]("stage") === "Archived")
   }
+
+  test("Rank.rebuildBm25Stats refuses the first-land branch while an " +
+    "interrupted promote's aside lingers, and lands after fsck") {
+    import graft.operators.Rank
+    val dir = Files.createTempDirectory("lifecycle_statsrefuse").toString
+    Rank.buildBm25Index(Seq((1L, "cat dog"), (2L, "bird")).toDF("doc_id",
+      "text"), "doc_id", "text", dir, nBuckets = 4)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the aborted-promote window: live stats moved aside, no successor
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/stats"),
+      new org.apache.hadoop.fs.Path(s"$dir/stats_old")))
+    val e = intercept[IllegalStateException] {
+      Rank.rebuildBm25Stats(spark, dir, nBucketsOverride = Some(4L))
+    }
+    assert(e.getMessage.contains("_old") &&
+      e.getMessage.contains("store --fsck"), e.getMessage)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats_old")) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")),
+      "the refusal must not consume the aside")
+    // fsck restores the aside; the rebuild then promotes doclen truth
+    graft.core.StoreFsck.fsck(spark, dir, repair = true)
+    assert(Rank.rebuildBm25Stats(spark, dir) === ((2L, 3L)))
+    assert(graft.core.StoreFsck.fsck(spark, dir).isEmpty)
+  }
 }

@@ -7,7 +7,7 @@ import graft.{Slow, TestSpark}
 import graft.operators.Vocab
 
 /** Kill-mid-swap coverage for [[StoreFsck]]: every rename/delete step
-  * of [[Stores.promoteNext]] and [[Stores.swapPartitions]] is crashed
+  * of [[Stores.replace]] and [[Stores.replaceParts]] is crashed
   * in turn via the injected-crash hook ([[Stores.withCrashAt]]),
   * then `fsck --repair` (plus, where the window is mid-OPERATION
   * rather than mid-swap, one convergent re-run of the interrupted
@@ -675,18 +675,76 @@ class StoreFsckSpec extends AnyFunSuite {
     assert(k >= 4, s"expected to exercise >= 3 promote steps, got $k")
   }
 
+  test("signature removal: a crash at EVERY step (base promote + " +
+    "settled swap under one lease) recovers via fsck --repair, " +
+    "content-audited", Slow) {
+    import graft.operators.Dedup
+    val baseDocs = Seq((10L, "old base doc one here"),
+      (11L, "old base doc two there")).toDF("doc_id", "text")
+    val base = tmpBase("sigremove")
+    def fresh(sig: String): Unit = {
+      Dedup.minhashSignatures(baseDocs, "doc_id", "text")
+        .write.parquet(sig)
+      // batch 0 keeps a row after the removal, batch 1 is emptied
+      Seq(0L -> Seq((21L, "freshly settled doc alpha"),
+          (23L, "freshly settled doc gamma")),
+          1L -> Seq((22L, "freshly settled doc beta"))).foreach {
+        case (b, docs) =>
+          Dedup.minhashSignatures(docs.toDF("doc_id", "text"), "doc_id",
+              "text")
+            .withColumn("batch_id", org.apache.spark.sql.functions.lit(b))
+            .write.mode("append").partitionBy("batch_id")
+            .parquet(Stores.settledOf(sig))
+      }
+    }
+    def ids(sig: String): (Set[Long], Set[Long]) = (
+      spark.read.parquet(sig).select($"id")
+        .collect().map(_.getLong(0)).toSet,
+      spark.read.parquet(Stores.settledOf(sig)).select($"id")
+        .collect().map(_.getLong(0)).toSet)
+    val rm = Seq(11L, 21L, 22L).toDF("id")
+    fresh(s"$base/ref")
+    assert(Dedup.removeFromSignatureIndex(spark, rm, s"$base/ref") ===
+      ((1L, 2L)))
+    val want = ids(s"$base/ref")
+    assert(want === ((Set(10L), Set(23L))))
+
+    var k = 0
+    var fired = true
+    while (fired) {
+      val sig = s"$base/sig_$k"
+      fresh(sig)
+      fired = crashed(k) { Dedup.removeFromSignatureIndex(spark, rm, sig) }
+      if (fired) {
+        // every crash step finds both legs' successors committed, so
+        // fsck finishes the removal and a re-run refuses on presence
+        StoreFsck.fsck(spark, base, repair = true)
+        assert(ids(sig) === want, s"step $k")
+        val e = intercept[IllegalArgumentException] {
+          Dedup.removeFromSignatureIndex(spark, rm, sig)
+        }
+        assert(e.getMessage.contains("signature rows matched"),
+          e.getMessage)
+        assert(StoreFsck.fsck(spark, base).isEmpty, s"step $k re-sweep")
+        contentClean(sig)
+      }
+      k += 1
+    }
+    assert(k >= 10, s"expected to exercise >= 9 steps, got $k")
+  }
+
   test("funnel compaction: a crash at EVERY step (hist promote + live " +
     "partition empties) keeps the report exactly-once; fsck --repair " +
     "+ re-run converge", Slow) {
     import graft.streaming.StreamingIngest.{compactFunnel, readFunnel}
     val base = tmpBase("funnelcompact")
-    def fresh(dir: String): Unit = {
+    def fresh(dir: String, withHist: Boolean = true): Unit = {
       val sink = new graft.streaming.StreamPipeline.IdempotentFileSink(dir)
       (0L to 4L).foreach(b =>
         sink.write(Seq((100L + b, 10L + b)).toDF("n_in", "n_kept"), b))
       // a pre-existing history generation, so the promote (not just
       // the first-land rename) is in the crashed path
-      compactFunnel(spark, dir, keepLast = 4)
+      if (withHist) compactFunnel(spark, dir, keepLast = 4)
     }
     def report(dir: String): Set[(Long, Long, Long)] =
       readFunnel(spark, dir)
@@ -698,31 +756,34 @@ class StoreFsckSpec extends AnyFunSuite {
     val want = report(s"$base/ref")
     assert(want.map(_._1) === Set(0L, 1L, 2L, 3L, 4L))
 
-    var k = 0
-    var fired = true
-    while (fired) {
-      val dir = s"$base/funnel_$k"
-      fresh(dir)
-      fired = crashed(k) { compactFunnel(spark, dir, keepLast = 2) }
-      if (fired) {
-        // BEFORE any repair: the report may transiently MISS folded
-        // history rows (the mid-promote window leaves _hist absent
-        // until fsck rolls it forward — the same reader window every
-        // promoted store has) but must NEVER double-count a batch:
-        // live-wins shadows any fold duplicate at every crash point
-        val pre = report(dir)
-        assert(pre.subsetOf(want) &&
-          pre.groupBy(_._1).forall(_._2.size == 1),
-          s"step $k pre-repair: $pre")
-        StoreFsck.fsck(spark, dir, repair = true)
-        assert(report(dir) === want, s"step $k post-repair")
-        compactFunnel(spark, dir, keepLast = 2)
-        assert(report(dir) === want, s"step $k post-rerun")
-        assert(StoreFsck.fsck(spark, dir).isEmpty, s"step $k re-sweep")
+    // without a history generation the fold's first land is crashed
+    for (withHist <- Seq(true, false)) {
+      var k = 0
+      var fired = true
+      while (fired) {
+        val dir = s"$base/funnel_${if (withHist) "" else "nohist_"}$k"
+        fresh(dir, withHist)
+        fired = crashed(k) { compactFunnel(spark, dir, keepLast = 2) }
+        if (fired) {
+          // BEFORE any repair: the report may transiently MISS folded
+          // history rows (the mid-promote window leaves _hist absent
+          // until fsck rolls it forward — the same reader window every
+          // promoted store has) but must NEVER double-count a batch:
+          // live-wins shadows any fold duplicate at every crash point
+          val pre = report(dir)
+          assert(pre.subsetOf(want) &&
+            pre.groupBy(_._1).forall(_._2.size == 1),
+            s"step $k pre-repair: $pre")
+          StoreFsck.fsck(spark, dir, repair = true)
+          assert(report(dir) === want, s"step $k post-repair")
+          compactFunnel(spark, dir, keepLast = 2)
+          assert(report(dir) === want, s"step $k post-rerun")
+          assert(StoreFsck.fsck(spark, dir).isEmpty, s"step $k re-sweep")
+        }
+        k += 1
       }
-      k += 1
+      assert(k >= 4, s"expected to exercise >= 3 steps, got $k")
     }
-    assert(k >= 4, s"expected to exercise >= 3 steps, got $k")
   }
 
   test("rebuild-stats: a crash at EVERY promote step of the recovery " +
